@@ -410,16 +410,6 @@ def _segments_to_lines(segments: list[Segment], repaired: bool):
     return lines, confs
 
 
-def strict_pass(html_bytes: bytes):
-    """Strategy 1: strict UTF-8 decode; None if the payload is not valid
-    UTF-8 (the repair pass then gets its chance)."""
-    try:
-        html_str = html_bytes.decode("utf-8", errors="strict")
-    except UnicodeDecodeError:
-        return None
-    return _segments_to_lines(segment_html(html_str), repaired=False)
-
-
 def repair_pass(html_bytes: bytes):
     """Strategy 2 (the ``enhance_image`` analog): tolerant decode + control
     character strip, then the same segmenter."""

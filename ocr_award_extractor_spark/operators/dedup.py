@@ -1,5 +1,5 @@
 """Deduplication operators for a training-data pipeline: exact, MinHash
-(+LSH candidate pairs), SimHash, and n-gram Jaccard.
+(+LSH candidate pairs), SimHash, and corpus-level line dedup.
 
 All spelled with built-in DataFrame ops (explode → groupBy with MAP-SIDE
 PARTIAL aggregation — a min/sum per (doc, hash) combines before the
@@ -9,9 +9,10 @@ integers (Spark conv(hex)=DuckDB '0x'-cast): every oracle is exact, no
 float tolerance anywhere.
 
 At 100 TB: exact dedup is one hash-shuffle on the fingerprint; MinHash is
-scan → explode shingles → partial-min per band key → LSH bucket join where
-only candidate PAIRS shuffle (tiny vs corpus); the band join is the
-classic MinHash-LSH band/bucket scheme (Broder; Leskovec et al. MMDS ch.3).
+scan → explode shingles → partial-min per band key → one shuffle grouping
+band keys into buckets, whose candidate PAIRS are enumerated in-kernel —
+the classic MinHash-LSH band/bucket scheme (Broder; Leskovec et al. MMDS
+ch.3).
 """
 
 from __future__ import annotations
@@ -138,9 +139,6 @@ from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
     check_bucket as _check_bucket,
 )
 from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    guard_keyed_jvm as _guard_keyed_jvm,
-)
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
     make_oversize_acc as _make_oversize_acc,
 )
 
@@ -160,38 +158,27 @@ def _oversize_acc(df: DataFrame, on_oversize: str):
 
 
 def minhash_lsh_pairs_df(docs: DataFrame,
-                         force_join: bool = False,
                          max_bucket: int | None = None,
                          on_oversize: str = "error") -> DataFrame:
     """LSH candidate pairs: docs agreeing on ALL R rows of ANY band.
 
-    Default spelling is BUCKET-LOCAL (mirrors similarity's
-    _score_buckets_broadcast, r3 verdict #3): (doc_id, band, key) rows
-    group into buckets with ONE shuffle and each bucket's pairs are
-    enumerated inside the Arrow kernel, then the tiny cross-band distinct.
-    Measured honestly (BENCH.md round-4): the two spellings time WITHIN
-    NOISE at sf0.1 — Spark's ReuseExchange already computes the
-    self-join's duplicated signature subtree once — so the r3 regression
-    was VM steal, not plan structure. Bucket-local stays the default for
-    one shuffle READ instead of two exchange re-reads and for sharing the
+    BUCKET-LOCAL spelling (mirrors similarity's _score_buckets_broadcast,
+    r3 verdict #3): (doc_id, band, key) rows group into buckets with ONE
+    shuffle and each bucket's pairs are enumerated inside the Arrow
+    kernel, then the tiny cross-band distinct. The classic band
+    self-equi-join (the oracle in tests/oracle_spellings.py) times within
+    noise of it at sf0.1 (BENCH.md round-4); this spelling reads the
+    shuffle once instead of re-reading two exchanges and shares the
     skew-blocked kernel shape with the similarity side.
 
     Skew / mega-bucket guard (ENFORCED, r4 verdict #1): a bucket of k
-    members yields k(k-1)/2 pairs under EITHER spelling — blocked
-    enumeration bounds kernel live memory, but nothing bounds the OUTPUT.
-    The contract is "run dedup_exact first" (its one fingerprint shuffle
-    collapses exact copies before shingling); buckets past ``max_bucket``
-    (default pairblocks.MAX_BUCKET_MEMBERS) now fail the job with an
-    actionable error, or with ``on_oversize='skip'`` are dropped and
-    counted into LAST_OVERSIZE_ACC (kernel spelling). The join spelling
-    enforces the same cap JVM-side; its skip-mode drops are observed
-    into ``pairblocks.LAST_JVM_DROP_STATS`` (row units — ADVICE r5), and
-    it deliberately does NOT install LAST_OVERSIZE_ACC, which its plan
-    can never increment (a fresh 0 there misread as "nothing dropped").
-
-    ``force_join=True`` keeps the classic self-equi-join spelling
-    reachable (bit-equality pinned by
-    tests/test_trainingdata_ops.py::test_minhash_bucket_local_equals_join)."""
+    members yields k(k-1)/2 pairs — blocked enumeration bounds kernel
+    live memory, but nothing bounds the OUTPUT. The contract is "run
+    dedup_exact first" (its one fingerprint shuffle collapses exact
+    copies before shingling); buckets past ``max_bucket`` (default
+    pairblocks.MAX_BUCKET_MEMBERS) fail the job with an actionable error,
+    or with ``on_oversize='skip'`` are dropped and counted into
+    LAST_OVERSIZE_ACC."""
     cap = _MAX_BUCKET_MEMBERS if max_bucket is None else max_bucket
     sig = minhash_signature_df(docs)
     bands = F.array(*[
@@ -204,21 +191,6 @@ def minhash_lsh_pairs_df(docs: DataFrame,
     keyed = sig.select("doc_id", F.explode(bands).alias("bk")).select(
         "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    if force_join:
-        keyed = _guard_keyed_jvm(keyed, ["band", "key"], cap, on_oversize,
-                                 "MinHash-LSH")
-        a, b = keyed.alias("a"), keyed.alias("b")
-        return (
-            a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-        )
-
-    # kernel path only: the join spelling above returned already, and its
-    # plan can never increment a Python accumulator — installing one
-    # there misreads as "nothing dropped" (ADVICE r5)
     acc = _oversize_acc(docs, on_oversize)
     buckets = (
         keyed.groupBy("band", "key")
@@ -273,11 +245,9 @@ def minhash_lsh_pairs_df(docs: DataFrame,
     )
 
 
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
-                      force_join: bool = False) -> DataFrame:
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """minhash_lsh_pairs_df over the driver documents table (oracle slot)."""
-    return minhash_lsh_pairs_df(load_table(spark, sf_dir, "documents"),
-                                force_join=force_join)
+    return minhash_lsh_pairs_df(load_table(spark, sf_dir, "documents"))
 
 
 CC_MAX_ITERS = 20
@@ -456,42 +426,6 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return votes.select("doc_id", hash_col.alias("simhash"))
 
 
-# ------------------------------------------------------- n-gram Jaccard
-def jaccard_adjacent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-set Jaccard for adjacent doc_id pairs (a deterministic,
-    oracle-friendly slice of pairwise near-dup scoring). Exact int counts;
-    the ratio is the same IEEE division on both engines.
-
-    NOT in the driver registry since round 6: its 50-slot seat was freed
-    for ``warc_extract_roundtrip`` (r5 verdict #1). Semantics stay
-    pinned by tests/test_trainingdata_ops.py (planted values +
-    DuckDB parity at sf0.001)."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("tok"),
-    ).where(F.length("tok") > 0)
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = toks.alias("a"), toks.alias("b")
-    inter = (
-        a.join(b, (F.col("a.doc_id") + 1 == F.col("b.doc_id"))
-               & (F.col("a.tok") == F.col("b.tok")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    pairs = sa.join(sb, F.col("sa.doc_id") + 1 == F.col("sb.doc_id")).select(
-        F.col("sa.doc_id").alias("doc_a"),
-        F.col("sa.n").alias("n_a"), F.col("sb.n").alias("n_b"),
-    )
-    out = pairs.join(inter, "doc_a", "left").na.fill({"n_inter": 0})
-    union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    return out.select(
-        "doc_a", "n_a", "n_b", F.col("n_inter").cast("long").alias("n_inter"),
-        (F.col("n_inter").cast("double") / union.cast("double")).alias("jaccard"),
-    )
-
-
 # ------------------------------------------------- corpus-level line dedup
 LINE_TOKENS = 3               # tokens per derived line (corpus has no \n)
 
@@ -553,10 +487,7 @@ def line_dedup_corpus_df(docs: DataFrame) -> DataFrame:
 
 def line_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """line_dedup_corpus_df over the driver documents table (oracle
-    slot — took ``ivf_assign``'s registry seat in round 6; the IVF
-    assignment stays pytest-pinned against its DuckDB oracle in
-    tests/test_trainingdata_ops.py and is still exercised
-    end-to-end inside the driver-graded ``ivf_topk_cosine``)."""
+    slot)."""
     return line_dedup_corpus_df(load_table(spark, sf_dir, "documents"))
 
 

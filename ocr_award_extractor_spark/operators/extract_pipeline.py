@@ -111,7 +111,6 @@ def extract_documents(
     df: DataFrame,
     *,
     salt_partitions: int | None = None,
-    metrics: dict | None = None,
 ) -> DataFrame:
     """Attach the extraction stage to a documents DataFrame.
 
@@ -119,12 +118,6 @@ def extract_documents(
     repartition; None keeps the scan partitioning (cheapest — use when the
     input is already well-balanced, e.g. the small fixture). At cluster
     scale pass ~2-4× total cores so jumbo-doc stragglers stay short.
-
-    ``metrics``: optional dict to receive live Spark accumulators
-    ('docs', 'errors') — the O25 stage-metrics analog of the reference's
-    per-file logging (certificate_ocr.py:436,:461-464). Accumulators
-    update as tasks finish, so a monitoring thread sees progress DURING
-    the stage, not after (lineage rows carry the committed truth).
     """
     from ocr_award_extractor_spark.config import ensure_package_on_workers
 
@@ -132,76 +125,7 @@ def extract_documents(
     cols = df.select(*_IN_COLS)   # column pruning: html never flows past this stage
     if salt_partitions:
         cols = cols.repartition(salt_partitions, F.xxhash64("url", F.lit(SALT_SEED)))
-    if metrics is None:
-        return cols.mapInPandas(extract_batch, OUT_SCHEMA)
-
-    sc = df.sparkSession.sparkContext
-    docs_acc = sc.accumulator(0)
-    err_acc = sc.accumulator(0)
-    metrics["docs"] = docs_acc
-    metrics["errors"] = err_acc
-
-    def counted(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for out in extract_batch(batches):
-            docs_acc.add(len(out))
-            err_acc.add(int((out["status"] == "error").sum()))
-            yield out
-
-    return cols.mapInPandas(counted, OUT_SCHEMA)
-
-
-def extract_documents_tiered(
-    df: DataFrame,
-    *,
-    salt_partitions: int,
-    jumbo_partitions: int | None = None,
-    threshold_bytes: int | None = None,
-    jumbo_quantile: float = 0.99,
-) -> DataFrame:
-    """Two-tier skew routing (SURVEY.md §4): salting equalizes EXPECTED
-    per-partition load, but one 500 MB page still pins a single task at the
-    stage tail. Documents above the html-size threshold are routed to their
-    own round-robin partitions (~1 jumbo per task, scheduled alongside the
-    salted stage), so the straggler tail is bounded by ONE jumbo, not a
-    partition's worth.
-
-    ``threshold_bytes=None`` derives the ``jumbo_quantile`` cut with
-    percentile_approx, evaluated EXACTLY ONCE as a small driver-side job
-    over ``length(html)`` only. (A lazy cross-joined aggregate scalar was
-    evaluated once per union branch, and percentile_approx merges its GK
-    summaries in shuffle-fetch order — two evaluations could disagree, and
-    a row whose length fell between the two cuts would be emitted by both
-    branches or neither.) On a real table store an ``n_bytes`` column (or
-    use Iceberg column stats) and pass the cut in explicitly so the
-    pre-pass doesn't scan html twice. Results are identical to
-    :func:`extract_documents` (row-wise op; routing only changes physical
-    layout).
-    """
-    from ocr_award_extractor_spark.config import ensure_package_on_workers
-
-    ensure_package_on_workers(df.sparkSession)
-    cols = df.select(*_IN_COLS)
-    if threshold_bytes is None:
-        thr = cols.agg(
-            F.percentile_approx(F.length("html"), jumbo_quantile)
-        ).first()[0]
-        # NULL percentile (empty / all-NULL input) ⇒ nothing is jumbo
-        threshold_bytes = int(thr) if thr is not None else (1 << 62)
-    thr_col = F.lit(int(threshold_bytes)).cast("long")
-    # coalesce: NULL html must take the normal branch (→ error row there),
-    # not vanish — both where() sides would drop a NULL predicate row
-    is_jumbo = F.coalesce(F.length("html"), F.lit(0)) > thr_col
-    normal = (
-        cols.where(~is_jumbo)
-        .repartition(salt_partitions, F.xxhash64("url", F.lit(SALT_SEED)))
-        .mapInPandas(extract_batch, OUT_SCHEMA)
-    )
-    jumbo = (
-        cols.where(is_jumbo)
-        .repartition(jumbo_partitions or salt_partitions)   # round-robin spread
-        .mapInPandas(extract_batch, OUT_SCHEMA)
-    )
-    return normal.unionByName(jumbo)
+    return cols.mapInPandas(extract_batch, OUT_SCHEMA)
 
 
 def award_summary(extracted: DataFrame) -> DataFrame:

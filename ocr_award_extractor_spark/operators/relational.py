@@ -24,25 +24,6 @@ from pyspark.sql import functions as F
 from ocr_award_extractor_spark.sources.tables import load_table
 
 
-# --------------------------------------------------------------- O23 summary
-def count_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-by-group summary (certificate_ocr.py:461-463 analog).
-
-    Left the 50-slot driver registry in round 6 (seat traded to
-    textstats.decontaminate_ngrams): its single projection is a strict
-    subset of the still-graded avg_chars_by_lang (same GROUP BY lang,
-    same ``docs`` count column), so O23 keeps a driver-graded oracle row;
-    this spelling stays parity-pinned by pytest via
-    COUNT_BY_LANG_ORACLE_SQL (tests/test_trainingdata_ops.py)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.groupBy("lang").agg(F.count(F.lit(1)).alias("docs"))
-
-
-COUNT_BY_LANG_ORACLE_SQL = """
-    SELECT lang, count(*) AS docs FROM documents GROUP BY lang
-"""
-
-
 # ------------------------------------------------------ O2 predicate filter
 def filter_keyword_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan-time predicate (certificate_ocr.py:419-420 ext-filter analog):
@@ -55,6 +36,9 @@ def filter_keyword_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------ merged per-doc projection: O7 + O9 + O12 + O13 + O17 + O19, one slot
+KEYWORD_PRIORITY = ("window", "stream", "join", "scan", "sort")   # O13 order
+
+
 def doc_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIX reference operators in one oracle-checked projection (the
     driver grades at most 50 queries, so near-duplicate per-doc projections
@@ -65,17 +49,15 @@ def doc_token_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     * ``head3``     — O9 order-preserving concat of the first 3 tokens
       (newline-join analog, certificate_ocr.py:149);
     * ``longest_tok``/``longest_len`` — O12 argmax-by-length with the
-      pinned (len desc, token asc) tie-break (certificate_ocr.py:345-346),
-      folded in from the retired ``longest_token_per_doc`` slot in round 6.
-      The merged spelling is a per-row left-fold over the token array —
-      STRICTLY better scaled than the standalone explode+window (which
-      shuffled every token of every document to rank them); the fold's
-      first-wins argmax is the same total order, pinned by
-      tests/test_corpus_ops.py;
+      pinned (len desc, token asc) tie-break (certificate_ocr.py:345-346)
+      as a per-row left-fold over the token array — STRICTLY better scaled
+      than an explode+window (which shuffles every token of every document
+      to rank them); the fold's first-wins argmax is the same total order
+      as that window spelling, kept as the oracle in
+      tests/oracle_spellings.py;
     * ``first_kw``  — O13 fixed-priority first-match keyword scan
-      (certificate_ocr.py:348-355), folded in from the retired
-      ``first_keyword_hit`` slot (a pure CASE/WHEN chain — merging costs
-      nothing and keeps it driver-graded);
+      (certificate_ocr.py:348-355): a pure CASE/WHEN chain, the first
+      keyword of KEYWORD_PRIORITY contained in the text wins;
     * ``norm_md5``/``norm_len`` — O17 clean_text whitespace collapse
       (certificate_ocr.py:399) fingerprinted;
     * ``toks``/``n_distinct``   — O19 list(set(...)) dedupe with a PINNED
@@ -131,44 +113,7 @@ def avg_chars_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- O12/O6 argmax (top-1) ranking
-def longest_token_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relational spelling of the longest-line argmax (certificate_ocr.py
-    :345-346): explicit total-order tie-break (len desc, token asc).
-
-    Left the 50-slot driver registry in round 6 (seat traded to
-    corpus.host_cap_sample): O12 stays driver-graded via the
-    ``longest_tok``/``longest_len`` columns merged into doc_token_profile
-    (per-row fold — better scaled than this explode+window, which
-    shuffles every token), and this spelling stays pinned by a pytest
-    equivalence against those columns plus LONGEST_TOKEN_ORACLE_SQL
-    parity (tests/test_corpus_ops.py)."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
-    ).where(F.length("tok") > 0)
-    w = Window.partitionBy("doc_id").orderBy(
-        F.length("tok").desc(), F.col("tok").asc()
-    )
-    return (
-        toks.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("doc_id", "tok", F.length("tok").cast("long").alias("tok_len"))
-    )
-
-
-LONGEST_TOKEN_ORACLE_SQL = """
-    SELECT doc_id, tok, len(tok) AS tok_len FROM (
-        SELECT doc_id, tok,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY len(tok) DESC, tok ASC) AS rn
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-              FROM documents)
-        WHERE len(tok) > 0
-    ) WHERE rn = 1
-"""
-
-
+# ------------------------------------------------ O6 pick-best (top-1) ranking
 def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pick-best top-1 per key (certificate_ocr.py:131 spelled relationally
     with a pinned tie-break)."""
@@ -240,39 +185,6 @@ def q3_revenue_by_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
         .limit(10)
     )
-
-
-# ------------------------------------------- O13 first-match keyword lookup
-KEYWORD_PRIORITY = ("window", "stream", "join", "scan", "sort")
-
-
-def first_keyword_hit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relational spelling of the ordered first-match keyword scan
-    (certificate_ocr.py:348-355): a fixed-priority CASE/WHEN chain — the
-    first keyword in list order contained in the text wins.
-
-    Left the 50-slot driver registry in round 6 (seat traded to
-    corpus.pack_token_shards): O13 stays driver-graded via the identical
-    ``first_kw`` column merged into doc_token_profile; this standalone
-    spelling stays pinned by pytest equivalence + FIRST_KEYWORD_ORACLE_SQL
-    parity (tests/test_corpus_ops.py)."""
-    docs = load_table(spark, sf_dir, "documents")
-    expr = F.lit("")
-    for kw in reversed(KEYWORD_PRIORITY):
-        expr = F.when(F.col("text").contains(kw), kw).otherwise(expr)
-    return docs.select("doc_id", expr.alias("first_kw"))
-
-
-FIRST_KEYWORD_ORACLE_SQL = f"""
-    SELECT doc_id,
-           CASE WHEN contains(text, '{KEYWORD_PRIORITY[0]}') THEN '{KEYWORD_PRIORITY[0]}'
-                WHEN contains(text, '{KEYWORD_PRIORITY[1]}') THEN '{KEYWORD_PRIORITY[1]}'
-                WHEN contains(text, '{KEYWORD_PRIORITY[2]}') THEN '{KEYWORD_PRIORITY[2]}'
-                WHEN contains(text, '{KEYWORD_PRIORITY[3]}') THEN '{KEYWORD_PRIORITY[3]}'
-                WHEN contains(text, '{KEYWORD_PRIORITY[4]}') THEN '{KEYWORD_PRIORITY[4]}'
-                ELSE '' END AS first_kw
-    FROM documents
-"""
 
 
 # --------------------------------------------------------- O22 JSON emit
@@ -532,8 +444,8 @@ ORACLES = {
         SELECT doc_id, lang, n_chars FROM documents
         WHERE regexp_matches(text, 'window|stream')
     """,
-    # merged slot. The O12 argmax oracle is the retired slot's proven
-    # unnest+window spelling joined back per doc — NOT a list_reduce
+    # merged slot. The O12 argmax oracle is an unnest+window spelling
+    # joined back per doc — NOT a list_reduce
     # fold: DuckDB 1.0's list_reduce with a CASE lambda is
     # NONDETERMINISTIC across vectorized batches on a full-table scan
     # (same query flips 'column'/'customer' per run; single-vector

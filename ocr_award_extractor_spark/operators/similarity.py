@@ -295,8 +295,10 @@ def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands, rows = _corpus_lsh_params(sf_dir)
     # label rides through the kernel map-side (passthrough) instead of a
     # second embeddings scan + vec_id re-join: 2 scans + BroadcastExchange
-    # + BHJ -> 1 scan, 0 joins (guide §2 — remove the shuffle outright)
-    keys = lsh_band_keys(emb, bands, rows, passthrough=(("label", "INT"),))
+    # + BHJ -> 1 scan, 0 joins (guide §2 — remove the shuffle outright);
+    # its kernel output type is the table's own label type
+    label_t = emb.schema["label"].dataType.simpleString()
+    keys = lsh_band_keys(emb, bands, rows, passthrough=(("label", label_t),))
     return keys.select(
         "vec_id", "label", F.col("band").cast("long").alias("band"),
         F.col("key").alias("bucket"))
@@ -680,7 +682,13 @@ def lsh_neardup_pairs(spark: SparkSession, sf_dir: str,
 
 
 def _assign_to_centroids(emb: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid argmax for any (vec_id, label, qe) frame."""
+    """Nearest-centroid argmax for any (vec_id, label, qe) frame, by
+    cosine with tie-break centroid id asc — the IVF coarse quantizer's
+    assignment. Scale shape: centroids broadcast (no shuffle to score),
+    argmax via groupBy + max(struct), which plans as a two-phase
+    SortAggregate with partial_max BELOW the exchange, so the shuffle
+    carries one row per vec_id (never IVF_K candidates, never a window
+    sort)."""
     cos_c = F.try_divide(_dot(F.col("qe"), F.col("cv")).cast("double"), F.sqrt(
         _norm2(F.col("qe")).cast("double") * _norm2(F.col("cv")).cast("double")
     ))
@@ -783,27 +791,6 @@ def ivf_mean_cosine_df(emb: DataFrame, cent: DataFrame) -> DataFrame:
         "vec_id", cos_c.alias("cos_c"))
     return (scored.groupBy("vec_id").agg(F.max("cos_c").alias("best"))
             .agg(F.avg("best").alias("mean_cos")))
-
-
-def ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF coarse quantizer: assign every vector to its nearest centroid by
-    cosine (tie-break centroid id asc). Centroids are the first IVF_K
-    vectors (deterministic — ivf_train_centroids_df's spherical k-means
-    slots in here unchanged; the seed centroids keep the DuckDB oracle
-    closed-form). Since round 6 this is pytest-graded
-    (IVF_ASSIGN_ORACLE_SQL parity in tests/test_trainingdata_ops.py
-    — its registry seat went to line_dedup_corpus), and the identical
-    assignment subtree still runs inside the driver-graded
-    ivf_topk_cosine.
-
-    Scale shape: centroids broadcast (no shuffle to score), argmax via
-    groupBy + max(struct) — plans as a two-phase SortAggregate with
-    partial_max BELOW the exchange, so the shuffle carries one row per
-    vec_id (never IVF_K candidates, never a window sort). At 10⁹ vectors
-    the assignment is written back bucketed by centroid so probes prune
-    partitions instead of re-scoring."""
-    emb, cent = _emb_and_centroids(spark, sf_dir)
-    return _assign_to_centroids(emb, cent)
 
 
 def ivf_topk_cosine(spark: SparkSession, sf_dir: str,
@@ -1129,11 +1116,3 @@ QUERIES = {
     "embedding_neardup_clusters": embedding_neardup_clusters,
     "ivf_topk_cosine": ivf_topk_cosine,
 }
-
-# ivf_assign left the 50-slot driver registry in round 6 (seat traded to
-# dedup.line_dedup_corpus). Its DuckDB parity stays pytest-enforced via
-# this oracle (tests/test_trainingdata_ops.py), and the same
-# assignment subtree runs inside the driver-graded ivf_topk_cosine.
-IVF_ASSIGN_ORACLE_SQL = _IVF_ASSIGN_CTE + """
-    SELECT vec_id, label, CAST(cid AS BIGINT) AS centroid FROM a1
-"""

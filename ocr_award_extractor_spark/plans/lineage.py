@@ -1,4 +1,4 @@
-"""Resumable write path: per-partition lineage rows + resume anti-join.
+"""Resumable write path: per-partition lineage rows + split-set resume.
 
 The reference has NO fault tolerance — a crash loses the whole run
 (SURVEY.md §4). The north rule requires resumable jobs with per-partition
@@ -15,9 +15,10 @@ lineage (input split, row counts, checksum). Design:
   is exactly Iceberg's snapshot-visibility semantics done manually on
   parquet (no Iceberg jars in this sandbox; with Iceberg, data+lineage
   append in one transaction — see BASELINE.json north_star);
-* on restart, committed splits are read from lineage and the input is
-  filtered with a broadcast LEFT ANTI JOIN on split_id — already-committed
-  work is never recomputed or re-shuffled;
+* on restart, the committed split ids are collected from lineage (≤ N
+  rows) and each batch reads only its own pending splits through an
+  ``isin`` filter on split_id — already-committed work is never
+  recomputed or re-shuffled;
 * checksum per split = bit_xor over xxhash64(url, chr0, ocr_text) —
   order-insensitive, overflow-free (ANSI mode safe), cheap to recompute
   for audit.
@@ -47,25 +48,14 @@ def with_split_id(docs: DataFrame, n_splits: int = N_SPLITS_DEFAULT) -> DataFram
 
 
 def committed_splits(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Lineage rows of committed splits (empty DataFrame if none yet)."""
+    """Lineage rows of committed splits (empty DataFrame if none yet).
+    The schema-pinned read opens no file at plan time, so a corrupt
+    lineage file fails the first action that reads it — never a silent
+    "nothing committed"."""
     path = os.path.join(out_dir, "_lineage")
     if not os.path.exists(path):        # avoids a noisy JVM-side stack trace
         return spark.createDataFrame([], _LINEAGE_SCHEMA)
-    try:
-        return spark.read.schema(_LINEAGE_SCHEMA).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], _LINEAGE_SCHEMA)
-
-
-def pending_documents(spark: SparkSession, docs: DataFrame, out_dir: str,
-                      n_splits: int = N_SPLITS_DEFAULT) -> DataFrame:
-    """Resume filter: drop documents whose split is already committed.
-    The lineage side is tiny (≤ n_splits rows) ⇒ broadcast anti-join, no
-    shuffle of the fat documents table."""
-    lin = committed_splits(spark, out_dir).select("split_id").distinct()
-    return with_split_id(docs, n_splits).join(
-        F.broadcast(lin), "split_id", "left_anti"
-    )
+    return spark.read.schema(_LINEAGE_SCHEMA).parquet(path)
 
 
 def _append_lineage_rows(lineage_dir: str, rows: list[tuple]) -> None:
@@ -116,8 +106,8 @@ def run_resumable_extraction(
 ) -> dict:
     """Run (or resume) the extraction job with batch-granular commits.
 
-    ``max_batches`` exists for tests: stop after N commits to simulate a
-    killed job. Returns counters. ``extract`` defaults to the flagship
+    ``max_batches`` exists for tests: commit only the first N pending
+    batches to simulate a killed job. Returns counters. ``extract`` defaults to the flagship
     extraction stage and must map a documents DataFrame (with split_id) to
     an output DataFrame that keeps url/ocr_text/split_id.
     """
@@ -211,17 +201,11 @@ def run_resumable_extraction(
              for r in stats])
         return sum(r["row_count"] for r in stats)
 
-    done_batches = 0
+    # resume is keyed on the committed split SET, so "the first N
+    # batches" is well-defined however the pool below orders them
+    batches = batches[:max_batches]
     rows_written = 0
-    if max_batches is not None:
-        # test hook (simulated crash after N commits) keeps the strictly
-        # sequential order so "the first N batches" is well-defined
-        for seq_splits in enumerate(batches):
-            if done_batches >= max_batches:
-                break
-            rows_written += commit_batch(seq_splits)
-            done_batches += 1
-    elif batches:
+    if batches:
         # Overlap the independent batch jobs (guide §2.6): each batch owns
         # a DISJOINT set of split partitions and its own lineage append
         # (unique part filenames), so in-flight batches never touch the
@@ -237,11 +221,9 @@ def run_resumable_extraction(
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=min(4, len(batches))) as pool:
-            for rows in pool.map(commit_batch, enumerate(batches)):
-                rows_written += rows
-                done_batches += 1
+            rows_written = sum(pool.map(commit_batch, enumerate(batches)))
 
-    return {"batches_committed": done_batches,
+    return {"batches_committed": len(batches),
             "splits_total": n_splits,
             "splits_previously_committed": len(already),
             "rows_written": rows_written}

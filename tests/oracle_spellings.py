@@ -1,0 +1,139 @@
+"""Alternative spellings of product operators, kept ONLY as test oracles.
+
+Each function here is an independent spelling of something the package
+computes another way (or of a projection it merged into a wider query);
+the tests compare the live operator against it, and the DuckDB SQL beside
+it pins the spelling itself. Nothing in the package imports this module.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from ocr_award_extractor_spark.operators import dedup, relational, similarity
+from ocr_award_extractor_spark.sources.tables import load_table
+
+
+# ---------------------------------------------- MinHash-LSH pairs, self-join
+def minhash_lsh_pairs_join(docs: DataFrame) -> DataFrame:
+    """Classic band self-equi-join spelling of dedup.minhash_lsh_pairs_df:
+    docs agreeing on all MH_R rows of any band, distinct (doc_a < doc_b).
+    No mega-bucket guard — oracle inputs are small."""
+    sig = dedup.minhash_signature_df(docs)
+    bands = F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(",", *[F.col(f"s{b * dedup.MH_R + r}")
+                               for r in range(dedup.MH_R)]).alias("key"),
+        )
+        for b in range(dedup.MH_B)
+    ])
+    keyed = sig.select("doc_id", F.explode(bands).alias("bk")).select(
+        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    a, b = keyed.alias("a"), keyed.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.key") == F.col("b.key"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+# ------------------------------- O12 argmax by length: explode + window
+def longest_token_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Longest token per doc with the (len desc, token asc) tie-break —
+    the window spelling of doc_token_profile's longest_tok/longest_len
+    fold. Docs without a non-blank token produce no row."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
+    ).where(F.length("tok") > 0)
+    w = Window.partitionBy("doc_id").orderBy(
+        F.length("tok").desc(), F.col("tok").asc()
+    )
+    return (
+        toks.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select("doc_id", "tok", F.length("tok").cast("long").alias("tok_len"))
+    )
+
+
+LONGEST_TOKEN_ORACLE_SQL = """
+    SELECT doc_id, tok, len(tok) AS tok_len FROM (
+        SELECT doc_id, tok,
+               row_number() OVER (PARTITION BY doc_id
+                                  ORDER BY len(tok) DESC, tok ASC) AS rn
+        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
+              FROM documents)
+        WHERE len(tok) > 0
+    ) WHERE rn = 1
+"""
+
+
+# --------------------------------------- O13 first-match keyword lookup
+def first_keyword_hit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Standalone spelling of doc_token_profile's first_kw column: the
+    first keyword of KEYWORD_PRIORITY contained in the text, else ''."""
+    docs = load_table(spark, sf_dir, "documents")
+    expr = F.lit("")
+    for kw in reversed(relational.KEYWORD_PRIORITY):
+        expr = F.when(F.col("text").contains(kw), kw).otherwise(expr)
+    return docs.select("doc_id", expr.alias("first_kw"))
+
+
+_KW = relational.KEYWORD_PRIORITY
+FIRST_KEYWORD_ORACLE_SQL = f"""
+    SELECT doc_id,
+           CASE WHEN contains(text, '{_KW[0]}') THEN '{_KW[0]}'
+                WHEN contains(text, '{_KW[1]}') THEN '{_KW[1]}'
+                WHEN contains(text, '{_KW[2]}') THEN '{_KW[2]}'
+                WHEN contains(text, '{_KW[3]}') THEN '{_KW[3]}'
+                WHEN contains(text, '{_KW[4]}') THEN '{_KW[4]}'
+                ELSE '' END AS first_kw
+    FROM documents
+"""
+
+
+# ------------------------------------------- adjacent-doc token Jaccard
+def jaccard_adjacent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-set Jaccard for adjacent doc_id pairs (doc_a, doc_a + 1):
+    exact int counts, the ratio one IEEE division on both engines."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id",
+        F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("tok"),
+    ).where(F.length("tok") > 0)
+    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a, b = toks.alias("a"), toks.alias("b")
+    inter = (
+        a.join(b, (F.col("a.doc_id") + 1 == F.col("b.doc_id"))
+               & (F.col("a.tok") == F.col("b.tok")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"))
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    pairs = sa.join(sb, F.col("sa.doc_id") + 1 == F.col("sb.doc_id")).select(
+        F.col("sa.doc_id").alias("doc_a"),
+        F.col("sa.n").alias("n_a"), F.col("sb.n").alias("n_b"),
+    )
+    out = pairs.join(inter, "doc_a", "left").na.fill({"n_inter": 0})
+    union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
+    return out.select(
+        "doc_a", "n_a", "n_b", F.col("n_inter").cast("long").alias("n_inter"),
+        (F.col("n_inter").cast("double") / union.cast("double")).alias("jaccard"),
+    )
+
+
+# ------------------------------------------------ IVF coarse assignment
+def ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every vector's nearest seed centroid — the assignment subtree that
+    runs inside similarity.ivf_topk_cosine, exposed on its own."""
+    emb, cent = similarity._emb_and_centroids(spark, sf_dir)
+    return similarity._assign_to_centroids(emb, cent)
+
+
+IVF_ASSIGN_ORACLE_SQL = similarity._IVF_ASSIGN_CTE + """
+    SELECT vec_id, label, CAST(cid AS BIGINT) AS centroid FROM a1
+"""

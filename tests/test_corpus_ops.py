@@ -7,8 +7,8 @@ CANNOT see — that the distributed spellings (salted two-level rank,
 range-partitioned prefix-sum) are equivalent to their naive one-window
 counterparts and invariant under input partitioning, and that the O12 /
 O13 projections merged into doc_token_profile are the SAME functions as
-the retired standalone slots (which keep their own DuckDB parity here,
-per the jaccard_adjacent_pairs precedent)."""
+their standalone spellings in tests/oracle_spellings.py (which keep their
+own DuckDB parity here)."""
 
 from __future__ import annotations
 
@@ -18,6 +18,8 @@ import sys
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tests import oracle_spellings  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
@@ -211,7 +213,7 @@ def test_merged_longest_token_equals_retired_slot(spark):
     prof = {r["doc_id"]: (r["longest_tok"], r["longest_len"])
             for r in relational.doc_token_profile(spark, SF).collect()}
     old = {r["doc_id"]: (r["tok"], r["tok_len"])
-           for r in relational.longest_token_per_doc(spark, SF).collect()}
+           for r in oracle_spellings.longest_token_per_doc(spark, SF).collect()}
     assert set(old) <= set(prof)
     for did, pair in prof.items():
         assert pair == old.get(did, (None, None)), did
@@ -223,28 +225,25 @@ def test_merged_first_kw_equals_retired_slot(spark):
     prof = {r["doc_id"]: r["first_kw"]
             for r in relational.doc_token_profile(spark, SF).collect()}
     old = {r["doc_id"]: r["first_kw"]
-           for r in relational.first_keyword_hit(spark, SF).collect()}
+           for r in oracle_spellings.first_keyword_hit(spark, SF).collect()}
     assert prof == old
 
 
 def test_retired_slots_duckdb_parity(spark):
-    """The retired standalone spellings keep the DuckDB parity they used
-    to get from the driver (jaccard_adjacent_pairs precedent)."""
+    """The standalone O12/O13 spellings match their DuckDB spellings."""
     import duckdb
-
-    from ocr_award_extractor_spark.operators import relational
 
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
-    got = _rows(relational.longest_token_per_doc(spark, SF))
+    got = _rows(oracle_spellings.longest_token_per_doc(spark, SF))
     want = sorted(map(tuple,
-                      con.execute(relational.LONGEST_TOKEN_ORACLE_SQL)
+                      con.execute(oracle_spellings.LONGEST_TOKEN_ORACLE_SQL)
                       .fetchall()))
     assert got == want and len(got) > 0
-    got = _rows(relational.first_keyword_hit(spark, SF))
+    got = _rows(oracle_spellings.first_keyword_hit(spark, SF))
     want = sorted(map(tuple,
-                      con.execute(relational.FIRST_KEYWORD_ORACLE_SQL)
+                      con.execute(oracle_spellings.FIRST_KEYWORD_ORACLE_SQL)
                       .fetchall()))
     assert got == want and len(got) > 0
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ocr_award_extractor_spark.plans.lineage import (
-    pending_documents, read_committed, run_resumable_extraction, verify_lineage,
+    read_committed, run_resumable_extraction, verify_lineage,
 )
 from ocr_award_extractor_spark.sources.tables import load_fixture
 
@@ -25,14 +25,12 @@ def test_kill_and_resume(spark, tmp_path):
     n_partial = partial.count()
     assert 0 < n_partial < N_DOCS
 
-    # the resume filter must exclude exactly the committed splits
-    pend = pending_documents(spark, docs, out, n_splits=8)
-    assert pend.count() == N_DOCS - n_partial
-
-    # restart commits only the remaining batches
+    # restart commits only the remaining batches: exactly the documents
+    # of the splits the first run did not commit
     r2 = run_resumable_extraction(spark, docs, out, "run-2",
                                   n_splits=8, n_batches=4)
     assert r2["splits_previously_committed"] > 0
+    assert r2["rows_written"] == N_DOCS - n_partial
 
     final = read_committed(spark, out)
     urls = [r["url"] for r in final.select("url").collect()]
@@ -61,6 +59,39 @@ def test_rerun_after_complete_is_noop(spark, tmp_path):
     assert r["batches_committed"] == 0
     assert r["splits_previously_committed"] == 4
     assert read_committed(spark, out).count() == 50
+
+
+def test_corrupt_lineage_fails_resume_loudly(spark, tmp_path):
+    """A corrupt lineage file must stop the resume before any batch runs
+    — not read as "nothing committed", which would silently recompute
+    every split and hide the damage — and must leave the committed data
+    untouched."""
+    import glob
+    import os
+
+    import pytest
+
+    out = str(tmp_path / "corrupt")
+    docs = load_fixture(spark, n_docs=60)
+    run_resumable_extraction(spark, docs, out, "first", n_splits=4,
+                             n_batches=2, max_batches=1)
+    lineage = glob.glob(os.path.join(out, "_lineage", "*.parquet"))
+    assert len(lineage) == 1
+    with open(lineage[0], "wb") as fh:
+        fh.write(b"not a parquet file")
+
+    def data_state():
+        paths = [os.path.join(r, f)
+                 for r, _, fs in os.walk(os.path.join(out, "data")) for f in fs]
+        return sorted((p, os.stat(p).st_size, os.stat(p).st_mtime_ns)
+                      for p in paths)
+
+    before = data_state()
+    assert before
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run_resumable_extraction(spark, docs, out, "resume", n_splits=4,
+                                 n_batches=2)
+    assert data_state() == before
 
 
 def test_verify_lineage_detects_corruption(spark, tmp_path):

@@ -70,8 +70,9 @@ def test_ivf_probe_subset_of_bruteforce(spark):
     """IVF top-k (nprobe=1) returns vectors from exactly one centroid's
     cluster, each scored identically to the brute-force baseline."""
     from ocr_award_extractor_spark.operators.similarity import (
-        ann_topk_cosine, ivf_assign, ivf_topk_cosine,
+        ann_topk_cosine, ivf_topk_cosine,
     )
+    from tests.oracle_spellings import ivf_assign
 
     sf = "/root/testdata/sf0.001"
     assign = {r["vec_id"]: r["centroid"] for r in ivf_assign(spark, sf).collect()}

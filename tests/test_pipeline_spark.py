@@ -130,18 +130,6 @@ def test_binary_dir_source_glob_and_extraction(spark, tmp_path):
         assert got[f"page{i}.html"]["ocr_text"] == r["text"]
 
 
-def test_stage_metrics_accumulators(spark):
-    """O25: live accumulators count processed docs and error rows, agreeing
-    with the materialized result."""
-    docs = load_fixture(spark, n_docs=150)
-    metrics = {}
-    out = extract_documents(docs, metrics=metrics)
-    rows = out.collect()
-    n_err = sum(1 for r in rows if r["status"] == "error")
-    assert metrics["docs"].value == 150
-    assert metrics["errors"].value == n_err > 0
-
-
 def test_image_payloads_route_to_ocr_slot(spark):
     """Raster payloads (the reference's true input type) must route to the
     pluggable OCR slot: clean error rows without a backend, real lines with

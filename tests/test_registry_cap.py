@@ -51,3 +51,13 @@ def test_pipeline_family_registers_first():
                  "warc_extract_roundtrip", "resumable_write_roundtrip",
                  "streaming_extract_roundtrip", "stream_dedup_first_seen"):
         assert name in first
+
+
+def test_bench_queries_are_registered():
+    """bench.py times its queries by name through queries(); a registry
+    seat it still names must not disappear (that breaks the bench at
+    runtime, after the scaling runs)."""
+    import bench
+
+    q, _ = _registry()
+    assert set(bench.BENCH_QUERIES) <= set(q), set(bench.BENCH_QUERIES) - set(q)

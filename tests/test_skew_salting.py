@@ -40,52 +40,21 @@ def test_salting_evens_host_clustered_input(spark):
     assert skew_after < 1.6, f"salted max/mean still {skew_after:.2f}"
 
 
-def test_tiered_routing_matches_plain_extraction(spark):
-    """Jumbo routing is a physical-layout change only: result rows are
-    identical to the plain pipeline, and the jumbo branch really receives
-    the oversized documents."""
-    from pyspark.sql import functions as F2
-
-    from ocr_award_extractor_spark.operators.extract_pipeline import (
-        extract_documents, extract_documents_tiered,
-    )
-
-    docs = load_fixture(spark, n_docs=120)
-    # graft three jumbo docs: inflate html with huge comment padding
-    pad = F2.concat(F2.lit("<!-- "), F2.repeat(F2.lit("x"), 200_000), F2.lit(" -->"))
-    docs = docs.withColumn(
-        "html",
-        F2.when(F2.col("url").rlike("doc0000000[123]"),
-                F2.concat(F2.col("html").cast("string"), pad).cast("binary"))
-        .otherwise(F2.col("html")),
-    )
-
-    plain = extract_documents(docs)
-    tiered = extract_documents_tiered(docs, salt_partitions=8,
-                                      threshold_bytes=100_000)
-    a = sorted((r["url"], r["status"], r["ocr_text"]) for r in plain.collect())
-    b = sorted((r["url"], r["status"], r["ocr_text"]) for r in tiered.collect())
-    assert a == b and len(a) == 120
-
-    # quantile path picks a cut that isolates the jumbos
-    auto = extract_documents_tiered(docs, salt_partitions=8, jumbo_quantile=0.97)
-    assert auto.count() == 120
-
-
-def test_tiered_routing_keeps_null_html_rows(spark):
-    """NULL html must surface as an error row from the tiered plan too —
-    a NULL routing predicate silently dropping the document is data loss."""
+def test_null_html_rows_come_back_as_errors(spark):
+    """NULL html must surface as an error row from the salted extraction
+    stage — a NULL dropped anywhere between scan and kernel is data
+    loss."""
     from datetime import datetime
 
     from ocr_award_extractor_spark.operators.extract_pipeline import (
-        extract_documents_tiered,
+        extract_documents,
     )
 
     cols = "url string, warc_ts timestamp, html binary, text string, lang string"
     rows = [("u://ok", datetime(2024, 3, 1), b"<p>fine text here</p>", "", "en"),
             ("u://null", datetime(2024, 3, 1), None, "", "en")]
     docs = spark.createDataFrame(rows, cols)
-    got = {r["url"]: r["status"]
-           for r in extract_documents_tiered(docs, salt_partitions=2,
-                                             threshold_bytes=10_000).collect()}
-    assert got == {"u://ok": "success", "u://null": "error"}
+    got = {r["url"]: (r["status"], r["message"])
+           for r in extract_documents(docs, salt_partitions=2).collect()}
+    assert got == {"u://ok": ("success", None),
+                   "u://null": ("error", "unreadable document")}

@@ -53,19 +53,27 @@ def test_minhash_lsh_finds_near_dup(spark, planted_dir):
 
 
 def test_simhash_hamming_orders_similarity(spark, planted_dir):
+    """SimHash distance must order adjacent pairs like their token-set
+    Jaccard (the reference similarity): identical text at distance 0,
+    the near-dup pair closer than the unrelated one."""
     from ocr_award_extractor_spark.operators.dedup import simhash
+    from tests.oracle_spellings import jaccard_adjacent_pairs
 
     h = {r["doc_id"]: r["simhash"] for r in simhash(spark, planted_dir).collect()}
+    j = {r["doc_a"]: r["jaccard"]
+         for r in jaccard_adjacent_pairs(spark, planted_dir).collect()}
 
     def ham(a, b):
         return bin(a ^ b).count("1")
 
-    assert ham(h[0], h[1]) == 0                  # identical text
+    assert j[0] == 1.0 and ham(h[0], h[1]) == 0  # identical text
+    assert j[1] > j[2]                           # 1-2 near-dup, 2-3 unrelated
+    assert ham(h[1], h[2]) < ham(h[2], h[3])
     assert ham(h[0], h[2]) < ham(h[0], h[3])     # near-dup closer than unrelated
 
 
 def test_jaccard_adjacent(spark, planted_dir):
-    from ocr_award_extractor_spark.operators.dedup import jaccard_adjacent_pairs
+    from tests.oracle_spellings import jaccard_adjacent_pairs
 
     j = {r["doc_a"]: r["jaccard"] for r in jaccard_adjacent_pairs(spark, planted_dir).collect()}
     assert j[0] == 1.0               # 0 vs 1 identical token sets
@@ -223,18 +231,20 @@ def test_ivf_nprobe_widens_monotonically(spark):
 
 def test_minhash_bucket_local_equals_join(spark, planted_dir, monkeypatch):
     """The bucket-local MinHash pair kernel must emit EXACTLY the classic
-    self-join spelling's distinct pairs — on the planted corpus and on
-    the oracle-gate corpus; _PAIR_BLOCK_ELEMS=1 forces blocked
-    enumeration through buckets wider than one block."""
+    self-join spelling's distinct pairs (tests/oracle_spellings.py) — on
+    the planted corpus and on the oracle-gate corpus; _PAIR_BLOCK_ELEMS=1
+    forces blocked enumeration through buckets wider than one block."""
     from ocr_award_extractor_spark.operators import dedup
+    from ocr_award_extractor_spark.sources.tables import load_table
+    from tests.oracle_spellings import minhash_lsh_pairs_join
 
     monkeypatch.setattr(dedup, "_PAIR_BLOCK_ELEMS", 1)
     for sf in (planted_dir, "/root/testdata/sf0.01"):
         local = {(r["doc_a"], r["doc_b"])
                  for r in dedup.minhash_lsh_pairs(spark, sf).collect()}
         joined = {(r["doc_a"], r["doc_b"])
-                  for r in dedup.minhash_lsh_pairs(
-                      spark, sf, force_join=True).collect()}
+                  for r in minhash_lsh_pairs_join(
+                      load_table(spark, sf, "documents")).collect()}
         assert local == joined, sf
     assert local   # sf0.01 has 25 known pairs — non-vacuous
 
@@ -323,9 +333,9 @@ def flood_dir(tmp_path_factory):
 
 
 def test_mega_bucket_guard_minhash(spark, flood_dir):
-    """r4 verdict #1: an exact-dup flood must FAIL LOUD (error mode, both
-    spellings), be droppable-and-counted (skip mode + accumulator), and
-    run clean after the documented dedup_exact pre-pass."""
+    """r4 verdict #1: an exact-dup flood must FAIL LOUD (error mode), be
+    droppable-and-counted (skip mode + accumulator), and run clean after
+    the documented dedup_exact pre-pass."""
     from ocr_award_extractor_spark.operators import dedup
     from ocr_award_extractor_spark.sources.tables import load_table
 
@@ -334,10 +344,6 @@ def test_mega_bucket_guard_minhash(spark, flood_dir):
     # error mode (the default): kernel raise surfaces through the action
     with pytest.raises(Exception, match="member guard"):
         dedup.minhash_lsh_pairs_df(docs, max_bucket=8).collect()
-    # ... and the all-JVM join spelling fails the same contract in-plan
-    with pytest.raises(Exception, match="member guard"):
-        dedup.minhash_lsh_pairs_df(docs, force_join=True,
-                                   max_bucket=8).collect()
 
     # skip mode: flood buckets dropped AND counted; small buckets intact
     skipped = {(r["doc_a"], r["doc_b"])
@@ -447,13 +453,11 @@ def test_dedup_clusters_guard_passthrough(spark, flood_dir):
 
 
 def test_jaccard_duckdb_parity_sf0001(spark):
-    """jaccard_adjacent_pairs left the driver registry in round 6 (its
-    50-slot seat was freed for warc_extract_roundtrip — r5 verdict #1),
-    so the DuckDB-oracle parity it used to get from the driver's
-    CORRECTNESS run lives here instead, over the same sf0.001 table."""
+    """The adjacent-pair Jaccard reference (tests/oracle_spellings.py)
+    matches its DuckDB spelling over the sf0.001 documents table."""
     import duckdb
 
-    from ocr_award_extractor_spark.operators.dedup import jaccard_adjacent_pairs
+    from tests.oracle_spellings import jaccard_adjacent_pairs
 
     sf = "/root/testdata/sf0.001"
     got = {r["doc_a"]: (r["n_a"], r["n_b"], r["n_inter"], r["jaccard"])
@@ -485,39 +489,36 @@ def test_jaccard_duckdb_parity_sf0001(spark):
     assert got == want and len(got) > 0
 
 
-def test_join_spelling_skip_drops_are_observed(spark, flood_dir):
-    """ADVICE r5: the all-JVM join spelling's skip mode must not lose
+def test_join_spelling_skip_drops_are_observed(spark, zero_norm_dir):
+    """ADVICE r5: the all-JVM LSH join spelling's skip mode must not lose
     drop observability. Drops are observed into
     pairblocks.LAST_JVM_DROP_STATS (row units), and the join path must
     NOT install LAST_OVERSIZE_ACC — a fresh 0 there misreads as
     'nothing dropped' when the JVM plan can never increment it."""
-    from ocr_award_extractor_spark.operators import dedup, pairblocks
-    from ocr_award_extractor_spark.sources.tables import load_table
+    from ocr_award_extractor_spark.operators import pairblocks, similarity
 
-    docs = load_table(spark, flood_dir, "documents")
     sentinel = object()
-    dedup.LAST_OVERSIZE_ACC = sentinel
-    out = dedup.minhash_lsh_pairs_df(docs, force_join=True, max_bucket=8,
-                                     on_oversize="skip")
-    pairs = {(r["doc_a"], r["doc_b"]) for r in out.collect()}
-    assert dedup.LAST_OVERSIZE_ACC is sentinel     # join path installed nothing
+    similarity.LAST_OVERSIZE_ACC = sentinel
+    got = similarity.lsh_neardup_pairs(
+        spark, zero_norm_dir, spelling="join", max_bucket=10,
+        on_oversize="skip").collect()
+    assert got == []                               # every bucket > 10 members
+    assert similarity.LAST_OVERSIZE_ACC is sentinel  # join installed nothing
     stats = pairblocks.LAST_JVM_DROP_STATS
     assert stats.buckets_dropped >= 1              # kernel-counter units
-    assert stats.rows_dropped >= 30                # flood rows were dropped
-    assert stats.max_bucket_seen >= 30             # and the worst bucket seen
-    assert all(a >= 30 or b >= 30 for a, b in pairs)
+    assert stats.rows_dropped >= 20                # the 20-member buckets
+    assert stats.max_bucket_seen >= 20             # and the worst bucket seen
 
-    # a non-flood corpus in skip mode reports zero drops (not None)
-    small = docs.where("doc_id >= 28")
-    out2 = dedup.minhash_lsh_pairs_df(small, force_join=True, max_bucket=8,
-                                      on_oversize="skip")
-    out2.collect()
+    # the same corpus under a cap it fits reports zero drops (not None)
+    similarity.lsh_neardup_pairs(
+        spark, zero_norm_dir, spelling="join", max_bucket=40,
+        on_oversize="skip").collect()
     assert pairblocks.LAST_JVM_DROP_STATS.rows_dropped == 0
 
     # bogus mode still validated eagerly on the join path
     with pytest.raises(ValueError, match="on_oversize"):
-        dedup.minhash_lsh_pairs_df(docs, force_join=True,
-                                   on_oversize="bogus")
+        similarity.lsh_neardup_pairs(spark, zero_norm_dir, spelling="join",
+                                     on_oversize="bogus")
 
 
 def test_fill_missing_lang(spark):
@@ -670,14 +671,12 @@ def test_line_dedup_kept_total_is_distinct_lines(spark):
 
 
 def test_ivf_assign_duckdb_parity_sf0001(spark):
-    """ivf_assign left the driver registry in round 6 (seat traded to
-    line_dedup_corpus), so its DuckDB-oracle parity lives here, over the
-    same sf0.001 embeddings table the driver would have used."""
+    """The IVF assignment subtree of ivf_topk_cosine, exposed on its own
+    (tests/oracle_spellings.py), matches its DuckDB spelling over the
+    sf0.001 embeddings table."""
     import duckdb
 
-    from ocr_award_extractor_spark.operators.similarity import (
-        IVF_ASSIGN_ORACLE_SQL, ivf_assign,
-    )
+    from tests.oracle_spellings import IVF_ASSIGN_ORACLE_SQL, ivf_assign
 
     sf = "/root/testdata/sf0.001"
     got = sorted(tuple(r) for r in ivf_assign(spark, sf).collect())
@@ -773,25 +772,6 @@ def test_decontaminate_planted_canary(spark):
     assert got[b_]["contaminated"] and got[b_]["n_hits"] == 1
     assert not got[c]["contaminated"] and got[c]["n_hits"] == 0
     assert not got[d]["contaminated"] and got[d]["n_hits"] == 0
-
-
-def test_count_by_lang_duckdb_parity_sf0001(spark):
-    """count_by_lang left the 50-slot registry in round 6 (seat traded to
-    decontaminate_ngrams) — its DuckDB parity stays pinned here, same as
-    jaccard's."""
-    import duckdb
-
-    from ocr_award_extractor_spark.operators.relational import (
-        COUNT_BY_LANG_ORACLE_SQL, count_by_lang,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = {(r["lang"], r["docs"]) for r in count_by_lang(spark, sf).collect()}
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
-    want = set(map(tuple, con.execute(COUNT_BY_LANG_ORACLE_SQL).fetchall()))
-    assert got == want
 
 
 def test_clf_join_spelling_equals_in_row(spark):
