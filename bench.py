@@ -13,8 +13,8 @@ The scaling record is SELF-DEFENDING (r5 verdict #4): raw ratio plus the
 per-window busy-probe normalization and a calibration-validity flag, so a
 sample from a throttled window can't masquerade as a scaling loss.
 Full detail — scaling runs + hardware ceilings, the approx-quality
-study, the broadcast/shuffled crossover, rehearsal stages — goes to the
-committed BENCH_full_latest.json next to this file.
+study, rehearsal stages — goes to the committed BENCH_full_latest.json
+next to this file.
 
 Headline: the flagship extraction pipeline (html bytes → boilerplate strip
 → field extraction) over a deterministic web-page corpus derived from the
@@ -241,146 +241,6 @@ def run_scaling() -> dict:
         "pairs": pairs,
         "efficiency": pairs["2x4"]["efficiency"],
     }
-
-
-def ensure_big_embeddings(n_base: int = 150_000) -> str:
-    """300k-vector corpus for the broadcast↔shuffled crossover bench (r4
-    verdict #3): n_base seeded-random float32 vectors, each with one
-    ±0.01-perturbed copy (a genuine cos≥0.9 near-dup), so the strict
-    cos≥0.9 LSH design has real pairs to find AND the corpus is big
-    enough that (a) the band design is in the double-digit-B regime the
-    shuffled spelling exists for and (b) the broadcast spelling's driver
-    collect (~150 MB Arrow) trips a constrained spark.driver.maxResultSize
-    while the shuffled spelling — no driver state — completes. Cached
-    under fixtures/."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ocr_award_extractor_spark.sources.tables import FIXTURE_DIR
-
-    out_dir = os.path.join(FIXTURE_DIR, f"emb_big_{n_base * 2}")
-    path = os.path.join(out_dir, "embeddings.parquet")
-    if os.path.exists(path):
-        return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    log(f"generating crossover corpus ({n_base * 2} vectors) -> {path}")
-    rng = np.random.RandomState(0x5EED)
-    base = rng.uniform(-1.0, 1.0, size=(n_base, 64)).astype(np.float32)
-    pert = (base + rng.uniform(-0.01, 0.01,
-                               size=base.shape).astype(np.float32))
-    E = np.empty((n_base * 2, 64), dtype=np.float32)
-    E[0::2] = base        # vec_id 2i   = parent
-    E[1::2] = pert        # vec_id 2i+1 = near-dup copy
-    tbl = pa.table({
-        "vec_id": pa.array(np.arange(n_base * 2, dtype=np.int64)),
-        "label": pa.array(np.zeros(n_base * 2, dtype=np.int32)),
-        "embedding": pa.FixedSizeListArray.from_arrays(
-            pa.array(E.ravel()), 64).cast(pa.list_(pa.float32())),
-    })
-    pq.write_table(tbl, path + ".tmp")
-    os.rename(path + ".tmp", path)
-    return out_dir
-
-
-def crossover_worker(spelling: str, max_result_size: str = "64m") -> None:
-    """Subprocess entry (r4 verdict #3): run ONE spelling of the strict-
-    design LSH scorer over the crossover corpus in a session whose
-    spark.driver.maxResultSize is constrained to ``max_result_size`` —
-    the mechanism that kills driver-collect strategies on real clusters.
-    The broadcast spelling's Arrow collect must ABORT against the cap;
-    the shuffled spelling has no driver state and must complete. Prints
-    one JSON line {spelling, ok, wall_sec|error}."""
-    import math
-
-    from ocr_award_extractor_spark.config import get_spark
-    from ocr_award_extractor_spark.operators.similarity import (
-        lsh_neardup_pairs, lsh_params,
-    )
-
-    sf_dir = ensure_big_embeddings()
-    spark = get_spark(f"bench-crossover-{spelling}", master="local[8]",
-                      shuffle_partitions=32,
-                      extra={"spark.driver.maxResultSize": max_result_size})
-    import pyarrow.parquet as pq
-
-    n = pq.ParquetFile(
-        os.path.join(sf_dir, "embeddings.parquet")).metadata.num_rows
-    p09 = 1.0 - math.acos(0.9) / math.pi
-    b9, r9 = lsh_params(n, design_p=p09)
-    t0 = time.monotonic()
-    try:
-        rows = lsh_neardup_pairs(spark, sf_dir, bands=b9, rows=r9,
-                                 spelling=spelling).count()
-        print(json.dumps({"spelling": spelling, "ok": True,
-                          "wall_sec": round(time.monotonic() - t0, 2),
-                          "rows": rows, "bands": b9, "rows_per_band": r9,
-                          "max_result_size": max_result_size}))
-    except Exception as e:  # noqa: BLE001 — the failure IS the datum
-        err = str(e)
-        # surface the root cause line (the maxResultSize abort) rather
-        # than the py4j awaitResult preamble
-        cause = next((ln.strip() for ln in err.splitlines()
-                      if "maxResultSize" in ln), err[:300])
-        print(json.dumps({"spelling": spelling, "ok": False,
-                          "error": cause[:300],
-                          "max_result_size": max_result_size}))
-    finally:
-        spark.stop()
-
-
-def run_crossover(spark) -> dict:
-    """The broadcast↔shuffled cost model, MEASURED (r4 verdict #3):
-    (a) both spellings timed at the strict cos≥0.9 design (double-digit
-    bands) on the 300k crossover corpus in THIS full-width session;
-    (b) two constrained subprocesses (spark.driver.maxResultSize=64m)
-    demonstrating broadcast failing on its driver collect while shuffled
-    completes — the regime the shuffled spelling exists for."""
-    import math
-
-    from ocr_award_extractor_spark.operators.similarity import (
-        lsh_neardup_pairs, lsh_params,
-    )
-
-    sf_dir = ensure_big_embeddings()
-    import pyarrow.parquet as pq
-
-    n = pq.ParquetFile(
-        os.path.join(sf_dir, "embeddings.parquet")).metadata.num_rows
-    p09 = 1.0 - math.acos(0.9) / math.pi
-    b9, r9 = lsh_params(n, design_p=p09)
-    out = {"n_vectors": n, "bands": b9, "rows": r9, "timings": {}}
-    pairs_by_spelling = {}
-    for sp in ("broadcast", "shuffled"):
-        t0 = time.monotonic()
-        pairs_by_spelling[sp] = lsh_neardup_pairs(
-            spark, sf_dir, bands=b9, rows=r9, spelling=sp).count()
-        out["timings"][sp] = round(time.monotonic() - t0, 2)
-        log(f"  crossover[{sp}]: {pairs_by_spelling[sp]} pairs "
-            f"in {out['timings'][sp]}s (B={b9}, R={r9})")
-    # distinct key from the design's rows-per-band above — a bare
-    # out["rows"] assignment here once clobbered R in the record
-    out["pairs"] = pairs_by_spelling
-    out["pairs_equal"] = len(set(pairs_by_spelling.values())) == 1
-
-    out["constrained"] = {}
-    for sp in ("broadcast", "shuffled"):
-        log(f"  crossover constrained run: {sp} @ maxResultSize=64m")
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__),
-             "--crossover-worker", sp],
-            capture_output=True, text=True, timeout=1800,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-        if proc.returncode != 0:
-            log(proc.stderr[-2000:])
-            raise RuntimeError(f"crossover worker {sp} crashed")
-        rec = json.loads(proc.stdout.strip().splitlines()[-1])
-        out["constrained"][sp] = rec
-        log(f"    -> ok={rec['ok']} "
-            + (f"wall={rec['wall_sec']}s" if rec["ok"]
-               else f"error={rec['error'][:120]}"))
-    return out
 
 
 def ensure_x4_embeddings() -> str:
@@ -741,9 +601,6 @@ def main() -> None:
         n_runs = int(sys.argv[3]) if len(sys.argv) >= 4 else 2
         scale_worker(int(sys.argv[2]), n_runs)
         return
-    if len(sys.argv) >= 3 and sys.argv[1] == "--crossover-worker":
-        crossover_worker(sys.argv[2])
-        return
 
     import __spark_entry__ as entrymod
     from ocr_award_extractor_spark.config import get_spark
@@ -777,20 +634,6 @@ def main() -> None:
         timings[name] = round(time.monotonic() - t0, 3)
         log(f"  {name}: {rows} rows in {timings[name]}s")
 
-    # beyond-broadcast LSH spellings — forced so the round records a
-    # measured timing for each (r3 verdict #1), not just the bit-equality
-    # pytest: "shuffled" is the auto path above LSH_BROADCAST_SCORE_MAX,
-    # "join" the all-JVM reference
-    from ocr_award_extractor_spark.operators.similarity import lsh_neardup_pairs
-
-    for sp in ("shuffled", "join"):
-        t0 = time.monotonic()
-        n_fb = lsh_neardup_pairs(spark, SF_DIR, spelling=sp).count()
-        timings[f"lsh_neardup_pairs_{sp}_fallback"] = round(
-            time.monotonic() - t0, 3)
-        log(f"  lsh_neardup_pairs_{sp}_fallback: {n_fb} rows "
-            f"in {timings[f'lsh_neardup_pairs_{sp}_fallback']}s")
-
     # full-stack rehearsal (r3 verdict #6): the composed training-data
     # pipeline over the bench corpus — extract+commit → gates → exact
     # dedup → LSH clusters → sample → lineage audit, per-stage stats
@@ -812,7 +655,6 @@ def main() -> None:
     log(f"  full_pipeline_rehearsal: {rehearsal['rows']} "
         f"in {rehearsal['total_sec']}s")
 
-    crossover = run_crossover(spark)
     approx = run_approx_quality(spark)
     corpus_scale = run_corpus_scale(spark)
     spark.stop()
@@ -827,7 +669,6 @@ def main() -> None:
         "bench_docs": n_docs,
         "docs_per_sec": round(n_docs / timings["extract_pipeline"], 1),
         "scaling": scaling,
-        "lsh_crossover": crossover,
         "approx_quality": approx,
         "corpus_scale": corpus_scale,
         "rehearsal": rehearsal,

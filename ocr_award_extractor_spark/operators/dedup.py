@@ -142,27 +142,12 @@ from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
     make_oversize_acc as _make_oversize_acc,
 )
 
-# Accumulator of the most recent skip-mode run (one per call; tests read
-# .value after forcing an action). None until a skip-mode plan is built.
-LAST_OVERSIZE_ACC = None
-
-
-def _oversize_acc(df: DataFrame, on_oversize: str):
-    """Shared factory (pairblocks.make_oversize_acc) + this module's
-    LAST_OVERSIZE_ACC pointer."""
-    global LAST_OVERSIZE_ACC
-    acc = _make_oversize_acc(df, on_oversize)
-    if acc is not None:
-        LAST_OVERSIZE_ACC = acc
-    return acc
-
-
 def minhash_lsh_pairs_df(docs: DataFrame,
                          max_bucket: int | None = None,
                          on_oversize: str = "error") -> DataFrame:
     """LSH candidate pairs: docs agreeing on ALL R rows of ANY band.
 
-    BUCKET-LOCAL spelling (mirrors similarity's _score_buckets_broadcast,
+    BUCKET-LOCAL spelling (mirrors similarity.lsh_neardup_pairs,
     r3 verdict #3): (doc_id, band, key) rows group into buckets with ONE
     shuffle and each bucket's pairs are enumerated inside the Arrow
     kernel, then the tiny cross-band distinct. The classic band
@@ -178,7 +163,7 @@ def minhash_lsh_pairs_df(docs: DataFrame,
     copies before shingling); buckets past ``max_bucket`` (default
     pairblocks.MAX_BUCKET_MEMBERS) fail the job with an actionable error,
     or with ``on_oversize='skip'`` are dropped and counted into
-    LAST_OVERSIZE_ACC."""
+    pairblocks.LAST_OVERSIZE_ACC."""
     cap = _MAX_BUCKET_MEMBERS if max_bucket is None else max_bucket
     sig = minhash_signature_df(docs)
     bands = F.array(*[
@@ -191,7 +176,7 @@ def minhash_lsh_pairs_df(docs: DataFrame,
     keyed = sig.select("doc_id", F.explode(bands).alias("bk")).select(
         "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    acc = _oversize_acc(docs, on_oversize)
+    acc = _make_oversize_acc(docs, on_oversize)
     buckets = (
         keyed.groupBy("band", "key")
         .agg(F.collect_list("doc_id").alias("members"))

@@ -1,9 +1,10 @@
 """Blocked upper-triangle pair enumeration — the ONE spelling of the
 index math shared by the bucket-local kernels (similarity pair scoring
-and MinHash candidate enumeration). A bucket of k members has k(k-1)/2
-pairs; enumerating them whole would allocate O(k²) at once on a skewed
-bucket, so blocks bound the live window to ~``pair_block`` elements
-whatever k is (ADVICE r3; round-4 review unified the two copies)."""
+and MinHash candidate enumeration), plus their shared mega-bucket
+guard. A bucket of k members has k(k-1)/2 pairs; enumerating them whole
+would allocate O(k²) at once on a skewed bucket, so blocks bound the
+live window to ~``pair_block`` elements whatever k is (ADVICE r3;
+round-4 review unified the two copies)."""
 
 from __future__ import annotations
 
@@ -12,12 +13,13 @@ PAIR_BLOCK_ELEMS = 1 << 22   # ~32 MB of float64 live per block
 # Mega-bucket guard (r4 verdict #1): blocked enumeration bounds a kernel's
 # LIVE memory for any bucket size, but the pair OUTPUT of a k-member
 # bucket is still k(k-1)/2 — an exact-duplicate flood that lands k ≫
-# target-bucket-size members in one bucket emits O(k²) pairs under EVERY
-# spelling. The documented contract is "run dedup_exact first" (its one
-# fingerprint shuffle collapses exact copies before shingling/banding);
-# this guard makes a violation LOUD instead of silent. 4096 is 256× the
-# LSH design bucket (LSH_TARGET_BUCKET=16) and ~8.4M pairs from a single
-# bucket — far past anything a non-degenerate corpus produces.
+# target-bucket-size members in one bucket emits O(k²) pairs from ANY
+# bucket operator. The documented contract is "run dedup_exact first"
+# (its one fingerprint shuffle collapses exact copies before
+# shingling/banding); this guard makes a violation LOUD instead of
+# silent. 4096 is 256× the LSH design bucket (LSH_TARGET_BUCKET=16) and
+# ~8.4M pairs from a single bucket — far past anything a non-degenerate
+# corpus produces.
 MAX_BUCKET_MEMBERS = 4096
 
 
@@ -48,100 +50,40 @@ def check_bucket(k: int, cap: int, on_oversize: str, kind: str,
     )
 
 
+# Accumulator of the most recent skip-mode plan built by any bucket
+# kernel (similarity or MinHash); tests read .value after forcing an
+# action. None until a skip-mode plan is built.
+LAST_OVERSIZE_ACC = None
+
+
 def make_oversize_acc(df, on_oversize: str):
     """Validate the oversize mode eagerly (plan-build time) and return a
-    fresh Spark accumulator for skip mode, else None. Callers keep their
-    own module-global pointer to the last accumulator so tests can read
-    the count after an action."""
+    fresh Spark accumulator for skip mode, else None. The skip-mode
+    accumulator is also kept in LAST_OVERSIZE_ACC."""
+    global LAST_OVERSIZE_ACC
     if on_oversize not in ("error", "skip"):
         raise ValueError(f"unknown on_oversize: {on_oversize}")
     if on_oversize != "skip":
         return None
-    return df.sparkSession.sparkContext.accumulator(0)
+    LAST_OVERSIZE_ACC = df.sparkSession.sparkContext.accumulator(0)
+    return LAST_OVERSIZE_ACC
 
 
-class JvmDropStats:
-    """Driver-visible drop stats for :func:`guard_keyed_jvm` skip mode.
-
-    Computed ON READ by a separate tiny aggregation over the guarded
-    keyed frame — NOT ``Dataset.observe``: AQE's empty-relation
-    propagation prunes the CollectMetrics node from the executed plan
-    precisely when EVERY bucket is oversize (the downstream join
-    collapses to an empty relation before the metrics stage runs), so
-    ``Observation.get`` explodes in the one case the counter exists for
-    (measured on Spark 4.1, pinned by
-    test_join_spelling_skip_drops_are_observed). Reading a property
-    therefore runs the keyed subtree once more; it's observability, paid
-    only when asked for — the kernel spellings keep their free
-    per-action accumulator. Unlike observe, a real aggregation CAN run
-    count_distinct, so ``buckets_dropped`` matches the kernel counter's
-    bucket units exactly."""
-
-    def __init__(self, sized, bucket_cols, cap):
-        self._sized = sized
-        self._bucket_cols = bucket_cols
-        self._cap = cap
-        self._row = None
-
-    def _fetch(self):
-        if self._row is None:
-            from pyspark.sql import functions as F
-
-            over = F.col("_bk_n") > F.lit(self._cap)
-            self._row = self._sized.agg(
-                F.coalesce(
-                    F.count_distinct(F.when(
-                        over, F.struct(*self._bucket_cols))),
-                    F.lit(0)).alias("buckets"),
-                F.coalesce(F.sum(over.cast("long")), F.lit(0)).alias("rows"),
-                F.coalesce(F.max("_bk_n"), F.lit(0)).alias("mx"),
-            ).collect()[0]
-        return self._row
-
-    @property
-    def buckets_dropped(self) -> int:
-        return self._fetch()["buckets"]
-
-    @property
-    def rows_dropped(self) -> int:
-        return self._fetch()["rows"]
-
-    @property
-    def max_bucket_seen(self) -> int:
-        return self._fetch()["mx"]
-
-
-# JvmDropStats of the most recent skip-mode guard_keyed_jvm plan (ADVICE
-# r5: the join spelling silently lost drop observability while the
-# kernel spellings counted into their modules' LAST_OVERSIZE_ACC).
-LAST_JVM_DROP_STATS = None
-
-
-def guard_keyed_jvm(keyed, bucket_cols: list[str], cap: int,
-                    on_oversize: str, kind: str):
-    """Mega-bucket guard for the all-JVM join spellings: a window count
-    over the bucket key either raises in-plan (error mode — raise_error
-    fires on the first oversize row, failing the job with the same
-    message shape as the kernel guard) or filters oversize buckets out
-    (skip mode, with dropped buckets/rows and the worst bucket size
-    readable on demand from ``LAST_JVM_DROP_STATS`` — ADVICE r5). The
-    window repartitions by the same key the downstream self-join
-    shuffles on, so no extra exchange shape is introduced."""
+def guard_keyed_jvm(keyed, bucket_cols: list[str], cap: int, kind: str):
+    """Mega-bucket guard for an all-JVM band self-join
+    (similarity.lsh_candidate_pairs): a window count over the bucket key
+    raises in-plan — raise_error fires on the first oversize row, failing
+    the job with the same message shape as the kernel guard. The window
+    repartitions by the same key the downstream self-join shuffles on, so
+    no extra exchange shape is introduced."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    if on_oversize not in ("error", "skip"):
-        raise ValueError(f"unknown on_oversize: {on_oversize}")
     cnt = F.count(F.lit(1)).over(Window.partitionBy(*bucket_cols))
     sized = keyed.withColumn("_bk_n", cnt)
-    if on_oversize == "skip":
-        global LAST_JVM_DROP_STATS
-        LAST_JVM_DROP_STATS = JvmDropStats(sized, bucket_cols, cap)
-        return sized.where(F.col("_bk_n") <= F.lit(cap)).drop("_bk_n")
     msg = F.format_string(
         f"{kind} bucket has %s members (> {cap}-member guard): run "
-        f"dedup_exact first if exact copies may exist, else pass "
-        f"on_oversize='skip' (near-duplicate flood) or raise max_bucket",
+        f"dedup_exact first if exact copies may exist",
         F.col("_bk_n").cast("string"),
     )
     # raise_error lives INSIDE the filter predicate (CaseWhen branches are

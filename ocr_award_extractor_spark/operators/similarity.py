@@ -2,8 +2,9 @@
 
 * brute-force cosine scoring / top-k — the correctness baseline;
 * all-pairs near-duplicate detection above a cosine threshold;
-* random-hyperplane LSH bucket assignment — the scale path (bucketed
-  candidate join instead of the O(n²) cross join).
+* random-hyperplane LSH bucket assignment and bucket-local near-dup
+  scoring — the scale path (bucketed candidates instead of the O(n²)
+  cross join).
 
 Determinism contract: embeddings are QUANTIZED to int64 (round(x·10⁴))
 before any arithmetic, dot products and norms are exact integer sums, and
@@ -13,9 +14,10 @@ top-k cut lines (no float tolerance needed anywhere).
 
 Scale notes (100 TB / 10⁹ vectors): the brute-force scorer broadcasts the
 query vector (no shuffle); near-dup pairs must NOT be a cross join at
-scale — use lsh_buckets to bucket vectors, then join within buckets
-(candidates shrink by orders of magnitude; the cross-join spelling here is
-the small-scale oracle baseline the bucketed path is validated against).
+scale — lsh_neardup_pairs ships each vector with its band keys through one
+shuffle into (band, bucket) groups and scores every bucket inside an Arrow
+kernel, with no driver state (the cross-join spelling here is the
+small-scale oracle baseline the bucketed path is validated against).
 """
 
 from __future__ import annotations
@@ -98,22 +100,19 @@ LSH_WEIGHTS = _lcg_weights(LSH_BANDS * LSH_ROWS)
 
 def _corpus_lsh_params(sf_dir: str) -> tuple[int, int]:
     """(bands, rows) for the corpus at sf_dir, sized from the parquet
-    FOOTER row count (a metadata read — no Spark job at plan-build time).
+    FOOTER row counts (a metadata read — no Spark job at plan-build time;
+    the table may be one file or a Spark-written directory of parts).
     At the driver's sf0.01 oracle gate n=500 ⇒ exactly (LSH_BANDS,
     LSH_ROWS), matching the static oracle SQL; at larger scale factors the
     same queries() entry gets log(n)-grown planes — the property that
-    keeps candidates sublinear in n². Falls back to the module constants
-    if the footer can't be read."""
+    keeps candidates sublinear in n²."""
     import os
 
-    try:
-        import pyarrow.parquet as pq
+    import pyarrow.dataset as ds
 
-        n = pq.ParquetFile(
-            os.path.join(sf_dir, "embeddings.parquet")).metadata.num_rows
-        return lsh_params(n)
-    except Exception:
-        return LSH_BANDS, LSH_ROWS
+    n = ds.dataset(os.path.join(sf_dir, "embeddings.parquet"),
+                   format="parquet").count_rows()
+    return lsh_params(n)
 
 
 def _quant(col):
@@ -304,20 +303,23 @@ def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("key").alias("bucket"))
 
 
-def _band_collisions(emb_q: DataFrame, bands: int, rows: int,
-                     max_bucket: int | None = None,
-                     on_oversize: str = "error") -> DataFrame:
-    """RAW banded collisions (va, vb) — one row per (band, bucket)
-    co-occurrence, duplicates across bands NOT collapsed. The band
-    self-join moves ONLY (vec_id, band, key) — 24 bytes/row, never the
-    vectors. The same mega-bucket guard as the kernel spellings runs
-    JVM-side on the keys (error: in-plan raise; skip: filter, drops
-    observed into pairblocks.LAST_JVM_DROP_STATS — ADVICE r5) before
-    the self-join can square an oversize bucket."""
-    cap = _MAX_BUCKET_MEMBERS if max_bucket is None else max_bucket
-    keys = lsh_band_keys(emb_q, bands, rows)
-    keys = _guard_keyed_jvm(keys, ["band", "key"], cap, on_oversize,
-                            "LSH band")
+def lsh_candidate_pairs(spark: SparkSession, sf_dir: str,
+                        bands: int | None = None,
+                        rows: int | None = None) -> DataFrame:
+    """Distinct banded-LSH candidate (va, vb) pairs — the pre-scoring
+    stage, exposed separately so bench.py can log candidate counts (the
+    sublinearity evidence) without scoring. The band self-join moves ONLY
+    (vec_id, band, key) — 24 bytes/row, never the vectors. The same
+    mega-bucket guard as the scoring kernel runs JVM-side on the keys
+    (an in-plan raise) before the self-join can square an oversize
+    bucket."""
+    if bands is None or rows is None:
+        bands, rows = _corpus_lsh_params(sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", _quant(F.col("embedding")).alias("qe")
+    )
+    keys = _guard_keyed_jvm(lsh_band_keys(emb, bands, rows), ["band", "key"],
+                            _MAX_BUCKET_MEMBERS, "LSH band")
     a = keys.select(F.col("band").alias("ba"), F.col("key").alias("ka"),
                     F.col("vec_id").alias("va"))
     b = keys.select(F.col("band").alias("bb"), F.col("key").alias("kb"),
@@ -326,32 +328,10 @@ def _band_collisions(emb_q: DataFrame, bands: int, rows: int,
         a.join(b, (F.col("ba") == F.col("bb")) & (F.col("ka") == F.col("kb"))
                & (F.col("va") < F.col("vb")))
         .select("va", "vb")
+        .distinct()
     )
 
 
-def lsh_candidate_pairs(spark: SparkSession, sf_dir: str,
-                        bands: int | None = None,
-                        rows: int | None = None) -> DataFrame:
-    """Distinct banded-LSH candidate (va, vb) pairs — the pre-scoring
-    stage, exposed separately so bench.py can log candidate counts (the
-    sublinearity evidence) without scoring."""
-    if bands is None or rows is None:
-        bands, rows = _corpus_lsh_params(sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _quant(F.col("embedding")).alias("qe")
-    )
-    return _band_collisions(emb, bands, rows).distinct()
-
-
-# Cap for the bucket-local scorer's driver collect + broadcast. Honest
-# sizing (measured, see BENCH.md round-4): the Arrow-columnar collect
-# costs ~525 B/vector of driver heap (raw buffers: 64×8 B values + list
-# offsets + vec_id), the numpy matrix another 512 B/vector, and the
-# broadcast pickle one more transient copy — ~1.6 KB/vector PEAK, so 2M
-# vectors ≈ 3.2 GB transient on an 8 GB driver and ~1 GB resident per
-# executor. (The r3 cap of 10M assumed the 512 B raw matrix only, and
-# the then-Row-object collect actually cost ~50× that — both fixed.)
-LSH_BROADCAST_SCORE_MAX = 2_000_000
 # Live floats per pair-enumeration block inside the kernel — bounds a
 # skewed bucket's O(k²) allocation. Re-exported so tests can monkeypatch
 # per-module; the index math itself lives in pairblocks.block_triangles,
@@ -375,27 +355,12 @@ from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
     make_oversize_acc as _make_oversize_acc,
 )
 
-# Accumulator of the most recent skip-mode run (tests read .value after
-# forcing an action). None until a skip-mode plan is built.
-LAST_OVERSIZE_ACC = None
-
-
-def _oversize_acc(df: DataFrame, on_oversize: str):
-    """Shared factory (pairblocks.make_oversize_acc) + this module's
-    LAST_OVERSIZE_ACC pointer."""
-    global LAST_OVERSIZE_ACC
-    acc = _make_oversize_acc(df, on_oversize)
-    if acc is not None:
-        LAST_OVERSIZE_ACC = acc
-    return acc
-
 
 def _score_one_bucket(m, sub, pair_block):
     """Blocked ≥threshold pair scoring for ONE bucket: ``m`` sorted int64
     ids (k,), ``sub`` their (k, DIM) int64 quantized vectors. Returns
-    (va, vb, cos) survivor arrays. The SINGLE spelling of the kernel-side
-    arithmetic parity contract (see _score_buckets_broadcast docstring),
-    shared by the broadcast and shuffled-vectors scorers; blocks bound
+    (va, vb, cos) survivor arrays. The kernel-side half of the arithmetic
+    parity contract (see lsh_neardup_pairs docstring); blocks bound
     live memory to ~pair_block floats for any bucket size."""
     import numpy as np
 
@@ -410,7 +375,7 @@ def _score_one_bucket(m, sub, pair_block):
             cos = (G.astype(np.float64)
                    / np.sqrt(norms[s0:e, None] * norms[None, :]))
         # NaN (zero-norm member) fails >= — excluded, like the join
-        # spelling's try_divide NULL / DuckDB's NULL
+        # reference's try_divide NULL / DuckDB's NULL
         keep = (cos >= NEARDUP_THRESHOLD) & tri
         ri, rj = np.nonzero(keep)
         if len(ri):
@@ -420,136 +385,67 @@ def _score_one_bucket(m, sub, pair_block):
     return va, vb, cs
 
 
-def _collect_matrix_arrow(emb_q: DataFrame):
-    """Driver-side (ids, matrix) via an Arrow-columnar collect — raw int64
-    buffers, NOT Row objects (2M Rows each holding a 64-element Python
-    list would cost ~50× the matrix; toArrow materializes ~525 B/vector)."""
+def lsh_neardup_pairs(spark: SparkSession, sf_dir: str,
+                      bands: int | None = None, rows: int | None = None,
+                      max_bucket: int | None = None,
+                      on_oversize: str = "error") -> DataFrame:
+    """The scale path: near-dup pairs restricted to banded-LSH candidates
+    (recall ~LSH_TARGET_RECALL at the design threshold by construction;
+    measured against the brute-force baseline in bench.py), scored
+    bucket-locally with the vectors riding the band shuffle — the
+    10⁹-vector production shape: (vec_id, packed qe) structs collect per
+    (band, key) bucket in ONE shuffle of B×n rows at ~536 B each (vector
+    + key), every intra-bucket pair is enumerated AND scored inside the
+    Arrow kernel (per-bucket G = A·Aᵀ int64 matmul over
+    ~target-bucket-size members), and only ≥threshold survivors cross
+    Arrow out, deduped across bands by the tiny final distinct. There is
+    NO driver state at any corpus size and candidate pairs never
+    materialize in the plan. Per-bucket executor memory is O(m·dim),
+    which lsh_params pins at E[m] = LSH_TARGET_BUCKET.
+
+    Arithmetic parity with the all-JVM join reference
+    (tests/oracle_spellings.py — distinct candidates, two vector-fetch
+    joins, the HOF cosine; pinned row for row, cos doubles included, by
+    tests/test_plan_quality.py::test_lsh_spellings_bit_equal) and the
+    DuckDB oracle: the kernel scores the JVM-quantized ``qe`` values
+    (shipped as packed bytes, NOT re-quantized — numpy's half-even round
+    differs from Spark's HALF_UP on exact ties), dots/norms are exact
+    int64, the norm product is taken in float64 on all three engines
+    (each norm² < 2⁵³ is exactly representable, so the product rounds
+    once either way), and the final divide/sqrt is the identical IEEE
+    sequence — bit-equal results. A zero-norm (all-zero quantized) vector
+    has UNDEFINED cosine, and the parity contract EXCLUDES such pairs on
+    every engine: numpy's 0/0 is NaN which ``>=`` drops, Spark's
+    ``try_divide`` yields NULL (a bare ``/`` would throw DIVIDE_BY_ZERO
+    under Spark 4's default ANSI mode), and DuckDB's double 0/0 is NULL;
+    both NULLs fail the threshold (pinned by
+    tests/test_trainingdata_ops.py::test_lsh_zero_norm_parity).
+
+    Mega-bucket guard (ENFORCED, r4 verdict #1): a bucket of k members
+    implies k(k-1)/2 pairs; buckets past ``max_bucket`` (default
+    pairblocks.MAX_BUCKET_MEMBERS — 256× the design bucket) fail the job
+    with an actionable "run dedup_exact first" error, or with
+    ``on_oversize='skip'`` are dropped and counted into
+    pairblocks.LAST_OVERSIZE_ACC. Pinned by
+    tests/test_trainingdata_ops.py::test_mega_bucket_guard*."""
     import numpy as np
 
-    tbl = emb_q.select("vec_id", "qe").toArrow()
-    ids = tbl.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
-    E = (
-        tbl.column("qe").combine_chunks().flatten()
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64, copy=False)
-        .reshape(len(ids), DIM)
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", _quant(F.col("embedding")).alias("qe")
     )
-    order = np.argsort(ids)
-    return ids[order], E[order]
-
-
-def _score_buckets_broadcast(emb_q: DataFrame, keys: DataFrame,
-                             max_bucket: int | None = None,
-                             on_oversize: str = "error") -> DataFrame:
-    """Bucket-local near-dup scoring against a BROADCAST quantized-vector
-    matrix — the textbook LSH scale shape: ONE shuffle groups the
-    24-byte (vec_id, band, key) rows into buckets, and every intra-bucket
-    pair is enumerated AND scored inside the Arrow kernel (per-bucket
-    G = A·Aᵀ int64 matmul over ~target-bucket-size members), so candidate
-    pairs never materialize in the plan at all — only ≥threshold
-    survivors cross Arrow out, deduped across bands by the tiny final
-    distinct. (The previous spelling self-joined band keys into millions
-    of 16-byte pair rows and fed them to Python: with the session's
-    fat-html-tuned arrow.maxRecordsPerBatch=256 that meant tens of
-    thousands of Arrow frames and 5-8× the wall time.)
-
-    Arithmetic parity with the join spelling and the DuckDB oracle: the
-    matrix holds the JVM-quantized ``qe`` values (collected, NOT
-    re-quantized — numpy's half-even round differs from Spark's HALF_UP
-    on exact ties), dots/norms are exact int64, the norm product is taken
-    in float64 on all three engines (each norm² < 2⁵³ is exactly
-    representable, so the product rounds once either way — identical
-    unless the int64 product would overflow, which the float product
-    additionally survives), and the final divide/sqrt is the identical
-    IEEE sequence — bit-equal results. A zero-norm (all-zero quantized)
-    vector has UNDEFINED cosine, and the parity contract EXCLUDES such
-    pairs on every engine: numpy's 0/0 is NaN which ``>=`` drops, the
-    join spelling's ``try_divide`` yields NULL (a bare ``/`` would throw
-    DIVIDE_BY_ZERO under Spark 4's default ANSI mode, and with ANSI off
-    would give NaN — which Spark orders GREATEST), and DuckDB's double
-    0/0 is NULL; both NULLs fail the threshold (pinned by
-    tests/test_trainingdata_ops.py::test_lsh_zero_norm_parity)."""
-    import numpy as np
-
+    if bands is None or rows is None:
+        bands, rows = _corpus_lsh_params(sf_dir)
     cap = _MAX_BUCKET_MEMBERS if max_bucket is None else max_bucket
-    acc = _oversize_acc(emb_q, on_oversize)
-    ids_sorted, E_sorted = _collect_matrix_arrow(emb_q)
-    bc = emb_q.sparkSession.sparkContext.broadcast((ids_sorted, E_sorted))
-    pair_block = _PAIR_BLOCK_ELEMS   # captured by value: workers re-import
-    # the module, so a test-side monkeypatch must ride the closure
-    check, mode = _check_bucket, on_oversize
-
-    buckets = (
-        keys.groupBy("band", "key")
-        .agg(F.collect_list("vec_id").alias("members"))
-        .where(F.size("members") >= 2)
-        .select("members")
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        sids, M = bc.value
-        out_a, out_b, out_c = [], [], []
-
-        def flush():
-            va = np.concatenate(out_a) if out_a else np.empty(0, np.int64)
-            vb = np.concatenate(out_b) if out_b else np.empty(0, np.int64)
-            cs = np.concatenate(out_c) if out_c else np.empty(0, np.float64)
-            return pd.DataFrame({"va": va, "vb": vb, "cos_sim": cs})
-
-        n_buf = 0
-        for pdf in batches:
-            for members in pdf["members"]:
-                if not check(len(members), cap, mode, "LSH score", acc):
-                    continue
-                m = np.sort(np.asarray(members, dtype=np.int64))
-                sub = M[np.searchsorted(sids, m)]
-                va, vb, cs = _score_one_bucket(m, sub, pair_block)
-                out_a += va
-                out_b += vb
-                out_c += cs
-                n_buf += sum(len(x) for x in va)
-                # flush per bucket (ADVICE r4): survivors must not pool
-                # across a whole Arrow batch before the threshold check
-                if n_buf >= (1 << 16):
-                    yield flush()
-                    out_a, out_b, out_c, n_buf = [], [], [], 0
-        yield flush()
-
-    return (
-        buckets.mapInPandas(kernel, "va BIGINT, vb BIGINT, cos_sim DOUBLE")
-        .distinct()                  # collapse multi-band duplicates
-    )
-
-
-def _score_buckets_shuffled(emb_q: DataFrame, bands: int, rows: int,
-                            max_bucket: int | None = None,
-                            on_oversize: str = "error") -> DataFrame:
-    """Bucket-local scoring BEYOND broadcast size — the 10⁹-vector
-    production shape: the quantized vectors RIDE the band shuffle
-    (collect_list of (vec_id, qe) structs per bucket) instead of a driver
-    collect + broadcast, so there is NO driver state and candidate pairs
-    still never materialize. Cost model vs the alternatives: ONE shuffle
-    of B×n rows at ~536 B each (vector + key), versus the join spelling's
-    candidate materialization + two vector-fetch hash joins; per-bucket
-    executor memory is O(m·dim), which lsh_params pins at E[m] =
-    LSH_TARGET_BUCKET — an adversarial mega-bucket (exact-dup flood)
-    should be exact-deduped first, same contract as the MinHash side.
-    Arithmetic is the SAME _score_one_bucket kernel as the broadcast
-    spelling — bit-equal by construction."""
-    import numpy as np
-
-    cap = _MAX_BUCKET_MEMBERS if max_bucket is None else max_bucket
-    acc = _oversize_acc(emb_q, on_oversize)
-    keys = lsh_band_keys(emb_q, bands, rows, with_vec=True)
+    acc = _make_oversize_acc(emb, on_oversize)
+    keys = lsh_band_keys(emb, bands, rows, with_vec=True)
     buckets = (
         keys.groupBy("band", "key")
         .agg(F.collect_list(F.struct("vec_id", "qe_bin")).alias("members"))
         .where(F.size("members") >= 2)
         .select("members")
     )
-    pair_block = _PAIR_BLOCK_ELEMS   # closure copy (workers re-import)
+    pair_block = _PAIR_BLOCK_ELEMS   # captured by value: workers re-import
+    # the module, so a test-side monkeypatch must ride the closure
     check, mode = _check_bucket, on_oversize
 
     def kernel(batches):
@@ -594,90 +490,6 @@ def _score_buckets_shuffled(emb_q: DataFrame, bands: int, rows: int,
     return (
         buckets.mapInPandas(kernel, "va BIGINT, vb BIGINT, cos_sim DOUBLE")
         .distinct()                  # collapse multi-band duplicates
-    )
-
-
-def lsh_neardup_pairs(spark: SparkSession, sf_dir: str,
-                      bands: int | None = None, rows: int | None = None,
-                      spelling: str = "auto",
-                      max_bucket: int | None = None,
-                      on_oversize: str = "error") -> DataFrame:
-    """The scale path: near-dup pairs restricted to banded-LSH candidates
-    (recall ~LSH_TARGET_RECALL at the design threshold by construction;
-    measured against the brute-force baseline in bench.py).
-
-    THREE spellings, bit-identical results (three-way equality pinned by
-    tests/test_plan_quality.py::test_lsh_spellings_bit_equal; zero-norm
-    contract: undefined cosines are EXCLUDED on every engine — kernel NaN
-    fails >=, JVM try_divide yields NULL, DuckDB 0/0 is NULL — see
-    _score_buckets_broadcast):
-
-    * ``broadcast`` (auto when corpus ≤ LSH_BROADCAST_SCORE_MAX): band
-      keys group into buckets (ONE 24-byte-row shuffle), pairs enumerated
-      and scored in-kernel against a broadcast vector matrix;
-    * ``shuffled`` (auto beyond the cap): same in-kernel scoring but the
-      vectors ride the band shuffle — no driver state, the 10⁹-vector
-      shape (see _score_buckets_shuffled);
-    * ``join``: distinct candidates first, then two hash joins fetch the
-      quantized vectors and the exact-int64 HOF fold scores each pair —
-      kept as the all-JVM reference spelling and measured in bench.py.
-
-    Mega-bucket guard (ENFORCED, r4 verdict #1): a bucket of k members
-    implies k(k-1)/2 pairs under every spelling; buckets past
-    ``max_bucket`` (default pairblocks.MAX_BUCKET_MEMBERS — 256× the
-    design bucket) fail the job with an actionable "run dedup_exact
-    first" error, or with ``on_oversize='skip'`` are dropped and counted
-    into LAST_OVERSIZE_ACC (kernel spellings; the join spelling filters
-    JVM-side with drops observed into pairblocks.LAST_JVM_DROP_STATS).
-    Pinned by
-    tests/test_trainingdata_ops.py::test_mega_bucket_guard*."""
-    if spelling not in ("auto", "broadcast", "shuffled", "join"):
-        raise ValueError(f"unknown spelling: {spelling}")
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _quant(F.col("embedding")).alias("qe")
-    )
-    if bands is None or rows is None:
-        bands, rows = _corpus_lsh_params(sf_dir)
-    if spelling == "auto":
-        try:
-            import os
-
-            import pyarrow.parquet as pq
-
-            n = pq.ParquetFile(
-                os.path.join(sf_dir, "embeddings.parquet")).metadata.num_rows
-        except Exception:
-            n = LSH_BROADCAST_SCORE_MAX + 1
-        spelling = ("broadcast" if n <= LSH_BROADCAST_SCORE_MAX
-                    else "shuffled")
-    if spelling == "broadcast":
-        keys = lsh_band_keys(emb, bands, rows)
-        return _score_buckets_broadcast(emb, keys, max_bucket, on_oversize)
-    if spelling == "shuffled":
-        return _score_buckets_shuffled(emb, bands, rows, max_bucket,
-                                       on_oversize)
-    cand = _band_collisions(emb, bands, rows, max_bucket,
-                            on_oversize).distinct()
-    # norms are per-VECTOR: compute them once in the fetch projections
-    # (round 7) — the old inline _norm2(ea)/_norm2(eb) ran the
-    # interpreted 64-element fold once per candidate PAIR, i.e. 2×
-    # O(candidates) redundant folds; the integer value is identical, so
-    # the spelling stays bit-equal to the kernels (pinned by
-    # test_lsh_spellings_bit_equal) and 'aggregate(zip_with' still
-    # scores the dot JVM-side (plan-pinned)
-    ea = emb.select(F.col("vec_id").alias("va"), F.col("qe").alias("ea"),
-                    _norm2(F.col("qe")).alias("n2a"))
-    eb = emb.select(F.col("vec_id").alias("vb"), F.col("qe").alias("eb"),
-                    _norm2(F.col("qe")).alias("n2b"))
-    pairs = cand.join(ea, "va").join(eb, "vb")
-    # same zero-norm exclusion as the kernel (see _score_buckets_broadcast
-    # docstring): try_divide makes the undefined cosine NULL, which >= drops
-    cos = F.try_divide(_dot(F.col("ea"), F.col("eb")).cast("double"), F.sqrt(
-        F.col("n2a").cast("double") * F.col("n2b").cast("double")
-    ))
-    return (
-        pairs.select("va", "vb", cos.alias("cos_sim"))
-        .where(F.col("cos_sim") >= NEARDUP_THRESHOLD)
     )
 
 

@@ -41,6 +41,30 @@ def minhash_lsh_pairs_join(docs: DataFrame) -> DataFrame:
     )
 
 
+# --------------------------------- embedding LSH near-dup pairs, all-JVM
+def lsh_neardup_pairs_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All-JVM spelling of similarity.lsh_neardup_pairs: the distinct
+    banded candidates, two hash joins fetching the quantized vectors (with
+    per-vector norms), then the exact-int64 HOF cosine per pair.
+    try_divide makes a zero-norm cosine NULL, which the threshold drops —
+    the kernel's NaN exclusion."""
+    cand = similarity.lsh_candidate_pairs(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", similarity._quant(F.col("embedding")).alias("qe"))
+    ea = emb.select(F.col("vec_id").alias("va"), F.col("qe").alias("ea"),
+                    similarity._norm2(F.col("qe")).alias("n2a"))
+    eb = emb.select(F.col("vec_id").alias("vb"), F.col("qe").alias("eb"),
+                    similarity._norm2(F.col("qe")).alias("n2b"))
+    cos = F.try_divide(
+        similarity._dot(F.col("ea"), F.col("eb")).cast("double"),
+        F.sqrt(F.col("n2a").cast("double") * F.col("n2b").cast("double")))
+    return (
+        cand.join(ea, "va").join(eb, "vb")
+        .select("va", "vb", cos.alias("cos_sim"))
+        .where(F.col("cos_sim") >= similarity.NEARDUP_THRESHOLD)
+    )
+
+
 # ------------------------------- O12 argmax by length: explode + window
 def longest_token_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest token per doc with the (len desc, token asc) tie-break —

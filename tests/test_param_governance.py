@@ -52,6 +52,27 @@ def test_lsh_pinned_constants_match_gate_scale_formula():
     assert (s.LSH_BANDS, s.LSH_ROWS) == s.lsh_params(500)
 
 
+def test_corpus_lsh_params_reads_directory_tables(tmp_path):
+    """A Spark-written table is a DIRECTORY of part files: the LSH sizing
+    must count its rows (sf0.1: n=2000 ⇒ lsh_params(2000)), not fall back
+    to the sf0.01 gate constants."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from ocr_award_extractor_spark.operators import similarity as s
+
+    tbl = pq.read_table("/root/testdata/sf0.1/embeddings.parquet")
+    out = tmp_path / "embeddings.parquet"
+    out.mkdir()
+    half = tbl.num_rows // 2
+    pq.write_table(tbl.slice(0, half), os.path.join(out, "part-0.parquet"))
+    pq.write_table(tbl.slice(half), os.path.join(out, "part-1.parquet"))
+    (out / "_SUCCESS").touch()
+    assert s._corpus_lsh_params(str(tmp_path)) == s.lsh_params(2000)
+    assert s.lsh_params(2000) != (s.LSH_BANDS, s.LSH_ROWS)
+
+
 def test_lsh_params_growth_keeps_buckets_constant():
     """rows ≈ log2(n/m): per-band bucket count 2^R grows linearly with n
     (constant expected bucket size m), which is the sublinear-candidates

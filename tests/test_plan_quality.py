@@ -157,46 +157,27 @@ def test_merged_profile_queries_are_shuffle_free(spark):
 
 
 def test_lsh_spellings_bit_equal(spark):
-    """All THREE near-dup spellings must return identical rows (ids AND
-    cos doubles) on the oracle-gate corpus: the broadcast kernel (the
-    ≤cap default), the shuffled-vectors kernel (the beyond-cap production
-    path — no sandbox corpus crosses the cap, so forced here), and the
-    all-JVM join reference."""
+    """The shuffled-vectors kernel (the product spelling) must return the
+    all-JVM join reference's rows exactly — ids AND cos doubles — on the
+    oracle-gate corpus."""
     from ocr_award_extractor_spark.operators.similarity import lsh_neardup_pairs
+    from tests.oracle_spellings import lsh_neardup_pairs_join
 
     sf = "/root/testdata/sf0.01"
-    got = {
-        sp: {(r["va"], r["vb"], r["cos_sim"])
-             for r in lsh_neardup_pairs(spark, sf, spelling=sp).collect()}
-        for sp in ("broadcast", "shuffled", "join")
-    }
-    assert got["broadcast"] and got["broadcast"] == got["shuffled"] == got["join"]
-
-
-def test_lsh_join_fallback_no_python_scoring(spark):
-    """The join reference spelling must score JVM-side: band keys are the
-    only Python stages (the self-join plans the key subtree once per
-    side), pair scoring is codegen'd HOF folds — no third Python stage
-    after the candidate aggregation, no driver collect/broadcast of the
-    matrix."""
-    from ocr_award_extractor_spark.operators.similarity import lsh_neardup_pairs
-
-    plan = _plan(lsh_neardup_pairs(spark, "/root/testdata/sf0.001",
-                                   spelling="join"))
-    tree = plan.split("\n\n(1)")[0]   # the operator tree, not the details
-    assert tree.count("MapInPandas") == 2, plan
-    assert "aggregate(zip_with" in plan, plan   # JVM-side pair scoring
+    got = {(r["va"], r["vb"], r["cos_sim"])
+           for r in lsh_neardup_pairs(spark, sf).collect()}
+    want = {(r["va"], r["vb"], r["cos_sim"])
+            for r in lsh_neardup_pairs_join(spark, sf).collect()}
+    assert got and got == want
 
 
 def test_lsh_shuffled_spelling_single_shuffle_no_driver_state(spark):
-    """The shuffled-vectors spelling (beyond-broadcast production shape)
-    must plan as: map-side band keys (one Python stage) → ONE exchange
-    into buckets → in-kernel scoring (second Python stage) — no joins at
-    all, vectors riding the single shuffle."""
+    """The shuffled-vectors scorer must plan as: map-side band keys (one
+    Python stage) → ONE exchange into buckets → in-kernel scoring (second
+    Python stage) — no joins at all, vectors riding the single shuffle."""
     from ocr_award_extractor_spark.operators.similarity import lsh_neardup_pairs
 
-    plan = _plan(lsh_neardup_pairs(spark, "/root/testdata/sf0.001",
-                                   spelling="shuffled"))
+    plan = _plan(lsh_neardup_pairs(spark, "/root/testdata/sf0.001"))
     tree = plan.split("\n\n(1)")[0]
     assert tree.count("MapInPandas") == 2, plan   # keys + scoring kernels
     assert "Join" not in tree, plan

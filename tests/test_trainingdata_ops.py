@@ -179,23 +179,21 @@ def zero_norm_dir(tmp_path_factory):
 def test_lsh_zero_norm_parity(spark, zero_norm_dir, monkeypatch):
     """Zero-norm vectors have UNDEFINED cosine and are excluded from
     near-dup pairs on EVERY engine (numpy NaN fails >=, Spark's
-    try_divide yields NULL, DuckDB 0/0 is NULL): all Spark spellings and the DuckDB
-    oracle must return exactly the C(20,2) identical-vector pairs at
-    cos=1.0 and not one zero-norm pair. _PAIR_BLOCK_ELEMS=1 forces the
-    blocked enumeration (bs=16 over 20+-member buckets)."""
+    try_divide yields NULL, DuckDB 0/0 is NULL): the kernel, the all-JVM
+    join reference and the DuckDB oracle must return exactly the C(20,2)
+    identical-vector pairs at cos=1.0 and not one zero-norm pair.
+    _PAIR_BLOCK_ELEMS=1 forces the blocked enumeration (bs=16 over
+    20+-member buckets)."""
     import duckdb
 
     from ocr_award_extractor_spark.operators import similarity
+    from tests.oracle_spellings import lsh_neardup_pairs_join
 
     monkeypatch.setattr(similarity, "_PAIR_BLOCK_ELEMS", 1)
     kernel = {(r["va"], r["vb"], r["cos_sim"])
               for r in similarity.lsh_neardup_pairs(spark, zero_norm_dir).collect()}
-    shuffled = {(r["va"], r["vb"], r["cos_sim"])
-                for r in similarity.lsh_neardup_pairs(
-                    spark, zero_norm_dir, spelling="shuffled").collect()}
     joined = {(r["va"], r["vb"], r["cos_sim"])
-              for r in similarity.lsh_neardup_pairs(
-                  spark, zero_norm_dir, spelling="join").collect()}
+              for r in lsh_neardup_pairs_join(spark, zero_norm_dir).collect()}
     con = duckdb.connect()
     con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
                 f"'{zero_norm_dir}/embeddings.parquet'")
@@ -203,7 +201,33 @@ def test_lsh_zero_norm_parity(spark, zero_norm_dir, monkeypatch):
         similarity.oracles_for_scale(zero_norm_dir)["lsh_neardup_pairs"]
     ).fetchall()}
     expect = {(a, b, 1.0) for a in range(20, 40) for b in range(a + 1, 40)}
-    assert kernel == shuffled == joined == oracle == expect
+    assert kernel == joined == oracle == expect
+
+
+def test_lsh_buckets_keeps_null_label(spark, tmp_path):
+    """A NULL passthrough label rides the band-key kernel as NULL (pandas
+    NaN → Arrow null), not as a number, and the rows match DuckDB's."""
+    import duckdb
+
+    from ocr_award_extractor_spark.operators import similarity
+
+    rows = [{"vec_id": i, "embedding": [float(i + 1), -1.0] * 32,
+             "label": None if i == 1 else i} for i in range(4)]
+    schema = pa.schema([("vec_id", pa.int64()),
+                        ("embedding", pa.list_(pa.float32())),
+                        ("label", pa.int32())])
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema),
+                   os.path.join(tmp_path, "embeddings.parquet"))
+    got = [tuple(r) for r in similarity.lsh_buckets(spark, str(tmp_path))
+           .collect()]
+    assert {r[0]: r[1] for r in got} == {0: 0, 1: None, 2: 2, 3: 3}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
+                f"'{tmp_path}/embeddings.parquet'")
+    want = con.execute(
+        similarity.oracles_for_scale(str(tmp_path))["lsh_buckets"]
+    ).fetchall()
+    assert sorted(got, key=str) == sorted(want, key=str)
 
 
 def test_ivf_nprobe_widens_monotonically(spark):
@@ -274,42 +298,6 @@ def test_block_triangles_covers_exactly_the_upper_triangle():
     check()
 
 
-def test_collect_matrix_arrow_equals_row_collect(spark):
-    """The Arrow-columnar driver collect must reproduce exactly what the
-    old Row-object collect produced (ids sorted, rows aligned)."""
-    import numpy as np
-
-    from ocr_award_extractor_spark.operators.similarity import (
-        _collect_matrix_arrow, _quant,
-    )
-    from ocr_award_extractor_spark.sources.tables import load_table
-    from pyspark.sql import functions as F2
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", _quant(F2.col("embedding")).alias("qe"))
-    ids, E = _collect_matrix_arrow(emb)
-    rows = sorted(emb.collect(), key=lambda r: r["vec_id"])
-    assert list(ids) == [r["vec_id"] for r in rows]
-    assert np.array_equal(E, np.array([r["qe"] for r in rows], dtype=np.int64))
-
-
-def test_lsh_auto_spelling_respects_the_cap(spark, monkeypatch):
-    """Auto selection: at a cap of 0 every corpus is 'beyond broadcast',
-    so the default call must route through the shuffled-vectors scorer
-    and still return the broadcast spelling's exact rows — the selector
-    itself is exercised end-to-end, not just the forced spellings."""
-    from ocr_award_extractor_spark.operators import similarity
-
-    sf = "/root/testdata/sf0.001"
-    want = {(r["va"], r["vb"], r["cos_sim"])
-            for r in similarity.lsh_neardup_pairs(
-                spark, sf, spelling="broadcast").collect()}
-    monkeypatch.setattr(similarity, "LSH_BROADCAST_SCORE_MAX", 0)
-    got = {(r["va"], r["vb"], r["cos_sim"])
-           for r in similarity.lsh_neardup_pairs(spark, sf).collect()}
-    assert got == want and got
-
-
 @pytest.fixture(scope="module")
 def flood_dir(tmp_path_factory):
     """An exact-duplicate FLOOD: 30 copies of one text land all 30 doc_ids
@@ -336,7 +324,7 @@ def test_mega_bucket_guard_minhash(spark, flood_dir):
     """r4 verdict #1: an exact-dup flood must FAIL LOUD (error mode), be
     droppable-and-counted (skip mode + accumulator), and run clean after
     the documented dedup_exact pre-pass."""
-    from ocr_award_extractor_spark.operators import dedup
+    from ocr_award_extractor_spark.operators import dedup, pairblocks
     from ocr_award_extractor_spark.sources.tables import load_table
 
     docs = load_table(spark, flood_dir, "documents")
@@ -349,7 +337,7 @@ def test_mega_bucket_guard_minhash(spark, flood_dir):
     skipped = {(r["doc_a"], r["doc_b"])
                for r in dedup.minhash_lsh_pairs_df(
                    docs, max_bucket=8, on_oversize="skip").collect()}
-    assert dedup.LAST_OVERSIZE_ACC.value >= 1
+    assert pairblocks.LAST_OVERSIZE_ACC.value >= 1
     assert all(a >= 30 or b >= 30 for a, b in skipped)  # no flood pairs
 
     # the documented remedy: dedup_exact first, then pairs run clean under
@@ -366,33 +354,21 @@ def test_mega_bucket_guard_minhash(spark, flood_dir):
     assert all(a < 30 or a == 30 for a, _ in pairs)
 
 
-def test_mega_bucket_guard_lsh_spellings(spark, zero_norm_dir):
+def test_mega_bucket_guard_lsh_spellings(spark, zero_norm_dir, monkeypatch):
     """The same guard on the similarity side: zero_norm_dir's 20 identical
-    vectors exceed a cap of 10 in every band — all three spellings must
-    fail loud in error mode; skip mode drops the buckets, counts them,
-    and the default cap (256x design bucket) leaves results untouched."""
-    from ocr_award_extractor_spark.operators import similarity
+    vectors exceed a cap of 10 in every band — the scorer must fail loud
+    in error mode; skip mode drops the buckets and counts them; the
+    default cap (256x design bucket) leaves results untouched. The
+    all-JVM candidate self-join raises in-plan under the same cap."""
+    from ocr_award_extractor_spark.operators import pairblocks, similarity
 
-    for spelling in ("broadcast", "shuffled", "join"):
-        with pytest.raises(Exception, match="member guard"):
-            similarity.lsh_neardup_pairs(
-                spark, zero_norm_dir, spelling=spelling,
-                max_bucket=10).collect()
+    with pytest.raises(Exception, match="member guard"):
+        similarity.lsh_neardup_pairs(
+            spark, zero_norm_dir, max_bucket=10).collect()
 
-    # skip mode, kernel spellings: dropped + counted
     got = similarity.lsh_neardup_pairs(
-        spark, zero_norm_dir, spelling="broadcast", max_bucket=10,
-        on_oversize="skip").collect()
-    assert got == [] and similarity.LAST_OVERSIZE_ACC.value >= 1
-    got = similarity.lsh_neardup_pairs(
-        spark, zero_norm_dir, spelling="shuffled", max_bucket=10,
-        on_oversize="skip").collect()
-    assert got == [] and similarity.LAST_OVERSIZE_ACC.value >= 1
-    # join spelling skip: JVM-side filter (no counter by design)
-    got = similarity.lsh_neardup_pairs(
-        spark, zero_norm_dir, spelling="join", max_bucket=10,
-        on_oversize="skip").collect()
-    assert got == []
+        spark, zero_norm_dir, max_bucket=10, on_oversize="skip").collect()
+    assert got == [] and pairblocks.LAST_OVERSIZE_ACC.value >= 1
 
     # the default cap never fires on a legitimate corpus: bit-equal to
     # the unguarded expectation pinned by test_lsh_zero_norm_parity
@@ -401,6 +377,10 @@ def test_mega_bucket_guard_lsh_spellings(spark, zero_norm_dir):
               for r in similarity.lsh_neardup_pairs(
                   spark, zero_norm_dir).collect()}
     assert kernel == expect
+
+    monkeypatch.setattr(similarity, "_MAX_BUCKET_MEMBERS", 10)
+    with pytest.raises(Exception, match="member guard"):
+        similarity.lsh_candidate_pairs(spark, zero_norm_dir).collect()
 
 
 def test_connected_components_reliable(spark, tmp_path):
@@ -438,7 +418,7 @@ def test_dedup_clusters_guard_passthrough(spark, flood_dir):
     flood, default error mode fails loud at a tiny cap, while
     on_oversize='skip' completes — the escape hatch a legitimate
     near-dup flood needs once exact dedup has already run."""
-    from ocr_award_extractor_spark.operators import dedup
+    from ocr_award_extractor_spark.operators import dedup, pairblocks
     from ocr_award_extractor_spark.sources.tables import load_table
 
     docs = load_table(spark, flood_dir, "documents")
@@ -447,7 +427,7 @@ def test_dedup_clusters_guard_passthrough(spark, flood_dir):
     comp = {r["doc_id"]: r["comp"]
             for r in dedup.dedup_clusters_df(
                 docs, max_bucket=8, on_oversize="skip").collect()}
-    assert dedup.LAST_OVERSIZE_ACC.value >= 1
+    assert pairblocks.LAST_OVERSIZE_ACC.value >= 1
     assert len(comp) == 32                 # every doc labeled
     assert comp[31] == 31                  # unrelated singleton intact
 
@@ -487,38 +467,6 @@ def test_jaccard_duckdb_parity_sf0001(spark):
         LEFT JOIN inter i ON i.doc_a = sa.doc_id
     """).fetchall()}
     assert got == want and len(got) > 0
-
-
-def test_join_spelling_skip_drops_are_observed(spark, zero_norm_dir):
-    """ADVICE r5: the all-JVM LSH join spelling's skip mode must not lose
-    drop observability. Drops are observed into
-    pairblocks.LAST_JVM_DROP_STATS (row units), and the join path must
-    NOT install LAST_OVERSIZE_ACC — a fresh 0 there misreads as
-    'nothing dropped' when the JVM plan can never increment it."""
-    from ocr_award_extractor_spark.operators import pairblocks, similarity
-
-    sentinel = object()
-    similarity.LAST_OVERSIZE_ACC = sentinel
-    got = similarity.lsh_neardup_pairs(
-        spark, zero_norm_dir, spelling="join", max_bucket=10,
-        on_oversize="skip").collect()
-    assert got == []                               # every bucket > 10 members
-    assert similarity.LAST_OVERSIZE_ACC is sentinel  # join installed nothing
-    stats = pairblocks.LAST_JVM_DROP_STATS
-    assert stats.buckets_dropped >= 1              # kernel-counter units
-    assert stats.rows_dropped >= 20                # the 20-member buckets
-    assert stats.max_bucket_seen >= 20             # and the worst bucket seen
-
-    # the same corpus under a cap it fits reports zero drops (not None)
-    similarity.lsh_neardup_pairs(
-        spark, zero_norm_dir, spelling="join", max_bucket=40,
-        on_oversize="skip").collect()
-    assert pairblocks.LAST_JVM_DROP_STATS.rows_dropped == 0
-
-    # bogus mode still validated eagerly on the join path
-    with pytest.raises(ValueError, match="on_oversize"):
-        similarity.lsh_neardup_pairs(spark, zero_norm_dir, spelling="join",
-                                     on_oversize="bogus")
 
 
 def test_fill_missing_lang(spark):
