@@ -56,6 +56,24 @@ def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
+def code_rev() -> dict | None:
+    """The git commit this bench runs on and whether tracked files
+    differ from it; None outside a git checkout. Goes into the detail
+    file so a record names the code it measured."""
+    root = os.path.dirname(os.path.abspath(__file__))
+
+    def git(*args: str) -> str:
+        return subprocess.run(["git", *args], cwd=root, capture_output=True,
+                              text=True, check=True).stdout.strip()
+
+    try:
+        return {"commit": git("rev-parse", "HEAD"),
+                "dirty": git("status", "--porcelain",
+                             "--untracked-files=no") != ""}
+    except (OSError, subprocess.CalledProcessError):
+        return None
+
+
 def bench_pages_path() -> str:
     from ocr_award_extractor_spark.sources.tables import FIXTURE_DIR
 
@@ -605,6 +623,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from ocr_award_extractor_spark.config import get_spark
 
+    rev = code_rev()
     spark = get_spark("bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS,
                       extra={"spark.sql.files.maxPartitionBytes": "2m",
                              "spark.sql.files.openCostInBytes": "0"})
@@ -664,6 +683,7 @@ def main() -> None:
         "metric": "extract_pipeline_wall_sec",
         "value": timings["extract_pipeline"],
         "unit": "sec",
+        "code_rev": rev,
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "bench_docs": n_docs,

@@ -288,9 +288,10 @@ def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded random-hyperplane LSH bucket assignment: one (band, bucket)
     row per vector per band. At scale, near-dup search joins within
     (band, bucket) instead of all-pairs."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _quant(F.col("embedding")).alias("qe"), "label"
-    )
+    # the oracle's vec_id join drops NULL ids; no join here, so say it
+    emb = (load_table(spark, sf_dir, "embeddings")
+           .where(F.col("vec_id").isNotNull())
+           .select("vec_id", _quant(F.col("embedding")).alias("qe"), "label"))
     bands, rows = _corpus_lsh_params(sf_dir)
     # label rides through the kernel map-side (passthrough) instead of a
     # second embeddings scan + vec_id re-join: 2 scans + BroadcastExchange

@@ -183,10 +183,15 @@ def run_resumable_extraction(
         # (≤ len(splits) rows) and write the lineage append from the
         # collected values — the old spelling ran the read-back aggregate
         # twice (once for the lineage write, once for the rows_written
-        # collect)
-        stats = _split_checksum_rows(spark.read.parquet(data_dir)
-                                     .where(F.col("split_id").isin(splits))
-                                     ).collect()
+        # collect). It lists only this batch's split directories: a
+        # concurrent batch's overwrite deletes the stray files a killed
+        # run left in ITS splits, and a listing of all of data/ that
+        # caught one failed with FileNotFound when reading it
+        own = [p for p in (os.path.join(data_dir, f"split_id={s}")
+                           for s in splits) if os.path.isdir(p)]
+        stats = (_split_checksum_rows(
+            spark.read.option("basePath", data_dir).parquet(*own)).collect()
+            if own else [])
         # the commit point: append the ≤len(splits) lineage rows as one
         # parquet file written driver-side (tmp + atomic rename). The
         # values are already collected for the row counter, so a whole

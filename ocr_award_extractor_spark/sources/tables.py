@@ -18,9 +18,12 @@ literal analog of the reference's directory-of-binaries source
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
@@ -68,12 +71,14 @@ def spread_small_scans(df: DataFrame, target: int | None = None) -> DataFrame:
     spreading) of a by-definition-small input, and round-robin
     repartition is retry-deterministic (sort-before-repartition,
     SPARK-23207). Unknown/huge estimates (joins, UDF subtrees) safely
-    skip the spread."""
+    skip the spread; so does a failed estimate, with a WARNING."""
     sc = df.sparkSession.sparkContext
     t = target or sc.defaultParallelism
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
+    except Exception as e:
+        _log.warning("spread_small_scans: size estimate failed, input left "
+                     "as is: %s", e)
         return df
     if size >= t * SPREAD_MIN_BYTES_PER_TASK:
         return df

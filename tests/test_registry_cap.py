@@ -61,3 +61,15 @@ def test_bench_queries_are_registered():
 
     q, _ = _registry()
     assert set(bench.BENCH_QUERIES) <= set(q), set(bench.BENCH_QUERIES) - set(q)
+
+
+def test_bench_code_rev(monkeypatch):
+    """The bench detail file names the commit it measured, with a dirty
+    flag, or null when git is absent."""
+    import bench
+
+    rev = bench.code_rev()
+    assert rev is None or (len(rev["commit"]) == 40
+                           and isinstance(rev["dirty"], bool))
+    monkeypatch.setenv("PATH", "")
+    assert bench.code_rev() is None

@@ -58,3 +58,25 @@ def test_null_html_rows_come_back_as_errors(spark):
            for r in extract_documents(docs, salt_partitions=2).collect()}
     assert got == {"u://ok": ("success", None),
                    "u://null": ("error", "unreadable document")}
+
+
+def test_spread_small_scans_warns_when_estimate_fails(caplog):
+    """A failed plan-statistics estimate leaves the frame as it is and
+    says so with a WARNING carrying the exception text."""
+    import logging
+    from types import SimpleNamespace
+
+    from ocr_award_extractor_spark.sources.tables import spread_small_scans
+
+    def broken_plan():
+        raise RuntimeError("no stats for this plan")
+
+    df = SimpleNamespace(
+        sparkSession=SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=4)),
+        _jdf=SimpleNamespace(queryExecution=broken_plan))
+    with caplog.at_level(logging.WARNING):
+        assert spread_small_scans(df) is df
+    warned = [r for r in caplog.records if r.levelno == logging.WARNING
+              and "no stats for this plan" in r.getMessage()]
+    assert len(warned) == 1

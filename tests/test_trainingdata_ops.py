@@ -230,6 +230,33 @@ def test_lsh_buckets_keeps_null_label(spark, tmp_path):
     assert sorted(got, key=str) == sorted(want, key=str)
 
 
+def test_lsh_buckets_drops_null_vec_id(spark, tmp_path):
+    """A NULL vec_id row is dropped before the band-key kernel, as the
+    DuckDB oracle's vec_id join drops it, and the rows match DuckDB's."""
+    import duckdb
+
+    from ocr_award_extractor_spark.operators import similarity
+
+    rows = [{"vec_id": None if i == 2 else i,
+             "embedding": [float(i + 1), -1.0] * 32, "label": i}
+            for i in range(4)]
+    schema = pa.schema([("vec_id", pa.int64()),
+                        ("embedding", pa.list_(pa.float32())),
+                        ("label", pa.int32())])
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema),
+                   os.path.join(tmp_path, "embeddings.parquet"))
+    got = [tuple(r) for r in similarity.lsh_buckets(spark, str(tmp_path))
+           .collect()]
+    assert {r[0] for r in got} == {0, 1, 3}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
+                f"'{tmp_path}/embeddings.parquet'")
+    want = con.execute(
+        similarity.oracles_for_scale(str(tmp_path))["lsh_buckets"]
+    ).fetchall()
+    assert sorted(got, key=str) == sorted(want, key=str)
+
+
 def test_ivf_nprobe_widens_monotonically(spark):
     """nprobe=1 must equal the default (oracle-pinned) probe; larger
     nprobe scans a superset of clusters, so brute-force overlap is
