@@ -187,9 +187,9 @@ def _resumable_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = _sf_tag(sf_dir)
     out_dir = os.path.join(
         tempfile.gettempdir(), f"sparkgraft_commit_{tag}_{os.getpid()}")
-    # stage the webified pages as a parquet table ONCE: the per-batch
-    # split filter sits above the webify mapInPandas, so passing the UDF
-    # subtree directly would re-wrap the whole corpus once per batch
+    # stage the webified pages as a parquet table ONCE: the split filter
+    # sits above the webify mapInPandas, so passing the UDF subtree
+    # directly would re-wrap the whole corpus in every commit job
     # (production input is a real table — this mirrors that shape)
     src = os.path.join(out_dir + "_src")
     if not os.path.exists(src):

@@ -3,7 +3,7 @@
 
     spark-submit --py-files engine.zip -m ... ocr_award_extractor_spark/cli.py \
         --input /data/documents --output /data/extracted --run-id nightly-01 \
-        --from-ts 2024-03-01 --to-ts 2024-03-08 --n-splits 4096 --n-batches 64
+        --from-ts 2024-03-01 --to-ts 2024-03-08 --n-splits 4096
 
 Locally: python -m ocr_award_extractor_spark.cli --fixture 500 --output /tmp/out
 
@@ -33,7 +33,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--from-ts", help="inclusive warc_ts lower bound (scan predicate)")
     p.add_argument("--to-ts", help="exclusive warc_ts upper bound (scan predicate)")
     p.add_argument("--n-splits", type=int, default=16)
-    p.add_argument("--n-batches", type=int, default=4)
     p.add_argument("--master", default=None, help="override spark master")
     p.add_argument("--use-model", action="store_true",
                    help="attach the batch model-inference slot (O20) after extraction")
@@ -66,9 +65,7 @@ def main(argv: list[str] | None = None) -> int:
 
         t0 = time.monotonic()
         stats = run_resumable_extraction(
-            spark, docs, args.output, args.run_id,
-            n_splits=args.n_splits, n_batches=args.n_batches,
-        )
+            spark, docs, args.output, args.run_id, n_splits=args.n_splits)
         extract_wall_s = round(time.monotonic() - t0, 2)
         anomalies = verify_lineage(spark, args.output).count()
         committed = read_committed(spark, args.output)

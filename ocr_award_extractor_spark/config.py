@@ -52,8 +52,9 @@ def _ensure_worker_pythonpath() -> None:
 import threading as _threading  # noqa: E402
 
 _shipped_sessions: set[int] = set()
-# one ship per session even under concurrent driver threads (the
-# overlapped lineage batches both reach ensure_package_on_workers)
+# one ship per session even under concurrent driver threads (two jobs
+# submitted from threads sharing a session both reach
+# ensure_package_on_workers)
 _ship_lock = _threading.Lock()
 
 
@@ -87,8 +88,8 @@ def build_pyfiles_zip(zip_path: str | None = None) -> str:
     if zip_path is None:
         zip_path = os.path.join(_PKG_PARENT, "fixtures", "_pkg_pyfiles.zip")
     os.makedirs(os.path.dirname(zip_path), exist_ok=True)
-    # unique tmp per builder: concurrent callers (e.g. the overlapped
-    # lineage batch jobs both triggering ensure_package_on_workers) must
+    # unique tmp per builder: concurrent callers (e.g. two driver threads
+    # both triggering ensure_package_on_workers) must
     # not fight over one tmp name — each builds its own and the atomic
     # os.replace is last-writer-wins on identical content
     tmp = f"{zip_path}.{_os.getpid()}-{threading.get_ident()}-{uuid.uuid4().hex[:6]}.tmp"

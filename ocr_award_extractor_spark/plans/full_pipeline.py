@@ -74,7 +74,6 @@ def run_training_data_pipeline(
     run_id: str = "rehearsal",
     *,
     n_splits: int = 16,
-    n_batches: int = 4,
     id_bits: int = 64,
     on_oversize: str = "error",
     wet_out: str | None = None,
@@ -118,7 +117,7 @@ def run_training_data_pipeline(
 
     def do_extract():
         run_resumable_extraction(spark, pages, extract_dir, run_id,
-                                 n_splits=n_splits, n_batches=n_batches)
+                                 n_splits=n_splits)
         committed = read_committed(spark, extract_dir)
         # the dedup/gate operators speak (doc_id, text, lang); error rows
         # (status != success) leave the pipeline here, as in production.
@@ -322,7 +321,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--run-id", default="rehearsal")
     p.add_argument("--master", default=None)
     p.add_argument("--n-splits", type=int, default=16)
-    p.add_argument("--n-batches", type=int, default=4)
     p.add_argument("--id-bits", type=int, default=64, choices=(64, 128),
                    help="doc_id width: 64 = xxhash64(url); 128 = "
                         "two-salt hex pair (the 10^12-url spelling)")
@@ -366,7 +364,7 @@ def main(argv: list[str] | None = None) -> int:
             pages = spark.read.parquet(args.input)
         summary = run_training_data_pipeline(
             spark, pages, args.output, args.run_id,
-            n_splits=args.n_splits, n_batches=args.n_batches,
+            n_splits=args.n_splits,
             id_bits=args.id_bits, on_oversize=args.on_oversize,
             wet_out=args.wet_out, decontaminate=args.decontaminate,
             host_cap=args.host_cap, pack_budget=args.pack_budget,

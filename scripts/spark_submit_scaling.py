@@ -118,8 +118,7 @@ def main() -> None:
     legs = {
         "extract": (extract_py, [corpus]),
         "job": (cli_py, ["--input", corpus, "--output", "{OUT}",
-                         "--run-id", "scale", "--n-splits", "4",
-                         "--n-batches", "1"]),
+                         "--run-id", "scale", "--n-splits", "4"]),
     }
     best: dict[str, dict[int, dict]] = {leg: {} for leg in legs}
     for round_no in (1, 2):                     # interleaved: 2,8,2,8

@@ -26,7 +26,7 @@ def test_extract_job_cli(tmp_path):
         "ocr_award_extractor_spark.cli",
         "--fixture", "40", "--output", str(tmp_path / "out"),
         "--run-id", "cli-test", "--master", "local[4]",
-        "--n-splits", "2", "--n-batches", "2", "--summary",
+        "--n-splits", "2", "--summary",
     ])
     assert summary["run_id"] == "cli-test"
     assert summary["committed_rows"] == 40
@@ -41,7 +41,7 @@ def test_full_pipeline_cli(tmp_path):
         "ocr_award_extractor_spark.plans.full_pipeline",
         "--input", pages, "--output", str(tmp_path / "out"),
         "--run-id", "cli-test", "--master", "local[4]",
-        "--n-splits", "2", "--n-batches", "1",
+        "--n-splits", "2",
         "--frontier-out", str(tmp_path / "frontier"),
         "--frontier-host-limit", "5",
     ])
@@ -80,7 +80,7 @@ def test_full_pipeline_cli_warc_input(tmp_path, spark):
         "--input", warc_dir, "--input-format", "warc",
         "--output", str(tmp_path / "out"),
         "--run-id", "cli-warc", "--master", "local[4]",
-        "--n-splits", "2", "--n-batches", "1",
+        "--n-splits", "2",
         "--wet-out", str(tmp_path / "wet_out"),
     ])
     assert [s["stage"] for s in summary["stages"]] == [

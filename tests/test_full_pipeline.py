@@ -41,7 +41,7 @@ def pipeline_run(spark, tmp_path_factory):
     out_dir = str(d / "out")
     summary = run_training_data_pipeline(
         spark, spark.read.parquet(pages_dir), out_dir, "pytest",
-        n_splits=2, n_batches=1, wet_out=str(d / "wet"))
+        n_splits=2, wet_out=str(d / "wet"))
     return summary, out_dir
 
 
@@ -132,7 +132,7 @@ def test_pipeline_resumes_after_partial_extraction(pipeline_run, spark,
     assert 0 < stats["rows_written"] < len(DOCS)     # genuinely partial
 
     summary = run_training_data_pipeline(
-        spark, pages, out_dir, "pytest", n_splits=2, n_batches=2)
+        spark, pages, out_dir, "pytest", n_splits=2)
     assert summary["rows"] == pipeline_run[0]["rows"]   # identical story
 
 
@@ -174,7 +174,7 @@ def test_pipeline_with_128_bit_ids_same_story(pipeline_run, spark, tmp_path):
     pages_dir = os.path.join(os.path.dirname(out_dir), "pages")
     summary = run_training_data_pipeline(
         spark, spark.read.parquet(pages_dir), str(tmp_path / "out128"),
-        "pytest128", n_splits=2, n_batches=1, id_bits=128)
+        "pytest128", n_splits=2, id_bits=128)
     for k in ("pages", "extracted", "gated", "exact_unique",
               "neardup_unique"):
         assert summary["rows"][k] == summary64["rows"][k], k
@@ -212,7 +212,7 @@ def test_decontaminate_stage_drops_exactly_bench_gated_docs(spark, tmp_path):
     out = str(tmp_path / "out")
     summary = run_training_data_pipeline(
         spark, spark.read.parquet(pages_dir), out, "pytest-decon",
-        n_splits=2, n_batches=1, decontaminate=True)
+        n_splits=2, decontaminate=True)
 
     neardup = {r["doc_id"] for r in spark.read.parquet(
         os.path.join(out, "neardup_dedup")).select("doc_id").collect()}
@@ -260,7 +260,7 @@ def test_host_cap_and_pack_stages(spark, tmp_path):
     out = str(tmp_path / "out")
     summary = run_training_data_pipeline(
         spark, spark.read.parquet(pages_dir), out, "pytest-cap",
-        n_splits=2, n_batches=1, host_cap=5, pack_budget=64)
+        n_splits=2, host_cap=5, pack_budget=64)
 
     neardup = spark.read.parquet(os.path.join(out, "neardup_dedup"))
     capped = spark.read.parquet(os.path.join(out, "host_capped"))

@@ -13,6 +13,16 @@ from ocr_award_extractor_spark.sources.tables import load_fixture
 N_DOCS = 200
 
 
+def _file_state(out, *subdirs):
+    """(path, size, mtime) of every file under ``out``'s ``subdirs``."""
+    import os
+
+    paths = [os.path.join(r, f) for d in subdirs
+             for r, _, fs in os.walk(os.path.join(out, d)) for f in fs]
+    return sorted((p, os.stat(p).st_size, os.stat(p).st_mtime_ns)
+                  for p in paths)
+
+
 def test_kill_and_resume(spark, tmp_path):
     out = str(tmp_path / "run")
     docs = load_fixture(spark, n_docs=N_DOCS)
@@ -75,23 +85,17 @@ def test_corrupt_lineage_fails_resume_loudly(spark, tmp_path):
     docs = load_fixture(spark, n_docs=60)
     run_resumable_extraction(spark, docs, out, "first", n_splits=4,
                              n_batches=2, max_batches=1)
-    lineage = glob.glob(os.path.join(out, "_lineage", "*.parquet"))
-    assert len(lineage) == 1
+    lineage = sorted(glob.glob(os.path.join(out, "_lineage", "*.parquet")))
+    assert lineage
     with open(lineage[0], "wb") as fh:
         fh.write(b"not a parquet file")
 
-    def data_state():
-        paths = [os.path.join(r, f)
-                 for r, _, fs in os.walk(os.path.join(out, "data")) for f in fs]
-        return sorted((p, os.stat(p).st_size, os.stat(p).st_mtime_ns)
-                      for p in paths)
-
-    before = data_state()
+    before = _file_state(out, "data")
     assert before
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         run_resumable_extraction(spark, docs, out, "resume", n_splits=4,
                                  n_batches=2)
-    assert data_state() == before
+    assert _file_state(out, "data") == before
 
 
 def test_batch_readback_reads_only_its_own_splits(spark, tmp_path):
@@ -239,3 +243,248 @@ run_resumable_extraction(spark, docs, {repr(str(tmp_path / "out"))},
     assert verify_lineage(spark, out).count() == 0     # checksums clean
     runs = {r["run_id"] for r in committed_splits(spark, out).collect()}
     assert runs == {"killed-run", "resume-run"}        # both runs contributed
+
+
+# ------------------------------------------------ split-commit protocol
+# The writer commits each split by four file-system steps (plans/lineage.py
+# module docstring): close the tmp, remove the split directory's other
+# entries, rename the tmp to part-00000.parquet, rename the lineage row
+# into _lineage/split-<k>.parquet. Each test below builds the on-disk
+# state a crash or retry leaves, resumes, and checks the committed rows
+# against the oracle.
+
+def _out_cols():
+    from ocr_award_extractor_spark.operators.extract_pipeline import OUT_SCHEMA
+
+    return [f.name for f in OUT_SCHEMA.fields]
+
+
+def _rows_by_url(df, cols):
+    rows = df.select(*cols).collect()
+    by_url = {r["url"]: tuple(r) for r in rows}
+    assert len(by_url) == len(rows)          # no url committed twice
+    return by_url
+
+
+def _assert_oracle(spark, docs, out):
+    """Committed rows carry the urls and texts of a clean extraction, and
+    the lineage audit finds nothing."""
+    from ocr_award_extractor_spark.operators.extract_pipeline import (
+        extract_documents,
+    )
+
+    cols = ["url", "ocr_text"]
+    assert (_rows_by_url(read_committed(spark, out), cols)
+            == _rows_by_url(extract_documents(docs), cols))
+    assert verify_lineage(spark, out).count() == 0
+
+
+def _split_files(out):
+    import os
+
+    data = os.path.join(out, "data")
+    return {d: sorted(os.listdir(os.path.join(data, d)))
+            for d in os.listdir(data)}
+
+
+def test_crash_after_data_rename_before_lineage_row(spark, tmp_path):
+    """A split whose data file was renamed into place but whose lineage
+    row was never written is pending: the resume rewrites it alone."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "a")
+    docs = load_fixture(spark, n_docs=N_DOCS)
+    run_resumable_extraction(spark, docs, out, "killed", n_splits=4)
+    os.remove(os.path.join(out, "_lineage", "split-1.parquet"))
+    n1 = pq.read_metadata(
+        os.path.join(out, "data", "split_id=1", "part-00000.parquet")).num_rows
+
+    r = run_resumable_extraction(spark, docs, out, "resume", n_splits=4)
+    assert r["splits_previously_committed"] == 3
+    assert 0 < r["rows_written"] == n1
+    assert _split_files(out) == {
+        f"split_id={k}": ["part-00000.parquet"] for k in range(4)}
+    _assert_oracle(spark, docs, out)
+
+
+def test_crash_leaves_tmp_and_stray_file_in_pending_split(spark, tmp_path):
+    """A pending split holding a killed attempt's tmp and a readable stray
+    file of another writer ends with exactly its one committed file."""
+    import os
+    import shutil
+
+    out = str(tmp_path / "b")
+    docs = load_fixture(spark, n_docs=N_DOCS)
+    # batches [0, 2] and [1, 3]; the killed run committed the first
+    run_resumable_extraction(spark, docs, out, "killed", n_splits=4,
+                             n_batches=2, max_batches=1)
+    pending = os.path.join(out, "data", "split_id=1")
+    os.makedirs(pending)
+    with open(os.path.join(pending, ".part-0badc0de.tmp"), "wb") as fh:
+        fh.write(b"half-written by a killed attempt")
+    shutil.copy(os.path.join(out, "data", "split_id=0", "part-00000.parquet"),
+                os.path.join(pending, "part-00000-stray.c000.snappy.parquet"))
+
+    r = run_resumable_extraction(spark, docs, out, "resume", n_splits=4)
+    assert r["splits_previously_committed"] == 2
+    assert _split_files(out) == {
+        f"split_id={k}": ["part-00000.parquet"] for k in range(4)}
+    _assert_oracle(spark, docs, out)
+
+
+def test_task_retry_rewrites_split_idempotently(spark, tmp_path):
+    """A retried writer task (the kernel run twice on the same Arrow
+    batches, no Spark) overwrites its splits: one data file and one
+    lineage row per split, identical checksums."""
+    import os
+
+    import pyarrow as pa
+
+    from ocr_award_extractor_spark.operators.extract_pipeline import (
+        extract_documents,
+    )
+    from ocr_award_extractor_spark.plans.lineage import (
+        _write_splits, row_hash, with_split_id,
+    )
+
+    out = str(tmp_path / "c")
+    docs = load_fixture(spark, n_docs=N_DOCS)
+    batches = (with_split_id(extract_documents(docs), 4)
+               .withColumn("_h", row_hash()).toArrow().to_batches(max_chunksize=64))
+    assert len(batches) > 1           # several batches, several splits each
+    kw = dict(data_dir=os.path.join(out, "data"),
+              lineage_dir=os.path.join(out, "_lineage"), run_id="retried")
+
+    def attempt():
+        return pa.Table.from_batches(
+            list(_write_splits(iter(batches), **kw))).sort_by("split_id")
+
+    first, second = attempt(), attempt()
+    assert first.equals(second)
+    assert first.column("split_id").to_pylist() == [0, 1, 2, 3]
+    assert sum(first.column("row_count").to_pylist()) == N_DOCS
+    assert _split_files(out) == {
+        f"split_id={k}": ["part-00000.parquet"] for k in range(4)}
+    assert sorted(os.listdir(os.path.join(out, "_lineage"))) == [
+        f"split-{k}.parquet" for k in range(4)]
+    _assert_oracle(spark, docs, out)
+
+
+def test_committed_rows_equal_extraction_on_every_column(spark, tmp_path):
+    """The Arrow writer is faithful: read_committed equals
+    extract_documents on all 15 output columns (timestamps, the
+    winner/teacher arrays, error rows with NULL ocr_text), and the
+    dataset reads back with the schema Spark's partitioned writer gave."""
+    import os
+
+    from pyspark.sql.types import IntegerType
+
+    from ocr_award_extractor_spark.operators.extract_pipeline import (
+        OUT_SCHEMA, extract_documents,
+    )
+
+    out = str(tmp_path / "fidelity")
+    docs = load_fixture(spark, n_docs=N_DOCS)
+    run_resumable_extraction(spark, docs, out, "fidelity", n_splits=4)
+
+    cols = _out_cols()
+    want = _rows_by_url(extract_documents(docs), cols)
+    text, status, winner = (cols.index(c) for c in ("ocr_text", "status", "winner"))
+    assert any(r[status] == "error" and r[text] is None for r in want.values())
+    assert any(r[winner] for r in want.values())
+    assert _rows_by_url(read_committed(spark, out), cols) == want
+
+    schema = spark.read.parquet(os.path.join(out, "data")).schema
+    assert [(f.name, f.dataType) for f in schema] == (
+        [(f.name, f.dataType) for f in OUT_SCHEMA.fields]
+        + [("split_id", IntegerType())])
+
+
+def test_resume_over_spark_written_split(spark, tmp_path):
+    """Outputs of the earlier batch protocol stay readable: split 0 was
+    committed by Spark's partitioned writer with a uuid-named lineage file
+    carrying committed_seq; the resume commits the rest with the Arrow
+    writer and both writers' files read back together."""
+    import json
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_award_extractor_spark.operators.extract_pipeline import (
+        OUT_SCHEMA, extract_documents,
+    )
+    from ocr_award_extractor_spark.plans.lineage import row_hash, with_split_id
+
+    out = str(tmp_path / "mixed")
+    docs = load_fixture(spark, n_docs=N_DOCS)
+    split0 = with_split_id(extract_documents(docs), 4).where(F.col("split_id") == 0)
+    split0.write.partitionBy("split_id").parquet(os.path.join(out, "data"))
+    n, checksum = split0.agg(F.count(F.lit(1)), F.bit_xor(row_hash())).first()
+    os.makedirs(os.path.join(out, "_lineage"))
+    pq.write_table(pa.table({
+        "run_id": ["batch-run"], "split_id": pa.array([0], pa.int32()),
+        "row_count": [n], "checksum": [checksum],
+        "committed_seq": pa.array([0], pa.int32())}),
+        os.path.join(out, "_lineage", f"part-{uuid.uuid4().hex}.parquet"))
+    with open(os.path.join(out, "_meta.json"), "w", encoding="utf-8") as fh:
+        json.dump({"n_splits": 4}, fh)
+    spark_written = _file_state(out, "data/split_id=0")
+
+    r = run_resumable_extraction(spark, docs, out, "split-run", n_splits=4)
+    assert r["splits_previously_committed"] == 1
+    assert _file_state(out, "data/split_id=0") == spark_written
+
+    def fields(k):
+        path = os.path.join(out, "data", f"split_id={k}")
+        return [(f.name, f.dataType) for f in spark.read.parquet(path).schema]
+
+    assert fields(0) == fields(1) == [(f.name, f.dataType) for f in OUT_SCHEMA.fields]
+    cols = _out_cols()
+    assert (_rows_by_url(read_committed(spark, out), cols)
+            == _rows_by_url(extract_documents(docs), cols))
+    assert verify_lineage(spark, out).count() == 0
+
+
+def test_commit_job_budget(spark, tmp_path):
+    """One commit job: a fresh directory costs at most 4 Spark jobs (the
+    AQE stages of the one commit plan), a fully committed one at most 1
+    (the lineage read). Jobs submitted from other driver threads do not
+    inherit the job group, so ungrouped jobs started meanwhile count too."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    out = str(tmp_path / "budget")
+    docs = load_fixture(spark, n_docs=N_DOCS)
+
+    def jobs(group, run_id):
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, group)
+        try:
+            run_resumable_extraction(spark, docs, out, run_id, n_splits=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return (set(tracker.getJobIdsForGroup(group))
+                | set(tracker.getJobIdsForGroup(None)) - ungrouped)
+
+    assert 1 <= len(jobs("lineage-budget-fresh", "fresh")) <= 4
+    assert len(jobs("lineage-budget-rerun", "rerun")) <= 1
+    assert read_committed(spark, out).count() == N_DOCS
+
+
+def test_n_splits_mismatch_on_resume_raises_and_leaves_output(spark, tmp_path):
+    """Resuming with another n_splits would re-key every split: the call
+    names the pinned value and touches neither data nor lineage."""
+    import pytest
+
+    out = str(tmp_path / "pinned")
+    docs = load_fixture(spark, n_docs=60)
+    run_resumable_extraction(spark, docs, out, "first", n_splits=4,
+                             n_batches=2, max_batches=1)
+    before = _file_state(out, "data", "_lineage")
+    assert before
+    with pytest.raises(ValueError, match="n_splits=4"):
+        run_resumable_extraction(spark, docs, out, "second", n_splits=8)
+    assert _file_state(out, "data", "_lineage") == before

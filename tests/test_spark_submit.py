@@ -43,7 +43,7 @@ def test_spark_submit_pyfiles_extract_job(tmp_path):
     proc = subprocess.run(
         [_spark_submit(), "--master", "local[2]", "--py-files", zip_path, job_py,
          "--input", pages, "--output", str(tmp_path / "out"),
-         "--run-id", "submit-test", "--n-splits", "2", "--n-batches", "2"],
+         "--run-id", "submit-test", "--n-splits", "2"],
         capture_output=True, text=True, timeout=420, cwd=str(tmp_path), env=env,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
