@@ -1,5 +1,6 @@
 """Deduplication operators for a training-data pipeline: exact, MinHash
-(+LSH candidate pairs), SimHash, and corpus-level line dedup.
+(+LSH candidate pairs and near-dup clusters), SimHash, and corpus-level
+line dedup.
 
 All spelled with built-in DataFrame ops (explode → groupBy with MAP-SIDE
 PARTIAL aggregation — a min/sum per (doc, hash) combines before the
@@ -10,9 +11,13 @@ float tolerance anywhere.
 
 At 100 TB: exact dedup is one hash-shuffle on the fingerprint; MinHash is
 scan → explode shingles → partial-min per band key → one shuffle grouping
-band keys into buckets, whose candidate PAIRS are enumerated in-kernel —
-the classic MinHash-LSH band/bucket scheme (Broder; Leskovec et al. MMDS
-ch.3).
+band keys into buckets — the classic MinHash-LSH band/bucket scheme
+(Broder; Leskovec et al. MMDS ch.3). Candidate PAIRS are enumerated
+in-kernel per bucket (k(k-1)/2, so that operator keeps a mega-bucket
+guard); near-dup CLUSTERS never enumerate pairs: each bucket is a clique,
+so a star to its minimum member carries the same components in k-1 edges
+(star contraction, Kiveris et al., SoCC 2014) and no bucket size is
+refused.
 """
 
 from __future__ import annotations
@@ -123,6 +128,28 @@ def minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_signature_df(load_table(spark, sf_dir, "documents"))
 
 
+def _band_buckets(docs: DataFrame) -> DataFrame:
+    """(members) per MinHash band bucket of >= 2 docs: the signature's
+    MH_B band keys grouped with ONE shuffle, members = collected doc_ids."""
+    sig = minhash_signature_df(docs)
+    bands = F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(",", *[F.col(f"s{b * MH_R + r}") for r in range(MH_R)]).alias("key"),
+        )
+        for b in range(MH_B)
+    ])
+    keyed = sig.select("doc_id", F.explode(bands).alias("bk")).select(
+        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+    return (
+        keyed.groupBy("band", "key")
+        .agg(F.collect_list("doc_id").alias("members"))
+        .where(F.size("members") >= 2)
+        .select("members")
+    )
+
+
 # Live pair-index elements per enumeration block in the bucket kernel
 # (re-exported so tests can monkeypatch per-module; the index math lives
 # in pairblocks.block_triangles, shared with the similarity kernels).
@@ -138,13 +165,9 @@ from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
 from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
     check_bucket as _check_bucket,
 )
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    make_oversize_acc as _make_oversize_acc,
-)
 
-def minhash_lsh_pairs_df(docs: DataFrame,
-                         max_bucket: int | None = None,
-                         on_oversize: str = "error") -> DataFrame:
+
+def minhash_lsh_pairs_df(docs: DataFrame) -> DataFrame:
     """LSH candidate pairs: docs agreeing on ALL R rows of ANY band.
 
     BUCKET-LOCAL spelling (mirrors similarity.lsh_neardup_pairs,
@@ -160,32 +183,12 @@ def minhash_lsh_pairs_df(docs: DataFrame,
     members yields k(k-1)/2 pairs — blocked enumeration bounds kernel
     live memory, but nothing bounds the OUTPUT. The contract is "run
     dedup_exact first" (its one fingerprint shuffle collapses exact
-    copies before shingling); buckets past ``max_bucket`` (default
-    pairblocks.MAX_BUCKET_MEMBERS) fail the job with an actionable error,
-    or with ``on_oversize='skip'`` are dropped and counted into
-    pairblocks.LAST_OVERSIZE_ACC."""
-    cap = _MAX_BUCKET_MEMBERS if max_bucket is None else max_bucket
-    sig = minhash_signature_df(docs)
-    bands = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(",", *[F.col(f"s{b * MH_R + r}") for r in range(MH_R)]).alias("key"),
-        )
-        for b in range(MH_B)
-    ])
-    keyed = sig.select("doc_id", F.explode(bands).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    acc = _make_oversize_acc(docs, on_oversize)
-    buckets = (
-        keyed.groupBy("band", "key")
-        .agg(F.collect_list("doc_id").alias("members"))
-        .where(F.size("members") >= 2)
-        .select("members")
-    )
-    pair_block = _PAIR_BLOCK_ELEMS   # closure copy: workers re-import the
-    # module, a test-side monkeypatch must ride the serialized function
-    check, mode = _check_bucket, on_oversize   # closure copies likewise
+    copies before shingling); buckets past pairblocks.MAX_BUCKET_MEMBERS
+    fail the job with an actionable error. Clustering needs no pairs and
+    no guard: use dedup_clusters_df."""
+    cap = _MAX_BUCKET_MEMBERS        # closure copies: workers re-import
+    pair_block = _PAIR_BLOCK_ELEMS   # the module, a test-side monkeypatch
+    # must ride the serialized function
     # id-type-generic (r4 verdict #6): a 128-bit doc_id rides as a hex
     # STRING, whose numpy '<U' sort order equals Spark's string order
     # (both by codepoint), so doc_a < doc_b stays engine-consistent
@@ -207,8 +210,7 @@ def minhash_lsh_pairs_df(docs: DataFrame,
         n_buf = 0
         for pdf in batches:
             for members in pdf["members"]:
-                if not check(len(members), cap, mode, "MinHash-LSH", acc):
-                    continue
+                _check_bucket(len(members), cap, "MinHash-LSH")
                 m = np.sort(np.asarray(members))
                 for s, e, tri in _block_triangles(len(m), pair_block):
                     ri, rj = np.nonzero(tri)
@@ -225,7 +227,7 @@ def minhash_lsh_pairs_df(docs: DataFrame,
         yield flush()
 
     return (
-        buckets.mapInPandas(kernel, f"doc_a {id_sql}, doc_b {id_sql}")
+        _band_buckets(docs).mapInPandas(kernel, f"doc_a {id_sql}, doc_b {id_sql}")
         .distinct()                  # collapse multi-band duplicates
     )
 
@@ -240,34 +242,33 @@ CC_MAX_ITERS = 20
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the MinHash-LSH
-    candidate pairs, component id = min doc_id (the canonical keeper) —
-    the step a dedup pipeline runs after pair generation so each group
-    keeps exactly one document. Singletons are their own component.
+    candidate graph, component id = min doc_id (the canonical keeper) —
+    the step a dedup pipeline runs after banding so each group keeps
+    exactly one document. Singletons are their own component.
 
-    Spark shape: iterative min-label propagation (labels join edges →
-    groupBy min) plus POINTER JUMPING (comp ← comp[comp]) each round, so
-    convergence is O(log component diameter) — the iteration cap covers
-    2^max_iters-long transitive chains. The loop stops at a true fixpoint
-    via the sum(comp) monotone-decrease test (one aggregate per round, no
-    diff join); each round localCheckpoints to bound lineage. At 10⁹ docs
-    the same primitives scale (two checkpointed joins per round); the
-    alternating large-star/small-star formulation is the classic
-    equivalent if round count ever matters more than per-round cost."""
+    Spark shape: each band bucket contributes a STAR (every member linked
+    to the bucket minimum) — the same components as the bucket's clique of
+    candidate pairs, in k-1 edges instead of k(k-1)/2, so no bucket size
+    needs a cap. Components then come from connected_components'
+    min-label propagation plus pointer jumping, O(log diameter) rounds,
+    each stopped at a true fixpoint by a probe riding the round's own
+    checkpoint. At 10⁹ docs the same primitives scale (two checkpointed
+    joins per round)."""
     return dedup_clusters_df(load_table(spark, sf_dir, "documents"))
 
 
-def dedup_clusters_df(docs: DataFrame,
-                      max_bucket: int | None = None,
-                      on_oversize: str = "error") -> DataFrame:
-    """dedup_clusters for any (doc_id, text) frame. The mega-bucket
-    guard kwargs pass through to the pair enumeration — a corpus with
-    >max_bucket legitimately near-identical (non-exact-dup) docs in one
-    band bucket can choose ``on_oversize='skip'`` instead of failing."""
-    pairs = minhash_lsh_pairs_df(docs, max_bucket=max_bucket,
-                                 on_oversize=on_oversize)
-    edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").union(
-        pairs.selectExpr("doc_b AS src", "doc_a AS dst")
-    )
+def dedup_clusters_df(docs: DataFrame) -> DataFrame:
+    """dedup_clusters for any (doc_id, text) frame. Star edges come from
+    plain JVM ops over the band buckets — ``explode(members)`` paired with
+    ``array_min(members)``, both directions — with no Python kernel and
+    no bucket cap: an exact- or near-duplicate flood of any size collapses
+    to one component instead of failing the job."""
+    members = F.col("members")
+    star = _band_buckets(docs).select(
+        F.explode(members).alias("src"), F.array_min(members).alias("dst")
+    ).where(F.col("src") != F.col("dst"))
+    edges = star.union(star.select(F.col("dst").alias("src"),
+                                   F.col("src").alias("dst")))
     return connected_components(docs.select("doc_id"), edges)
 
 
@@ -275,7 +276,18 @@ def connected_components(docs: DataFrame, edges: DataFrame,
                          max_iters: int = CC_MAX_ITERS,
                          reliable: bool = False) -> DataFrame:
     """Min-label propagation + pointer jumping over (src, dst) edges;
-    docs(doc_id) supplies the vertex set (singletons included).
+    docs(doc_id) supplies the vertex set (singletons included, NULL ids
+    dropped).
+
+    Fixpoint probe: the propagation aggregate keeps each doc's previous
+    label as ``own`` beside ``min(comp)``, and a fresh
+    ``pyspark.sql.Observation`` counts ``comp < own`` on that frame — the
+    checkpoint the round runs anyway delivers it, so the probe costs no
+    job of its own. A zero count means propagation changed nothing, and a
+    pointer jump cannot move a propagation fixpoint (labels are constant
+    on each component and equal to its minimum), so the previous labels
+    are returned as they are. Works for any orderable id type — 64-bit
+    ints and the 128-bit hex-string doc_ids alike.
 
     Fault tolerance is a CONFIG CHOICE (r4 verdict #5): the default
     localCheckpoint materializes to EXECUTOR storage — fast, but an
@@ -299,6 +311,8 @@ def connected_components(docs: DataFrame, edges: DataFrame,
     the result is written, or set
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` to let the
     ContextCleaner reap checkpoints as their RDDs are GC'd."""
+    from pyspark.sql import Observation
+
     if reliable and docs.sparkSession.sparkContext.getCheckpointDir() is None:
         raise ValueError(
             "connected_components(reliable=True) needs a reliable "
@@ -310,34 +324,31 @@ def connected_components(docs: DataFrame, edges: DataFrame,
         return df.checkpoint() if reliable else df.localCheckpoint()
 
     # materialize once: every propagation round joins against edges, and
-    # without this the edge-producing subtree (shingle→minhash→LSH when
-    # called from dedup_clusters) re-executes per round
+    # without this the edge-producing subtree (shingle→minhash→buckets
+    # when called from dedup_clusters) re-executes per round
     edges = _ckpt(edges)
-    labels = docs.select("doc_id", F.col("doc_id").alias("comp"))
-    # fixpoint test dispatch: integral ids use the one-aggregate decimal
-    # sum below; wider ids (the 128-bit hex-string doc_id option) would
-    # overflow ANY fixed decimal precision when summed, so they use an
-    # any-label-changed probe instead (one join against the previous
-    # round's checkpointed labels, early-out via isEmpty's limit 1)
-    from pyspark.sql.types import (
-        ByteType, IntegerType, LongType, ShortType,
-    )
-
-    integral = isinstance(docs.schema["doc_id"].dataType,
-                          (ByteType, ShortType, IntegerType, LongType))
-    prev_sum = None
+    # a NULL id never survives a round's jump join; dropping it up front
+    # keeps the vertex set the same when the first round is the fixpoint
+    labels = docs.where(F.col("doc_id").isNotNull()).select(
+        "doc_id", F.col("doc_id").alias("comp"))
     for _ in range(max_iters):
         nbr = edges.join(labels, edges["src"] == labels["doc_id"]).select(
             F.col("dst").alias("doc_id"), "comp"
         )
         new = (
-            labels.unionByName(nbr)
+            labels.withColumn("own", F.col("comp"))
+            .unionByName(nbr, allowMissingColumns=True)
             .groupBy("doc_id")
-            .agg(F.min("comp").alias("comp"))
+            .agg(F.min("comp").alias("comp"), F.min("own").alias("own"))
         )
-        # checkpoint BEFORE the self-join: cuts the per-round lineage AND
-        # materializes the aggregate once (the join reads it twice)
-        new = _ckpt(new)
+        probe = Observation()
+        # checkpoint BEFORE the self-join: cuts the per-round lineage,
+        # materializes the aggregate once (the join reads it twice) and
+        # delivers the probe
+        new = _ckpt(new.observe(
+            probe, F.count_if(F.col("comp") < F.col("own")).alias("changed")))
+        if probe.get["changed"] == 0:
+            return labels
         # pointer jumping: comp ← comp[comp] (comp values are doc_ids, so
         # the self-join always hits). Halves the remaining diameter every
         # round — convergence in O(log diameter) rounds, so the iteration
@@ -347,33 +358,12 @@ def connected_components(docs: DataFrame, edges: DataFrame,
         # NoSuchElementException on shared ids in Spark 4.1)
         right = new.select(F.col("doc_id").alias("jid"),
                            F.col("comp").alias("jcomp"))
-        new = (
+        # materialize the jumped labels too: the next round's edge join
+        # AND its union both read this frame
+        labels = _ckpt(
             new.join(right, F.col("comp") == F.col("jid"))
             .select("doc_id", F.col("jcomp").alias("comp"))
         )
-        # materialize the jumped labels too: the fixpoint sum, the next
-        # round's edge join, AND its union all read this frame — without
-        # this the self-join re-executes three times per round
-        new = _ckpt(new)
-        if integral:
-            # comp only ever DECREASES per doc, so sum(comp) strictly
-            # drops iff any label changed — a one-aggregate fixpoint test
-            # (no diff join). decimal(38,0) sum: with sparse 64-bit vertex
-            # ids (e.g. xxhash-derived) a non-ANSI int64 sum could wrap,
-            # and a wrapped-equal sum would end propagation early with
-            # wrong components
-            s = new.agg(
-                F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
-            done = s == prev_sum
-            prev_sum = s
-        else:
-            prev = labels.select(F.col("doc_id").alias("pid"),
-                                 F.col("comp").alias("pcomp"))
-            done = new.join(prev, F.col("doc_id") == F.col("pid")).where(
-                F.col("comp") != F.col("pcomp")).isEmpty()
-        labels = new
-        if done:
-            break
     return labels
 
 

@@ -18,10 +18,9 @@ Design for 100 TB:
 * PageRank iterates shuffle-on-host joins of a (host, rank) vector
   against the static edge list, O(log-free) linear rounds with the same
   per-round materialize + periodic-checkpoint discipline as
-  connected_components (operators/dedup.py:249) so the lineage never
-  grows unboundedly. Dangling mass is redistributed exactly (one scalar
-  aggregate per round — the same driver-state budget the CC fixpoint
-  probe spends).
+  dedup.connected_components so the lineage never grows unboundedly.
+  Dangling mass is redistributed exactly: one scalar aggregate per
+  round, collected to the driver in a job of its own.
 """
 
 from __future__ import annotations
@@ -225,7 +224,7 @@ def host_pagerank(edges: DataFrame, n_iter: int = 10, damping: float = 0.85,
             .groupBy("host").agg(F.sum("c").alias("inflow"))
         )
         # dangling hosts (no outgoing edges) leak their mass: collect it
-        # (one scalar, same budget as the CC fixpoint probe) and spread
+        # (one scalar) and spread
         dangling = (
             ranks.join(out_w, ranks.host == out_w.src, "left_anti")
             .agg(F.sum("rank")).collect()[0][0] or 0.0

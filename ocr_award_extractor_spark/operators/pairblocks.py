@@ -23,50 +23,18 @@ PAIR_BLOCK_ELEMS = 1 << 22   # ~32 MB of float64 live per block
 MAX_BUCKET_MEMBERS = 4096
 
 
-def check_bucket(k: int, cap: int, on_oversize: str, kind: str,
-                 acc=None) -> bool:
-    """Admission check for one bucket of ``k`` members against ``cap``.
-
-    Returns True to process the bucket. ``on_oversize='error'`` (the
-    default everywhere) raises with an actionable message — the job fails
-    loud; ``'skip'`` drops the bucket, counts it into the Spark
-    accumulator ``acc`` (worker adds propagate to the driver), and
-    returns False. Runs inside Arrow kernels, so it must stay
-    import-free."""
-    if k <= cap:
-        return True
-    if on_oversize == "skip":
-        if acc is not None:
-            acc.add(1)
-        return False
-    raise ValueError(
-        f"{kind} bucket has {k} members (> {cap}-member guard), i.e. "
-        f"O(k^2)={k * (k - 1) // 2} pairs from one bucket. If exact "
-        f"duplicates may exist, run dedup_exact first (the documented "
-        f"contract); if they are already collapsed this is a legitimate "
-        f"near-duplicate flood (e.g. templated boilerplate) — pass "
-        f"on_oversize='skip' to drop-and-count oversize buckets, or "
-        f"raise max_bucket."
-    )
-
-
-# Accumulator of the most recent skip-mode plan built by any bucket
-# kernel (similarity or MinHash); tests read .value after forcing an
-# action. None until a skip-mode plan is built.
-LAST_OVERSIZE_ACC = None
-
-
-def make_oversize_acc(df, on_oversize: str):
-    """Validate the oversize mode eagerly (plan-build time) and return a
-    fresh Spark accumulator for skip mode, else None. The skip-mode
-    accumulator is also kept in LAST_OVERSIZE_ACC."""
-    global LAST_OVERSIZE_ACC
-    if on_oversize not in ("error", "skip"):
-        raise ValueError(f"unknown on_oversize: {on_oversize}")
-    if on_oversize != "skip":
-        return None
-    LAST_OVERSIZE_ACC = df.sparkSession.sparkContext.accumulator(0)
-    return LAST_OVERSIZE_ACC
+def check_bucket(k: int, cap: int, kind: str) -> None:
+    """Admission check for one bucket of ``k`` members against ``cap``:
+    raises with an actionable message, so the job fails loud. Runs
+    inside Arrow kernels, so it must stay import-free."""
+    if k > cap:
+        raise ValueError(
+            f"{kind} bucket has {k} members (> {cap}-member guard), i.e. "
+            f"O(k^2)={k * (k - 1) // 2} pairs from one bucket. If exact "
+            f"duplicates may exist, run dedup_exact first (the documented "
+            f"contract); to cluster near-duplicates use dedup_clusters_df, "
+            f"which enumerates no pairs and has no bucket cap."
+        )
 
 
 def guard_keyed_jvm(keyed, bucket_cols: list[str], cap: int, kind: str):

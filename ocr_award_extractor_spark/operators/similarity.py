@@ -352,9 +352,6 @@ from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
 from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
     guard_keyed_jvm as _guard_keyed_jvm,
 )
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    make_oversize_acc as _make_oversize_acc,
-)
 
 
 def _score_one_bucket(m, sub, pair_block):
@@ -387,9 +384,8 @@ def _score_one_bucket(m, sub, pair_block):
 
 
 def lsh_neardup_pairs(spark: SparkSession, sf_dir: str,
-                      bands: int | None = None, rows: int | None = None,
-                      max_bucket: int | None = None,
-                      on_oversize: str = "error") -> DataFrame:
+                      bands: int | None = None,
+                      rows: int | None = None) -> DataFrame:
     """The scale path: near-dup pairs restricted to banded-LSH candidates
     (recall ~LSH_TARGET_RECALL at the design threshold by construction;
     measured against the brute-force baseline in bench.py), scored
@@ -423,21 +419,20 @@ def lsh_neardup_pairs(spark: SparkSession, sf_dir: str,
     tests/test_trainingdata_ops.py::test_lsh_zero_norm_parity).
 
     Mega-bucket guard (ENFORCED, r4 verdict #1): a bucket of k members
-    implies k(k-1)/2 pairs; buckets past ``max_bucket`` (default
-    pairblocks.MAX_BUCKET_MEMBERS — 256× the design bucket) fail the job
-    with an actionable "run dedup_exact first" error, or with
-    ``on_oversize='skip'`` are dropped and counted into
-    pairblocks.LAST_OVERSIZE_ACC. Pinned by
+    implies k(k-1)/2 pairs; buckets past pairblocks.MAX_BUCKET_MEMBERS
+    (256× the design bucket) fail the job with an actionable "run
+    dedup_exact first" error. Pinned by
     tests/test_trainingdata_ops.py::test_mega_bucket_guard*."""
     import numpy as np
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _quant(F.col("embedding")).alias("qe")
-    )
+    # the join reference and the oracle drop NULL ids in their joins; the
+    # kernel's int64 id array cannot hold one, so drop them before it
+    emb = (load_table(spark, sf_dir, "embeddings")
+           .where(F.col("vec_id").isNotNull())
+           .select("vec_id", _quant(F.col("embedding")).alias("qe")))
     if bands is None or rows is None:
         bands, rows = _corpus_lsh_params(sf_dir)
-    cap = _MAX_BUCKET_MEMBERS if max_bucket is None else max_bucket
-    acc = _make_oversize_acc(emb, on_oversize)
+    cap = _MAX_BUCKET_MEMBERS
     keys = lsh_band_keys(emb, bands, rows, with_vec=True)
     buckets = (
         keys.groupBy("band", "key")
@@ -447,7 +442,6 @@ def lsh_neardup_pairs(spark: SparkSession, sf_dir: str,
     )
     pair_block = _PAIR_BLOCK_ELEMS   # captured by value: workers re-import
     # the module, so a test-side monkeypatch must ride the closure
-    check, mode = _check_bucket, on_oversize
 
     def kernel(batches):
         import pandas as pd
@@ -463,8 +457,7 @@ def lsh_neardup_pairs(spark: SparkSession, sf_dir: str,
         n_buf = 0
         for pdf in batches:
             for members in pdf["members"]:
-                if not check(len(members), cap, mode, "LSH score", acc):
-                    continue
+                _check_bucket(len(members), cap, "LSH score")
                 ids = np.fromiter((mm["vec_id"] for mm in members),
                                   dtype=np.int64, count=len(members))
                 # one frombuffer for the whole bucket — explicit
@@ -652,18 +645,14 @@ def ivf_topk_cosine(spark: SparkSession, sf_dir: str,
     )
 
 
-def embedding_neardup_clusters(spark: SparkSession, sf_dir: str,
-                               max_bucket: int | None = None,
-                               on_oversize: str = "error") -> DataFrame:
+def embedding_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-side dedup clusters: connected components over the
     bucketed cosine near-dup pairs (component id = min vec_id = keeper) —
     the same keep-one-per-group step as the text-side dedup_clusters,
-    sharing its pointer-jumping propagation. Mega-bucket guard kwargs
-    pass through to the pair scoring."""
+    sharing its pointer-jumping propagation."""
     from ocr_award_extractor_spark.operators.dedup import connected_components
 
-    pairs = lsh_neardup_pairs(spark, sf_dir, max_bucket=max_bucket,
-                              on_oversize=on_oversize)
+    pairs = lsh_neardup_pairs(spark, sf_dir)
     vecs = load_table(spark, sf_dir, "embeddings").select("vec_id")
     edges = pairs.selectExpr("va AS src", "vb AS dst").union(
         pairs.selectExpr("vb AS src", "va AS dst")

@@ -75,7 +75,6 @@ def run_training_data_pipeline(
     *,
     n_splits: int = 16,
     id_bits: int = 64,
-    on_oversize: str = "error",
     wet_out: str | None = None,
     decontaminate: bool = False,
     host_cap: int | None = None,
@@ -195,11 +194,7 @@ def run_training_data_pipeline(
     uniq, n_uniq = stage("exact_dedup", n_gated, do_exact)
 
     def do_neardup():
-        # exact dedup already ran one stage earlier, so a guard trip here
-        # means a legitimate near-dup flood — on_oversize='skip' (CLI
-        # --on-oversize skip) drops-and-counts those buckets instead of
-        # failing the job
-        comp = dedup_clusters_df(uniq, on_oversize=on_oversize)
+        comp = dedup_clusters_df(uniq)
         keepers = comp.where(F.col("comp") == F.col("doc_id")).select("doc_id")
         kept = uniq.join(keepers, "doc_id", "left_semi")
         kept = _staged(kept, os.path.join(out_dir, "neardup_dedup"))
@@ -324,11 +319,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--id-bits", type=int, default=64, choices=(64, 128),
                    help="doc_id width: 64 = xxhash64(url); 128 = "
                         "two-salt hex pair (the 10^12-url spelling)")
-    p.add_argument("--on-oversize", default="error",
-                   choices=("error", "skip"),
-                   help="near-dup mega-bucket guard action (exact dedup "
-                        "has already run by that stage, so 'skip' is the "
-                        "escape hatch for legitimate near-dup floods)")
     p.add_argument("--wet-out", default=None,
                    help="also export the committed extraction as WET "
                         "conversion shards here and verify the read-back "
@@ -365,7 +355,7 @@ def main(argv: list[str] | None = None) -> int:
         summary = run_training_data_pipeline(
             spark, pages, args.output, args.run_id,
             n_splits=args.n_splits,
-            id_bits=args.id_bits, on_oversize=args.on_oversize,
+            id_bits=args.id_bits,
             wet_out=args.wet_out, decontaminate=args.decontaminate,
             host_cap=args.host_cap, pack_budget=args.pack_budget,
             frontier_out=args.frontier_out,

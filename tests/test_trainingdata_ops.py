@@ -138,23 +138,30 @@ def test_dedup_clusters_transitive(spark, planted_dir):
     assert len(comp) == 5
 
 
-def test_connected_components_long_chain(spark):
+@pytest.mark.parametrize("hex_ids", [False, True], ids=["int", "hex16"])
+def test_connected_components_long_chain(spark, hex_ids):
     """Pointer jumping: a 30-doc CHAIN (diameter 29 > plain-propagation
     budget) must still collapse to one component within the iteration cap
-    — O(log diameter) rounds, the property that matters at crawl scale."""
+    — O(log diameter) rounds, the property that matters at crawl scale.
+    Run over int ids and over 16-char hex string ids (the 128-bit
+    pipeline's id type), whose string order equals the int order."""
     from pyspark.sql import functions as F2
 
     from ocr_award_extractor_spark.operators.dedup import connected_components
 
-    docs = spark.range(30).select(F2.col("id").alias("doc_id"))
+    def vid(c):
+        return F2.lpad(F2.hex(c), 16, "0") if hex_ids else c
+
+    docs = spark.range(30).select(vid(F2.col("id")).alias("doc_id"))
     chain = spark.range(29).select(
-        F2.col("id").alias("src"), (F2.col("id") + 1).alias("dst")
+        vid(F2.col("id")).alias("src"), vid(F2.col("id") + 1).alias("dst")
     )
     edges = chain.union(chain.select(F2.col("dst").alias("src"),
                                      F2.col("src").alias("dst")))
     comp = {r["doc_id"]: r["comp"]
             for r in connected_components(docs, edges, max_iters=8).collect()}
-    assert set(comp.values()) == {0} and len(comp) == 30
+    root = "0" * 16 if hex_ids else 0
+    assert set(comp.values()) == {root} and len(comp) == 30
 
 
 @pytest.fixture(scope="module")
@@ -257,6 +264,33 @@ def test_lsh_buckets_drops_null_vec_id(spark, tmp_path):
     assert sorted(got, key=str) == sorted(want, key=str)
 
 
+def test_lsh_neardup_drops_null_vec_id(spark, tmp_path):
+    """A NULL vec_id copy of a near-dup vector is dropped before the
+    scoring kernel (whose int64 id array cannot hold it): the pairs equal
+    the all-JVM join spelling's, whose joins drop NULL ids, and the
+    embedding clusters build on them."""
+    from ocr_award_extractor_spark.operators import similarity
+    from tests.oracle_spellings import lsh_neardup_pairs_join
+
+    rows = [{"vec_id": i, "embedding": [0.5, -1.0] * 32, "label": 0}
+            for i in range(3)]
+    rows.append({"vec_id": None, "embedding": [0.5, -1.0] * 32, "label": 0})
+    schema = pa.schema([("vec_id", pa.int64()),
+                        ("embedding", pa.list_(pa.float32())),
+                        ("label", pa.int32())])
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema),
+                   os.path.join(tmp_path, "embeddings.parquet"))
+    got = {tuple(r) for r in similarity.lsh_neardup_pairs(
+        spark, str(tmp_path)).collect()}
+    assert {(va, vb) for va, vb, _ in got} == {(0, 1), (0, 2), (1, 2)}
+    assert got == {tuple(r) for r in lsh_neardup_pairs_join(
+        spark, str(tmp_path)).collect()}
+    comp = {r["vec_id"]: r["comp"] for r in
+            similarity.embedding_neardup_clusters(spark, str(tmp_path))
+            .collect()}
+    assert comp == {0: 0, 1: 0, 2: 0}
+
+
 def test_ivf_nprobe_widens_monotonically(spark):
     """nprobe=1 must equal the default (oracle-pinned) probe; larger
     nprobe scans a superset of clusters, so brute-force overlap is
@@ -330,7 +364,7 @@ def flood_dir(tmp_path_factory):
     """An exact-duplicate FLOOD: 30 copies of one text land all 30 doc_ids
     in the same bucket of every MinHash band — the degenerate corpus the
     mega-bucket guard exists for — plus a near-dup pair and a singleton
-    that must survive a skip/dedup pass."""
+    that must survive dedup and clustering."""
     d = tmp_path_factory.mktemp("flood")
     flood = " ".join(BASE)
     rows = [{"doc_id": i, "text": flood, "lang": "en", "source": "s",
@@ -347,55 +381,41 @@ def flood_dir(tmp_path_factory):
     return str(d)
 
 
-def test_mega_bucket_guard_minhash(spark, flood_dir):
-    """r4 verdict #1: an exact-dup flood must FAIL LOUD (error mode), be
-    droppable-and-counted (skip mode + accumulator), and run clean after
-    the documented dedup_exact pre-pass."""
-    from ocr_award_extractor_spark.operators import dedup, pairblocks
+GUARD_MSG = r"member guard.*run dedup_exact first.*use dedup_clusters_df"
+
+
+def test_mega_bucket_guard_minhash(spark, flood_dir, monkeypatch):
+    """r4 verdict #1: an exact-dup flood must FAIL LOUD, naming the
+    remedies, and run clean after the documented dedup_exact pre-pass."""
+    from ocr_award_extractor_spark.operators import dedup
     from ocr_award_extractor_spark.sources.tables import load_table
 
     docs = load_table(spark, flood_dir, "documents")
+    monkeypatch.setattr(dedup, "_MAX_BUCKET_MEMBERS", 8)
 
-    # error mode (the default): kernel raise surfaces through the action
-    with pytest.raises(Exception, match="member guard"):
-        dedup.minhash_lsh_pairs_df(docs, max_bucket=8).collect()
-
-    # skip mode: flood buckets dropped AND counted; small buckets intact
-    skipped = {(r["doc_a"], r["doc_b"])
-               for r in dedup.minhash_lsh_pairs_df(
-                   docs, max_bucket=8, on_oversize="skip").collect()}
-    assert pairblocks.LAST_OVERSIZE_ACC.value >= 1
-    assert all(a >= 30 or b >= 30 for a, b in skipped)  # no flood pairs
+    # the kernel raise surfaces through the action
+    with pytest.raises(Exception, match=GUARD_MSG):
+        dedup.minhash_lsh_pairs_df(docs).collect()
 
     # the documented remedy: dedup_exact first, then pairs run clean under
-    # the SAME cap in the default error mode — and find the near-dup edge
+    # the SAME cap — and find the near-dup edge
     from pyspark.sql import functions as F2
 
     keepers = dedup.dedup_exact_df(docs).select(
         F2.col("keeper").alias("doc_id"))
     deduped = docs.join(keepers, "doc_id")
     pairs = {(r["doc_a"], r["doc_b"])
-             for r in dedup.minhash_lsh_pairs_df(
-                 deduped, max_bucket=8).collect()}
+             for r in dedup.minhash_lsh_pairs_df(deduped).collect()}
     assert (0, 30) in pairs            # keeper 0 still pairs with near-dup
     assert all(a < 30 or a == 30 for a, _ in pairs)
 
 
 def test_mega_bucket_guard_lsh_spellings(spark, zero_norm_dir, monkeypatch):
     """The same guard on the similarity side: zero_norm_dir's 20 identical
-    vectors exceed a cap of 10 in every band — the scorer must fail loud
-    in error mode; skip mode drops the buckets and counts them; the
-    default cap (256x design bucket) leaves results untouched. The
+    vectors exceed a cap of 10 in every band — the scorer must fail loud;
+    the default cap (256x design bucket) leaves results untouched. The
     all-JVM candidate self-join raises in-plan under the same cap."""
-    from ocr_award_extractor_spark.operators import pairblocks, similarity
-
-    with pytest.raises(Exception, match="member guard"):
-        similarity.lsh_neardup_pairs(
-            spark, zero_norm_dir, max_bucket=10).collect()
-
-    got = similarity.lsh_neardup_pairs(
-        spark, zero_norm_dir, max_bucket=10, on_oversize="skip").collect()
-    assert got == [] and pairblocks.LAST_OVERSIZE_ACC.value >= 1
+    from ocr_award_extractor_spark.operators import similarity
 
     # the default cap never fires on a legitimate corpus: bit-equal to
     # the unguarded expectation pinned by test_lsh_zero_norm_parity
@@ -406,6 +426,8 @@ def test_mega_bucket_guard_lsh_spellings(spark, zero_norm_dir, monkeypatch):
     assert kernel == expect
 
     monkeypatch.setattr(similarity, "_MAX_BUCKET_MEMBERS", 10)
+    with pytest.raises(Exception, match=GUARD_MSG):
+        similarity.lsh_neardup_pairs(spark, zero_norm_dir).collect()
     with pytest.raises(Exception, match="member guard"):
         similarity.lsh_candidate_pairs(spark, zero_norm_dir).collect()
 
@@ -440,23 +462,50 @@ def test_connected_components_reliable(spark, tmp_path):
     assert {c for _, c in rel} == {0}     # the chain collapses either way
 
 
-def test_dedup_clusters_guard_passthrough(spark, flood_dir):
-    """The guard kwargs reach clustering (review r5): on the planted
-    flood, default error mode fails loud at a tiny cap, while
-    on_oversize='skip' completes — the escape hatch a legitimate
-    near-dup flood needs once exact dedup has already run."""
-    from ocr_award_extractor_spark.operators import dedup, pairblocks
+def test_dedup_clusters_survives_flood(spark, flood_dir, monkeypatch):
+    """Clustering enumerates no pairs, so no bucket size is refused: the
+    planted flood, with no dedup_exact pre-pass and a pair-guard cap far
+    below its 30-member buckets, collapses with its near-dup into
+    component 0 while the unrelated doc stays its own — the rows of
+    DuckDB's recursive-reachability oracle over the same table."""
+    import duckdb
+
+    from ocr_award_extractor_spark.operators import dedup
     from ocr_award_extractor_spark.sources.tables import load_table
 
+    monkeypatch.setattr(dedup, "_MAX_BUCKET_MEMBERS", 8)
     docs = load_table(spark, flood_dir, "documents")
-    with pytest.raises(Exception, match="member guard"):
-        dedup.dedup_clusters_df(docs, max_bucket=8).collect()
-    comp = {r["doc_id"]: r["comp"]
-            for r in dedup.dedup_clusters_df(
-                docs, max_bucket=8, on_oversize="skip").collect()}
-    assert pairblocks.LAST_OVERSIZE_ACC.value >= 1
-    assert len(comp) == 32                 # every doc labeled
-    assert comp[31] == 31                  # unrelated singleton intact
+    got = {(r["doc_id"], r["comp"])
+           for r in dedup.dedup_clusters_df(docs).collect()}
+    assert got == {(i, 0) for i in range(31)} | {(31, 31)}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"'{flood_dir}/documents.parquet'")
+    assert got == set(con.execute(dedup.ORACLES["dedup_clusters"]).fetchall())
+
+
+def test_dedup_clusters_job_budget(spark):
+    """Star edges plus the fixpoint probe riding each round's checkpoint:
+    dedup_clusters_df on the sf0.01 documents runs at most 16 Spark jobs.
+    Jobs submitted from other driver threads do not inherit the job
+    group, so ungrouped jobs started meanwhile count too."""
+    from ocr_award_extractor_spark.operators import dedup
+    from ocr_award_extractor_spark.sources.tables import load_table
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    docs = load_table(spark, "/root/testdata/sf0.01", "documents")
+    group = "dedup-clusters-budget"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        n_comp = dedup.dedup_clusters_df(docs).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = (set(tracker.getJobIdsForGroup(group))
+            | set(tracker.getJobIdsForGroup(None)) - ungrouped)
+    assert n_comp == docs.count()
+    assert 1 <= len(jobs) <= 16
 
 
 def test_jaccard_duckdb_parity_sf0001(spark):
