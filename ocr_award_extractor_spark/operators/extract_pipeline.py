@@ -8,7 +8,7 @@ Spark plan (SURVEY.md §3.4):
                                            splits are host-correlated and AQE does
                                            NOT split skewed MapInPandas tasks, so
                                            this is a deliberate shuffle (§4)
-      → mapInPandas(extract_batch)        ONE vectorized stage fusing the whole
+      → map_rows(extract_record)          ONE mapInPandas stage fusing the whole
                                            reference dataflow: decode → two-strategy
                                            parse → pick-best → blank filter → join
                                            → field extraction (certificate_ocr.py
@@ -24,9 +24,6 @@ reference's error-record-not-exception contract (certificate_ocr.py:100-105,
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -35,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from ocr_award_extractor_spark.config import SALT_SEED
+from ocr_award_extractor_spark.functions.batching import map_rows
 from ocr_award_extractor_spark.functions.extract import extract_fields
 from ocr_award_extractor_spark.functions.htmltext import extract_page
 
@@ -56,12 +54,11 @@ OUT_SCHEMA = StructType([
     StructField("n_html_bytes", LongType()),
 ])
 
-_IN_COLS = ("url", "warc_ts", "lang", "html")
-
-
 def extract_record(url, warc_ts, lang, html) -> dict:
-    """One document through the full reference dataflow. Pure function —
-    also used by the streaming demo and unit tests."""
+    """One document through the full reference dataflow: the row kernel
+    :func:`extract_documents` maps over every page (all patterns compile
+    once per worker at module import). Pure function — also used by the
+    kernel probe and unit tests."""
     page = extract_page(html)
     n_bytes = len(html) if html is not None else 0
     if page["status"] == "error":
@@ -89,24 +86,6 @@ def extract_record(url, warc_ts, lang, html) -> dict:
     }
 
 
-_OUT_COLS = tuple(f.name for f in OUT_SCHEMA.fields)
-
-
-def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: Arrow batch in → Arrow batch out. The Python loop
-    lives INSIDE the batch (the mapInPandas norm for parser-shaped work);
-    all patterns are compiled once per worker at module import. Output
-    batches are built COLUMNAR via the shared records_to_frame (per-cell
-    type inference was ~2× of the whole stage cost at 32 cores)."""
-    from ocr_award_extractor_spark.functions.batching import records_to_frame
-
-    for pdf in batches:
-        it = zip(pdf["url"].to_numpy(), pdf["warc_ts"].to_numpy(),
-                 pdf["lang"].to_numpy(), pdf["html"].to_numpy())
-        out = [extract_record(u, t, lg, h) for u, t, lg, h in it]
-        yield records_to_frame(out, _OUT_COLS)
-
-
 def extract_documents(
     df: DataFrame,
     *,
@@ -119,13 +98,11 @@ def extract_documents(
     input is already well-balanced, e.g. the small fixture). At cluster
     scale pass ~2-4× total cores so jumbo-doc stragglers stay short.
     """
-    from ocr_award_extractor_spark.config import ensure_package_on_workers
-
-    ensure_package_on_workers(df.sparkSession)
-    cols = df.select(*_IN_COLS)   # column pruning: html never flows past this stage
+    cols = ("url", "warc_ts", "lang", "html")
+    df = df.select(*cols)   # column pruning: html never flows past this stage
     if salt_partitions:
-        cols = cols.repartition(salt_partitions, F.xxhash64("url", F.lit(SALT_SEED)))
-    return cols.mapInPandas(extract_batch, OUT_SCHEMA)
+        df = df.repartition(salt_partitions, F.xxhash64("url", F.lit(SALT_SEED)))
+    return map_rows(df, cols, extract_record, OUT_SCHEMA)
 
 
 def award_summary(extracted: DataFrame) -> DataFrame:

@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
+from ocr_award_extractor_spark.functions.batching import map_rows, records_to_frame
 from ocr_award_extractor_spark.functions.extract import extract_fields
 
 _FENCED = re.compile(r"```json\s*(.*?)\s*```", re.DOTALL)   # cert:239
@@ -117,6 +118,18 @@ def fake_infer(texts: list[str]) -> list[str]:
     return out
 
 
+def _rec(url, fields, path) -> dict:
+    return {"url": url, "competition_name": fields["competition_name"],
+            "award_level": fields["award_level"],
+            "project_name": fields["project_name"],
+            "winner": fields["winner"], "teacher": fields["teacher"],
+            "path": path}
+
+
+def _rule_row(url, text) -> dict:
+    return _rec(url, extract_fields((text or "").split("\n")), "rule")
+
+
 def extract_with_model(
     extracted: DataFrame,
     infer_fn: Callable[[list[str]], list[str]] = fake_infer,
@@ -127,29 +140,15 @@ def extract_with_model(
     ``use_model=False`` is the plan-build-time dispatch to the pure rule
     path (O10) — the DataFrame DAG simply doesn't contain the model stage.
     """
+    if not use_model:
+        return map_rows(extracted, ("url", "ocr_text"), _rule_row,
+                        MODEL_SCHEMA)
+
     from ocr_award_extractor_spark.config import ensure_package_on_workers
 
     ensure_package_on_workers(extracted.sparkSession)
     src = extracted.select("url", "ocr_text")
-
-    from ocr_award_extractor_spark.functions.batching import records_to_frame
-
     _cols = [f.name for f in MODEL_SCHEMA.fields]
-
-    def _rec(url, fields, path) -> dict:
-        return {"url": url, "competition_name": fields["competition_name"],
-                "award_level": fields["award_level"],
-                "project_name": fields["project_name"],
-                "winner": fields["winner"], "teacher": fields["teacher"],
-                "path": path}
-
-    if not use_model:
-        def rule_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                recs = [_rec(url, extract_fields((text or "").split("\n")), "rule")
-                        for url, text in zip(pdf["url"], pdf["ocr_text"])]
-                yield records_to_frame(recs, _cols)
-        return src.mapInPandas(rule_batch, MODEL_SCHEMA)
 
     def model_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

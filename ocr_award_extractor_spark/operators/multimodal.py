@@ -16,15 +16,16 @@ Media payload convention (fake backend):
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
     StructType,
 )
+
+from ocr_award_extractor_spark.functions.batching import flat_map_rows, map_rows
 
 FEATURE_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -89,43 +90,26 @@ register_backend("audio", _real_decode_stub)
 register_backend("video", _real_decode_stub)
 
 
-_FEATURE_COLS = tuple(f.name for f in FEATURE_SCHEMA.fields)
-
-
-def _feature_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = []
-        for row in pdf.itertuples(index=False):
-            payload = row.payload
-            rec = {"url": row.url, "kind": row.kind,
-                   "status": "success", "message": None,
-                   "width": None, "height": None, "n_frames": None,
-                   "n_bytes": len(payload) if payload is not None else 0,
-                   "mean_intensity": None}
-            try:
-                backend = _BACKENDS[row.kind]
-                rec.update(backend(payload))
-            except NotImplementedError as e:
-                rec.update(status="error", message=str(e))
-            except Exception as e:  # decode failure → error ROW (cert:100-105)
-                rec.update(status="error", message=f"decode failed: {e}")
-            out.append(rec)
-        # columnar build — list-of-dicts does per-cell inference
-        # (extract_pipeline.py measured it at ~2× the stage cost)
-        data = {c: [r[c] for r in out] for c in _FEATURE_COLS}
-        yield pd.DataFrame(data, columns=list(_FEATURE_COLS), copy=False)
+def _feature_row(url, kind, payload) -> dict:
+    rec = {"url": url, "kind": kind, "status": "success", "message": None,
+           "width": None, "height": None, "n_frames": None,
+           "n_bytes": len(payload) if payload is not None else 0,
+           "mean_intensity": None}
+    try:
+        rec.update(_BACKENDS[kind](payload))
+    except NotImplementedError as e:
+        rec.update(status="error", message=str(e))
+    except Exception as e:  # decode failure → error ROW (cert:100-105)
+        rec.update(status="error", message=f"decode failed: {e}")
+    return rec
 
 
 def extract_media_features(media: DataFrame) -> DataFrame:
     """media(url, kind, payload:binary) → typed feature rows. Same error
     contract and batch discipline as the HTML pipeline; the fat `payload`
     column is pruned before and dropped after this stage."""
-    from ocr_award_extractor_spark.config import ensure_package_on_workers
-
-    ensure_package_on_workers(media.sparkSession)
-    return media.select("url", "kind", "payload").mapInPandas(
-        _feature_batch, FEATURE_SCHEMA
-    )
+    return map_rows(media, ("url", "kind", "payload"), _feature_row,
+                    FEATURE_SCHEMA)
 
 
 MEDIA_SCHEMA = StructType([
@@ -144,6 +128,7 @@ def _media_rows(doc_id: int) -> list[dict]:
     the error contract), plus a FAKEVID for every 4th doc. Pixel byte i is
     (doc_id·a + i·b) mod m — a closed form DuckDB reproduces with a
     correlated SUM over range(), so mean_intensity is oracle-checkable."""
+    doc_id = int(doc_id)   # numpy scalar: keep the arithmetic in Python ints
     w, h = 8 + doc_id % 9, 8 + doc_id % 7
     px = ((doc_id * _IMG_A + np.arange(w * h, dtype=np.int64) * _IMG_B)
           % _IMG_MOD).astype(np.uint8)
@@ -165,28 +150,14 @@ def _media_rows(doc_id: int) -> list[dict]:
     return rows
 
 
-_MEDIA_COLS = tuple(f.name for f in MEDIA_SCHEMA.fields)
-
-
-def _media_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = []
-        for doc_id in pdf["doc_id"]:
-            out.extend(_media_rows(int(doc_id)))
-        data = {c: [r[c] for r in out] for c in _MEDIA_COLS}
-        yield pd.DataFrame(data, columns=list(_MEDIA_COLS), copy=False)
-
-
 def media_from_documents(docs: DataFrame) -> DataFrame:
     """documents(doc_id, …) → media(url, kind, payload:binary),
     deterministic per doc_id. Stand-in for a real WARC media sidecar table;
     only doc_id is read (column pruning keeps the scan narrow)."""
-    from ocr_award_extractor_spark.config import ensure_package_on_workers
     from ocr_award_extractor_spark.sources.tables import spread_small_scans
 
-    ensure_package_on_workers(docs.sparkSession)
-    return spread_small_scans(docs.select("doc_id")).mapInPandas(
-        _media_batch, MEDIA_SCHEMA)
+    return flat_map_rows(spread_small_scans(docs.select("doc_id")),
+                         ("doc_id",), _media_rows, MEDIA_SCHEMA)
 
 
 def multimodal_features(spark, sf_dir: str) -> DataFrame:
@@ -271,28 +242,19 @@ def resize_nearest(px: np.ndarray, w: int, h: int,
     return px.reshape(h, w)[np.ix_(ys, xs)]
 
 
-_THUMB_COLS = tuple(f.name for f in THUMB_SCHEMA.fields)
-
-
-def _thumb_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = []
-        for row in pdf.itertuples(index=False):
-            rec = {"url": row.url, "status": "success",
-                   "thumb_w": THUMB_W, "thumb_h": THUMB_H,
-                   "thumb_mean": None, "thumb_sum": None}
-            try:
-                meta = _decode_fake_image(row.payload)
-                w, h = meta["width"], meta["height"]
-                px = np.frombuffer(
-                    row.payload.split(b":", 3)[3], dtype=np.uint8)
-                t = resize_nearest(px.astype(np.int64), w, h)
-                rec.update(thumb_mean=float(t.mean()), thumb_sum=int(t.sum()))
-            except Exception:
-                rec.update(status="error", thumb_w=None, thumb_h=None)
-            out.append(rec)
-        data = {c: [r[c] for r in out] for c in _THUMB_COLS}
-        yield pd.DataFrame(data, columns=list(_THUMB_COLS), copy=False)
+def _thumb_row(url, payload) -> dict:
+    rec = {"url": url, "status": "success",
+           "thumb_w": THUMB_W, "thumb_h": THUMB_H,
+           "thumb_mean": None, "thumb_sum": None}
+    try:
+        meta = _decode_fake_image(payload)
+        w, h = meta["width"], meta["height"]
+        px = np.frombuffer(payload.split(b":", 3)[3], dtype=np.uint8)
+        t = resize_nearest(px.astype(np.int64), w, h)
+        rec.update(thumb_mean=float(t.mean()), thumb_sum=int(t.sum()))
+    except Exception:
+        rec.update(status="error", thumb_w=None, thumb_h=None)
+    return rec
 
 
 def multimodal_thumbnails(spark, sf_dir: str) -> DataFrame:
@@ -304,7 +266,7 @@ def multimodal_thumbnails(spark, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     media = media_from_documents(docs).where(F.col("kind") == "fake_image")
-    return media.mapInPandas(_thumb_batch, THUMB_SCHEMA)
+    return map_rows(media, ("url", "payload"), _thumb_row, THUMB_SCHEMA)
 
 
 _THUMB_ORACLE = f"""

@@ -14,15 +14,14 @@ which downstream checks compare byte-for-byte.
 from __future__ import annotations
 
 import random
-from collections.abc import Iterator
 from datetime import datetime, timedelta
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
 
+from ocr_award_extractor_spark.functions.batching import map_rows
 from ocr_award_extractor_spark.sources.fixture_gen import _build_html
 
 PAGE_SCHEMA = StructType([
@@ -189,6 +188,7 @@ def text_to_lines(text: str) -> list[str]:
 
 
 def wrap_row(doc_id: int, text: str, lang: str, source: str) -> dict:
+    doc_id = int(doc_id)   # numpy scalar: timedelta rejects np.int64
     rng = random.Random(f"wrap:{doc_id}")
     lines = text_to_lines(injected_text(doc_id, text))
     html = _build_html(rng, lines, lines[0] if lines else "untitled")
@@ -202,29 +202,18 @@ def wrap_row(doc_id: int, text: str, lang: str, source: str) -> dict:
     }
 
 
-_PAGE_COLS = tuple(f.name for f in PAGE_SCHEMA.fields)
+def _pages(docs: DataFrame, row_fn) -> DataFrame:
+    from ocr_award_extractor_spark.sources.tables import spread_small_scans
 
-
-def _wrap_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ocr_award_extractor_spark.functions.batching import records_to_frame
-
-    for pdf in batches:
-        yield records_to_frame(
-            [wrap_row(int(r.doc_id), r.text, r.lang, r.source)
-             for r in pdf.itertuples(index=False)], _PAGE_COLS)
+    cols = ("doc_id", "text", "lang", "source")
+    return map_rows(spread_small_scans(docs.select(*cols)), cols, row_fn,
+                    PAGE_SCHEMA)
 
 
 def webify_documents(docs: DataFrame) -> DataFrame:
     """documents(doc_id, text, lang, source, …) → pages(url, warc_ts, html,
     text, lang), deterministic per doc_id."""
-    from ocr_award_extractor_spark.config import ensure_package_on_workers
-    from ocr_award_extractor_spark.sources.tables import spread_small_scans
-
-    ensure_package_on_workers(docs.sparkSession)
-    return (
-        spread_small_scans(docs.select("doc_id", "text", "lang", "source"))
-        .mapInPandas(_wrap_batch, PAGE_SCHEMA)
-    )
+    return _pages(docs, wrap_row)
 
 
 def webify_urls_df(docs: DataFrame) -> DataFrame:
@@ -257,6 +246,7 @@ def pdf_wrap_row(doc_id: int, text: str, lang: str, source: str) -> dict:
     one — only the url suffix and strategy differ."""
     from ocr_award_extractor_spark.functions.pdftext import make_simple_pdf
 
+    doc_id = int(doc_id)   # numpy scalar: timedelta rejects np.int64
     lines = text_to_lines(injected_text(doc_id, text))
     return {
         "url": f"https://{source}.example/{lang}/doc{doc_id:08d}.pdf",
@@ -267,23 +257,7 @@ def pdf_wrap_row(doc_id: int, text: str, lang: str, source: str) -> dict:
     }
 
 
-def _pdf_wrap_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ocr_award_extractor_spark.functions.batching import records_to_frame
-
-    for pdf in batches:
-        yield records_to_frame(
-            [pdf_wrap_row(int(r.doc_id), r.text, r.lang, r.source)
-             for r in pdf.itertuples(index=False)], _PAGE_COLS)
-
-
 def pdfify_documents(docs: DataFrame) -> DataFrame:
     """documents → PDF-payload pages (url, warc_ts, html=pdf bytes, text,
     lang); the pipeline routes on the %PDF- magic, nothing else changes."""
-    from ocr_award_extractor_spark.config import ensure_package_on_workers
-    from ocr_award_extractor_spark.sources.tables import spread_small_scans
-
-    ensure_package_on_workers(docs.sparkSession)
-    return (
-        spread_small_scans(docs.select("doc_id", "text", "lang", "source"))
-        .mapInPandas(_pdf_wrap_batch, PAGE_SCHEMA)
-    )
+    return _pages(docs, pdf_wrap_row)

@@ -13,11 +13,19 @@ module reads it Spark-first with NO external WARC library:
   100 TB a crawl ships ~1 GB WARC files in the tens of thousands, which
   parallelizes on file count, the same strategy Spark's own
   binary/whole-file sources use);
-* an Arrow-batched ``mapInPandas`` kernel parses each file's records —
-  header block, Content-Length-delimited body, HTTP envelope decode
-  (chunked transfer + gzip/deflate content-encoding) — and emits one
-  page row per ``response`` record in exactly the ``webify.PAGE_SCHEMA``
-  shape the rest of the engine speaks. No shuffle, no driver data path.
+* a per-file row generator, run by ``functions/batching.flat_map_rows``
+  (the engine's one Arrow in/out for row kernels), parses each file's
+  records — header block, Content-Length-delimited body, HTTP envelope
+  decode (chunked transfer + gzip/deflate content-encoding) — and emits
+  one page row per ``response`` record in exactly the
+  ``webify.PAGE_SCHEMA`` shape the rest of the engine speaks. No
+  shuffle, no driver data path. ``read_warc`` and ``read_wet`` share
+  that scan and differ only in their glob and row generator.
+
+Output: ``write_warc`` and ``write_wet`` serialize rows back to
+gzip-member-per-record shards through one ``mapInPandas`` writer
+kernel. Each task returns its ``(written, skipped)`` counts as a row;
+the driver sums the collected rows, so a call's counts are its own.
 
 Error contract (mirrors the extraction pipeline's error-row contract):
 anything unparseable becomes a VISIBLE error row — ``url =
@@ -43,7 +51,18 @@ plain concatenation alike.
 
 from __future__ import annotations
 
+import functools
+import logging
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    StringType, StructField, StructType, TimestampType,
+)
+
+from ocr_award_extractor_spark.functions.batching import flat_map_rows
+
+_log = logging.getLogger(__name__)
 
 _CRLF = b"\r\n"
 _HDR_END = b"\r\n\r\n"
@@ -75,22 +94,6 @@ def _parse_one(data: bytes, pos: int, idx: int):
         raise ValueError(f"record {idx}: truncated block "
                          f"({len(block)} of {length} bytes)")
     return (headers.get("warc-type", ""), headers, block), body_start + length
-
-
-def parse_warc_bytes(data: bytes):
-    """STRICT parse: yield (record_index, warc_type, headers_dict,
-    block_bytes) for every record; raises ValueError on the first
-    structural corruption (the Spark kernels use the resyncing
-    iterator below instead)."""
-    pos, idx, n = 0, 0, len(data)
-    while pos < n:
-        while pos < n and data[pos:pos + 2] == _CRLF:   # padding
-            pos += 2
-        if pos >= n:
-            return
-        (wtype, headers, block), pos = _parse_one(data, pos, idx)
-        yield idx, wtype, headers, block
-        idx += 1
 
 
 def iter_records_resync(data: bytes):
@@ -281,73 +284,93 @@ def _format_ts(ts) -> str:
 
 
 # ------------------------------------------------------------------- read
-def read_warc(spark: SparkSession, path: str,
-              glob: str = "*.warc*") -> DataFrame:
-    """WARC files under ``path`` → a PAGE_SCHEMA DataFrame (url, warc_ts,
-    html, text, lang): one row per ``response`` record, error rows per
-    the module contract. ``lang`` is left empty (language-ID is a
-    downstream operator — textstats.lang_guess); ``text`` is empty for
-    good rows (extraction fills it) and carries the error message on
-    error rows."""
+_WARC_GLOB = "*.warc*"
+_WET_GLOB = "*.wet*"
+
+_WET_SCHEMA = StructType([
+    StructField("url", StringType()),
+    StructField("warc_ts", TimestampType()),
+    StructField("text", StringType()),
+])
+
+
+def _scan(spark: SparkSession, path: str, glob: str, fn,
+          schema: StructType) -> DataFrame:
+    """The files under ``path`` matching ``glob``, each turned into rows
+    by the per-file row generator ``fn(path, content)``."""
+    files = (spark.read.format("binaryFile")
+             .option("pathGlobFilter", glob).load(path))
+    return flat_map_rows(files, ("path", "content"), fn, schema)
+
+
+def _page(url: str, ts, html: bytes, text: str) -> dict:
+    return {"url": url, "warc_ts": ts, "html": html, "text": text, "lang": ""}
+
+
+def _page_rows(path: str, content: bytes):
+    """One WARC file's page rows: one per ``response`` record, error rows
+    per the module contract."""
+    name = os.path.basename(path)
+    for item in file_records(name, bytes(content)):
+        if item[0] == "err":
+            yield _page(f"warc-error://{item[1]}", None, b"", item[2])
+            continue
+        _, idx, wtype, headers, block = item
+        if wtype != "response":
+            continue      # warcinfo/request/metadata
+        url = headers.get("warc-target-uri", "")
+        if not url:
+            yield _page(f"warc-error://{name}#{idx}", None, b"",
+                        "missing WARC-Target-URI")
+            continue
+        try:
+            body = http_payload(block)
+        except ValueError as e:
+            yield _page(f"warc-error://{name}#{idx}", None, b"",
+                        f"{e} (url: {url})")
+            continue
+        yield _page(url, _parse_ts(headers.get("warc-date", "")), body, "")
+
+
+def _wet_rows(path: str, content: bytes):
+    """One WET file's rows: one per ``conversion`` record, error rows per
+    the module contract."""
+    name = os.path.basename(path)
+    for item in file_records(name, bytes(content)):
+        if item[0] == "err":
+            yield {"url": f"warc-error://{item[1]}", "warc_ts": None,
+                   "text": item[2]}
+            continue
+        _, idx, wtype, headers, block = item
+        if wtype != "conversion":
+            continue
+        yield {"url": headers.get("warc-target-uri", ""),
+               "warc_ts": _parse_ts(headers.get("warc-date", "")),
+               "text": block.decode("utf-8", "replace")}
+
+
+def read_warc(spark: SparkSession, path: str) -> DataFrame:
+    """WARC files (``*.warc*``) under ``path`` → a PAGE_SCHEMA DataFrame
+    (url, warc_ts, html, text, lang): one row per ``response`` record,
+    error rows per the module contract. ``lang`` is left empty
+    (language-ID is a downstream operator — textstats.lang_guess);
+    ``text`` is empty for good rows (extraction fills it) and carries the
+    error message on error rows."""
     from ocr_award_extractor_spark.operators.webify import PAGE_SCHEMA
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-
-    def kernel(batches):
-        import os
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {k: [] for k in ("url", "warc_ts", "html", "text", "lang")}
-
-            def emit(url, ts, html, text):
-                rows["url"].append(url)
-                rows["warc_ts"].append(ts)
-                rows["html"].append(html)
-                rows["text"].append(text)
-                rows["lang"].append("")
-
-            for path_str, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(path_str)
-                for item in file_records(name, bytes(content)):
-                    if item[0] == "err":
-                        emit(f"warc-error://{item[1]}", None, b"", item[2])
-                        continue
-                    _, idx, wtype, headers, block = item
-                    if wtype != "response":
-                        continue      # warcinfo/request/metadata
-                    url = headers.get("warc-target-uri", "")
-                    if not url:
-                        emit(f"warc-error://{name}#{idx}", None, b"",
-                             "missing WARC-Target-URI")
-                        continue
-                    try:
-                        body = http_payload(block)
-                    except ValueError as e:
-                        emit(f"warc-error://{name}#{idx}", None, b"",
-                             f"{e} (url: {url})")
-                        continue
-                    emit(url, _parse_ts(headers.get("warc-date", "")),
-                         body, "")
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(kernel, PAGE_SCHEMA)
+    return _scan(spark, path, _WARC_GLOB, _page_rows, PAGE_SCHEMA)
 
 
-# --------------------------------------------------------------- WET out
-# Accumulator counting rows write_wet skipped (NULL url) in the most
-# recent call — visible-not-fatal contract for bogus upstream rows.
-LAST_WET_SKIPPED_ACC = None
-# Same contract for write_warc.
-LAST_WARC_SKIPPED_ACC = None
+def read_wet(spark: SparkSession, path: str) -> DataFrame:
+    """WET shards (``*.wet*``) → (url, warc_ts, text): one row per
+    ``conversion`` record, the read-back side of :func:`write_wet` (same
+    file_records core as read_warc — gzip/member/record resync and the
+    error-row contract with the message in ``text`` and a
+    ``warc-error://`` url)."""
+    return _scan(spark, path, _WET_GLOB, _wet_rows, _WET_SCHEMA)
 
 
+# ---------------------------------------------------------- WARC/WET out
 def _escape_header_url(url: str) -> bytes:
     """CR/LF cannot appear in a WARC header value — escape, don't let a
     hostile url split the record framing."""
@@ -361,7 +384,6 @@ def _prepare_out_dir(out_dir: str, suffix: str, mode: str) -> None:
     read-back merges in; ``'overwrite'`` clears existing shards (and
     stale tmps) first."""
     import glob as globmod
-    import os
 
     if mode not in ("error", "overwrite"):
         raise ValueError(f"unknown mode: {mode}")
@@ -377,69 +399,128 @@ def _prepare_out_dir(out_dir: str, suffix: str, mode: str) -> None:
         os.remove(p)
 
 
-def _write_shards(rows: DataFrame, out_dir: str, suffix: str,
-                  make_record, acc, skipped) -> None:
+def _warc_record(wtype: bytes, content_type: bytes, url: str, ts,
+                 pid: int, seq: int, block: bytes) -> bytes:
+    """One WARC/1.0 record as its own gzip member. The ``WARC-Record-ID``
+    is a uuid5 of url+ts+partition+seq: spec-mandatory uniqueness,
+    reproducible for a fixed partitioning. The url is CR/LF-escaped, and
+    ``WARC-Date`` keeps microseconds and is omitted for a NULL ``ts``."""
+    import gzip
+    import uuid
+
+    rid = uuid.uuid5(uuid.NAMESPACE_URL, f"{url}|{ts}|{pid}|{seq}")
+    hdrs = [b"WARC/1.0",
+            b"WARC-Type: " + wtype,
+            b"WARC-Record-ID: <urn:uuid:" +
+            str(rid).encode("ascii") + b">",
+            b"WARC-Target-URI: " + _escape_header_url(url)]
+    if ts is not None:
+        hdrs.append(b"WARC-Date: " + _format_ts(ts).encode("ascii"))
+    hdrs.append(b"Content-Type: " + content_type)
+    hdrs.append(b"Content-Length: " + str(len(block)).encode("ascii"))
+    # level 6 (zlib default): measured ~2× the throughput of the
+    # gzip.compress default (9) at byte-identical output size on this
+    # corpus; readers are unaffected
+    return gzip.compress(b"\r\n".join(hdrs) + _HDR_END + block + _HDR_END,
+                         compresslevel=6)
+
+
+def _wet_block(text) -> bytes:
+    return (text or "").encode("utf-8")
+
+
+def _warc_block(html) -> bytes:
+    """Full HTTP envelope (what real crawl WARCs carry): read_warc's
+    http_payload splits at the FIRST \\r\\n\\r\\n — which is this
+    envelope's end — so arbitrary html bytes round-trip exactly."""
+    html = bytes(html) if html is not None else b""
+    return (b"HTTP/1.1 200 OK\r\n"
+            b"Content-Type: text/html\r\n"
+            b"Content-Length: " + str(len(html)).encode("ascii")
+            + _HDR_END + html)
+
+
+def _shard_writer(batches, out_dir: str, suffix: str, body_col: str,
+                  wtype: bytes, content_type: bytes, block_of):
+    """Task side of :func:`_write_shards`: stream this partition's rows
+    into a tmp file, rename it to ``part-NNNNN<suffix>`` and yield one
+    ``(written, skipped)`` row. NULL timestamps arrive as pandas NaT and
+    are normalized back to None (WARC-Date omitted)."""
+    import uuid
+
+    import pandas as pd
+    from pyspark import TaskContext
+
+    f = None
+    written = skipped = seq = 0
+    pid = TaskContext.get().partitionId()
+    path = os.path.join(out_dir, f"part-{pid:05d}{suffix}")
+    tmp = os.path.join(out_dir, f".part-{pid:05d}-{uuid.uuid4().hex[:8]}.tmp")
+    try:
+        for pdf in batches:
+            for row in pdf.to_dict("records"):
+                url, ts = row["url"], row.get("warc_ts")
+                if ts is not None and pd.isna(ts):
+                    ts = None
+                if url is None:
+                    # a record without a target URI is unwritable; skip
+                    # it VISIBLY (counted) rather than killing the job
+                    skipped += 1
+                else:
+                    if f is None:   # lazy: empty partitions write nothing
+                        f = open(tmp, "wb")
+                    f.write(_warc_record(wtype, content_type, url, ts, pid,
+                                         seq, block_of(row[body_col])))
+                    written += 1
+                seq += 1
+        if f is not None:
+            f.close()
+            os.rename(tmp, path)
+    except BaseException:
+        if f is not None:
+            f.close()
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    yield pd.DataFrame({"written": [written], "skipped": [skipped]})
+
+
+def _write_shards(df: DataFrame, out_dir: str, suffix: str, mode: str,
+                  body_col: str, wtype: bytes, content_type: bytes,
+                  block_of) -> int:
     """Arrow-batched shard writer shared by :func:`write_wet` /
     :func:`write_warc`: one ``part-NNNNN<suffix>`` per non-empty
     partition, each task STREAMING records into a tmp file (O(batch)
     memory, not O(partition)) committed by os.rename, so a killed job
     leaves no half-visible shard (same idiom as plans/lineage.py; tmp
     names contain no format suffix so the read globs never see them).
-    ``make_record(row, pid, seq) -> bytes | None`` serializes one
-    dict-shaped row; None = skip-and-count into ``skipped``. Pure
-    per-partition — no shuffle, no driver data path; shard count =
-    partition count.
+    Each record is ``block_of(row[body_col])`` framed by
+    :func:`_warc_record`. Pure per-partition — no shuffle, no driver data
+    path; shard count = partition count.
 
-    Round 7: this is a ``mapInPandas`` kernel forced by a count, not
-    ``foreachPartition`` — the latter runs on the RDD path, pickling
-    every row (html payloads included) one at a time across the Python
-    boundary (guide §4); Arrow batches move the same bytes columnar.
-    NULL timestamps arrive as pandas NaT and are normalized back to
-    None so the WARC-Date-omitted contract is unchanged."""
-
-    def writer(batches):
-        import os
-        import uuid
-
-        import pandas as pd
-        from pyspark import TaskContext
-
-        f = None
-        seq = 0
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(out_dir, f"part-{pid:05d}{suffix}")
-        tmp = os.path.join(out_dir,
-                           f".part-{pid:05d}-{uuid.uuid4().hex[:8]}.tmp")
-        try:
-            for pdf in batches:
-                for row in pdf.to_dict("records"):
-                    ts = row.get("warc_ts")
-                    if ts is not None and pd.isna(ts):
-                        row["warc_ts"] = None
-                    rec = make_record(row, pid, seq)
-                    seq += 1
-                    if rec is None:
-                        skipped.add(1)
-                        continue
-                    if f is None:   # lazy: empty partitions write nothing
-                        f = open(tmp, "wb")
-                    f.write(rec)
-                    acc.add(1)
-            if f is not None:
-                f.close()
-                os.rename(tmp, path)
-        except BaseException:
-            if f is not None:
-                f.close()
-            if os.path.exists(tmp):
-                os.remove(tmp)
-            raise
-        yield pd.DataFrame({"n": [seq]})
-
+    The writer is a ``mapInPandas`` kernel, not ``foreachPartition``: the
+    latter runs on the RDD path, pickling every row (html payloads
+    included) one at a time across the Python boundary (guide §4); Arrow
+    batches move the same bytes columnar. Each task returns its
+    ``(written, skipped)`` counts as a row, so the counts come from the
+    collected job — exactly once per partition, private to this call.
+    NULL-url rows are skipped and their count is logged as a warning.
+    Returns the number of records written."""
     from ocr_award_extractor_spark.config import ensure_package_on_workers
 
-    ensure_package_on_workers(rows.sparkSession)
-    rows.mapInPandas(writer, "n long").count()
+    _prepare_out_dir(out_dir, suffix, mode)
+    cols = ["url", body_col] + (["warc_ts"] if "warc_ts" in df.columns else [])
+    writer = functools.partial(
+        _shard_writer, out_dir=out_dir, suffix=suffix, body_col=body_col,
+        wtype=wtype, content_type=content_type, block_of=block_of)
+    ensure_package_on_workers(df.sparkSession)
+    counts = (df.select(*cols)
+              .mapInPandas(writer, "written long, skipped long").collect())
+    skipped = sum(r["skipped"] for r in counts)
+    if skipped:
+        _log.warning("%s: skipped %d row(s) with a NULL url (a WARC "
+                     "record needs a target URI)", out_dir, skipped)
+    return sum(r["written"] for r in counts)
 
 
 def write_wet(extracted: DataFrame, out_dir: str,
@@ -454,66 +535,27 @@ def write_wet(extracted: DataFrame, out_dir: str,
     can never see them). Returns the number of records written.
 
     ``mode`` and writer hygiene per :func:`_prepare_out_dir` /
-    :func:`_write_shards`. Record hygiene: every record carries a
-    deterministic ``WARC-Record-ID`` (uuid5 of url+ts+partition+seq —
-    spec-mandatory uniqueness, reproducible for a fixed partitioning);
-    CR/LF in urls is percent-escaped so a hostile url cannot smuggle
-    headers into the record framing; ``WARC-Date`` preserves
-    microseconds and is OMITTED for a NULL warc_ts (read_wet returns
-    None — no silent epoch substitution).
+    :func:`_write_shards`. Record hygiene per :func:`_warc_record`:
+    every record carries a deterministic ``WARC-Record-ID``; CR/LF in
+    urls is percent-escaped so a hostile url cannot smuggle headers into
+    the record framing; ``WARC-Date`` preserves microseconds and is
+    OMITTED for a NULL warc_ts (read_wet returns None — no silent epoch
+    substitution). NULL-url rows are skipped, and their count is logged
+    as a warning.
 
-    Scale shape: pure ``foreachPartition`` — every task serializes its
-    own rows and writes its own shard to the shared filesystem; no
-    shuffle, no driver data path, shard count = partition count (control
-    it upstream with repartition/coalesce). Only ``status == 'success'``
-    rows are written when a status column exists; the text column is
-    UTF-8 encoded and byte-identical on read-back
+    Scale shape: one ``mapInPandas`` writer kernel — every task
+    serializes its own rows and writes its own shard to the shared
+    filesystem; no shuffle, no driver data path, shard count = partition
+    count (control it upstream with repartition/coalesce). Only
+    ``status == 'success'`` rows are written when a status column exists;
+    the text column is UTF-8 encoded and byte-identical on read-back
     (tests/test_warc_source.py::test_wet_roundtrip_byte_identical)."""
-    _prepare_out_dir(out_dir, ".warc.wet.gz", mode)
-    cols = ["url", text_col] + (
-        ["warc_ts"] if "warc_ts" in extracted.columns else [])
     if "status" in extracted.columns:
         from pyspark.sql import functions as F
 
         extracted = extracted.where(F.col("status") == "success")
-    rows = extracted.select(*cols)
-    spark = rows.sparkSession
-    acc = spark.sparkContext.accumulator(0)
-    skipped = spark.sparkContext.accumulator(0)
-    global LAST_WET_SKIPPED_ACC
-    LAST_WET_SKIPPED_ACC = skipped
-    has_ts = "warc_ts" in cols
-
-    def make_record(row, pid, seq):
-        import gzip
-        import uuid
-
-        if row["url"] is None:
-            # a record without a target URI is unwritable; skip VISIBLY
-            # (counted) rather than killing the job on one bogus row
-            return None
-        text = (row[text_col] or "").encode("utf-8")
-        url = _escape_header_url(row["url"])
-        ts = row["warc_ts"] if has_ts else None
-        rid = uuid.uuid5(uuid.NAMESPACE_URL,
-                         f"{row['url']}|{ts}|{pid}|{seq}")
-        hdrs = [b"WARC/1.0",
-                b"WARC-Type: conversion",
-                b"WARC-Record-ID: <urn:uuid:" +
-                str(rid).encode("ascii") + b">",
-                b"WARC-Target-URI: " + url]
-        if ts is not None:
-            hdrs.append(b"WARC-Date: " + _format_ts(ts).encode("ascii"))
-        hdrs.append(b"Content-Type: text/plain")
-        hdrs.append(b"Content-Length: " + str(len(text)).encode("ascii"))
-        # level 6 (zlib default): measured ~2× the throughput of the
-        # gzip.compress default (9) at byte-identical output size on
-        # this corpus; readers are unaffected
-        return gzip.compress(b"\r\n".join(hdrs) + _HDR_END + text + _HDR_END,
-                             compresslevel=6)
-
-    _write_shards(rows, out_dir, ".warc.wet.gz", make_record, acc, skipped)
-    return acc.value
+    return _write_shards(extracted, out_dir, ".warc.wet.gz", mode, text_col,
+                         b"conversion", b"text/plain", _wet_block)
 
 
 def write_warc(pages: DataFrame, out_dir: str, mode: str = "error") -> int:
@@ -528,93 +570,12 @@ def write_warc(pages: DataFrame, out_dir: str, mode: str = "error") -> int:
     of the same corpus, closing the read_warc loop.
 
     Same ``mode``/commit/hygiene contract as :func:`write_wet`
-    (:func:`_prepare_out_dir` / :func:`_write_shards`): streaming tmp +
-    atomic rename per shard, deterministic per-record ``WARC-Record-ID``,
-    CR/LF-escaped urls, ``WARC-Date`` omitted for NULL warc_ts, NULL-url
-    rows skipped-and-counted into ``LAST_WARC_SKIPPED_ACC``. Returns the
-    number of records written."""
-    _prepare_out_dir(out_dir, ".warc.gz", mode)
-    cols = ["url", "html"] + (
-        ["warc_ts"] if "warc_ts" in pages.columns else [])
-    rows = pages.select(*cols)
-    spark = rows.sparkSession
-    acc = spark.sparkContext.accumulator(0)
-    skipped = spark.sparkContext.accumulator(0)
-    global LAST_WARC_SKIPPED_ACC
-    LAST_WARC_SKIPPED_ACC = skipped
-    has_ts = "warc_ts" in cols
-
-    def make_record(row, pid, seq):
-        import gzip
-        import uuid
-
-        if row["url"] is None:
-            return None
-        html = bytes(row["html"]) if row["html"] is not None else b""
-        # full HTTP envelope (what real crawl WARCs carry): read_warc's
-        # http_payload splits at the FIRST \r\n\r\n — which is this
-        # envelope's end — so arbitrary html bytes round-trip exactly
-        http = (b"HTTP/1.1 200 OK\r\n"
-                b"Content-Type: text/html\r\n"
-                b"Content-Length: " + str(len(html)).encode("ascii")
-                + _HDR_END + html)
-        url = _escape_header_url(row["url"])
-        ts = row["warc_ts"] if has_ts else None
-        rid = uuid.uuid5(uuid.NAMESPACE_URL,
-                         f"{row['url']}|{ts}|{pid}|{seq}")
-        hdrs = [b"WARC/1.0",
-                b"WARC-Type: response",
-                b"WARC-Record-ID: <urn:uuid:" +
-                str(rid).encode("ascii") + b">",
-                b"WARC-Target-URI: " + url]
-        if ts is not None:
-            hdrs.append(b"WARC-Date: " + _format_ts(ts).encode("ascii"))
-        hdrs.append(b"Content-Type: application/http; msgtype=response")
-        hdrs.append(b"Content-Length: " + str(len(http)).encode("ascii"))
-        # level 6: see write_wet — ~2× compressor throughput, same size
-        return gzip.compress(b"\r\n".join(hdrs) + _HDR_END + http + _HDR_END,
-                             compresslevel=6)
-
-    _write_shards(rows, out_dir, ".warc.gz", make_record, acc, skipped)
-    return acc.value
-
-
-def read_wet(spark: SparkSession, path: str,
-             glob: str = "*.wet*") -> DataFrame:
-    """WET shards → (url, warc_ts, text): one row per ``conversion``
-    record, the read-back side of :func:`write_wet` (same file_records
-    core as read_warc — gzip/member/record resync and the error-row
-    contract with the message in ``text`` and a ``warc-error://`` url)."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-
-    def kernel(batches):
-        import os
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {k: [] for k in ("url", "warc_ts", "text")}
-            for path_str, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(path_str)
-                for item in file_records(name, bytes(content)):
-                    if item[0] == "err":
-                        rows["url"].append(f"warc-error://{item[1]}")
-                        rows["warc_ts"].append(None)
-                        rows["text"].append(item[2])
-                        continue
-                    _, idx, wtype, headers, block = item
-                    if wtype != "conversion":
-                        continue
-                    rows["url"].append(headers.get("warc-target-uri", ""))
-                    rows["warc_ts"].append(
-                        _parse_ts(headers.get("warc-date", "")))
-                    rows["text"].append(block.decode("utf-8", "replace"))
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(kernel,
-                             "url string, warc_ts timestamp, text string")
+    (:func:`_prepare_out_dir` / :func:`_write_shards` /
+    :func:`_warc_record`): streaming tmp + atomic rename per shard,
+    deterministic per-record ``WARC-Record-ID``, CR/LF-escaped urls,
+    ``WARC-Date`` omitted for NULL warc_ts, NULL-url rows skipped with
+    their count logged as a warning. Returns the number of records
+    written."""
+    return _write_shards(pages, out_dir, ".warc.gz", mode, "html",
+                         b"response", b"application/http; msgtype=response",
+                         _warc_block)

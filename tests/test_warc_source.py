@@ -6,7 +6,10 @@ records as error rows, and compose with the extraction pipeline."""
 from __future__ import annotations
 
 import gzip
+import logging
 from datetime import datetime
+
+SKIPPED_ONE = "skipped 1 row(s) with a NULL url"
 
 
 def _record(wtype: str, url: str | None, date: str, block: bytes) -> bytes:
@@ -86,6 +89,65 @@ def test_warc_corruption_becomes_error_rows_not_silence(spark, tmp_path):
     assert any("missing WARC-Target-URI" in r["text"] for r in rows)
 
 
+def test_warc_file_without_output_rows(spark, tmp_path):
+    """A file whose records all map to no row (one warcinfo record)
+    reads as zero rows of each reader's schema — the empty batch never
+    reaches Arrow, where pandas' float64 typing of empty columns cannot
+    cast to the timestamp field."""
+    from ocr_award_extractor_spark.operators.webify import PAGE_SCHEMA
+    from ocr_award_extractor_spark.sources.warc import read_warc, read_wet
+
+    d = tmp_path / "info"
+    d.mkdir()
+    (d / "info.warc.wet").write_bytes(_good_records()[0])   # both globs
+    pages = read_warc(spark, str(d))
+    assert pages.schema == PAGE_SCHEMA and pages.collect() == []
+    assert read_wet(spark, str(d)).collect() == []
+
+
+def test_read_warc_ships_package_to_workers(tmp_path):
+    """read_warc in a session the engine did not build (plain
+    ``SparkSession.builder``, PYTHONPATH unset, cwd outside the repo):
+    its Python workers can import the package only if the reader ships
+    it, as every other operator does."""
+    import json
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    d = tmp_path / "crawl"
+    d.mkdir()
+    (d / "crawl.warc").write_bytes(b"".join(_good_records()))
+    job = tmp_path / "job.py"
+    job.write_text(textwrap.dedent(f"""
+        import json
+        import sys
+
+        sys.path.insert(0, {repo!r})   # driver side only
+        from pyspark.sql import SparkSession
+
+        from ocr_award_extractor_spark.sources.warc import read_warc
+
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        rows = read_warc(spark, {str(d)!r}).collect()
+        print(json.dumps(sorted(r.url for r in rows)))
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "PYSPARK_GATEWAY_PORT",
+                        "PYSPARK_GATEWAY_SECRET")}
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    proc = subprocess.run([sys.executable, str(job)], capture_output=True,
+                          text=True, timeout=300, cwd=str(tmp_path), env=env)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == [
+        "https://a.example/x", "https://b.example/y"]
+
+
 def test_warc_pages_flow_through_extraction(spark, tmp_path):
     """The parsed pages are real PAGE_SCHEMA rows: the flagship
     extraction stage runs on them unchanged (WARC → extract is the
@@ -137,14 +199,15 @@ def test_wet_roundtrip_byte_identical(spark, tmp_path):
 
 
 def test_warc_parser_roundtrip_fuzz():
-    """Property: any serialize(records) → parse_warc_bytes roundtrip
+    """Property: any serialize(records) → iter_records_resync roundtrip
+    (the parser the Spark readers run) yields only ``"ok"`` items and
     recovers every record's type, URI, and block bytes exactly —
     including empty blocks, binary bodies, and odd header values (the
     parser is pure Python, so this runs without Spark)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from ocr_award_extractor_spark.sources.warc import parse_warc_bytes
+    from ocr_award_extractor_spark.sources.warc import iter_records_resync
 
     wtypes = st.sampled_from(["response", "request", "warcinfo",
                               "metadata", "conversion"])
@@ -160,8 +223,10 @@ def test_warc_parser_roundtrip_fuzz():
     def check(recs):
         blob = b"".join(
             _record(t, u, "2024-03-01T00:00:00Z", b) for t, u, b in recs)
+        items = list(iter_records_resync(blob))
+        assert all(item[0] == "ok" for item in items), items
         got = [(wtype, headers.get("warc-target-uri"), block)
-               for _, wtype, headers, block in parse_warc_bytes(blob)]
+               for _, _, wtype, headers, block in items]
         assert got == [(t, u, b) for t, u, b in recs]
 
     check()
@@ -296,17 +361,19 @@ def test_wet_writer_hygiene(spark, tmp_path):
     assert len(read_wet(spark, str(out)).collect()) == 1  # no ghosts
 
 
-def test_wet_null_url_skipped_and_counted(spark, tmp_path):
+def test_wet_null_url_skipped_and_counted(spark, tmp_path, caplog):
     """A NULL url row cannot become a WARC record; it is skipped and
-    COUNTED (visible-not-fatal), never a job-killing task error."""
+    COUNTED in a logged warning (visible-not-fatal), never a job-killing
+    task error."""
     from ocr_award_extractor_spark.sources import warc
 
     rows = [("https://ok.example/", None, "kept"), (None, None, "dropped")]
     df = spark.createDataFrame(rows, "url string, warc_ts timestamp, "
                                      "ocr_text string")
     out = str(tmp_path / "wet")
-    n = warc.write_wet(df.coalesce(1), out)
-    assert n == 1 and warc.LAST_WET_SKIPPED_ACC.value == 1
+    with caplog.at_level(logging.WARNING, logger=warc.__name__):
+        n = warc.write_wet(df.coalesce(1), out)
+    assert n == 1 and SKIPPED_ONE in caplog.text
     back = warc.read_wet(spark, out).collect()
     assert [r["url"] for r in back] == ["https://ok.example/"]
 
@@ -364,7 +431,7 @@ def test_write_warc_read_warc_roundtrip_byte_identical(spark, tmp_path):
         assert back[u]["text"] == "" and back[u]["lang"] == ""
 
 
-def test_write_warc_hygiene_matches_wet_contract(spark, tmp_path):
+def test_write_warc_hygiene_matches_wet_contract(spark, tmp_path, caplog):
     """NULL urls skip-and-count, CR/LF urls are escaped (no framing
     smuggling), mode='error' refuses existing shards, 'overwrite'
     replaces them."""
@@ -376,8 +443,9 @@ def test_write_warc_hygiene_matches_wet_contract(spark, tmp_path):
             (None, None, HTML_B),
             ("https://evil.example/\r\nWARC-Type: sneaky", None, HTML_B)]
     out = str(tmp_path / "warc")
-    n = warc.write_warc(_pages_df(spark, rows).coalesce(1), out)
-    assert n == 2 and warc.LAST_WARC_SKIPPED_ACC.value == 1
+    with caplog.at_level(logging.WARNING, logger=warc.__name__):
+        n = warc.write_warc(_pages_df(spark, rows).coalesce(1), out)
+    assert n == 2 and SKIPPED_ONE in caplog.text
     back = {r["url"] for r in warc.read_warc(spark, out).collect()}
     # the escaped url reads back escaped — one record, framing intact
     assert back == {"https://ok.example/",
