@@ -167,9 +167,9 @@ def _extract_field_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _resumable_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O22 write path, driver-graded: run the batched resumable-commit
-    sink (per-partition lineage + dynamic partition overwrite) into a temp
-    dir, then return what the snapshot-visibility reader sees. Oracle =
+    """O22 write path, driver-graded: run the resumable commit (one Spark
+    job writes every pending split's file and its lineage row) into a
+    temp dir, then return what the snapshot-visibility reader sees. Oracle =
     the extract_pipeline_text reconstruction — full equality proves the
     committed dataset is COMPLETE and byte-identical (no split lost, none
     duplicated). split_id itself is pmod(xxhash64(url)) — not DuckDB-

@@ -134,6 +134,16 @@ def _norm2(a):
     return _dot(a, a)
 
 
+def _cosine(a, b):
+    """Zero-safe cosine of two quantized vectors. The norm product is in
+    DOUBLE (each factor < 2⁵³ ⇒ exact, one rounding either way): immune
+    to int64 overflow, bit-equal otherwise. try_divide gives a zero-norm
+    vector cosine NULL (DuckDB's double 0/0 is NULL too) instead of an
+    ANSI DIVIDE_BY_ZERO error."""
+    return F.try_divide(_dot(a, b).cast("double"), F.sqrt(
+        _norm2(a).cast("double") * _norm2(b).cast("double")))
+
+
 def _with_query(spark: SparkSession, sf_dir: str, query_vec_id: int = 0):
     emb = load_table(spark, sf_dir, "embeddings")
     q = (
@@ -153,10 +163,7 @@ def _with_query(spark: SparkSession, sf_dir: str, query_vec_id: int = 0):
             _norm2(F.col("qv")).alias("n2_query"),
         )
     )
-    # norm product in DOUBLE (each factor < 2⁵³ ⇒ exact, one rounding
-    # either way): immune to int64 overflow, bit-equal otherwise.
-    # try_divide: a zero-norm vector gets cosine NULL (same as DuckDB's
-    # double 0/0) instead of an ANSI DIVIDE_BY_ZERO error
+    # _cosine spelled over the precomputed columns (dot_q is an output)
     cos = F.try_divide(F.col("dot_q").cast("double"), F.sqrt(
         F.col("n2_self").cast("double") * F.col("n2_query").cast("double")
     ))
@@ -209,11 +216,9 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = emb.select(F.col("vec_id").alias("va"), F.col("qe").alias("ea"))
     b = emb.select(F.col("vec_id").alias("vb"), F.col("qe").alias("eb"))
     pairs = a.join(b, F.col("va") < F.col("vb"))
-    # try_divide: zero-norm vectors get cosine NULL (DuckDB's 0/0 is
-    # NULL too), which the threshold drops — excluded on every engine
-    cos = F.try_divide(_dot(F.col("ea"), F.col("eb")).cast("double"), F.sqrt(
-        _norm2(F.col("ea")).cast("double") * _norm2(F.col("eb")).cast("double")
-    ))
+    # zero-norm vectors get cosine NULL, which the threshold drops —
+    # excluded on every engine
+    cos = _cosine(F.col("ea"), F.col("eb"))
     return (
         pairs.select("va", "vb", cos.alias("cos_sim"))
         .where(F.col("cos_sim") >= NEARDUP_THRESHOLD)
@@ -495,9 +500,7 @@ def _assign_to_centroids(emb: DataFrame, cent: DataFrame) -> DataFrame:
     SortAggregate with partial_max BELOW the exchange, so the shuffle
     carries one row per vec_id (never IVF_K candidates, never a window
     sort)."""
-    cos_c = F.try_divide(_dot(F.col("qe"), F.col("cv")).cast("double"), F.sqrt(
-        _norm2(F.col("qe")).cast("double") * _norm2(F.col("cv")).cast("double")
-    ))
+    cos_c = _cosine(F.col("qe"), F.col("cv"))
     scored = emb.crossJoin(F.broadcast(cent)).select(
         "vec_id", "label", cos_c.alias("cos_c"), "cid"
     )
@@ -556,10 +559,7 @@ def ivf_train_centroids_df(emb: DataFrame, k: int = IVF_K,
 
     for _ in range(n_iter):
         cent = as_df(cent_rows)
-        cos_c = F.try_divide(
-            _dot(F.col("qe"), F.col("cv")).cast("double"),
-            F.sqrt(_norm2(F.col("qe")).cast("double")
-                   * _norm2(F.col("cv")).cast("double")))
+        cos_c = _cosine(F.col("qe"), F.col("cv"))
         scored = emb.crossJoin(F.broadcast(cent)).select(
             "vec_id", "qe", cos_c.alias("cos_c"), "cid")
         best = scored.groupBy("vec_id").agg(
@@ -589,10 +589,7 @@ def ivf_mean_cosine_df(emb: DataFrame, cent: DataFrame) -> DataFrame:
     """One-row distortion summary for a centroid set: mean cosine of
     every vector to its assigned centroid (higher = tighter clusters) —
     the quality metric the trainer's tests assert improves."""
-    cos_c = F.try_divide(
-        _dot(F.col("qe"), F.col("cv")).cast("double"),
-        F.sqrt(_norm2(F.col("qe")).cast("double")
-               * _norm2(F.col("cv")).cast("double")))
+    cos_c = _cosine(F.col("qe"), F.col("cv"))
     scored = emb.crossJoin(F.broadcast(cent)).select(
         "vec_id", cos_c.alias("cos_c"))
     return (scored.groupBy("vec_id").agg(F.max("cos_c").alias("best"))
@@ -619,9 +616,7 @@ def ivf_topk_cosine(spark: SparkSession, sf_dir: str,
     if centroids is not None:   # e.g. ivf_train_centroids_df output; the
         cent = centroids        # default stays the closed-form oracle seed
     q = emb.where(F.col("vec_id") == 0)
-    cos_c = F.try_divide(_dot(F.col("qe"), F.col("cv")).cast("double"), F.sqrt(
-        _norm2(F.col("qe")).cast("double") * _norm2(F.col("cv")).cast("double")
-    ))
+    cos_c = _cosine(F.col("qe"), F.col("cv"))
     # rank the K query→centroid scores, keep the top nprobe (at nprobe=1
     # this is exactly the argmax _assign_to_centroids computes)
     qcent = (

@@ -296,3 +296,70 @@ def test_host_cap_and_pack_stages(spark, tmp_path):
     st = {s["stage"]: s for s in summary["stages"]}
     assert st["host_cap"]["rows_out"] == 10
     assert st["pack_shards"]["rows_in"] == len(sampled)
+
+
+def test_pipeline_job_budget(pipeline_run, spark, tmp_path):
+    """Stage tables count themselves: row counts are Observations on the
+    stage writes and staged tables read back with their known schema, so
+    the planted run with WET export and packing stays within 50 Spark
+    jobs. Jobs submitted from other driver threads do not inherit the
+    job group, so ungrouped jobs started meanwhile count too."""
+    from ocr_award_extractor_spark.plans.full_pipeline import (
+        run_training_data_pipeline,
+    )
+
+    pages_dir = os.path.join(os.path.dirname(pipeline_run[1]), "pages")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "full-pipeline-budget"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        summary = run_training_data_pipeline(
+            spark, spark.read.parquet(pages_dir), str(tmp_path / "out"),
+            "pytest-budget", n_splits=2, wet_out=str(tmp_path / "wet"),
+            pack_budget=64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = (set(tracker.getJobIdsForGroup(group))
+            | set(tracker.getJobIdsForGroup(None)) - ungrouped)
+    rows = dict(summary["rows"])
+    assert rows.pop("shards") >= 1 and rows == pipeline_run[0]["rows"]
+    assert 1 <= len(jobs) <= 50, len(jobs)
+
+
+def test_all_gate_failures_leave_an_empty_chain(spark, tmp_path):
+    """Every doc fails the Gopher gate: every stage after extraction
+    writes an empty table. Each reports 0 rows, packing reports shards=0
+    (an empty sample has no max shard), and each staged table reads back
+    with 0 rows and its columns."""
+    from ocr_award_extractor_spark.operators.webify import webify_documents
+    from ocr_award_extractor_spark.plans.full_pipeline import (
+        run_training_data_pipeline,
+    )
+
+    spam = " ".join(["spam"] * 50)
+    rows = [{"doc_id": i * 10, "text": spam, "lang": "en",
+             "source": f"s{i}", "n_chars": len(spam)} for i in range(4)]
+    pages_dir = str(tmp_path / "pages")
+    webify_documents(spark.createDataFrame(rows)).write.parquet(pages_dir)
+
+    out = str(tmp_path / "out")
+    summary = run_training_data_pipeline(
+        spark, spark.read.parquet(pages_dir), out, "pytest-empty",
+        n_splits=2, decontaminate=True, host_cap=5, pack_budget=64)
+    got = summary["rows"]
+    assert got["pages"] == got["extracted"] == 4
+    for k in ("gated", "exact_unique", "neardup_unique", "decontaminated",
+              "host_capped", "sampled", "shards"):
+        assert got[k] == 0, k
+    assert all(s["rows_out"] == 0 for s in summary["stages"][1:])
+
+    doc_cols = ["doc_id", "url", "text", "lang"]
+    for sub in ("gated", "exact_dedup", "neardup_dedup", "decontaminated",
+                "host_capped", "sample"):
+        t = spark.read.parquet(os.path.join(out, sub))
+        assert (t.count(), t.columns) == (0, doc_cols), sub
+    t = spark.read.parquet(os.path.join(out, "shards"))
+    assert (t.count(), t.columns) == (0, ["doc_id", "n_toks", "tok_offset",
+                                          "shard"])
