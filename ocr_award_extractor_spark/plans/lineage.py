@@ -10,9 +10,12 @@ lineage (input split, row counts, checksum). Design:
 * ONE Spark job commits every pending split (the splits without a lineage
   row): it reads the input once, keeps only pending splits AHEAD of the
   extraction kernel (a resume never re-extracts a committed split), and
-  shuffles once by ``split_id`` so each split's rows reach one task of
-  the writer kernel :func:`_write_splits`. At the end of its input the
-  writer commits each split by four file-system steps, in order:
+  shuffles once by ``split_id`` into at most one writer task per core,
+  sorted by ``split_id`` within each task, so each split's rows reach one
+  task of the writer kernel :func:`_write_splits` one after another. The
+  writer streams a split into its tmp file and, as soon as the next split
+  begins (or its input ends), commits it by four file-system steps, in
+  order:
 
   1. close the split's tmp file ``data/split_id=<k>/.part-<uuid>.tmp``;
   2. remove every other entry of ``data/split_id=<k>/`` (a killed
@@ -21,7 +24,14 @@ lineage (input split, row counts, checksum). Design:
   4. write the lineage row to a dot-prefixed tmp and ``os.replace`` it to
      ``_lineage/split-<k>.parquet`` — the commit point.
 
-  Readers only trust splits present in the lineage dataset: Iceberg's
+  A task thus holds one open file however many splits it commits. A
+  pending split with no input rows reaches no writer; after the job the
+  driver removes its data directory, if any, and commits a zero-row
+  lineage row (count 0, checksum 0), so a rerun does not run it again.
+
+  Readers only trust splits present in the lineage dataset
+  (:func:`read_committed` reads their ids on the driver and prunes
+  ``data/`` to them): Iceberg's
   snapshot-visibility semantics done manually on parquet (with Iceberg,
   data+lineage append in one transaction — see BASELINE.json
   north_star). A crash before step 4 leaves the split pending, and the
@@ -41,10 +51,13 @@ from __future__ import annotations
 import functools
 import json
 import os
+import shutil
+import uuid
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 N_SPLITS_DEFAULT = 16
 
@@ -67,6 +80,15 @@ def row_hash() -> Column:
                       F.coalesce(F.col("ocr_text"), F.lit("")))
 
 
+def _committed_schema() -> StructType:
+    """The rows :func:`read_committed` reads: the extraction's columns
+    plus ``split_id`` (a new StructType: ``OUT_SCHEMA.add`` would mutate
+    the constant)."""
+    from ocr_award_extractor_spark.operators.extract_pipeline import OUT_SCHEMA
+
+    return StructType(OUT_SCHEMA.fields + [StructField("split_id", IntegerType())])
+
+
 def committed_splits(spark: SparkSession, out_dir: str) -> DataFrame:
     """Lineage rows of committed splits (empty DataFrame if none yet).
     The schema-pinned read opens no file at plan time, so a corrupt
@@ -78,60 +100,81 @@ def committed_splits(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.schema(_LINEAGE_SCHEMA).parquet(path)
 
 
-def _write_splits(batches, *, data_dir: str, lineage_dir: str, run_id: str):
-    """``mapInArrow`` writer kernel: commits every split in its input by
-    the steps of the module docstring. Input rows carry ``split_id`` and
-    the row hash ``_h``, which are dropped before the write. Streams —
-    memory is O(batch × splits in this task). Yields one
-    (split_id, row_count, checksum) row per committed split."""
-    import uuid
+def _write_lineage_row(lineage_dir: str, tmp_name: str, run_id: str,
+                       k: int, row_count: int, checksum: int) -> None:
+    """Step 4, the commit point: write split ``k``'s lineage row to a
+    dot-prefixed tmp and rename it into place."""
+    import pyarrow.parquet as pq
 
+    tmp = os.path.join(lineage_dir, f".split-{k}{tmp_name}")
+    pq.write_table(pa.table([[run_id], [k], [row_count], [checksum]],
+                            schema=_LINEAGE_ARROW_SCHEMA), tmp)
+    os.replace(tmp, os.path.join(lineage_dir, f"split-{k}.parquet"))
+
+
+def _write_splits(batches, *, data_dir: str, lineage_dir: str, run_id: str):
+    """``mapInArrow`` writer kernel: it writes one split at a time and
+    commits it by the steps of the module docstring as soon as the next
+    split begins, so it holds one open file. Input rows carry ``split_id``
+    and the row hash ``_h``, which are dropped before the write. The plan
+    sorts the input by ``split_id``; on unsorted input (the kernel driven
+    directly) a split that comes back after its commit is reopened: its
+    lineage row is removed, which makes it pending again, and its
+    committed rows are copied into the new tmp ahead of the new ones.
+    Yields one (split_id, row_count, checksum) row per committed split."""
     import numpy as np
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     tmp_name = f".part-{uuid.uuid4().hex}.tmp"
-    writers, counts, checksums = {}, {}, {}     # keyed by split_id
+    os.makedirs(lineage_dir, exist_ok=True)
+    done = {}                           # split_id -> (row_count, checksum)
+    k, writer, count, checksum = None, None, 0, 0
+
+    def commit():
+        nonlocal writer
+        w, writer = writer, None
+        w.close()
+        d = os.path.join(data_dir, f"split_id={k}")
+        for entry in os.listdir(d):
+            if entry != tmp_name:
+                os.remove(os.path.join(d, entry))
+        os.replace(os.path.join(d, tmp_name), os.path.join(d, "part-00000.parquet"))
+        _write_lineage_row(lineage_dir, tmp_name, run_id, k, count, checksum)
+        done[k] = (count, checksum)
+
     try:
         for batch in batches:
-            ids, hashes = batch.column("split_id"), batch.column("_h")
+            if not batch.num_rows:
+                continue
+            ids, hashes = batch.column("split_id").to_numpy(), batch.column("_h").to_numpy()
             rows = batch.drop_columns(["split_id", "_h"])
-            present = pc.unique(ids).to_pylist()
-            for k in present:
-                part, h = rows, hashes
-                if len(present) > 1:
-                    mask = pc.equal(ids, k)
-                    part, h = rows.filter(mask), hashes.filter(mask)
-                if k not in writers:
+            bounds = [0, *(np.flatnonzero(np.diff(ids)) + 1), len(ids)]
+            for lo, hi in zip(bounds, bounds[1:]):
+                if ids[lo] != k:
+                    if writer is not None:
+                        commit()
+                    k = int(ids[lo])
                     d = os.path.join(data_dir, f"split_id={k}")
                     os.makedirs(d, exist_ok=True)
-                    writers[k] = pq.ParquetWriter(os.path.join(d, tmp_name),
-                                                  part.schema)
-                    counts[k] = checksums[k] = 0
-                writers[k].write_batch(part)
-                counts[k] += part.num_rows
-                checksums[k] ^= int(np.bitwise_xor.reduce(h.to_numpy()))
-        os.makedirs(lineage_dir, exist_ok=True)
-        for k in list(writers):
-            writers.pop(k).close()
-            d = os.path.join(data_dir, f"split_id={k}")
-            for entry in os.listdir(d):
-                if entry != tmp_name:
-                    os.remove(os.path.join(d, entry))
-            os.replace(os.path.join(d, tmp_name), os.path.join(d, "part-00000.parquet"))
-            tmp = os.path.join(lineage_dir, f".split-{k}{tmp_name}")
-            pq.write_table(pa.table(
-                [[run_id], [k], [counts[k]], [checksums[k]]],
-                schema=_LINEAGE_ARROW_SCHEMA), tmp)
-            os.replace(tmp, os.path.join(lineage_dir, f"split-{k}.parquet"))
+                    writer = pq.ParquetWriter(os.path.join(d, tmp_name), rows.schema)
+                    if k in done:       # unsorted input: k is back, reopen it
+                        os.remove(os.path.join(lineage_dir, f"split-{k}.parquet"))
+                        writer.write_table(pq.read_table(
+                            os.path.join(d, "part-00000.parquet")))
+                    count, checksum = done.pop(k, (0, 0))
+                writer.write_batch(rows.slice(lo, hi - lo))
+                count += hi - lo
+                checksum ^= int(np.bitwise_xor.reduce(hashes[lo:hi]))
+        if writer is not None:
+            commit()
     except BaseException:
-        for k, w in writers.items():    # splits not yet renamed into place
-            w.close()
+        if writer is not None:          # the split not yet renamed into place
+            writer.close()
             os.remove(os.path.join(data_dir, f"split_id={k}", tmp_name))
         raise
     yield pa.RecordBatch.from_pydict(
-        {"split_id": list(counts), "row_count": list(counts.values()),
-         "checksum": list(checksums.values())},
+        {"split_id": list(done), "row_count": [c for c, _ in done.values()],
+         "checksum": [x for _, x in done.values()]},
         schema=_LINEAGE_ARROW_SCHEMA.remove(0))
 
 
@@ -160,8 +203,9 @@ def run_resumable_extraction(
     killed job: only the pending splits ``todo[i::n_batches]`` for
     ``i < max_batches`` commit (all in the one job). Returns counters.
     ``extract`` defaults to the flagship extraction stage and must map a
-    documents DataFrame (with split_id) to an output DataFrame that keeps
-    url/ocr_text/split_id.
+    documents DataFrame (with split_id) to the columns of
+    :func:`_committed_schema` (``OUT_SCHEMA`` plus ``split_id int``), the
+    schema :func:`read_committed` reads the committed rows with.
     """
     if extract is None:
         from ocr_award_extractor_spark.operators.extract_pipeline import (
@@ -217,15 +261,27 @@ def run_resumable_extraction(
         ensure_package_on_workers(spark)
         pending = with_split_id(docs, n_splits).where(
             F.col("split_id").isin(pending_ids))
-        # one hash shuffle by split_id puts every row of a split in one
-        # writer task, which makes the split's file and lineage row its own
+        # one hash shuffle by split_id puts every row of a split in one of
+        # (at most) one writer task per core, and the sort hands each task
+        # its splits one after another, so the writer holds one open file
+        width = min(len(pending_ids), spark.sparkContext.defaultParallelism)
         out = (extract(pending).withColumn("_h", row_hash())
-               .repartition(len(pending_ids), "split_id"))
+               .repartition(width, "split_id").sortWithinPartitions("split_id"))
         writer = functools.partial(
             _write_splits, data_dir=os.path.join(out_dir, "data"),
             lineage_dir=lineage_dir, run_id=run_id)
-        rows_written = sum(r["row_count"] for r in
-                           out.mapInArrow(writer, _COMMIT_SCHEMA).collect())
+        written = {r["split_id"]: r["row_count"] for r in
+                   out.mapInArrow(writer, _COMMIT_SCHEMA).collect()}
+        rows_written = sum(written.values())
+        # a pending split with no input rows reached no writer: commit it
+        # here as a zero-row lineage row with no data, so reruns skip it
+        tmp_name = f".empty-{uuid.uuid4().hex}.tmp"
+        os.makedirs(lineage_dir, exist_ok=True)
+        for k in pending_ids:
+            if k not in written:
+                shutil.rmtree(os.path.join(out_dir, "data", f"split_id={k}"),
+                              ignore_errors=True)
+                _write_lineage_row(lineage_dir, tmp_name, run_id, k, 0, 0)
 
     return {"batches_committed": len(batches),
             "splits_total": n_splits,
@@ -234,24 +290,40 @@ def run_resumable_extraction(
 
 
 def read_committed(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read ONLY committed data: inner-join the data partitions against the
-    lineage split list (the snapshot-visibility read path)."""
-    lin = committed_splits(spark, out_dir).select("split_id").distinct()
-    data = spark.read.parquet(os.path.join(out_dir, "data"))
-    return data.join(F.broadcast(lin), "split_id")
+    """Read ONLY committed data (the snapshot-visibility read path). The
+    driver reads the committed split ids from ``_lineage`` with pyarrow,
+    and the read of ``data/`` with :func:`_committed_schema` keeps only
+    those split directories (partition pruning), so building the frame
+    starts no Spark job. A corrupt lineage file raises here. With no
+    ``data/`` (nothing committed yet, or only empty splits) the frame is
+    empty."""
+    import pyarrow.parquet as pq
+
+    data = os.path.join(out_dir, "data")
+    if not os.path.isdir(data):
+        return spark.createDataFrame([], _committed_schema())
+    lineage = os.path.join(out_dir, "_lineage")
+    ids = (pq.read_table(lineage, columns=["split_id"]).column("split_id")
+           .unique().to_pylist() if os.path.isdir(lineage) else [])
+    return (spark.read.schema(_committed_schema()).parquet(data)
+            .where(F.col("split_id").isin(sorted(ids))))
 
 
 def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     """Audit: recompute per-split checksums from data and diff vs lineage.
-    NULL-safe comparison: a split present on only ONE side (data deleted
-    after commit, or stray uncommitted data) yields NULLs on the other —
-    a plain != would drop exactly those rows and pass the audit on a
-    dataset missing a whole split."""
+    NULL-safe comparison: a committed split whose data was deleted yields
+    NULLs on the data side — a plain != would drop exactly those rows and
+    pass the audit on a dataset missing a whole split. Data of pending
+    splits is not audited: readers never see it. An empty split's zero-row lineage row
+    matches no data: a missing count and checksum compare as 0."""
     lin = committed_splits(spark, out_dir).select("split_id", "row_count", "checksum")
     actual = _split_checksum_rows(read_committed(spark, out_dir)).withColumnRenamed(
         "row_count", "actual_rows").withColumnRenamed("checksum", "actual_checksum")
+
+    def differs(want: str, got: str) -> Column:
+        return ~F.col(want).eqNullSafe(F.coalesce(F.col(got), F.lit(0)))
+
     return (
         lin.join(actual, "split_id", "full")
-        .where(~F.col("row_count").eqNullSafe(F.col("actual_rows"))
-               | ~F.col("checksum").eqNullSafe(F.col("actual_checksum")))
+        .where(differs("row_count", "actual_rows") | differs("checksum", "actual_checksum"))
     )

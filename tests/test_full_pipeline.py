@@ -300,10 +300,11 @@ def test_host_cap_and_pack_stages(spark, tmp_path):
 
 def test_pipeline_job_budget(pipeline_run, spark, tmp_path):
     """Stage tables count themselves: row counts are Observations on the
-    stage writes and staged tables read back with their known schema, so
-    the planted run with WET export and packing stays within 50 Spark
-    jobs. Jobs submitted from other driver threads do not inherit the
-    job group, so ungrouped jobs started meanwhile count too."""
+    stage writes and staged tables read back with their known schema, and
+    the committed read starts no job, so the planted run with WET export
+    and packing stays within 44 Spark jobs (40 measured). Jobs submitted
+    from other driver threads do not inherit the job group, so ungrouped
+    jobs started meanwhile count too."""
     from ocr_award_extractor_spark.plans.full_pipeline import (
         run_training_data_pipeline,
     )
@@ -325,7 +326,7 @@ def test_pipeline_job_budget(pipeline_run, spark, tmp_path):
             | set(tracker.getJobIdsForGroup(None)) - ungrouped)
     rows = dict(summary["rows"])
     assert rows.pop("shards") >= 1 and rows == pipeline_run[0]["rows"]
-    assert 1 <= len(jobs) <= 50, len(jobs)
+    assert 1 <= len(jobs) <= 44, len(jobs)
 
 
 def test_all_gate_failures_leave_an_empty_chain(spark, tmp_path):

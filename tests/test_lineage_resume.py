@@ -3,6 +3,7 @@ assert no duplicate and no missing urls, checksums consistent."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_award_extractor_spark.plans.lineage import (
@@ -449,29 +450,168 @@ def test_resume_over_spark_written_split(spark, tmp_path):
     assert verify_lineage(spark, out).count() == 0
 
 
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn()`` starts: those of its job group plus ungrouped
+    ones, because jobs submitted from other driver threads do not inherit
+    the job group. Returns (job ids, fn's result)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return (set(tracker.getJobIdsForGroup(group))
+            | set(tracker.getJobIdsForGroup(None)) - ungrouped), result
+
+
 def test_commit_job_budget(spark, tmp_path):
     """One commit job: a fresh directory costs at most 4 Spark jobs (the
     AQE stages of the one commit plan), a fully committed one at most 1
     (the lineage read). Jobs submitted from other driver threads do not
     inherit the job group, so ungrouped jobs started meanwhile count too."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     out = str(tmp_path / "budget")
     docs = load_fixture(spark, n_docs=N_DOCS)
 
     def jobs(group, run_id):
-        ungrouped = set(tracker.getJobIdsForGroup(None))
-        sc.setJobGroup(group, group)
-        try:
-            run_resumable_extraction(spark, docs, out, run_id, n_splits=4)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return (set(tracker.getJobIdsForGroup(group))
-                | set(tracker.getJobIdsForGroup(None)) - ungrouped)
+        return _jobs(spark, group, lambda: run_resumable_extraction(
+            spark, docs, out, run_id, n_splits=4))[0]
 
     assert 1 <= len(jobs("lineage-budget-fresh", "fresh")) <= 4
     assert len(jobs("lineage-budget-rerun", "rerun")) <= 1
     assert read_committed(spark, out).count() == N_DOCS
+
+
+def test_committed_read_job_budget(spark, tmp_path):
+    """The committed read takes the split ids from ``_lineage`` on the
+    driver and reads ``data/`` with the committed schema: building it
+    starts no Spark job, and the WET export over it runs exactly one."""
+    from ocr_award_extractor_spark.sources.warc import write_wet
+
+    out = str(tmp_path / "read")
+    docs = load_fixture(spark, n_docs=N_DOCS)
+    run_resumable_extraction(spark, docs, out, "read", n_splits=16)
+    jobs, committed = _jobs(spark, "committed-read",
+                            lambda: read_committed(spark, out))
+    assert jobs == set()
+    jobs, written = _jobs(spark, "committed-read-wet", lambda: write_wet(
+        committed, str(tmp_path / "wet")))
+    assert len(jobs) == 1
+    assert written == committed.where(F.col("status") == "success").count() > 0
+
+
+def test_commit_plan_sorts_each_writer_task_by_split(spark, tmp_path, monkeypatch):
+    """The writer's input is one hash shuffle by split_id into one task per
+    core (not one per split), then a sort by split_id within each task."""
+    import re
+
+    docs = load_fixture(spark, n_docs=60)
+    plans = []
+    real = type(docs).mapInArrow
+
+    def capture(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "mapInArrow", capture)
+    run_resumable_extraction(spark, docs, str(tmp_path / "plan"), "plan",
+                             n_splits=16)
+    cores = spark.sparkContext.defaultParallelism
+    assert cores < 16 and len(plans) == 1
+    lines = plans[0].splitlines()
+    sort = next(i for i, ln in enumerate(lines) if re.search(r"\bSort \[", ln))
+    assert re.search(r"Sort \[split_id#\d+ ASC", lines[sort]), plans[0]
+    assert re.search(rf"Exchange hashpartitioning\(split_id#\d+, {cores}\)",
+                     lines[sort + 1]), plans[0]
+
+
+def test_writer_holds_one_open_file(spark, tmp_path, monkeypatch):
+    """Fed batches sorted by split_id that each span several splits, the
+    writer has at most one ParquetWriter open at a time, and it commits
+    the same files and lineage rows as when fed the same rows unsorted
+    (each split then comes back several times and is reopened)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocr_award_extractor_spark.operators.extract_pipeline import (
+        extract_documents,
+    )
+    from ocr_award_extractor_spark.plans.lineage import (
+        _write_splits, row_hash, with_split_id,
+    )
+
+    n_splits = 32
+    rows = (with_split_id(extract_documents(load_fixture(spark, n_docs=N_DOCS)),
+                          n_splits).withColumn("_h", row_hash()).toArrow())
+    state = {"open": 0, "peak": 0}
+
+    class Counting(pq.ParquetWriter):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            state["open"] += 1
+            state["peak"] = max(state["peak"], state["open"])
+
+        def close(self):
+            if self.is_open:
+                state["open"] -= 1
+            super().close()
+
+    monkeypatch.setattr(pq, "ParquetWriter", Counting)
+
+    def write(out, batches):
+        kw = dict(data_dir=os.path.join(out, "data"),
+                  lineage_dir=os.path.join(out, "_lineage"), run_id="r")
+        return pa.Table.from_batches(
+            list(_write_splits(iter(batches), **kw))).sort_by("split_id")
+
+    batches = rows.sort_by("split_id").to_batches(max_chunksize=16)
+    assert sum(len(set(b.column("split_id").to_pylist())) > 1 for b in batches) > 1
+    got = write(str(tmp_path / "sorted"), batches)
+    assert state == {"open": 0, "peak": 1}
+    assert got.column("split_id").to_pylist() == list(range(n_splits))
+
+    ids = rows.column("split_id").to_pylist()
+    assert ids != sorted(ids)
+    unsorted = str(tmp_path / "unsorted")
+    assert write(unsorted, rows.to_batches(max_chunksize=16)).equals(got)
+    assert state == {"open": 0, "peak": 1}
+
+    def committed(out):
+        lineage = pq.read_table(os.path.join(out, "_lineage")).sort_by("split_id")
+        data = {k: pq.read_table(os.path.join(
+            out, "data", f"split_id={k}", "part-00000.parquet")).sort_by("url")
+            for k in range(n_splits)}
+        return lineage, data
+
+    assert committed(str(tmp_path / "sorted")) == committed(unsorted)
+    assert _split_files(unsorted) == {
+        f"split_id={k}": ["part-00000.parquet"] for k in range(n_splits)}
+
+
+@pytest.mark.parametrize("n_docs,n_splits", [(0, 4), (10, 64)])
+def test_empty_splits_commit_once(spark, tmp_path, n_docs, n_splits):
+    """A pending split with no input rows commits a zero-row lineage row
+    and no data: the rerun starts at most one job (the lineage read) and
+    finds every split committed, the committed read holds every input
+    row (none on an empty input, which writes no data/), and the audit
+    finds nothing."""
+    from ocr_award_extractor_spark.operators.webify import PAGE_SCHEMA
+
+    out = str(tmp_path / "empty")
+    docs = (load_fixture(spark, n_docs=n_docs) if n_docs
+            else spark.createDataFrame([], PAGE_SCHEMA))
+    first = run_resumable_extraction(spark, docs, out, "first", n_splits=n_splits)
+    assert first["rows_written"] == n_docs
+    jobs, again = _jobs(spark, f"empty-rerun-{n_docs}", lambda: (
+        run_resumable_extraction(spark, docs, out, "again", n_splits=n_splits)))
+    assert len(jobs) <= 1
+    assert again["splits_previously_committed"] == n_splits
+    assert again["batches_committed"] == again["rows_written"] == 0
+    assert read_committed(spark, out).count() == n_docs
+    assert verify_lineage(spark, out).count() == 0
 
 
 def test_n_splits_mismatch_on_resume_raises_and_leaves_output(spark, tmp_path):
