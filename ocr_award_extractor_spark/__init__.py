@@ -15,6 +15,17 @@ Layout:
     sources/     table loaders + the deterministic web-page fixture generator
     plans/       lineage / resume planning (anti-join against committed splits)
     streaming/   optional Structured Streaming demo of the same extractor
+
+Imported inside a Spark Python worker (an active TaskContext, which every
+kernel pickled by reference brings about), the package also trims two
+fixed costs that PySpark charges every task of a reused worker; drivers
+and library users are left alone:
+
+* ``_install_zip_stat_check``: on CPython < 3.12, ``pyspark.zip`` is
+  not re-read by each task's ``importlib.invalidate_caches()``;
+* ``_install_settled_heap_freeze``: the daemon's full ``gc.collect()``
+  after each task stops walking the worker's module state (pandas,
+  pyarrow, pyspark, the engine) once that state has settled.
 """
 
 __version__ = "0.1.0"
@@ -68,8 +79,7 @@ def _install_zip_stat_check() -> None:
     at import time."""
     if _sys.implementation.name != "cpython" or _sys.version_info >= (3, 12):
         return
-    taskcontext = _sys.modules.get("pyspark.taskcontext")
-    if taskcontext is None or taskcontext.TaskContext.get() is None:
+    if _worker_task_context() is None:
         return
     import zipimport
 
@@ -77,4 +87,49 @@ def _install_zip_stat_check() -> None:
         zipimport.zipimporter.invalidate_caches)
 
 
+def _worker_task_context():
+    """The TaskContext class when the package is being imported inside a
+    Spark Python task, else None (a driver, a library user)."""
+    taskcontext = _sys.modules.get("pyspark.taskcontext")
+    if taskcontext is None or taskcontext.TaskContext.get() is None:
+        return None
+    return taskcontext.TaskContext
+
+
+def _install_settled_heap_freeze() -> None:
+    """Stop reused Spark Python workers paying a full GC between tasks.
+
+    PySpark's daemon calls ``gc.collect()`` in a reused worker after every
+    task (``pyspark/daemon.py``), and the next task, already handed to
+    that worker, waits for it. A warmed worker tracks ~74k objects, almost
+    all of them module state, and that collection took 41-119 ms on a
+    4-core x86 host. This hook runs when a generation-2 collection stops
+    with no task active (``pyspark.worker.main`` resets the TaskContext
+    before it returns), which is that between-task collect, and moves
+    what survived it to the permanent generation with ``gc.freeze()``, so
+    later collects scan only objects made since (0.07-0.12 ms). It
+    freezes again only when ``sys.modules`` has grown or shrunk since the
+    last freeze, so a worker running the same kernels does not keep
+    growing the permanent generation. Freezing at import instead would
+    miss most of the state: this package is imported before pandas and a
+    kernel's own modules are."""
+    task_context = _worker_task_context()
+    if task_context is None:
+        return
+    import gc
+
+    frozen_at = None  # len(sys.modules) at the last freeze
+
+    def freeze_settled_heap(phase, info):
+        nonlocal frozen_at
+        if (phase == "stop" and info["generation"] == 2
+                and task_context.get() is None
+                and len(_sys.modules) != frozen_at):
+            frozen_at = len(_sys.modules)
+            gc.freeze()
+
+    gc.callbacks.append(freeze_settled_heap)
+
+
 _install_zip_stat_check()
+_install_settled_heap_freeze()

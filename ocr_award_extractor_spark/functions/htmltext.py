@@ -36,6 +36,7 @@ backend is a drop-in swap on a real cluster.
 
 from __future__ import annotations
 
+import logging
 import re
 from dataclasses import dataclass, field
 from html.parser import HTMLParser
@@ -46,6 +47,8 @@ from ocr_award_extractor_spark.functions.ocr_slot import (
 from ocr_award_extractor_spark.functions.pdftext import (
     PDF_MAGIC, extract_pdf_page,
 )
+
+_log = logging.getLogger(__name__)
 
 # Containers whose entire subtree is never content.
 KILL_TAGS = frozenset(
@@ -238,20 +241,30 @@ def _stdlib_fast_compatible() -> bool:
     set_cdata_mode to end CDATA at '</script' + space/slash, which would
     silently diverge from _FAST_CDATA_CLOSE. Probe the live interpreter's
     actual patterns at import; on any mismatch the fast path is disabled
-    and every document takes the stdlib parser (slower, never wrong)."""
+    and every document takes the stdlib parser (slower, never wrong),
+    with one WARNING that names the failed probe."""
     try:
         import _markupbase as _mb
         from html.parser import HTMLParser as _HP
 
         probe = _HP()
         probe.set_cdata_mode("script")
-        return (
-            probe.interesting.pattern == _FAST_CDATA_CLOSE["script"].pattern
-            and _mb._commentclose.pattern == _FAST_COMMENT_CLOSE.pattern
-            and _HP.CDATA_CONTENT_ELEMENTS == ("script", "style")
-        )
-    except Exception:
-        return False
+        checks = {
+            "script CDATA close pattern":
+                probe.interesting.pattern == _FAST_CDATA_CLOSE["script"].pattern,
+            "comment close pattern":
+                _mb._commentclose.pattern == _FAST_COMMENT_CLOSE.pattern,
+            "CDATA content elements":
+                _HP.CDATA_CONTENT_ELEMENTS == ("script", "style"),
+        }
+        failed = [name for name, ok in checks.items() if not ok]
+    except Exception as e:
+        failed = [f"probe raised {e!r}"]
+    if failed:
+        _log.warning("fast HTML segmenter disabled, every document takes the "
+                     "~2x slower stdlib parser; failed probe: %s",
+                     ", ".join(failed))
+    return not failed
 
 
 _FAST_ENABLED = _stdlib_fast_compatible()

@@ -73,6 +73,14 @@ def with_split_id(docs: DataFrame, n_splits: int = N_SPLITS_DEFAULT) -> DataFram
     )
 
 
+def split_id_in(ids) -> Column:
+    """``split_id IN (ids)`` as one SQL expression: ``Column.isin`` makes
+    one Py4J call per id, ~2.2 s of driver time at 4,096 ids on a 4-core
+    host (this: ~0.05 s). ``ids`` must not be empty: ``IN ()`` does not
+    parse."""
+    return F.expr(f"split_id IN ({', '.join(map(str, ids))})")
+
+
 def row_hash() -> Column:
     """One row's term of its split's checksum. The writer's checksum and
     :func:`verify_lineage`'s audit both use it, so they cannot drift."""
@@ -259,8 +267,9 @@ def run_resumable_extraction(
         from ocr_award_extractor_spark.config import ensure_package_on_workers
 
         ensure_package_on_workers(spark)
-        pending = with_split_id(docs, n_splits).where(
-            F.col("split_id").isin(pending_ids))
+        pending = with_split_id(docs, n_splits)
+        if len(pending_ids) < n_splits:  # no filter when every split is pending
+            pending = pending.where(split_id_in(pending_ids))
         # one hash shuffle by split_id puts every row of a split in one of
         # (at most) one writer task per core, and the sort hands each task
         # its splits one after another, so the writer holds one open file
@@ -295,18 +304,19 @@ def read_committed(spark: SparkSession, out_dir: str) -> DataFrame:
     and the read of ``data/`` with :func:`_committed_schema` keeps only
     those split directories (partition pruning), so building the frame
     starts no Spark job. A corrupt lineage file raises here. With no
-    ``data/`` (nothing committed yet, or only empty splits) the frame is
-    empty."""
+    ``data/`` or no committed split (nothing committed yet, or only empty
+    splits) the frame is empty."""
     import pyarrow.parquet as pq
 
     data = os.path.join(out_dir, "data")
-    if not os.path.isdir(data):
-        return spark.createDataFrame([], _committed_schema())
     lineage = os.path.join(out_dir, "_lineage")
     ids = (pq.read_table(lineage, columns=["split_id"]).column("split_id")
-           .unique().to_pylist() if os.path.isdir(lineage) else [])
+           .unique().to_pylist()
+           if os.path.isdir(data) and os.path.isdir(lineage) else [])
+    if not ids:
+        return spark.createDataFrame([], _committed_schema())
     return (spark.read.schema(_committed_schema()).parquet(data)
-            .where(F.col("split_id").isin(sorted(ids))))
+            .where(split_id_in(sorted(ids))))
 
 
 def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -175,3 +175,31 @@ def test_fast_path_enabled_on_this_interpreter():
     finally:
         h._FAST_CDATA_CLOSE["script"] = orig
     assert h._stdlib_fast_compatible() is True
+
+
+def test_disabled_fast_path_logs_the_failed_probe(monkeypatch, caplog):
+    """The fast path is never switched off silently: a drifted pattern or
+    a probe that raises logs one WARNING naming it; a match logs none."""
+    import logging
+    import re
+    from html.parser import HTMLParser
+
+    from ocr_award_extractor_spark.functions import htmltext as h
+
+    with caplog.at_level(logging.WARNING, logger=h.__name__):
+        assert h._stdlib_fast_compatible() is True
+        assert caplog.records == []
+
+        monkeypatch.setitem(h._FAST_CDATA_CLOSE, "script", re.compile("</script"))
+        assert h._stdlib_fast_compatible() is False
+        monkeypatch.undo()
+
+        def broken(self, elem):
+            raise RuntimeError("no cdata mode")
+
+        monkeypatch.setattr(HTMLParser, "set_cdata_mode", broken)
+        assert h._stdlib_fast_compatible() is False
+    messages = [(r.levelname, r.getMessage()) for r in caplog.records]
+    assert len(messages) == 2 and all(lvl == "WARNING" for lvl, _ in messages)
+    assert "script CDATA close pattern" in messages[0][1]
+    assert "probe raised RuntimeError('no cdata mode')" in messages[1][1]

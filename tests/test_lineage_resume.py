@@ -526,6 +526,39 @@ def test_commit_plan_sorts_each_writer_task_by_split(spark, tmp_path, monkeypatc
                      lines[sort + 1]), plans[0]
 
 
+def test_split_filters_are_one_in_expression(spark, tmp_path, monkeypatch):
+    """A fresh commit plans no split_id filter (every split is pending), a
+    resume plans one IN over its pending ids, and the committed read
+    prunes ``data/`` to the committed ids; with no committed id the read
+    is an empty frame (``IN ()`` does not parse)."""
+    import re
+    import shutil
+
+    docs = load_fixture(spark, n_docs=60)
+    plans = []
+    real = type(docs).mapInArrow
+
+    def capture(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "mapInArrow", capture)
+    fresh, out = str(tmp_path / "fresh"), str(tmp_path / "resume")
+    run_resumable_extraction(spark, docs, fresh, "fresh", n_splits=16)
+    run_resumable_extraction(spark, docs, out, "killed", n_splits=16,
+                             max_batches=1)
+    run_resumable_extraction(spark, docs, out, "resume", n_splits=16)
+    filters = [[ln for ln in p.splitlines() if re.search(r"Filter .*xxhash64", ln)]
+               for p in plans]
+    assert len(filters) == 3 and filters[0] == [], plans[0]
+    for lines in filters[1:]:
+        assert len(lines) == 1 and re.search(r"\b(IN|INSET)\b", lines[0]), lines
+    scan = read_committed(spark, out)._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[split_id#\d+ (IN|INSET) ", scan), scan
+    shutil.rmtree(tmp_path / "resume" / "_lineage")
+    assert read_committed(spark, out).count() == 0
+
+
 def test_writer_holds_one_open_file(spark, tmp_path, monkeypatch):
     """Fed batches sorted by split_id that each span several splits, the
     writer has at most one ParquetWriter open at a time, and it commits
