@@ -264,7 +264,7 @@ def _streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ocr_award_extractor_spark.streaming.extract_stream import (
-        make_complete_snapshot_sink, windowed_event_counts,
+        make_complete_snapshot_sink, state_session, windowed_event_counts,
     )
 
     base = _stream_tmp(sf_dir, "events")
@@ -288,24 +288,17 @@ def _streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # same state-partition scoping as the dedup leg (round 7): the
         # windowed agg's state store pays a per-partition commit per
-        # batch; the streaming query clones the session at start, so
-        # restoring the conf right after cannot affect the run
-        _key = "spark.sql.shuffle.partitions"
-        _prev = spark.conf.get(_key)
-        _cores = spark.sparkContext.defaultParallelism
-        spark.conf.set(_key, str(max(8, _cores // 4)))
-        try:
-            q = (
-                windowed_event_counts(spark, src)
-                .writeStream
-                .foreachBatch(make_complete_snapshot_sink(out))
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(base, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            spark.conf.set(_key, _prev)
+        # batch, so the query starts from a session with a narrower width
+        cores = spark.sparkContext.defaultParallelism
+        q = (
+            windowed_event_counts(state_session(spark, max(8, cores // 4)), src)
+            .writeStream
+            .foreachBatch(make_complete_snapshot_sink(out))
+            .outputMode("complete")
+            .option("checkpointLocation", os.path.join(base, "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
         if not q.awaitTermination(600):
             q.stop()
             raise TimeoutError(

@@ -28,7 +28,9 @@ def build_parser() -> argparse.ArgumentParser:
     src.add_argument("--input", help="parquet directory of documents(url, warc_ts, html, text, lang)")
     src.add_argument("--fixture", type=int, metavar="N",
                      help="use the seeded N-doc fixture (local testing)")
-    p.add_argument("--output", required=True, help="output dir (data/ + _lineage/)")
+    p.add_argument("--output", required=True,
+                   help="output dir: data/split-<k>.parquet files and _lineage/; "
+                        "an output of the older data/split_id=<k>/ layout is refused")
     p.add_argument("--run-id", default="run", help="lineage run id")
     p.add_argument("--from-ts", help="inclusive warc_ts lower bound (scan predicate)")
     p.add_argument("--to-ts", help="exclusive warc_ts upper bound (scan predicate)")

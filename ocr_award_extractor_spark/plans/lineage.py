@@ -14,36 +14,35 @@ lineage (input split, row counts, checksum). Design:
   sorted by ``split_id`` within each task, so each split's rows reach one
   task of the writer kernel :func:`_write_splits` one after another. The
   writer streams a split into its tmp file and, as soon as the next split
-  begins (or its input ends), commits it by four file-system steps, in
+  begins (or its input ends), commits it by three file-system steps, in
   order:
 
-  1. close the split's tmp file ``data/split_id=<k>/.part-<uuid>.tmp``;
-  2. remove every other entry of ``data/split_id=<k>/`` (a killed
-     attempt's tmp, files an older writer left);
-  3. ``os.replace`` the tmp to ``data/split_id=<k>/part-00000.parquet``;
-  4. write the lineage row to a dot-prefixed tmp and ``os.replace`` it to
+  1. close the split's tmp file ``data/.split-<k>-<uuid>.tmp``;
+  2. ``os.replace`` the tmp to ``data/split-<k>.parquet``;
+  3. write the lineage row to a dot-prefixed tmp and ``os.replace`` it to
      ``_lineage/split-<k>.parquet`` — the commit point.
 
   A task thus holds one open file however many splits it commits. A
-  pending split with no input rows reaches no writer; after the job the
-  driver removes its data directory, if any, and commits a zero-row
-  lineage row (count 0, checksum 0), so a rerun does not run it again.
+  killed attempt's dot-prefixed tmp stays hidden from readers, and the
+  next run's driver removes it. A pending split with no input rows
+  reaches no writer; after the job the driver commits a zero-row lineage
+  row (count 0, checksum 0), so a rerun does not run it again.
 
-  Readers only trust splits present in the lineage dataset
-  (:func:`read_committed` reads their ids on the driver and prunes
-  ``data/`` to them): Iceberg's
+  Readers only trust splits present in the lineage dataset, which only
+  :func:`committed_splits` reads (with pyarrow, on the driver): Iceberg's
   snapshot-visibility semantics done manually on parquet (with Iceberg,
   data+lineage append in one transaction — see BASELINE.json
-  north_star). A crash before step 4 leaves the split pending, and the
+  north_star). A crash before step 3 leaves the split pending, and the
   fixed file names make a task retry overwrite instead of duplicate;
 * checksum per split = bit_xor over :func:`row_hash` — order-insensitive,
   overflow-free (ANSI mode safe), cheap to recompute for audit.
 
 The writer runs on the executors, so ``out_dir`` must be on a filesystem
 the driver and executors share — as for ``write_wet`` and ``write_warc``.
-Layout under ``out_dir``: ``data/split_id=<k>/part-00000.parquet`` (the
-extracted rows) and ``_lineage/split-<k>.parquet`` (run_id, split_id,
-row_count, checksum).
+Layout under ``out_dir``: ``data/split-<k>.parquet``, one flat directory
+of the extracted rows with their ``split_id``, and
+``_lineage/split-<k>.parquet`` (run_id, split_id, row_count, checksum).
+A root of the older layout (``data/split_id=<k>/``) is refused.
 """
 
 from __future__ import annotations
@@ -51,7 +50,6 @@ from __future__ import annotations
 import functools
 import json
 import os
-import shutil
 import uuid
 
 import pyarrow as pa
@@ -61,7 +59,6 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 N_SPLITS_DEFAULT = 16
 
-_LINEAGE_SCHEMA = "run_id string, split_id int, row_count long, checksum long"
 _COMMIT_SCHEMA = "split_id int, row_count long, checksum long"
 _LINEAGE_ARROW_SCHEMA = pa.schema([("run_id", pa.string()), ("split_id", pa.int32()),
                                    ("row_count", pa.int64()), ("checksum", pa.int64())])
@@ -97,24 +94,26 @@ def _committed_schema() -> StructType:
     return StructType(OUT_SCHEMA.fields + [StructField("split_id", IntegerType())])
 
 
-def committed_splits(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Lineage rows of committed splits (empty DataFrame if none yet).
-    The schema-pinned read opens no file at plan time, so a corrupt
-    lineage file fails the first action that reads it — never a silent
-    "nothing committed"."""
+def committed_splits(out_dir: str) -> pa.Table:
+    """Lineage rows of committed splits (an empty table if none yet): the
+    only reader of ``_lineage``, a pyarrow read on the driver, so it
+    starts no Spark job. A corrupt lineage file raises an error that
+    names it — never a silent "nothing committed"."""
+    import pyarrow.parquet as pq
+
     path = os.path.join(out_dir, "_lineage")
-    if not os.path.exists(path):        # avoids a noisy JVM-side stack trace
-        return spark.createDataFrame([], _LINEAGE_SCHEMA)
-    return spark.read.schema(_LINEAGE_SCHEMA).parquet(path)
+    if not os.path.isdir(path):
+        return _LINEAGE_ARROW_SCHEMA.empty_table()
+    return pq.read_table(path, schema=_LINEAGE_ARROW_SCHEMA)
 
 
-def _write_lineage_row(lineage_dir: str, tmp_name: str, run_id: str,
+def _write_lineage_row(lineage_dir: str, uid: str, run_id: str,
                        k: int, row_count: int, checksum: int) -> None:
-    """Step 4, the commit point: write split ``k``'s lineage row to a
+    """Step 3, the commit point: write split ``k``'s lineage row to a
     dot-prefixed tmp and rename it into place."""
     import pyarrow.parquet as pq
 
-    tmp = os.path.join(lineage_dir, f".split-{k}{tmp_name}")
+    tmp = os.path.join(lineage_dir, f".split-{k}-{uid}.tmp")
     pq.write_table(pa.table([[run_id], [k], [row_count], [checksum]],
                             schema=_LINEAGE_ARROW_SCHEMA), tmp)
     os.replace(tmp, os.path.join(lineage_dir, f"split-{k}.parquet"))
@@ -123,31 +122,26 @@ def _write_lineage_row(lineage_dir: str, tmp_name: str, run_id: str,
 def _write_splits(batches, *, data_dir: str, lineage_dir: str, run_id: str):
     """``mapInArrow`` writer kernel: it writes one split at a time and
     commits it by the steps of the module docstring as soon as the next
-    split begins, so it holds one open file. Input rows carry ``split_id``
-    and the row hash ``_h``, which are dropped before the write. The plan
-    sorts the input by ``split_id``; on unsorted input (the kernel driven
-    directly) a split that comes back after its commit is reopened: its
-    lineage row is removed, which makes it pending again, and its
-    committed rows are copied into the new tmp ahead of the new ones.
-    Yields one (split_id, row_count, checksum) row per committed split."""
+    split begins, so it holds one open file. Input rows carry ``split_id``,
+    written with them, and the row hash ``_h``, dropped before the write.
+    The input must be sorted by ``split_id``, as the plan sorts it: a
+    split that comes back after its commit raises. Yields one (split_id,
+    row_count, checksum) row per committed split."""
     import numpy as np
     import pyarrow.parquet as pq
 
-    tmp_name = f".part-{uuid.uuid4().hex}.tmp"
+    uid = uuid.uuid4().hex
+    os.makedirs(data_dir, exist_ok=True)
     os.makedirs(lineage_dir, exist_ok=True)
     done = {}                           # split_id -> (row_count, checksum)
-    k, writer, count, checksum = None, None, 0, 0
+    k, tmp, writer, count, checksum = None, None, None, 0, 0
 
     def commit():
         nonlocal writer
         w, writer = writer, None
         w.close()
-        d = os.path.join(data_dir, f"split_id={k}")
-        for entry in os.listdir(d):
-            if entry != tmp_name:
-                os.remove(os.path.join(d, entry))
-        os.replace(os.path.join(d, tmp_name), os.path.join(d, "part-00000.parquet"))
-        _write_lineage_row(lineage_dir, tmp_name, run_id, k, count, checksum)
+        os.replace(tmp, os.path.join(data_dir, f"split-{k}.parquet"))
+        _write_lineage_row(lineage_dir, uid, run_id, k, count, checksum)
         done[k] = (count, checksum)
 
     try:
@@ -155,21 +149,18 @@ def _write_splits(batches, *, data_dir: str, lineage_dir: str, run_id: str):
             if not batch.num_rows:
                 continue
             ids, hashes = batch.column("split_id").to_numpy(), batch.column("_h").to_numpy()
-            rows = batch.drop_columns(["split_id", "_h"])
+            rows = batch.drop_columns(["_h"])
             bounds = [0, *(np.flatnonzero(np.diff(ids)) + 1), len(ids)]
             for lo, hi in zip(bounds, bounds[1:]):
                 if ids[lo] != k:
                     if writer is not None:
                         commit()
                     k = int(ids[lo])
-                    d = os.path.join(data_dir, f"split_id={k}")
-                    os.makedirs(d, exist_ok=True)
-                    writer = pq.ParquetWriter(os.path.join(d, tmp_name), rows.schema)
-                    if k in done:       # unsorted input: k is back, reopen it
-                        os.remove(os.path.join(lineage_dir, f"split-{k}.parquet"))
-                        writer.write_table(pq.read_table(
-                            os.path.join(d, "part-00000.parquet")))
-                    count, checksum = done.pop(k, (0, 0))
+                    if k in done:
+                        raise ValueError(f"split {k} came back after its commit")
+                    tmp = os.path.join(data_dir, f".split-{k}-{uid}.tmp")
+                    writer = pq.ParquetWriter(tmp, rows.schema)
+                    count, checksum = 0, 0
                 writer.write_batch(rows.slice(lo, hi - lo))
                 count += hi - lo
                 checksum ^= int(np.bitwise_xor.reduce(hashes[lo:hi]))
@@ -178,7 +169,7 @@ def _write_splits(batches, *, data_dir: str, lineage_dir: str, run_id: str):
     except BaseException:
         if writer is not None:          # the split not yet renamed into place
             writer.close()
-            os.remove(os.path.join(data_dir, f"split_id={k}", tmp_name))
+            os.remove(tmp)
         raise
     yield pa.RecordBatch.from_pydict(
         {"split_id": list(done), "row_count": [c for c, _ in done.values()],
@@ -237,6 +228,11 @@ def run_resumable_extraction(
                 F.pmod(F.xxhash64("url"), F.lit(n_splits)).cast("int"),
             )
 
+    data_dir = os.path.join(out_dir, "data")
+    entries = os.listdir(data_dir) if os.path.isdir(data_dir) else []
+    if any(e.startswith("split_id=") for e in entries):
+        raise ValueError(f"output {out_dir} has the old data/split_id=<k>/ "
+                         "layout: rewrite it into a new output directory")
     # split ids are content-addressed MOD n_splits — changing n_splits
     # between runs on the same output would re-key splits and duplicate
     # rows, so the first run pins it and later runs must match.
@@ -254,9 +250,11 @@ def run_resumable_extraction(
         with open(meta_path, "w", encoding="utf-8") as fh:
             json.dump({"n_splits": n_splits}, fh)
 
+    for e in entries:
+        if e.startswith("."):           # a killed attempt's tmp
+            os.remove(os.path.join(data_dir, e))
     lineage_dir = os.path.join(out_dir, "_lineage")
-    already = ({r["split_id"] for r in committed_splits(spark, out_dir).collect()}
-               if os.path.exists(lineage_dir) else set())    # fresh: no job
+    already = set(committed_splits(out_dir).column("split_id").to_pylist())
     todo = sorted(set(range(n_splits)) - already)
     batches = [b for b in (todo[i::n_batches] for i in range(n_batches)) if b]
     batches = batches[:max_batches]
@@ -277,20 +275,18 @@ def run_resumable_extraction(
         out = (extract(pending).withColumn("_h", row_hash())
                .repartition(width, "split_id").sortWithinPartitions("split_id"))
         writer = functools.partial(
-            _write_splits, data_dir=os.path.join(out_dir, "data"),
+            _write_splits, data_dir=data_dir,
             lineage_dir=lineage_dir, run_id=run_id)
         written = {r["split_id"]: r["row_count"] for r in
                    out.mapInArrow(writer, _COMMIT_SCHEMA).collect()}
         rows_written = sum(written.values())
         # a pending split with no input rows reached no writer: commit it
         # here as a zero-row lineage row with no data, so reruns skip it
-        tmp_name = f".empty-{uuid.uuid4().hex}.tmp"
+        uid = uuid.uuid4().hex
         os.makedirs(lineage_dir, exist_ok=True)
         for k in pending_ids:
             if k not in written:
-                shutil.rmtree(os.path.join(out_dir, "data", f"split_id={k}"),
-                              ignore_errors=True)
-                _write_lineage_row(lineage_dir, tmp_name, run_id, k, 0, 0)
+                _write_lineage_row(lineage_dir, uid, run_id, k, 0, 0)
 
     return {"batches_committed": len(batches),
             "splits_total": n_splits,
@@ -299,34 +295,31 @@ def run_resumable_extraction(
 
 
 def read_committed(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read ONLY committed data (the snapshot-visibility read path). The
-    driver reads the committed split ids from ``_lineage`` with pyarrow,
-    and the read of ``data/`` with :func:`_committed_schema` keeps only
-    those split directories (partition pruning), so building the frame
-    starts no Spark job. A corrupt lineage file raises here. With no
-    ``data/`` or no committed split (nothing committed yet, or only empty
-    splits) the frame is empty."""
-    import pyarrow.parquet as pq
-
+    """Read ONLY committed data (the snapshot-visibility read path): the
+    read of the flat ``data/`` with :func:`_committed_schema` keeps the
+    rows of the splits in :func:`committed_splits` by one ``split_id IN
+    (…)`` pushed to the parquet scan. Building the frame starts no Spark
+    job. A corrupt lineage file raises here. With no ``data/`` or no
+    committed split (nothing committed yet, or only empty splits) the
+    frame is empty."""
     data = os.path.join(out_dir, "data")
-    lineage = os.path.join(out_dir, "_lineage")
-    ids = (pq.read_table(lineage, columns=["split_id"]).column("split_id")
-           .unique().to_pylist()
-           if os.path.isdir(data) and os.path.isdir(lineage) else [])
-    if not ids:
+    ids = committed_splits(out_dir).column("split_id").to_pylist()
+    if not ids or not os.path.isdir(data):
         return spark.createDataFrame([], _committed_schema())
     return (spark.read.schema(_committed_schema()).parquet(data)
             .where(split_id_in(sorted(ids))))
 
 
 def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Audit: recompute per-split checksums from data and diff vs lineage.
+    """Audit: recompute per-split checksums from :func:`read_committed`
+    and diff vs :func:`committed_splits`, handed to Spark as a table.
     NULL-safe comparison: a committed split whose data was deleted yields
     NULLs on the data side — a plain != would drop exactly those rows and
     pass the audit on a dataset missing a whole split. Data of pending
     splits is not audited: readers never see it. An empty split's zero-row lineage row
     matches no data: a missing count and checksum compare as 0."""
-    lin = committed_splits(spark, out_dir).select("split_id", "row_count", "checksum")
+    lin = spark.createDataFrame(committed_splits(out_dir).select(
+        ["split_id", "row_count", "checksum"]))
     actual = _split_checksum_rows(read_committed(spark, out_dir)).withColumnRenamed(
         "row_count", "actual_rows").withColumnRenamed("checksum", "actual_checksum")
 

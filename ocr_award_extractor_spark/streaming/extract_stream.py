@@ -27,6 +27,20 @@ from ocr_award_extractor_spark.operators.extract_pipeline import (
 )
 
 
+def state_session(spark: SparkSession, partitions: int) -> SparkSession:
+    """A new session on ``spark``'s context with ``spark``'s runtime
+    settings and ``spark.sql.shuffle.partitions`` = ``partitions``. A
+    stateful query started from it freezes that many state partitions
+    into its checkpoint, and ``spark``'s own conf is never written, so a
+    query planned on ``spark`` meanwhile keeps its width."""
+    clone = spark.newSession()
+    for key, value in {**spark.conf.getAll,
+                       "spark.sql.shuffle.partitions": str(partitions)}.items():
+        if clone.conf.get(key, None) != value:
+            clone.conf.set(key, value)
+    return clone
+
+
 def make_batch_sink(output_dir: str):
     """Idempotent (exactly-once) foreachBatch sink: each microbatch
     OVERWRITES its own ``batch=<id>`` subdirectory instead of blind-
@@ -244,9 +258,7 @@ def stream_dedup_first_seen(
     batch (measured on the 5k-url corpus: 32 partitions 5.8 s vs 8
     partitions 3.7 s for the two-batch catch-up); undersizing it caps
     state parallelism for the checkpoint's lifetime. When set, the value
-    is scoped to this query via the session conf around ``start()`` —
-    streaming queries clone the session at start, so restoring the conf
-    afterwards cannot affect the running stream."""
+    is scoped to this query: it is started from :func:`state_session`."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ocr_award_extractor_spark.operators.webify import PAGE_SCHEMA
@@ -254,6 +266,8 @@ def stream_dedup_first_seen(
     if watermark is not None and state_ttl is None:
         raise ValueError("watermark= only applies with state_ttl= "
                          "(the exact path carries no watermark)")
+    if state_shuffle_partitions is not None:
+        spark = state_session(spark, state_shuffle_partitions)
     reader = spark.readStream.schema(PAGE_SCHEMA).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -282,22 +296,14 @@ def stream_dedup_first_seen(
     sink = make_batch_sink(output_dir)
     if sink_transform is not None:
         sink = sink_transform(sink)
-    writer = (
+    return (
         deduped.writeStream
         .foreachBatch(sink)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
+        .start()
     )
-    if state_shuffle_partitions is None:
-        return writer.start()
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(state_shuffle_partitions))
-    try:
-        return writer.start()
-    finally:
-        spark.conf.set(key, prev)
 
 
 def run_windowed_counts_available_now(
@@ -339,7 +345,7 @@ def run_windowed_counts_available_now(
     return spark.read.parquet(out)
 
 
-__all__ = ["stream_extract", "windowed_event_counts",
+__all__ = ["stream_extract", "windowed_event_counts", "state_session",
            "make_complete_snapshot_sink",
            "run_windowed_counts_available_now", "stream_dedup_first_seen",
            "OUT_SCHEMA"]

@@ -79,6 +79,7 @@ def test_corrupt_lineage_fails_resume_loudly(spark, tmp_path):
     untouched."""
     import glob
     import os
+    import re
 
     import pytest
 
@@ -93,35 +94,10 @@ def test_corrupt_lineage_fails_resume_loudly(spark, tmp_path):
 
     before = _file_state(out, "data")
     assert before
-    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+    with pytest.raises(Exception, match=re.escape(lineage[0])):
         run_resumable_extraction(spark, docs, out, "resume", n_splits=4,
                                  n_batches=2)
     assert _file_state(out, "data") == before
-
-
-def test_batch_readback_reads_only_its_own_splits(spark, tmp_path):
-    """A batch's checksum read-back must not touch files in other splits'
-    directories: a killed run leaves stray files there, and a concurrent
-    batch's overwrite deletes them at any moment. Here a pending split
-    outside the one batch that runs holds an unreadable stray file that
-    sorts before every file the batch writes (split 0 is left empty)."""
-    import os
-
-    from ocr_award_extractor_spark.plans.lineage import with_split_id
-
-    out = str(tmp_path / "run")
-    docs = (with_split_id(load_fixture(spark, n_docs=N_DOCS), 12)
-            .where(F.col("split_id") != 0).drop("split_id"))
-    stray = os.path.join(out, "data", "split_id=1")
-    os.makedirs(stray)
-    with open(os.path.join(stray, "part-00000-stray.parquet"), "wb") as fh:
-        fh.write(b"left behind by a killed run")
-    # batches [0, 2, 4, 6, 8, 10] and [1, 3, ...]; only the first runs
-    r = run_resumable_extraction(spark, docs, out, "run-1", n_splits=12,
-                                 n_batches=2, max_batches=1)
-    assert r["batches_committed"] == 1
-    want = docs.where(F.pmod(F.xxhash64("url"), F.lit(12)) % 2 == 0).count()
-    assert 0 < r["rows_written"] == want
 
 
 def test_verify_lineage_detects_corruption(spark, tmp_path):
@@ -132,7 +108,9 @@ def test_verify_lineage_detects_corruption(spark, tmp_path):
     NULL-comparison trap: a plain != audit passes a dataset missing a
     whole split) — the auditor flags exactly those three splits."""
     import os
-    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     out = str(tmp_path / "run3")
     docs = load_fixture(spark, n_docs=80)
@@ -140,11 +118,10 @@ def test_verify_lineage_detects_corruption(spark, tmp_path):
     assert verify_lineage(spark, out).count() == 0
 
     def rewrite_split(split_id, mutate):
-        path = os.path.join(out, "data", f"split_id={split_id}")
-        rows = spark.read.parquet(path).collect()
-        schema = spark.read.parquet(path).schema
-        spark.createDataFrame(mutate([r.asDict() for r in rows]), schema) \
-            .coalesce(1).write.mode("overwrite").parquet(path)
+        path = os.path.join(out, "data", f"split-{split_id}.parquet")
+        table = pq.read_table(path)
+        pq.write_table(pa.Table.from_pylist(mutate(table.to_pylist()),
+                                            schema=table.schema), path)
 
     # split 1: silently lose one row (valid parquet, wrong row_count)
     rewrite_split(1, lambda rows: rows[1:])
@@ -157,7 +134,7 @@ def test_verify_lineage_detects_corruption(spark, tmp_path):
     rewrite_split(2, tamper)
 
     # split 3: the whole committed split's data vanishes
-    shutil.rmtree(os.path.join(out, "data", "split_id=3"))
+    os.remove(os.path.join(out, "data", "split-3.parquet"))
 
     bad = {r["split_id"]: r for r in verify_lineage(spark, out).collect()}
     assert set(bad) == {1, 2, 3}
@@ -230,7 +207,7 @@ run_resumable_extraction(spark, docs, {repr(str(tmp_path / "out"))},
         verify_lineage,
     )
 
-    survivors = {r["run_id"] for r in committed_splits(spark, out).collect()}
+    survivors = set(committed_splits(out).column("run_id").to_pylist())
     assert survivors == {"killed-run"}
 
     docs = load_fixture(spark, n_docs=120)
@@ -242,17 +219,16 @@ run_resumable_extraction(spark, docs, {repr(str(tmp_path / "out"))},
     urls = [r["url"] for r in committed.select("url").collect()]
     assert len(urls) == 120 and len(set(urls)) == 120  # complete, no dupes
     assert verify_lineage(spark, out).count() == 0     # checksums clean
-    runs = {r["run_id"] for r in committed_splits(spark, out).collect()}
+    runs = set(committed_splits(out).column("run_id").to_pylist())
     assert runs == {"killed-run", "resume-run"}        # both runs contributed
 
 
 # ------------------------------------------------ split-commit protocol
-# The writer commits each split by four file-system steps (plans/lineage.py
-# module docstring): close the tmp, remove the split directory's other
-# entries, rename the tmp to part-00000.parquet, rename the lineage row
-# into _lineage/split-<k>.parquet. Each test below builds the on-disk
-# state a crash or retry leaves, resumes, and checks the committed rows
-# against the oracle.
+# The writer commits each split by three file-system steps (plans/lineage.py
+# module docstring): close the tmp, rename it to data/split-<k>.parquet,
+# rename the lineage row into _lineage/split-<k>.parquet. Each test below
+# builds the on-disk state a crash or retry leaves, resumes, and checks
+# the committed rows against the oracle.
 
 def _out_cols():
     from ocr_award_extractor_spark.operators.extract_pipeline import OUT_SCHEMA
@@ -281,11 +257,14 @@ def _assert_oracle(spark, docs, out):
 
 
 def _split_files(out):
+    """Every entry of ``data/``, hidden tmps included."""
     import os
 
-    data = os.path.join(out, "data")
-    return {d: sorted(os.listdir(os.path.join(data, d)))
-            for d in os.listdir(data)}
+    return sorted(os.listdir(os.path.join(out, "data")))
+
+
+def _one_file_per_split(splits):
+    return sorted(f"split-{k}.parquet" for k in splits)
 
 
 def test_crash_after_data_rename_before_lineage_row(spark, tmp_path):
@@ -299,39 +278,40 @@ def test_crash_after_data_rename_before_lineage_row(spark, tmp_path):
     docs = load_fixture(spark, n_docs=N_DOCS)
     run_resumable_extraction(spark, docs, out, "killed", n_splits=4)
     os.remove(os.path.join(out, "_lineage", "split-1.parquet"))
-    n1 = pq.read_metadata(
-        os.path.join(out, "data", "split_id=1", "part-00000.parquet")).num_rows
+    n1 = pq.read_metadata(os.path.join(out, "data", "split-1.parquet")).num_rows
 
     r = run_resumable_extraction(spark, docs, out, "resume", n_splits=4)
     assert r["splits_previously_committed"] == 3
     assert 0 < r["rows_written"] == n1
-    assert _split_files(out) == {
-        f"split_id={k}": ["part-00000.parquet"] for k in range(4)}
+    assert _split_files(out) == _one_file_per_split(range(4))
     _assert_oracle(spark, docs, out)
 
 
-def test_crash_leaves_tmp_and_stray_file_in_pending_split(spark, tmp_path):
-    """A pending split holding a killed attempt's tmp and a readable stray
-    file of another writer ends with exactly its one committed file."""
+def test_killed_attempt_tmp_is_hidden_then_removed(spark, tmp_path):
+    """A killed attempt's tmp in ``data/`` holds rows of a pending split:
+    the committed read never shows them, and the resume removes the tmp,
+    so ``data/`` ends with exactly one file per non-empty split."""
     import os
     import shutil
 
+    from ocr_award_extractor_spark.plans.lineage import with_split_id
+
     out = str(tmp_path / "b")
-    docs = load_fixture(spark, n_docs=N_DOCS)
+    # split 0 has no rows, so it commits no data file
+    docs = (with_split_id(load_fixture(spark, n_docs=N_DOCS), 4)
+            .where(F.col("split_id") != 0).drop("split_id"))
     # batches [0, 2] and [1, 3]; the killed run committed the first
     run_resumable_extraction(spark, docs, out, "killed", n_splits=4,
                              n_batches=2, max_batches=1)
-    pending = os.path.join(out, "data", "split_id=1")
-    os.makedirs(pending)
-    with open(os.path.join(pending, ".part-0badc0de.tmp"), "wb") as fh:
-        fh.write(b"half-written by a killed attempt")
-    shutil.copy(os.path.join(out, "data", "split_id=0", "part-00000.parquet"),
-                os.path.join(pending, "part-00000-stray.c000.snappy.parquet"))
+    assert _split_files(out) == _one_file_per_split([2])
+    n_committed = read_committed(spark, out).count()
+    tmp = os.path.join(out, "data", ".split-1-0badc0de.tmp")
+    shutil.copy(os.path.join(out, "data", "split-2.parquet"), tmp)
+    assert read_committed(spark, out).count() == n_committed > 0
 
     r = run_resumable_extraction(spark, docs, out, "resume", n_splits=4)
     assert r["splits_previously_committed"] == 2
-    assert _split_files(out) == {
-        f"split_id={k}": ["part-00000.parquet"] for k in range(4)}
+    assert _split_files(out) == _one_file_per_split([1, 2, 3])
     _assert_oracle(spark, docs, out)
 
 
@@ -352,8 +332,8 @@ def test_task_retry_rewrites_split_idempotently(spark, tmp_path):
 
     out = str(tmp_path / "c")
     docs = load_fixture(spark, n_docs=N_DOCS)
-    batches = (with_split_id(extract_documents(docs), 4)
-               .withColumn("_h", row_hash()).toArrow().to_batches(max_chunksize=64))
+    batches = (with_split_id(extract_documents(docs), 4).withColumn("_h", row_hash())
+               .toArrow().sort_by("split_id").to_batches(max_chunksize=64))
     assert len(batches) > 1           # several batches, several splits each
     kw = dict(data_dir=os.path.join(out, "data"),
               lineage_dir=os.path.join(out, "_lineage"), run_id="retried")
@@ -366,8 +346,7 @@ def test_task_retry_rewrites_split_idempotently(spark, tmp_path):
     assert first.equals(second)
     assert first.column("split_id").to_pylist() == [0, 1, 2, 3]
     assert sum(first.column("row_count").to_pylist()) == N_DOCS
-    assert _split_files(out) == {
-        f"split_id={k}": ["part-00000.parquet"] for k in range(4)}
+    assert _split_files(out) == _one_file_per_split(range(4))
     assert sorted(os.listdir(os.path.join(out, "_lineage"))) == [
         f"split-{k}.parquet" for k in range(4)]
     _assert_oracle(spark, docs, out)
@@ -403,51 +382,40 @@ def test_committed_rows_equal_extraction_on_every_column(spark, tmp_path):
         + [("split_id", IntegerType())])
 
 
-def test_resume_over_spark_written_split(spark, tmp_path):
-    """Outputs of the earlier batch protocol stay readable: split 0 was
-    committed by Spark's partitioned writer with a uuid-named lineage file
-    carrying committed_seq; the resume commits the rest with the Arrow
-    writer and both writers' files read back together."""
+def test_old_layout_root_is_refused_untouched(spark, tmp_path):
+    """A root of the older layout (one ``data/split_id=<k>/`` directory
+    per split, written here by Spark's partitioned writer, with its
+    lineage row and pinned n_splits) is refused with an error naming the
+    root, before any file under it changes."""
     import json
     import os
-    import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from ocr_award_extractor_spark.operators.extract_pipeline import (
-        OUT_SCHEMA, extract_documents,
+        extract_documents,
     )
     from ocr_award_extractor_spark.plans.lineage import row_hash, with_split_id
 
-    out = str(tmp_path / "mixed")
+    out = str(tmp_path / "old")
     docs = load_fixture(spark, n_docs=N_DOCS)
     split0 = with_split_id(extract_documents(docs), 4).where(F.col("split_id") == 0)
     split0.write.partitionBy("split_id").parquet(os.path.join(out, "data"))
     n, checksum = split0.agg(F.count(F.lit(1)), F.bit_xor(row_hash())).first()
     os.makedirs(os.path.join(out, "_lineage"))
     pq.write_table(pa.table({
-        "run_id": ["batch-run"], "split_id": pa.array([0], pa.int32()),
-        "row_count": [n], "checksum": [checksum],
-        "committed_seq": pa.array([0], pa.int32())}),
-        os.path.join(out, "_lineage", f"part-{uuid.uuid4().hex}.parquet"))
+        "run_id": ["old-run"], "split_id": pa.array([0], pa.int32()),
+        "row_count": [n], "checksum": [checksum]}),
+        os.path.join(out, "_lineage", "split-0.parquet"))
     with open(os.path.join(out, "_meta.json"), "w", encoding="utf-8") as fh:
         json.dump({"n_splits": 4}, fh)
-    spark_written = _file_state(out, "data/split_id=0")
+    before = _file_state(out, "")
+    assert any("split_id=0" in p for p, _, _ in before)
 
-    r = run_resumable_extraction(spark, docs, out, "split-run", n_splits=4)
-    assert r["splits_previously_committed"] == 1
-    assert _file_state(out, "data/split_id=0") == spark_written
-
-    def fields(k):
-        path = os.path.join(out, "data", f"split_id={k}")
-        return [(f.name, f.dataType) for f in spark.read.parquet(path).schema]
-
-    assert fields(0) == fields(1) == [(f.name, f.dataType) for f in OUT_SCHEMA.fields]
-    cols = _out_cols()
-    assert (_rows_by_url(read_committed(spark, out), cols)
-            == _rows_by_url(extract_documents(docs), cols))
-    assert verify_lineage(spark, out).count() == 0
+    with pytest.raises(ValueError, match=f"output {out} has the old"):
+        run_resumable_extraction(spark, docs, out, "new-run", n_splits=4)
+    assert _file_state(out, "") == before
 
 
 def _jobs(spark, group, fn):
@@ -468,9 +436,10 @@ def _jobs(spark, group, fn):
 
 def test_commit_job_budget(spark, tmp_path):
     """One commit job: a fresh directory costs at most 4 Spark jobs (the
-    AQE stages of the one commit plan), a fully committed one at most 1
-    (the lineage read). Jobs submitted from other driver threads do not
-    inherit the job group, so ungrouped jobs started meanwhile count too."""
+    AQE stages of the one commit plan), a fully committed one none (the
+    driver reads the lineage with pyarrow). Jobs submitted from other
+    driver threads do not inherit the job group, so ungrouped jobs started
+    meanwhile count too."""
     out = str(tmp_path / "budget")
     docs = load_fixture(spark, n_docs=N_DOCS)
 
@@ -479,23 +448,25 @@ def test_commit_job_budget(spark, tmp_path):
             spark, docs, out, run_id, n_splits=4))[0]
 
     assert 1 <= len(jobs("lineage-budget-fresh", "fresh")) <= 4
-    assert len(jobs("lineage-budget-rerun", "rerun")) <= 1
+    assert jobs("lineage-budget-rerun", "rerun") == set()
     assert read_committed(spark, out).count() == N_DOCS
 
 
-def test_committed_read_job_budget(spark, tmp_path):
+@pytest.mark.parametrize("n_splits", [16, 64])
+def test_committed_read_job_budget(spark, tmp_path, n_splits):
     """The committed read takes the split ids from ``_lineage`` on the
-    driver and reads ``data/`` with the committed schema: building it
-    starts no Spark job, and the WET export over it runs exactly one."""
+    driver and reads the flat ``data/`` with the committed schema: building
+    it starts no Spark job, also above the 32 paths from which Spark lists
+    in a job, and the WET export over it runs exactly one."""
     from ocr_award_extractor_spark.sources.warc import write_wet
 
     out = str(tmp_path / "read")
     docs = load_fixture(spark, n_docs=N_DOCS)
-    run_resumable_extraction(spark, docs, out, "read", n_splits=16)
-    jobs, committed = _jobs(spark, "committed-read",
+    run_resumable_extraction(spark, docs, out, "read", n_splits=n_splits)
+    jobs, committed = _jobs(spark, f"committed-read-{n_splits}",
                             lambda: read_committed(spark, out))
     assert jobs == set()
-    jobs, written = _jobs(spark, "committed-read-wet", lambda: write_wet(
+    jobs, written = _jobs(spark, f"committed-read-wet-{n_splits}", lambda: write_wet(
         committed, str(tmp_path / "wet")))
     assert len(jobs) == 1
     assert written == committed.where(F.col("status") == "success").count() > 0
@@ -528,9 +499,10 @@ def test_commit_plan_sorts_each_writer_task_by_split(spark, tmp_path, monkeypatc
 
 def test_split_filters_are_one_in_expression(spark, tmp_path, monkeypatch):
     """A fresh commit plans no split_id filter (every split is pending), a
-    resume plans one IN over its pending ids, and the committed read
-    prunes ``data/`` to the committed ids; with no committed id the read
-    is an empty frame (``IN ()`` does not parse)."""
+    resume plans one IN over its pending ids, and the committed read scans
+    the flat ``data/`` with one IN over the committed ids as a data filter
+    pushed to parquet, not a partition filter; with no committed id the
+    read is an empty frame (``IN ()`` does not parse)."""
     import re
     import shutil
 
@@ -554,16 +526,17 @@ def test_split_filters_are_one_in_expression(spark, tmp_path, monkeypatch):
     for lines in filters[1:]:
         assert len(lines) == 1 and re.search(r"\b(IN|INSET)\b", lines[0]), lines
     scan = read_committed(spark, out)._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"PartitionFilters: \[split_id#\d+ (IN|INSET) ", scan), scan
+    assert re.search(r"DataFilters: \[.*split_id#\d+ (IN|INSET) ", scan), scan
+    assert re.search(r"PushedFilters: \[.*In\(split_id, ", scan), scan
+    assert "PartitionFilters: []" in scan, scan
     shutil.rmtree(tmp_path / "resume" / "_lineage")
     assert read_committed(spark, out).count() == 0
 
 
 def test_writer_holds_one_open_file(spark, tmp_path, monkeypatch):
     """Fed batches sorted by split_id that each span several splits, the
-    writer has at most one ParquetWriter open at a time, and it commits
-    the same files and lineage rows as when fed the same rows unsorted
-    (each split then comes back several times and is reopened)."""
+    writer has at most one ParquetWriter open at a time and commits one
+    file and one lineage row per split."""
     import os
 
     import pyarrow as pa
@@ -594,41 +567,48 @@ def test_writer_holds_one_open_file(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(pq, "ParquetWriter", Counting)
 
-    def write(out, batches):
-        kw = dict(data_dir=os.path.join(out, "data"),
-                  lineage_dir=os.path.join(out, "_lineage"), run_id="r")
-        return pa.Table.from_batches(
-            list(_write_splits(iter(batches), **kw))).sort_by("split_id")
-
+    out = str(tmp_path / "sorted")
     batches = rows.sort_by("split_id").to_batches(max_chunksize=16)
     assert sum(len(set(b.column("split_id").to_pylist())) > 1 for b in batches) > 1
-    got = write(str(tmp_path / "sorted"), batches)
+    got = pa.Table.from_batches(list(_write_splits(
+        iter(batches), data_dir=os.path.join(out, "data"),
+        lineage_dir=os.path.join(out, "_lineage"), run_id="r"))).sort_by("split_id")
     assert state == {"open": 0, "peak": 1}
     assert got.column("split_id").to_pylist() == list(range(n_splits))
+    assert _split_files(out) == _one_file_per_split(range(n_splits))
+    assert sorted(os.listdir(os.path.join(out, "_lineage"))) == (
+        _one_file_per_split(range(n_splits)))
 
+
+def test_writer_raises_on_unsorted_input(spark, tmp_path):
+    """Fed unsorted batches, a split comes back after its commit: the
+    writer raises instead of rewriting a committed split, and leaves no
+    tmp behind."""
+    import os
+
+    from ocr_award_extractor_spark.operators.extract_pipeline import (
+        extract_documents,
+    )
+    from ocr_award_extractor_spark.plans.lineage import (
+        _write_splits, row_hash, with_split_id,
+    )
+
+    rows = (with_split_id(extract_documents(load_fixture(spark, n_docs=N_DOCS)), 4)
+            .withColumn("_h", row_hash()).toArrow())
     ids = rows.column("split_id").to_pylist()
     assert ids != sorted(ids)
-    unsorted = str(tmp_path / "unsorted")
-    assert write(unsorted, rows.to_batches(max_chunksize=16)).equals(got)
-    assert state == {"open": 0, "peak": 1}
-
-    def committed(out):
-        lineage = pq.read_table(os.path.join(out, "_lineage")).sort_by("split_id")
-        data = {k: pq.read_table(os.path.join(
-            out, "data", f"split_id={k}", "part-00000.parquet")).sort_by("url")
-            for k in range(n_splits)}
-        return lineage, data
-
-    assert committed(str(tmp_path / "sorted")) == committed(unsorted)
-    assert _split_files(unsorted) == {
-        f"split_id={k}": ["part-00000.parquet"] for k in range(n_splits)}
+    out = str(tmp_path / "unsorted")
+    with pytest.raises(ValueError, match="came back after its commit"):
+        list(_write_splits(iter(rows.to_batches(max_chunksize=16)),
+                           data_dir=os.path.join(out, "data"),
+                           lineage_dir=os.path.join(out, "_lineage"), run_id="r"))
+    assert not [f for f in _split_files(out) if f.startswith(".")]
 
 
 @pytest.mark.parametrize("n_docs,n_splits", [(0, 4), (10, 64)])
 def test_empty_splits_commit_once(spark, tmp_path, n_docs, n_splits):
     """A pending split with no input rows commits a zero-row lineage row
-    and no data: the rerun starts at most one job (the lineage read) and
-    finds every split committed, the committed read holds every input
+    and no data: the rerun starts no job and finds every split committed, the committed read holds every input
     row (none on an empty input, which writes no data/), and the audit
     finds nothing."""
     from ocr_award_extractor_spark.operators.webify import PAGE_SCHEMA
@@ -640,7 +620,7 @@ def test_empty_splits_commit_once(spark, tmp_path, n_docs, n_splits):
     assert first["rows_written"] == n_docs
     jobs, again = _jobs(spark, f"empty-rerun-{n_docs}", lambda: (
         run_resumable_extraction(spark, docs, out, "again", n_splits=n_splits)))
-    assert len(jobs) <= 1
+    assert jobs == set()
     assert again["splits_previously_committed"] == n_splits
     assert again["batches_committed"] == again["rows_written"] == 0
     assert read_committed(spark, out).count() == n_docs

@@ -225,6 +225,81 @@ def test_driver_streaming_queries_are_reinvocable(spark):
     assert len(urls) > 0 and len(set(urls)) == len(urls)   # deduped, non-empty
 
 
+def test_state_width_is_set_on_a_clone_not_the_callers_session(
+        spark, tmp_path, monkeypatch):
+    """Both stateful queries that pick their own state width, the dedup
+    operator's ``state_shuffle_partitions`` and the driver's windowed
+    counts, start from a clone of the caller's session: the caller's
+    ``spark.sql.shuffle.partitions`` is never set (a query planned on it
+    meanwhile would get the state width), the width reaches the
+    checkpoint, and the caller's runtime settings come along."""
+    import json
+    from datetime import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.conf import RuntimeConfig
+
+    import __spark_entry__ as entrymod
+    from ocr_award_extractor_spark.streaming.extract_stream import (
+        stream_dedup_first_seen,
+    )
+
+    def state_partitions(ck):
+        return len([d for d in os.listdir(os.path.join(ck, "state", "0"))
+                    if d.isdigit()])
+
+    key, provider_key = ("spark.sql.shuffle.partitions",
+                         "spark.sql.streaming.stateStore.providerClass")
+    rocksdb = ("org.apache.spark.sql.execution.streaming.state."
+               "RocksDBStateStoreProvider")
+    width = spark.conf.get(key)
+    caller_writes = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, k, v):
+        if self is spark.conf and k == key:
+            caller_writes.append(v)
+        real_set(self, k, v)
+
+    src = tmp_path / "pages"
+    spark.createDataFrame(
+        [("https://x.example/a", datetime(2024, 3, 1), b"", "", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    ).coalesce(1).write.parquet(str(src / "b1"))
+    ck = str(tmp_path / "ck")
+    spark.conf.set(provider_key, rocksdb)
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    try:
+        q = stream_dedup_first_seen(spark, str(src) + "/*", ck,
+                                    str(tmp_path / "out"),
+                                    state_shuffle_partitions=3)
+        q.awaitTermination(300)
+    finally:
+        monkeypatch.undo()
+        spark.conf.unset(provider_key)
+    with open(os.path.join(ck, "offsets", "0"), encoding="utf-8") as fh:
+        frozen = json.loads(fh.read().splitlines()[1])["conf"]
+    assert frozen[key] == "3" and frozen[provider_key] == rocksdb
+    assert state_partitions(ck) == 3
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(pa.table({
+        "event_id": [1], "user_id": [7], "event_type": ["click"],
+        "ts": pa.array([datetime(2024, 3, 1, 9)], pa.timestamp("us", "UTC")),
+        "value": [1.5], "props": ["{}"]}), str(sf / "events.parquet"))
+    base = entrymod._stream_tmp(str(sf), "events")
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    try:
+        assert entrymod._streaming_windowed_counts(spark, str(sf)).count() == 1
+        cores = spark.sparkContext.defaultParallelism
+        assert state_partitions(os.path.join(base, "ck")) == max(8, cores // 4)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    assert caller_writes == [] and spark.conf.get(key) == width
+
+
 def test_stream_checkpoint_incremental_resume(spark, tmp_path):
     """Checkpoint resume: a second availableNow run over the same directory
     processes ONLY files that arrived since the first run — no reprocessing,
