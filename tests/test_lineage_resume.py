@@ -287,6 +287,64 @@ def test_crash_after_data_rename_before_lineage_row(spark, tmp_path):
     _assert_oracle(spark, docs, out)
 
 
+def test_batch_readback_reads_only_its_own_splits(spark, tmp_path):
+    """A batch's commit must not touch files of other splits: a killed run
+    leaves files in ``data/`` for splits it never committed. Here a pending
+    split outside the one batch that runs holds an unreadable file that
+    sorts before every file the batch writes (split 0 is left empty): the
+    batch counts exactly its own rows and leaves that file as it was, and
+    the batch that later commits the split replaces it."""
+    import os
+
+    from ocr_award_extractor_spark.plans.lineage import with_split_id
+
+    out = str(tmp_path / "run")
+    docs = (with_split_id(load_fixture(spark, n_docs=N_DOCS), 12)
+            .where(F.col("split_id") != 0).drop("split_id"))
+    os.makedirs(os.path.join(out, "data"))
+    stray = os.path.join(out, "data", "split-1.parquet")
+    with open(stray, "wb") as fh:
+        fh.write(b"left behind by a killed run")
+    # batches [0, 2, 4, 6, 8, 10] and [1, 3, ...]; only the first runs
+    r = run_resumable_extraction(spark, docs, out, "run-1", n_splits=12,
+                                 n_batches=2, max_batches=1)
+    assert r["batches_committed"] == 1
+    want = docs.where(F.pmod(F.xxhash64("url"), F.lit(12)) % 2 == 0).count()
+    assert 0 < r["rows_written"] == want
+    with open(stray, "rb") as fh:
+        assert fh.read() == b"left behind by a killed run"
+
+    r = run_resumable_extraction(spark, docs, out, "run-2", n_splits=12,
+                                 n_batches=2)
+    assert r["rows_written"] == docs.count() - want
+    assert _split_files(out) == _one_file_per_split(range(1, 12))
+    _assert_oracle(spark, docs, out)
+
+
+def test_crash_leaves_tmp_and_stray_file_in_pending_split(spark, tmp_path):
+    """A pending split holding a killed attempt's tmp and a readable stray
+    file in its place (another split's rows) ends with exactly its one
+    committed file and its own rows."""
+    import os
+    import shutil
+
+    out = str(tmp_path / "stray")
+    docs = load_fixture(spark, n_docs=N_DOCS)
+    # batches [0, 2] and [1, 3]; the killed run committed the first
+    run_resumable_extraction(spark, docs, out, "killed", n_splits=4,
+                             n_batches=2, max_batches=1)
+    data = os.path.join(out, "data")
+    with open(os.path.join(data, ".split-1-0badc0de.tmp"), "wb") as fh:
+        fh.write(b"half-written by a killed attempt")
+    shutil.copy(os.path.join(data, "split-0.parquet"),
+                os.path.join(data, "split-1.parquet"))
+
+    r = run_resumable_extraction(spark, docs, out, "resume", n_splits=4)
+    assert r["splits_previously_committed"] == 2
+    assert _split_files(out) == _one_file_per_split(range(4))
+    _assert_oracle(spark, docs, out)
+
+
 def test_killed_attempt_tmp_is_hidden_then_removed(spark, tmp_path):
     """A killed attempt's tmp in ``data/`` holds rows of a pending split:
     the committed read never shows them, and the resume removes the tmp,
