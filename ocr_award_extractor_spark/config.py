@@ -74,10 +74,12 @@ def find_spark_submit() -> str | None:
 
 
 def build_pyfiles_zip(zip_path: str | None = None) -> str:
-    """Zip the package's .py files into the artifact a cluster user ships
-    with ``spark-submit --py-files engine.zip`` (SURVEY §7 deploy line).
-    Shared by ``ensure_package_on_workers`` (runtime addPyFile analog)
-    and the literal spark-submit subprocess test."""
+    """Zip the package's .py files, and the C source its native HTML
+    segmenter is built from (``functions/_segscan.c``), into the artifact
+    a cluster user ships with ``spark-submit --py-files engine.zip``
+    (SURVEY §7 deploy line). Shared by ``ensure_package_on_workers``
+    (runtime addPyFile analog) and the literal spark-submit subprocess
+    test."""
     import zipfile
 
     import os as _os
@@ -96,7 +98,7 @@ def build_pyfiles_zip(zip_path: str | None = None) -> str:
     with zipfile.ZipFile(tmp, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:
-                if fn.endswith(".py"):
+                if fn.endswith((".py", ".c")):
                     full = os.path.join(root, fn)
                     zf.write(full, os.path.relpath(full, _PKG_PARENT))
     os.replace(tmp, zip_path)

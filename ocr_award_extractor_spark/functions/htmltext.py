@@ -28,19 +28,35 @@ characters, and a segment is kept iff it is not inside a killed container
 (script/style/nav/footer/… tags, or class/id matching a boilerplate
 pattern, or display:none) and its link density is below threshold.
 
-Scale note: this runs inside mapInPandas Arrow batches on executors —
-stdlib-only by design (the container has no lxml/selectolax); the parser
-backend is a single function (:func:`segment_html`) so a faster native
-backend is a drop-in swap on a real cluster.
+Scale note: this runs inside mapInPandas Arrow batches on executors, one
+document at a time. The parser backend is one function,
+:func:`segment_html`, with three tiers that must produce the same
+segments:
+
+1. the native scanner (``_segscan.c``), built with the system C compiler
+   and loaded with ctypes when this module is imported (see
+   :mod:`~ocr_award_extractor_spark.functions.segscan`; without a
+   compiler it is off, with one WARNING);
+2. the Python fast scanner (:func:`_fast_scan`), a regex tokenizer
+   driving :class:`_Segmenter`;
+3. the stdlib ``html.parser`` driving :class:`_Segmenter`, the reference.
+
+The first two are faithful-or-bail: a construct a scanner cannot handle
+exactly as the reference does makes it decline the whole document, which
+then takes the next tier. So a tier can only change the output by
+mis-handling a construct it claims to handle; tests/test_fast_segmenter.py
+pins all three tiers equal.
 """
 
 from __future__ import annotations
 
 import logging
 import re
+from array import array
 from dataclasses import dataclass, field
 from html.parser import HTMLParser
 
+from ocr_award_extractor_spark.functions import segscan as _segscan
 from ocr_award_extractor_spark.functions.ocr_slot import (
     ocr_image_page, sniff_image,
 )
@@ -185,15 +201,14 @@ class _Segmenter(HTMLParser):
 
 def segment_html_stdlib(html_str: str) -> list[Segment]:
     """Reference tokenizer: stdlib HTMLParser driving the segmenter.
-    Never raises on malformed markup (HTMLParser is tolerant by
-    construction). The fast scanner below must be event-equal to this on
-    every document it accepts — pinned by tests/test_fast_segmenter.py."""
+    HTMLParser is tolerant of malformed markup by construction; should it
+    raise anyway, the exception propagates (:func:`extract_page` turns it
+    into an error row). The fast scanners below must be event-equal to
+    this on every document they accept — pinned by
+    tests/test_fast_segmenter.py."""
     seg = _Segmenter()
-    try:
-        seg.feed(html_str)
-        seg.close()
-    except Exception:  # pragma: no cover — stdlib parser is non-raising
-        pass
+    seg.feed(html_str)
+    seg.close()
     return [s for s in seg.segments if not s.killed]
 
 
@@ -245,9 +260,9 @@ def _stdlib_fast_compatible() -> bool:
     with one WARNING that names the failed probe."""
     try:
         import _markupbase as _mb
-        from html.parser import HTMLParser as _HP
+        import html.parser as _hp
 
-        probe = _HP()
+        probe = _hp.HTMLParser()
         probe.set_cdata_mode("script")
         checks = {
             "script CDATA close pattern":
@@ -255,7 +270,14 @@ def _stdlib_fast_compatible() -> bool:
             "comment close pattern":
                 _mb._commentclose.pattern == _FAST_COMMENT_CLOSE.pattern,
             "CDATA content elements":
-                _HP.CDATA_CONTENT_ELEMENTS == ("script", "style"),
+                _hp.HTMLParser.CDATA_CONTENT_ELEMENTS == ("script", "style"),
+            # the native scanner hard-codes these three
+            "end tag pattern": _hp.endtagfind.pattern == _FAST_END.pattern,
+            "tag name pattern": _hp.tagfind_tolerant.pattern
+                == r"([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*",
+            "attribute pattern": _hp.attrfind_tolerant.pattern
+                == r"""((?<=[\'"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*"""
+                   r"""(\'[^\']*\'|"[^"]*"|(?![\'"])[^>\s]*))?(?:\s|/(?!>))*""",
         }
         failed = [name for name, ok in checks.items() if not ok]
     except Exception as e:
@@ -276,11 +298,13 @@ def _fast_attrs(blob: str):
     consumed); the trailing '>' sentinel restores the context attrfind's
     `/(?!>)` tail sees in rawdata — without it a self-closing slash at
     blob end is swallowed as inter-attr junk (<p class="x"/> would turn
-    into an unclosed suppressor; caught by the attr-shape fuzz).
+    into an unclosed suppressor; caught by the attr-shape fuzz). The
+    blob's trailing whitespace stays, as in rawdata: '/ >' is a start
+    tag, not a self-closing one.
     Returns (attrs, unconsumed-remainder) — caller bails unless the
     remainder is '' (normal tag) or '/' (self-closing)."""
     attrs = []
-    blob2 = " " + blob.strip() + ">"
+    blob2 = " " + blob.lstrip() + ">"
     end = len(blob2) - 1
     k = 1
     while k < end:
@@ -296,7 +320,7 @@ def _fast_attrs(blob: str):
             val = _unescape(val)
         attrs.append((name.lower(), val))
         k = am.end()
-    return attrs, blob2[k:end].strip()
+    return attrs, blob2[k:end].lstrip()
 
 
 _ASCII_LETTERS = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
@@ -345,7 +369,9 @@ def _fast_scan(rd: str, seg: _Segmenter) -> None:
                 hs(tag, attrs)
                 if tag in _FAST_CDATA_CLOSE:   # script/style: raw till close
                     cm = _FAST_CDATA_CLOSE[tag].search(rd, endpos)
-                    if not cm:
+                    # a non-ASCII close (</ſcript>: IGNORECASE folds ſ
+                    # to s) is data to html.parser's end-tag regex
+                    if not cm or not cm.group().isascii():
                         raise _FastBail
                     if cm.start() > endpos:
                         hd(rd[endpos:cm.start()])
@@ -383,19 +409,77 @@ def _fast_scan(rd: str, seg: _Segmenter) -> None:
     return None
 
 
-def segment_html(html_str: str) -> list[Segment]:
-    """Parse HTML into document-order text segments: fast scanner first,
-    stdlib HTMLParser whenever the scanner declines the document (or the
-    interpreter's html.parser internals drifted — see _FAST_ENABLED)."""
-    if not _FAST_ENABLED:
-        return segment_html_stdlib(html_str)
+def _fast_segments(html_str: str) -> list[Segment] | None:
+    """The Python fast scanner's segments, None when it declines."""
     seg = _Segmenter()
     try:
         _fast_scan(html_str, seg)
         seg._flush()
     except _FastBail:
-        return segment_html_stdlib(html_str)
+        return None
     return [s for s in seg.segments if not s.killed]
+
+
+# --------------------------------------------------------------------------
+# Native tier: _segscan.c runs _fast_scan's tokenizing and the _Segmenter
+# state machine in C, one call per document (see functions/segscan.py for
+# the build). Same faithful-or-bail contract, with more bails: see the C
+# file's header. It returns the kept segments' text chunks as code-point
+# offsets; the Segments are built here, so parts, link_chars and text()
+# are those of the Python scanner.
+
+_NATIVE = _segscan.load() if _FAST_ENABLED else None
+
+
+def _native_segments(html_str: str) -> list[Segment] | None:
+    """The native scanner's segments, None when it declines."""
+    try:
+        doc = html_str.encode("utf-8")
+    except UnicodeEncodeError:          # lone surrogates
+        return None
+    if len(doc) >= 1 << 31:             # offsets are int32
+        return None
+    # every chunk ends at a '<' or at the end: one (start, end, tag) each
+    out = array("i", bytes(12 * (html_str.count("<") + 1)))
+    n = _NATIVE.segscan(doc, len(doc), html_str.isascii(),
+                        out.buffer_info()[0], len(out))
+    if n < 0:
+        return None
+    segments = []
+    seg_id = -1
+    vals = out[:3 * n].tolist()
+    for k in range(0, 3 * n, 3):
+        part = html_str[vals[k]:vals[k + 1]]
+        if "&" in part:
+            part = _unescape(part)
+        tag = vals[k + 2]
+        if tag >> 1 != seg_id:          # the first chunk of a segment
+            seg_id = tag >> 1
+            cur = Segment([part], len(part) if tag & 1 else 0)
+            segments.append(cur)
+        else:
+            cur.parts.append(part)
+            if tag & 1:
+                cur.link_chars += len(part)
+    return segments
+
+
+def segment_html(html_str: str) -> list[Segment]:
+    """Parse HTML into document-order text segments. Three tiers, each
+    taking the documents the one before it declines: the native scanner,
+    the Python fast scanner, the stdlib HTMLParser. Only the stdlib one
+    runs if the interpreter's html.parser internals drifted (see
+    _FAST_ENABLED); the native one is skipped if it could not be built."""
+    if not _FAST_ENABLED:
+        return segment_html_stdlib(html_str)
+    if _NATIVE is not None:
+        segments = _native_segments(html_str)
+        if segments is not None:
+            return segments
+    segments = _fast_segments(html_str)
+    if segments is None:
+        return segment_html_stdlib(html_str)
+    return segments
 
 
 def line_confidence(text_len: int, link_density: float, repaired: bool) -> float:
@@ -453,7 +537,17 @@ def extract_page(html_bytes) -> dict:
     fmt = sniff_image(html_bytes)
     if fmt is not None:
         return ocr_image_page(html_bytes, fmt)
+    try:
+        return _html_page(html_bytes)
+    except Exception as e:  # the kernel's boundary: an error row, never a raise
+        _log.warning("HTML segmenter raised on a document", exc_info=True)
+        return {"status": "error", "message": f"HTML segmenter raised {type(e).__name__}",
+                "lines": [], "confs": [], "strategy": ""}
 
+
+def _html_page(html_bytes: bytes) -> dict:
+    """:func:`extract_page` for an HTML payload: the strict and repair
+    passes and the pick-best."""
     results = []
     strict_str: str | None
     try:

@@ -50,6 +50,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import re
 import uuid
 
 import pyarrow as pa
@@ -296,18 +297,35 @@ def run_resumable_extraction(
 
 def read_committed(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read ONLY committed data (the snapshot-visibility read path): the
-    read of the flat ``data/`` with :func:`_committed_schema` keeps the
-    rows of the splits in :func:`committed_splits` by one ``split_id IN
-    (…)`` pushed to the parquet scan. Building the frame starts no Spark
-    job. A corrupt lineage file raises here. With no ``data/`` or no
-    committed split (nothing committed yet, or only empty splits) the
-    frame is empty."""
+    read of the flat ``data/`` with :func:`_committed_schema`, minus the
+    rows of any listed split without a lineage row.
+
+    The frame is built first, and its file list (``inputFiles()``, which
+    starts no job) is compared with :func:`committed_splits`, read after
+    it: a split renamed into place after the listing is never read, and
+    one committed between the listing and the lineage read is trusted.
+    When every listed ``split-<k>.parquet`` is committed (a clean root),
+    the read is not filtered. A file of a pending split exists only in the
+    crash window between commit steps 2 and 3; such stray splits are
+    filtered out by one ``split_id NOT IN (…)``. Building the frame starts
+    no Spark job. A corrupt lineage file raises here, and so does a file in
+    ``data/`` that is not a split's (its rows would be read unchecked).
+    With no ``data/`` or no committed split the frame is empty."""
     data = os.path.join(out_dir, "data")
-    ids = committed_splits(out_dir).column("split_id").to_pylist()
-    if not ids or not os.path.isdir(data):
+    if not os.path.isdir(data):
         return spark.createDataFrame([], _committed_schema())
-    return (spark.read.schema(_committed_schema()).parquet(data)
-            .where(split_id_in(sorted(ids))))
+    frame = spark.read.schema(_committed_schema()).parquet(data)
+    listed = set()
+    for path in frame.inputFiles():
+        m = re.fullmatch(r"split-(\d+)\.parquet", path.rsplit("/", 1)[-1])
+        if m is None:
+            raise ValueError(f"{path} in {data} is not a split's data file")
+        listed.add(int(m.group(1)))
+    committed = set(committed_splits(out_dir).column("split_id").to_pylist())
+    strays = sorted(listed - committed)
+    if strays:
+        frame = frame.where(~split_id_in(strays))
+    return frame
 
 
 def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:

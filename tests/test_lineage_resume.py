@@ -557,12 +557,16 @@ def test_commit_plan_sorts_each_writer_task_by_split(spark, tmp_path, monkeypatc
 
 def test_split_filters_are_one_in_expression(spark, tmp_path, monkeypatch):
     """A fresh commit plans no split_id filter (every split is pending), a
-    resume plans one IN over its pending ids, and the committed read scans
-    the flat ``data/`` with one IN over the committed ids as a data filter
-    pushed to parquet, not a partition filter; with no committed id the
-    read is an empty frame (``IN ()`` does not parse)."""
+    resume plans one IN over its pending ids. The committed read of a
+    clean root scans the flat ``data/`` with no filter at all; on a root
+    killed between commit steps 2 and 3 it filters out exactly the stray
+    splits (data file, no lineage row) by one NOT IN pushed to parquet,
+    not a partition filter; with no committed id the read is empty."""
+    import os
     import re
     import shutil
+
+    import pyarrow.parquet as pq
 
     docs = load_fixture(spark, n_docs=60)
     plans = []
@@ -583,12 +587,45 @@ def test_split_filters_are_one_in_expression(spark, tmp_path, monkeypatch):
     assert len(filters) == 3 and filters[0] == [], plans[0]
     for lines in filters[1:]:
         assert len(lines) == 1 and re.search(r"\b(IN|INSET)\b", lines[0]), lines
-    scan = read_committed(spark, out)._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"DataFilters: \[.*split_id#\d+ (IN|INSET) ", scan), scan
-    assert re.search(r"PushedFilters: \[.*In\(split_id, ", scan), scan
-    assert "PartitionFilters: []" in scan, scan
+
+    def scan(root):
+        return read_committed(spark, root)._jdf.queryExecution().executedPlan().toString()
+
+    for root in (fresh, out):
+        plan = scan(root)
+        assert "DataFilters: []" in plan and "PushedFilters: []" in plan, plan
+        assert "Filter " not in plan, plan
+    strays = [3, 11]
+    kept = 0
+    for k in range(16):
+        path = os.path.join(out, "data", f"split-{k}.parquet")
+        if k in strays:
+            assert os.path.exists(path)
+            os.remove(os.path.join(out, "_lineage", f"split-{k}.parquet"))
+        elif os.path.exists(path):
+            kept += pq.read_metadata(path).num_rows
+    plan = scan(out)
+    assert re.search(r"DataFilters: \[.*NOT split_id#\d+ (IN|INSET) \(?3, ?11\)?\]", plan), plan
+    assert re.search(r"PushedFilters: \[.*Not\(In\(split_id, \[(3,11|11,3)\]\)\)", plan), plan
+    assert "PartitionFilters: []" in plan, plan
+    assert read_committed(spark, out).count() == kept
     shutil.rmtree(tmp_path / "resume" / "_lineage")
     assert read_committed(spark, out).count() == 0
+
+
+def test_committed_read_refuses_a_file_that_is_not_a_split(spark, tmp_path):
+    """A file in ``data/`` that is not ``split-<k>.parquet`` (here a copy
+    of a committed split) is refused by name, never read unchecked."""
+    import os
+    import shutil
+
+    out = str(tmp_path / "a")
+    run_resumable_extraction(spark, load_fixture(spark, n_docs=N_DOCS), out, "r",
+                             n_splits=4)
+    data = os.path.join(out, "data")
+    shutil.copy(os.path.join(data, "split-0.parquet"), os.path.join(data, "copy.parquet"))
+    with pytest.raises(ValueError, match="copy.parquet"):
+        read_committed(spark, out)
 
 
 def test_writer_holds_one_open_file(spark, tmp_path, monkeypatch):

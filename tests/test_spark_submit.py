@@ -52,3 +52,58 @@ def test_spark_submit_pyfiles_extract_job(tmp_path):
     assert summary["committed_rows"] == 40     # error docs ride the error-row contract
     assert summary["checksum_anomalies"] == 0
     assert os.path.isdir(str(tmp_path / "out" / "_lineage"))  # lineage committed
+
+
+NATIVE_JOB = """
+import json
+
+import pandas as pd
+from pyspark.sql import SparkSession
+
+from ocr_award_extractor_spark.functions import htmltext
+
+
+def report(batches):
+    from ocr_award_extractor_spark.functions import htmltext
+
+    for _ in batches:
+        pass
+    yield pd.DataFrame({"file": [htmltext.__file__],
+                        "native": [htmltext._NATIVE is not None]})
+
+
+spark = SparkSession.builder.getOrCreate()
+rows = spark.range(0, 4, numPartitions=2).mapInPandas(
+    report, "file string, native boolean").collect()
+print(json.dumps({"driver": [htmltext.__file__, htmltext._NATIVE is not None],
+                  "workers": [[r.file, r.native] for r in rows]}))
+spark.stop()
+"""
+
+
+def test_spark_submit_workers_load_the_native_scanner(tmp_path):
+    """The package shipped only as a --py-files zip, with an empty cache
+    directory: the driver builds the native scanner from the C source it
+    reads out of the zip, and the job's Python workers, importing
+    htmltext from the zip too, report it loaded."""
+    from ocr_award_extractor_spark.config import build_pyfiles_zip
+
+    zip_path = build_pyfiles_zip(str(tmp_path / "engine.zip"))
+    job_py = tmp_path / "native_job.py"
+    job_py.write_text(NATIVE_JOB)
+    env = dict(os.environ)
+    env["PYTHONPATH"] = ""
+    env["HOME"] = str(tmp_path / "home")      # no cached library yet
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    proc = subprocess.run(
+        [_spark_submit(), "--master", "local[2]", "--py-files", zip_path, str(job_py)],
+        capture_output=True, text=True, timeout=420, cwd=str(tmp_path), env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    report = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert report["driver"][1] is True and ".zip" in report["driver"][0], report
+    assert len(report["workers"]) == 2, report
+    for file, native in report["workers"]:
+        assert native is True and ".zip" in file, report
+    assert os.listdir(tmp_path / "home" / ".cache" / "ocr_award_extractor_spark")
