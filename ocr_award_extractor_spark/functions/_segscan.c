@@ -1,16 +1,24 @@
-/* Native tier of htmltext.segment_html: the fast tokenizer (_fast_scan) and
- * the _Segmenter state machine in one pass over the UTF-8 document.
+/* Native tier of htmltext.segment_html: html.parser's tokenizing (the
+ * CPython 3.11 patterns that htmltext._html_parser_compatible checks at
+ * import) and the _Segmenter state machine in one pass over the UTF-8
+ * document.
  *
- * Faithful-or-bail: every construct is handled exactly as the Python fast
- * scanner handles it, or the call returns SEG_BAIL and the document takes
- * the Python path. Besides every construct _fast_scan bails on, this scanner
- * also bails on
+ * Faithful-or-bail: every construct is handled exactly as html.parser
+ * feeding _Segmenter handles it, or the call returns SEG_BAIL and the
+ * document takes the stdlib parser. It bails on
+ *   - a '<' that starts no tag, end tag, comment, declaration or processing
+ *     instruction (html.parser's recovery treats it as text), an end tag
+ *     that does not match endtagfind, a marked section ('<![') and any
+ *     markup left unterminated;
+ *   - a start tag holding '<', or a quoted '<' or '>'; attribute text that
+ *     attrfind_tolerant leaves unconsumed (html.parser demotes the tag to
+ *     text) or whose quotes it pairs differently from a left-to-right match;
  *   - a start-tag name outside [A-Za-z0-9_.:-];
  *   - a non-ASCII whitespace character, or one that matches an ASCII letter
- *     case-insensitively, anywhere the Python regexes test for whitespace
+ *     case-insensitively, anywhere html.parser's regexes test for whitespace
  *     or letters (start-tag attribute text, end tags, comment and CDATA
  *     closes): Python's \s and IGNORECASE are Unicode-aware;
- *   - '&' in a class, id or style value (Python unescapes it);
+ *   - '&' in a class, id or style value (html.parser unescapes it);
  *   - a text chunk made only of numeric character references that
  *     html.unescape drops (handle_data ignores an empty chunk);
  *   - more than MAX_DEPTH open kill or boilerplate tags.
@@ -343,7 +351,9 @@ static int display_none(const scan_t *S, long a, long b)
     return 0;
 }
 
-/* _FAST_BOILER_HINT.search(s[a:b]) */
+/* does s[a:b] hold class, id or style (ASCII case-insensitive) at its
+ * start or after whitespace, '/' or a quote, then \s* '=': the only shape
+ * in which an attribute can make the tag boilerplate */
 static int attr_hint(const scan_t *S, long a, long b)
 {
     static const struct { const char *word; int len; } words[] = {
@@ -369,8 +379,10 @@ static int attr_hint(const scan_t *S, long a, long b)
 
 enum { REM_EMPTY, REM_SLASH, REM_OTHER };
 
-/* The _fast_attrs loop: html.parser's attrfind_tolerant over
- * blob2 = " " + blob.lstrip() + ">", blob = s[a:b]. Sets *boiler to
+/* parse_starttag's attrfind_tolerant loop over the attribute text
+ * blob = s[a:b], read as blob2 = " " + blob.lstrip() + ">": the space
+ * stands for the whitespace tagfind_tolerant consumed (the lookbehind),
+ * the '>' for the tag's close (which the `/(?!>)` tail sees). Sets *boiler to
  * _Segmenter._is_boiler_attrs of the parsed attributes; returns the kind
  * of the unparsed remainder (left-stripped), or SEG_BAIL where the regex
  * would backtrack. */
@@ -515,7 +527,7 @@ static long scan_start_tag(scan_t *S, long j)
     }
     if (high && any_danger(S, q, k))
         return SEG_BAIL;
-    /* Parsed in full even where _fast_scan skips the parse: html.parser
+    /* Parsed in full on every tag, as parse_starttag does: html.parser
      * reads a tag whose attribute text leaves junk, or whose quotes pair
      * up differently (the regex would backtrack), as something else. */
     int boiler = 0, rem = REM_EMPTY;
@@ -523,7 +535,7 @@ static long scan_start_tag(scan_t *S, long j)
         int parsed_boiler, parsed = parse_attrs(S, q, k, &parsed_boiler);
         if (parsed == SEG_BAIL || parsed == REM_OTHER)
             return SEG_BAIL;
-        if (attr_hint(S, q, k)) {       /* the only case _fast_scan reads attrs */
+        if (attr_hint(S, q, k)) {       /* the attributes may be boilerplate */
             rem = parsed;
             boiler = parsed_boiler;
         } else if (s[k - 1] == '/') {

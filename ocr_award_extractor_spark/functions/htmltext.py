@@ -30,22 +30,19 @@ pattern, or display:none) and its link density is below threshold.
 
 Scale note: this runs inside mapInPandas Arrow batches on executors, one
 document at a time. The parser backend is one function,
-:func:`segment_html`, with three tiers that must produce the same
-segments:
+:func:`segment_html`, with two tiers that must produce the same segments:
 
 1. the native scanner (``_segscan.c``), built with the system C compiler
    and loaded with ctypes when this module is imported (see
    :mod:`~ocr_award_extractor_spark.functions.segscan`; without a
    compiler it is off, with one WARNING);
-2. the Python fast scanner (:func:`_fast_scan`), a regex tokenizer
-   driving :class:`_Segmenter`;
-3. the stdlib ``html.parser`` driving :class:`_Segmenter`, the reference.
+2. the stdlib ``html.parser`` driving :class:`_Segmenter`, the reference.
 
-The first two are faithful-or-bail: a construct a scanner cannot handle
+The native scanner is faithful-or-bail: a construct it cannot handle
 exactly as the reference does makes it decline the whole document, which
-then takes the next tier. So a tier can only change the output by
+then takes the stdlib parser. So it can only change the output by
 mis-handling a construct it claims to handle; tests/test_fast_segmenter.py
-pins all three tiers equal.
+pins the two tiers equal.
 """
 
 from __future__ import annotations
@@ -54,6 +51,7 @@ import logging
 import re
 from array import array
 from dataclasses import dataclass, field
+from html import unescape as _unescape
 from html.parser import HTMLParser
 
 from ocr_award_extractor_spark.functions import segscan as _segscan
@@ -76,7 +74,6 @@ BLOCK_TAGS = frozenset(
     "p div article section main li ul ol h1 h2 h3 h4 h5 h6 td th tr table "
     "thead tbody blockquote pre figcaption dd dt dl br hr body".split()
 )
-# void elements that never produce endtags we need to balance
 _BOILER_ATTR = re.compile(
     r"(?:^|[\s_-])(?:nav|menu|footer|header|sidebar|sitemap|comment|comments|"
     r"ad|ads|advert|banner|breadcrumb|breadcrumbs|related|share|social|promo|"
@@ -203,8 +200,8 @@ def segment_html_stdlib(html_str: str) -> list[Segment]:
     """Reference tokenizer: stdlib HTMLParser driving the segmenter.
     HTMLParser is tolerant of malformed markup by construction; should it
     raise anyway, the exception propagates (:func:`extract_page` turns it
-    into an error row). The fast scanners below must be event-equal to
-    this on every document they accept — pinned by
+    into an error row). The native scanner must give the same segments
+    on every document it accepts — pinned by
     tests/test_fast_segmenter.py."""
     seg = _Segmenter()
     seg.feed(html_str)
@@ -212,52 +209,14 @@ def segment_html_stdlib(html_str: str) -> list[Segment]:
     return [s for s in seg.segments if not s.killed]
 
 
-# --------------------------------------------------------------------------
-# Fast tokenizer: a flat regex scanner emitting the SAME event stream into
-# the SAME _Segmenter handlers, ~2× the stdlib parser (which spends its
-# time in goahead/updatepos/per-event dispatch). Fidelity strategy:
-# faithful-or-bail — any construct whose stdlib treatment is subtle
-# (quoted '>' in attribute values, stray '<' in text, bogus end tags,
-# marked sections, unterminated markup) raises _FastBail and the document
-# reruns on the stdlib path, so output can differ ONLY if the scanner
-# mis-handles a construct it claims to handle, which the dual-run equality
-# tests + golden suite pin. Attribute lists are parsed with html.parser's
-# OWN attrfind_tolerant (values entity-unescaped identically) and are
-# skipped entirely when the tag carries no class/id/style — the only
-# attributes the segmenter reads.
-
-from html import unescape as _unescape  # noqa: E402  (html.parser's own)
-from html.parser import attrfind_tolerant as _attrfind  # noqa: E402
-
-
-class _FastBail(Exception):
-    pass
-
-
-_FAST_END = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
-# start tag with optionally-quoted attr blob; quotes may not contain <>
-# (html.parser allows a quoted '>' — that shape bails to stdlib)
-_FAST_START = re.compile(
-    r"<([a-zA-Z][^\t\n\r\f />\x00]*)((?:\"[^\"<>]*\"|'[^'<>]*'|[^<>'\"])*)>"
-)
-_FAST_BOILER_HINT = re.compile(r"(?i)(?:^|[\s/'\"])(?:class|id|style)\s*=")
-_FAST_CDATA_CLOSE = {
-    "script": re.compile(r"</\s*script\s*>", re.IGNORECASE),
-    "style": re.compile(r"</\s*style\s*>", re.IGNORECASE),
-}
-# stdlib closes a comment at '--' + optional whitespace + '>' (markupbase
-# parse_comment), NOT only at the literal '-->'
-_FAST_COMMENT_CLOSE = re.compile(r"--\s*>")
-
-
-def _stdlib_fast_compatible() -> bool:
-    """The fast scanner mirrors CPython 3.11 html.parser tokenization
-    details. Those are PRIVATE stdlib behavior — 3.13 changed
-    set_cdata_mode to end CDATA at '</script' + space/slash, which would
-    silently diverge from _FAST_CDATA_CLOSE. Probe the live interpreter's
-    actual patterns at import; on any mismatch the fast path is disabled
-    and every document takes the stdlib parser (slower, never wrong),
-    with one WARNING that names the failed probe."""
+def _html_parser_compatible() -> bool:
+    """_segscan.c mirrors CPython 3.11 html.parser tokenization details.
+    Those are PRIVATE stdlib behaviour — 3.13 changed set_cdata_mode to
+    end CDATA at '</script' + space/slash, which the C scanner's CDATA
+    close does not do. Probe the live interpreter's patterns at import; on
+    any mismatch the native scanner stays off and every document takes the
+    stdlib parser (slower, never wrong), with one WARNING that names the
+    failed probe."""
     try:
         import _markupbase as _mb
         import html.parser as _hp
@@ -266,13 +225,13 @@ def _stdlib_fast_compatible() -> bool:
         probe.set_cdata_mode("script")
         checks = {
             "script CDATA close pattern":
-                probe.interesting.pattern == _FAST_CDATA_CLOSE["script"].pattern,
-            "comment close pattern":
-                _mb._commentclose.pattern == _FAST_COMMENT_CLOSE.pattern,
+                probe.interesting.pattern == r"</\s*script\s*>",
+            # markupbase parse_comment closes at '--' + whitespace + '>'
+            "comment close pattern": _mb._commentclose.pattern == r"--\s*>",
             "CDATA content elements":
                 _hp.HTMLParser.CDATA_CONTENT_ELEMENTS == ("script", "style"),
-            # the native scanner hard-codes these three
-            "end tag pattern": _hp.endtagfind.pattern == _FAST_END.pattern,
+            "end tag pattern": _hp.endtagfind.pattern
+                == r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>",
             "tag name pattern": _hp.tagfind_tolerant.pattern
                 == r"([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*",
             "attribute pattern": _hp.attrfind_tolerant.pattern
@@ -283,152 +242,19 @@ def _stdlib_fast_compatible() -> bool:
     except Exception as e:
         failed = [f"probe raised {e!r}"]
     if failed:
-        _log.warning("fast HTML segmenter disabled, every document takes the "
-                     "~2x slower stdlib parser; failed probe: %s",
-                     ", ".join(failed))
+        _log.warning("native HTML segmenter disabled, every document takes the "
+                     "stdlib parser; failed probe: %s", ", ".join(failed))
     return not failed
 
 
-_FAST_ENABLED = _stdlib_fast_compatible()
-
-
-def _fast_attrs(blob: str):
-    """attrfind_tolerant loop over the attr blob. The leading space
-    supplies the regex's lookbehind (mirroring the whitespace tagfind
-    consumed); the trailing '>' sentinel restores the context attrfind's
-    `/(?!>)` tail sees in rawdata — without it a self-closing slash at
-    blob end is swallowed as inter-attr junk (<p class="x"/> would turn
-    into an unclosed suppressor; caught by the attr-shape fuzz). The
-    blob's trailing whitespace stays, as in rawdata: '/ >' is a start
-    tag, not a self-closing one.
-    Returns (attrs, unconsumed-remainder) — caller bails unless the
-    remainder is '' (normal tag) or '/' (self-closing)."""
-    attrs = []
-    blob2 = " " + blob.lstrip() + ">"
-    end = len(blob2) - 1
-    k = 1
-    while k < end:
-        am = _attrfind.match(blob2, k)
-        if not am or am.end() == k:
-            break
-        name, rest, val = am.group(1, 2, 3)
-        if not rest:
-            val = None
-        elif val[:1] == "'" == val[-1:] or val[:1] == '"' == val[-1:]:
-            val = val[1:-1]
-        if val and "&" in val:
-            val = _unescape(val)
-        attrs.append((name.lower(), val))
-        k = am.end()
-    return attrs, blob2[k:end].lstrip()
-
-
-_ASCII_LETTERS = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
-
-
-def _fast_scan(rd: str, seg: _Segmenter) -> None:
-    n = len(rd)
-    i = 0
-    find = rd.find
-    hd = seg.handle_data
-    hs = seg.handle_starttag
-    he = seg.handle_endtag
-    start_match = _FAST_START.match
-    end_match = _FAST_END.match
-    boiler_search = _FAST_BOILER_HINT.search
-    while i < n:
-        j = find("<", i)
-        if j < 0:
-            chunk = rd[i:n]
-            if chunk:
-                hd(_unescape(chunk) if "&" in chunk else chunk)
-            break
-        if j > i:
-            chunk = rd[i:j]
-            hd(_unescape(chunk) if "&" in chunk else chunk)
-        c = rd[j + 1:j + 2]
-        # ASCII letters only, like starttagopen — a non-ASCII alpha would
-        # fail _FAST_START anyway and bail; this skips both regex calls
-        if c in _ASCII_LETTERS:
-            m = start_match(rd, j)
-            if not m:
-                raise _FastBail
-            tag = m.group(1).lower()
-            blob = m.group(2)
-            endpos = m.end()
-            if blob and boiler_search(blob):
-                attrs, rem = _fast_attrs(blob)
-            elif blob.endswith("/"):
-                # trailing slash: self-closing, unless it is the tail of an
-                # unquoted attr value (html.parser keeps it in the value)
-                attrs = []
-                rem = _fast_attrs(blob)[1] if "=" in blob else "/"
-            else:
-                attrs, rem = [], ""
-            if rem == "":
-                hs(tag, attrs)
-                if tag in _FAST_CDATA_CLOSE:   # script/style: raw till close
-                    cm = _FAST_CDATA_CLOSE[tag].search(rd, endpos)
-                    # a non-ASCII close (</ſcript>: IGNORECASE folds ſ
-                    # to s) is data to html.parser's end-tag regex
-                    if not cm or not cm.group().isascii():
-                        raise _FastBail
-                    if cm.start() > endpos:
-                        hd(rd[endpos:cm.start()])
-                    he(tag)
-                    endpos = cm.end()
-            elif rem == "/":
-                seg.handle_startendtag(tag, attrs)
-            else:
-                raise _FastBail   # junk in tag: stdlib demotes it to data
-            i = endpos
-        elif c == "/":
-            m = end_match(rd, j)
-            if not m:
-                raise _FastBail
-            he(m.group(1).lower())
-            i = m.end()
-        elif c == "!":
-            if rd.startswith("<!--", j):
-                cm = _FAST_COMMENT_CLOSE.search(rd, j + 4)
-                if not cm:
-                    raise _FastBail
-                i = cm.end()
-            else:   # doctype/decl — ignored; '[' would mean a marked section
-                e = find(">", j)
-                if e < 0 or "[" in rd[j:e]:
-                    raise _FastBail
-                i = e + 1
-        elif c == "?":
-            e = find(">", j)
-            if e < 0:
-                raise _FastBail
-            i = e + 1
-        else:       # stray '<' in text — stdlib has bespoke recovery
-            raise _FastBail
-    return None
-
-
-def _fast_segments(html_str: str) -> list[Segment] | None:
-    """The Python fast scanner's segments, None when it declines."""
-    seg = _Segmenter()
-    try:
-        _fast_scan(html_str, seg)
-        seg._flush()
-    except _FastBail:
-        return None
-    return [s for s in seg.segments if not s.killed]
-
-
 # --------------------------------------------------------------------------
-# Native tier: _segscan.c runs _fast_scan's tokenizing and the _Segmenter
+# Native tier: _segscan.c runs html.parser's tokenizing and the _Segmenter
 # state machine in C, one call per document (see functions/segscan.py for
-# the build). Same faithful-or-bail contract, with more bails: see the C
-# file's header. It returns the kept segments' text chunks as code-point
-# offsets; the Segments are built here, so parts, link_chars and text()
-# are those of the Python scanner.
+# the build). Faithful-or-bail: see the C file's header. It returns the
+# kept segments' text chunks as code-point offsets; the Segments are built
+# here, and their chunks are unescaped as html.parser unescapes its data.
 
-_NATIVE = _segscan.load() if _FAST_ENABLED else None
+_NATIVE = _segscan.load() if _html_parser_compatible() else None
 
 
 def _native_segments(html_str: str) -> list[Segment] | None:
@@ -465,21 +291,16 @@ def _native_segments(html_str: str) -> list[Segment] | None:
 
 
 def segment_html(html_str: str) -> list[Segment]:
-    """Parse HTML into document-order text segments. Three tiers, each
-    taking the documents the one before it declines: the native scanner,
-    the Python fast scanner, the stdlib HTMLParser. Only the stdlib one
-    runs if the interpreter's html.parser internals drifted (see
-    _FAST_ENABLED); the native one is skipped if it could not be built."""
-    if not _FAST_ENABLED:
-        return segment_html_stdlib(html_str)
+    """Parse HTML into document-order text segments. Two tiers: the native
+    scanner, then the stdlib HTMLParser for every document it declines.
+    Only the stdlib one runs when the native one is off (it could not be
+    built, or the interpreter's html.parser internals drifted: see
+    _html_parser_compatible)."""
     if _NATIVE is not None:
         segments = _native_segments(html_str)
         if segments is not None:
             return segments
-    segments = _fast_segments(html_str)
-    if segments is None:
-        return segment_html_stdlib(html_str)
-    return segments
+    return segment_html_stdlib(html_str)
 
 
 def line_confidence(text_len: int, link_density: float, repaired: bool) -> float:

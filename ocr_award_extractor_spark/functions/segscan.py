@@ -1,4 +1,5 @@
-"""Build and load the native HTML segmenter, ``_segscan.c``.
+"""Build and load the native HTML segmenter, ``_segscan.c``, the first tier
+of :func:`~ocr_award_extractor_spark.functions.htmltext.segment_html`.
 
 The C source ships inside the package (``config.build_pyfiles_zip`` zips it
 with the ``.py`` files), so a Spark worker that imports the package from a
@@ -15,7 +16,7 @@ The library is loaded only from a directory that this uid owns with mode
 is removed and the directory made anew; if it cannot be removed, the
 native tier stays off. So does it when there is no compiler or the build or
 load fails: :func:`load` then logs one WARNING that names the reason and
-returns None, and every document takes the Python scanner.
+returns None, and every document takes the stdlib parser.
 """
 
 from __future__ import annotations
@@ -111,5 +112,5 @@ def load() -> ctypes.CDLL | None:
     except (OSError, subprocess.SubprocessError, AttributeError) as e:
         reason = f"{type(e).__name__}: {e}"
     _log.warning("native HTML segmenter disabled, every document takes the "
-                 "Python scanner; %s", reason)
+                 "stdlib parser; %s", reason)
     return None

@@ -10,11 +10,12 @@ Times ``extract_record`` over two seeded corpora, with no Spark:
   documents (the crawl pages' shell).
 
 Each corpus runs ``--repeats`` times on the native tier and as many on the
-Python tier (the native scanner switched off through
-``htmltext._NATIVE``), interleaved. For each it prints docs/s/core of the
-fastest repeat, the spread ``(slowest - fastest) / fastest``, and the
-share of pages the native scanner declined (its bail rate); a declined
-page takes the Python scanner inside the native tier's timing too.
+stdlib tier (the native scanner switched off through
+``htmltext._NATIVE``, so every page takes the stdlib ``html.parser``),
+interleaved. For each it prints docs/s/core of the fastest repeat, the
+spread ``(slowest - fastest) / fastest``, and the share of pages the
+native scanner declined (its bail rate); a declined page takes the stdlib
+parser inside the native tier's timing too.
 """
 
 from __future__ import annotations
@@ -90,7 +91,7 @@ def main(argv=None) -> int:
           f"{args.repeats} repeats per tier, one core")
     for name, build in (("fixture", fixture_corpus), ("webify", webify_corpus)):
         rows = build(args.seed, args.docs)
-        times = {"native": [], "python": []}
+        times = {"native": [], "stdlib": []}
         for _ in range(args.repeats):
             for tier in times:
                 htmltext._NATIVE = native if tier == "native" else None
@@ -101,7 +102,7 @@ def main(argv=None) -> int:
             best[tier] = args.docs / min(ts)
             print(f"  {name:<8} {tier:<7} {best[tier]:>8.0f} docs/s/core  "
                   f"spread {(max(ts) - min(ts)) / min(ts):6.1%}")
-        print(f"  {name:<8} native/python {best['native'] / best['python']:.2f}x  "
+        print(f"  {name:<8} native/stdlib {best['native'] / best['stdlib']:.2f}x  "
               f"native bail rate {bail_rate(rows):.2%}")
     return 0
 

@@ -1,9 +1,8 @@
-"""Scanner fidelity: each tier of segment_html (native C scanner, Python
-fast scanner, stdlib HTMLParser) must equal segment_html_stdlib on EVERY
-document it accepts — corpus, webify pages, adversarial constructs, and
-hypothesis fuzz. The scanners are faithful-or-bail; these tests catch the
-only dangerous failure mode (mis-handling a construct they claim to
-handle)."""
+"""Scanner fidelity: segment_html's native C scanner must equal its
+reference, segment_html_stdlib, on EVERY document it accepts — corpus,
+webify pages, adversarial constructs, and hypothesis fuzz. The scanner is
+faithful-or-bail; these tests catch the only dangerous failure mode
+(mis-handling a construct it claims to handle)."""
 
 from __future__ import annotations
 
@@ -29,46 +28,45 @@ def _parts(segments):
 
 
 def assert_equal_segmentation(html_str: str) -> None:
-    """Three-way equality on every tier that accepts the document; where
-    both scanners accept it, their parts are identical too."""
-    want = _key(segment_html_stdlib(html_str))
-    assert _key(segment_html(html_str)) == want, html_str[:200]
-    fast = h._fast_segments(html_str)
-    native = h._native_segments(html_str)
-    if fast is not None:
-        assert _key(fast) == want, ("fast", html_str[:200])
-    if native is not None:
-        assert _key(native) == want, ("native", html_str[:200])
-        if fast is not None:
-            assert _parts(native) == _parts(fast), html_str[:200]
+    """Two-way equality: segment_html (the native scanner, or the stdlib
+    parser on a document it declines) equals segment_html_stdlib."""
+    assert _key(segment_html(html_str)) == _key(segment_html_stdlib(html_str)), \
+        html_str[:200]
 
 
-def _page_strings(rows):
+def _page_strings(pages):
     out = []
-    for r in rows:
+    for html in pages:
         try:
-            out.append(r["html"].decode("utf-8"))
+            out.append(html.decode("utf-8"))
         except UnicodeDecodeError:
-            out.append(r["html"].decode("utf-8", errors="replace"))
+            out.append(html.decode("utf-8", errors="replace"))
     return out
 
 
-def _corpus():
+def _corpus_bytes():
     from ocr_award_extractor_spark.sources.fixture_gen import generate_rows
 
-    return _page_strings(generate_rows(400, seed=11))
+    return [r["html"] for r in generate_rows(400, seed=11)]
 
 
-def _webify_pages():
+def _webify_bytes():
     import random
 
     from ocr_award_extractor_spark.operators.webify import wrap_row
 
     rng = random.Random(5)
     words = "spark merge 获奖 学生 données größe a&b <x> \"q\"".split()
-    return _page_strings(
-        wrap_row(i, " ".join(rng.choice(words) for _ in range(rng.randint(10, 80))),
-                 "en", f"src{i % 20}") for i in range(60))
+    return [wrap_row(i, " ".join(rng.choice(words) for _ in range(rng.randint(10, 80))),
+                     "en", f"src{i % 20}")["html"] for i in range(60)]
+
+
+def _corpus():
+    return _page_strings(_corpus_bytes())
+
+
+def _webify_pages():
+    return _page_strings(_webify_bytes())
 
 
 def test_corpus_equality():
@@ -134,6 +132,9 @@ ADVERSARIAL = [
     "<span>&#169;</span><span>&#128;</span><p>&#0;</p>",
     "<!--c--\u3000>text</p>",
     "</p\u3000>end tag with unicode space",
+    # quotes html.parser pairs differently from a left-to-right match
+    '<d "=">"', "<A'/'>&", "<x' i='>", '<a"/">-',
+    '<p a=b="x y= ">text "more</p>',
 ]
 
 
@@ -142,12 +143,16 @@ def test_adversarial_equality():
         assert_equal_segmentation(doc)
 
 
-def test_extract_page_equality_on_adversarial():
-    """End-to-end: the page-level result (lines + confs + strategy) is
-    unchanged by the fast path, including the repair-pass routing."""
-    for doc in ADVERSARIAL:
-        got = extract_page(doc.encode("utf-8"))
-        assert isinstance(got["lines"], list)
+def test_extract_page_equality_on_adversarial(monkeypatch):
+    """End-to-end: the page-level result (status, lines, confs, strategy)
+    is the same with the native scanner on and off, including the
+    strict/repair routing."""
+    pages = ([d.encode("utf-8") for d in ADVERSARIAL] + _corpus_bytes()
+             + _webify_bytes())
+    native = [extract_page(p) for p in pages]
+    monkeypatch.setattr(h, "_NATIVE", None)
+    for page, got in zip(pages, native):
+        assert got == extract_page(page), page[:200]
 
 
 _soup_atoms = st.sampled_from([
@@ -257,7 +262,7 @@ def test_fuzz_unicode_markup_equality(parts):
 def test_native_tier_enabled_on_this_interpreter():
     """The native scanner is built and loaded here, and it declines none
     of the fixture or webify pages: if a refactor or a toolchain change
-    turns it off, every document silently takes the Python scanner and
+    turns it off, every document silently takes the stdlib parser and
     only this test notices."""
     assert h._NATIVE is not None
     for html_str in _corpus() + _webify_pages():
@@ -322,7 +327,7 @@ def test_native_bail_table_matches_this_interpreter():
 def test_missing_compiler_warns_once_and_output_is_unchanged(
         tmp_path, monkeypatch, caplog):
     """With no cached library and no compiler, loading logs one WARNING
-    that names the reason and returns None; the Python tiers then give
+    that names the reason and returns None; the stdlib parser then gives
     the native tier's output."""
     import shutil
 
@@ -400,56 +405,37 @@ def test_stdlib_parser_exception_becomes_an_error_row(monkeypatch):
     monkeypatch.setattr(h._Segmenter, "feed", broken)
     with pytest.raises(RuntimeError):
         segment_html_stdlib("<p>x</p>")
-    # a stray '<' makes both scanners decline, so the stdlib parser runs
+    # a stray '<' makes the native scanner decline, so the stdlib parser runs
     row = extract_page("<p>a < b</p>".encode())
     assert row["status"] == "error" and row["lines"] == []
     assert "RuntimeError" in row["message"]
     assert extract_page(b"<p>fine</p>")["status"] == "success"
 
 
-def test_fast_path_enabled_on_this_interpreter():
-    """The import-time stdlib-compat probe must be ON here (CPython 3.11's
-    html.parser matches the fast patterns) — if a refactor or interpreter
-    bump flips it off, every document silently takes the ~2x-slower stdlib
-    path and only this test notices. The probe itself must also fail
-    closed: a mismatching pattern disables the fast path."""
-    import re
-
-    from ocr_award_extractor_spark.functions import htmltext as h
-
-    assert h._FAST_ENABLED is True
-    # fail-closed: simulate a drifted stdlib pattern
-    orig = h._FAST_CDATA_CLOSE["script"]
-    h._FAST_CDATA_CLOSE["script"] = re.compile("</script(?=[\\t\\n\\r\\f />])")
-    try:
-        assert h._stdlib_fast_compatible() is False
-    finally:
-        h._FAST_CDATA_CLOSE["script"] = orig
-    assert h._stdlib_fast_compatible() is True
-
-
 def test_disabled_fast_path_logs_the_failed_probe(monkeypatch, caplog):
-    """The fast path is never switched off silently: a drifted pattern or
-    a probe that raises logs one WARNING naming it; a match logs none."""
-    import logging
+    """The native scanner is never switched off silently: a drifted
+    pattern or a probe that raises logs one WARNING naming it; a match
+    logs none."""
     import re
     from html.parser import HTMLParser
 
-    from ocr_award_extractor_spark.functions import htmltext as h
+    def drifted(self, elem):        # CPython 3.13's CDATA close
+        self.cdata_elem = elem.lower()
+        self.interesting = re.compile(r"</%s(?=[\t\n\r\f />])" % self.cdata_elem,
+                                      re.IGNORECASE)
+
+    def broken(self, elem):
+        raise RuntimeError("no cdata mode")
 
     with caplog.at_level(logging.WARNING, logger=h.__name__):
-        assert h._stdlib_fast_compatible() is True
+        assert h._html_parser_compatible() is True
         assert caplog.records == []
 
-        monkeypatch.setitem(h._FAST_CDATA_CLOSE, "script", re.compile("</script"))
-        assert h._stdlib_fast_compatible() is False
-        monkeypatch.undo()
-
-        def broken(self, elem):
-            raise RuntimeError("no cdata mode")
+        monkeypatch.setattr(HTMLParser, "set_cdata_mode", drifted)
+        assert h._html_parser_compatible() is False
 
         monkeypatch.setattr(HTMLParser, "set_cdata_mode", broken)
-        assert h._stdlib_fast_compatible() is False
+        assert h._html_parser_compatible() is False
     messages = [(r.levelname, r.getMessage()) for r in caplog.records]
     assert len(messages) == 2 and all(lvl == "WARNING" for lvl, _ in messages)
     assert "script CDATA close pattern" in messages[0][1]
@@ -460,11 +446,11 @@ def test_disabled_fast_path_logs_the_failed_probe(monkeypatch, caplog):
 def test_drifted_tag_pattern_disables_both_scanners(monkeypatch, caplog, name):
     """The native scanner hard-codes html.parser's end-tag, tag-name and
     attribute patterns; a drift in any of them fails the import probe,
-    which keeps both scanners off."""
+    which keeps the native scanner off."""
     import html.parser
     import re
 
     monkeypatch.setattr(html.parser, name, re.compile("drifted"))
     with caplog.at_level(logging.WARNING, logger=h.__name__):
-        assert h._stdlib_fast_compatible() is False
+        assert h._html_parser_compatible() is False
     assert len(caplog.records) == 1 and "pattern" in caplog.records[0].getMessage()
