@@ -74,8 +74,9 @@ def find_spark_submit() -> str | None:
 
 
 def build_pyfiles_zip(zip_path: str | None = None) -> str:
-    """Zip the package's .py files, and the C source its native HTML
-    segmenter is built from (``functions/_segscan.c``), into the artifact
+    """Zip the package's .py files, and the C source its native library
+    (the HTML segmenter and the row hash) is built from
+    (``functions/_segscan.c``), into the artifact
     a cluster user ships with ``spark-submit --py-files engine.zip``
     (SURVEY §7 deploy line). Shared by ``ensure_package_on_workers``
     (runtime addPyFile analog) and the literal spark-submit subprocess

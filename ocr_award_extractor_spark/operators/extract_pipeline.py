@@ -14,7 +14,9 @@ Spark plan (SURVEY.md §3.4):
                                            → field extraction (certificate_ocr.py
                                            :85-167 and :314-407), no per-row Python
                                            at the DataFrame level
-      → (write + lineage, plans/lineage.py)
+
+The lineage commit (plans/lineage.py) does not use this stage: it runs
+extract_record inside its writer kernel, one Python stage per commit.
 
 Error rows carry status='error' + message with NULL payload fields — the
 reference's error-record-not-exception contract (certificate_ocr.py:100-105,
@@ -56,9 +58,9 @@ OUT_SCHEMA = StructType([
 
 def extract_record(url, warc_ts, lang, html) -> dict:
     """One document through the full reference dataflow: the row kernel
-    :func:`extract_documents` maps over every page (all patterns compile
-    once per worker at module import). Pure function — also used by the
-    kernel probe and unit tests."""
+    :func:`extract_documents` and the lineage commit map over every page
+    (all patterns compile once per worker at module import). Pure
+    function — also used by the kernel probe and unit tests."""
     page = extract_page(html)
     n_bytes = len(html) if html is not None else 0
     if page["status"] == "error":

@@ -8,14 +8,17 @@ lineage (input split, row counts, checksum). Design:
   — stable across runs and cluster sizes, so resume is content-addressed,
   not file-order-addressed;
 * ONE Spark job commits every pending split (the splits without a lineage
-  row): it reads the input once, keeps only pending splits AHEAD of the
-  extraction kernel (a resume never re-extracts a committed split), and
-  shuffles once by ``split_id`` into at most one writer task per core,
-  sorted by ``split_id`` within each task, so each split's rows reach one
-  task of the writer kernel :func:`_write_splits` one after another. The
-  writer streams a split into its tmp file and, as soon as the next split
-  begins (or its input ends), commits it by three file-system steps, in
-  order:
+  row), with one Python stage: it reads the input once, keeps only
+  pending splits AHEAD of extraction (a resume never re-extracts a
+  committed split), projects the page columns and shuffles them once by
+  ``split_id`` into at most one task per core, sorted by ``split_id``
+  within each task. Each task runs one ``mapInArrow`` kernel,
+  :func:`_extract_and_write`: it runs the per-row extraction kernel
+  (``extract_record``) on one split's pages at a time, builds their Arrow
+  batch with each row's hash, and hands it to the writer
+  :func:`_write_splits`. The writer streams a split into its tmp file
+  and, as soon as the next split begins (or its input ends), commits it
+  by three file-system steps, in order:
 
   1. close the split's tmp file ``data/.split-<k>-<uuid>.tmp``;
   2. ``os.replace`` the tmp to ``data/split-<k>.parquet``;
@@ -35,7 +38,18 @@ lineage (input split, row counts, checksum). Design:
   north_star). A crash before step 3 leaves the split pending, and the
   fixed file names make a task retry overwrite instead of duplicate;
 * checksum per split = bit_xor over :func:`row_hash` — order-insensitive,
-  overflow-free (ANSI mode safe), cheap to recompute for audit.
+  overflow-free (ANSI mode safe), cheap to recompute for audit. The writer
+  computes each row's term in Python with
+  :func:`~ocr_award_extractor_spark.functions.rowhash.row_hashes`, which
+  equals Spark's ``xxhash64`` bit for bit (native XXH64 from the engine's
+  C library, or a pure-Python XXH64 without a compiler);
+  :func:`verify_lineage` recomputes it in the JVM.
+
+Extraction runs on ``min(pending splits, cores)`` tasks, so ``n_splits``
+should be at least the cluster's core count. Spark's hash partitioning
+also spreads split ids over the tasks unevenly: 16 splits on 4 tasks give
+6/4/3/3 splits (230 crawl pages: 86/49/49/46 rows), 16 on 8 tasks
+4/3/2/2/2/2/1/0, 64 on 4 tasks 21/16/16/11.
 
 The writer runs on the executors, so ``out_dir`` must be on a filesystem
 the driver and executors share — as for ``write_wet`` and ``write_warc``.
@@ -59,6 +73,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 N_SPLITS_DEFAULT = 16
+PAGE_COLUMNS = ("url", "warc_ts", "lang", "html")   # the extraction's input
 
 _COMMIT_SCHEMA = "split_id int, row_count long, checksum long"
 _LINEAGE_ARROW_SCHEMA = pa.schema([("run_id", pa.string()), ("split_id", pa.int32()),
@@ -120,6 +135,14 @@ def _write_lineage_row(lineage_dir: str, uid: str, run_id: str,
     os.replace(tmp, os.path.join(lineage_dir, f"split-{k}.parquet"))
 
 
+def _split_runs(ids):
+    """(lo, hi) of each run of one split id in a batch's sorted ids."""
+    import numpy as np
+
+    bounds = [0, *(np.flatnonzero(np.diff(ids)) + 1), len(ids)]
+    return zip(bounds, bounds[1:])
+
+
 def _write_splits(batches, *, data_dir: str, lineage_dir: str, run_id: str):
     """``mapInArrow`` writer kernel: it writes one split at a time and
     commits it by the steps of the module docstring as soon as the next
@@ -151,8 +174,7 @@ def _write_splits(batches, *, data_dir: str, lineage_dir: str, run_id: str):
                 continue
             ids, hashes = batch.column("split_id").to_numpy(), batch.column("_h").to_numpy()
             rows = batch.drop_columns(["_h"])
-            bounds = [0, *(np.flatnonzero(np.diff(ids)) + 1), len(ids)]
-            for lo, hi in zip(bounds, bounds[1:]):
+            for lo, hi in _split_runs(ids):
                 if ids[lo] != k:
                     if writer is not None:
                         commit()
@@ -176,6 +198,37 @@ def _write_splits(batches, *, data_dir: str, lineage_dir: str, run_id: str):
         {"split_id": list(done), "row_count": [c for c, _ in done.values()],
          "checksum": [x for _, x in done.values()]},
         schema=_LINEAGE_ARROW_SCHEMA.remove(0))
+
+
+def _extract_splits(batches, extract):
+    """The commit's extraction: ``extract`` on each page row, one Arrow
+    batch of :func:`_committed_schema` plus the row hash ``_h``
+    (:func:`~ocr_award_extractor_spark.functions.rowhash.row_hashes`,
+    equal to :func:`row_hash`) per run of one split, so the writer can
+    commit a split once the next one is extracted."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ocr_award_extractor_spark.functions.rowhash import row_hashes
+
+    schema = to_arrow_schema(_committed_schema()).append(pa.field("_h", pa.int64()))
+    names = schema.names[:-2]           # the extraction's columns
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        for lo, hi in _split_runs(batch.column("split_id").to_numpy()):
+            pages = batch.slice(lo, hi - lo)
+            records = [extract(*row) for row in
+                       zip(*(pages.column(c).to_pylist() for c in PAGE_COLUMNS))]
+            cols = {c: [r[c] for r in records] for c in names}
+            cols["split_id"] = pages.column("split_id")
+            cols["_h"] = row_hashes(cols["url"], cols["ocr_text"])
+            yield pa.RecordBatch.from_pydict(cols, schema=schema)
+
+
+def _extract_and_write(batches, *, extract, **writer):
+    """The commit's one ``mapInArrow`` kernel: :func:`_extract_splits`
+    feeding :func:`_write_splits`, one Python runner per task."""
+    yield from _write_splits(_extract_splits(batches, extract), **writer)
 
 
 def _split_checksum_rows(extracted: DataFrame) -> DataFrame:
@@ -202,32 +255,14 @@ def run_resumable_extraction(
     ``n_batches`` and ``max_batches`` are a test hook that simulates a
     killed job: only the pending splits ``todo[i::n_batches]`` for
     ``i < max_batches`` commit (all in the one job). Returns counters.
-    ``extract`` defaults to the flagship extraction stage and must map a
-    documents DataFrame (with split_id) to the columns of
-    :func:`_committed_schema` (``OUT_SCHEMA`` plus ``split_id int``), the
-    schema :func:`read_committed` reads the committed rows with.
+    ``extract`` is the per-row kernel the commit runs on each page,
+    ``extract(url, warc_ts, lang, html) -> record`` with the fields of
+    ``OUT_SCHEMA``; it defaults to the flagship ``extract_record``.
     """
     if extract is None:
         from ocr_award_extractor_spark.operators.extract_pipeline import (
-            extract_documents,
+            extract_record as extract,
         )
-
-        def extract(pending: DataFrame) -> DataFrame:  # noqa: F811
-            # split_id is a pure function of url, so recompute it JVM-side
-            # AFTER the fast columnar extraction stage instead of threading
-            # it through a bespoke per-row UDF (the list-of-dicts build was
-            # the known 2× stage cost).
-            # salt_partitions (round 7): a split-filtered read can collapse
-            # to a couple of bin-packed scan splits on small staged tables
-            # — the production skew-defusing repartition (same as the
-            # flagship bench plan) spreads it across the session's cores
-            cores = spark.sparkContext.defaultParallelism
-            out = extract_documents(pending.drop("split_id"),
-                                    salt_partitions=cores)
-            return out.withColumn(
-                "split_id",
-                F.pmod(F.xxhash64("url"), F.lit(n_splits)).cast("int"),
-            )
 
     data_dir = os.path.join(out_dir, "data")
     entries = os.listdir(data_dir) if os.path.isdir(data_dir) else []
@@ -269,17 +304,22 @@ def run_resumable_extraction(
         pending = with_split_id(docs, n_splits)
         if len(pending_ids) < n_splits:  # no filter when every split is pending
             pending = pending.where(split_id_in(pending_ids))
-        # one hash shuffle by split_id puts every row of a split in one of
-        # (at most) one writer task per core, and the sort hands each task
-        # its splits one after another, so the writer holds one open file
+        # one hash shuffle of the pages by split_id puts every row of a
+        # split in one of (at most) one task per core, and the sort hands
+        # each task its splits one after another: the kernel extracts and
+        # commits one split at a time, so it holds one open file
         width = min(len(pending_ids), spark.sparkContext.defaultParallelism)
-        out = (extract(pending).withColumn("_h", row_hash())
-               .repartition(width, "split_id").sortWithinPartitions("split_id"))
-        writer = functools.partial(
-            _write_splits, data_dir=data_dir,
+        # warc_ts gets OUT_SCHEMA's type here, in the JVM: a timestamp_ntz
+        # input is read in the session time zone, as the pandas boundary
+        # of extract_documents reads it
+        pages = (pending.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+                 .select(*PAGE_COLUMNS, "split_id")
+                 .repartition(width, "split_id").sortWithinPartitions("split_id"))
+        kernel = functools.partial(
+            _extract_and_write, extract=extract, data_dir=data_dir,
             lineage_dir=lineage_dir, run_id=run_id)
         written = {r["split_id"]: r["row_count"] for r in
-                   out.mapInArrow(writer, _COMMIT_SCHEMA).collect()}
+                   pages.mapInArrow(kernel, _COMMIT_SCHEMA).collect()}
         rows_written = sum(written.values())
         # a pending split with no input rows reached no writer: commit it
         # here as a zero-row lineage row with no data, so reruns skip it

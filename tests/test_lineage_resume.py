@@ -160,20 +160,19 @@ def test_real_kill9_and_resume(spark, tmp_path):
     child_src.write_text(f'''
 import sys, time
 sys.path.insert(0, {repr(os.getcwd())})
-from pyspark.sql import functions as F
 from ocr_award_extractor_spark.config import get_spark
-from ocr_award_extractor_spark.operators.extract_pipeline import extract_documents
+from ocr_award_extractor_spark.operators.extract_pipeline import extract_record
 from ocr_award_extractor_spark.plans.lineage import run_resumable_extraction
 from ocr_award_extractor_spark.sources.tables import load_fixture
 
 spark = get_spark("kill-child", master="local[2]", shuffle_partitions=4)
 docs = load_fixture(spark, n_docs=120)
 
-def slow_extract(pending):
-    time.sleep(4)   # widen the between-commit window the parent kills in
-    out = extract_documents(pending.drop("split_id"))
-    return out.withColumn("split_id",
-                          F.pmod(F.xxhash64("url"), F.lit(8)).cast("int"))
+def slow_extract(*page):
+    # ~1.5 s per split of ~15 rows: the commits of one writer task come
+    # that far apart, wider than the parent's 0.5 s poll and its kill
+    time.sleep(0.1)
+    return extract_record(*page)
 
 run_resumable_extraction(spark, docs, {repr(str(tmp_path / "out"))},
                          "killed-run", n_splits=8, n_batches=8,
@@ -493,11 +492,11 @@ def _jobs(spark, group, fn):
 
 
 def test_commit_job_budget(spark, tmp_path):
-    """One commit job: a fresh directory costs at most 4 Spark jobs (the
-    AQE stages of the one commit plan), a fully committed one none (the
-    driver reads the lineage with pyarrow). Jobs submitted from other
-    driver threads do not inherit the job group, so ungrouped jobs started
-    meanwhile count too."""
+    """One commit job: a fresh directory costs at most 2 Spark jobs (the
+    AQE stages of the one commit plan: the page shuffle and the writer), a
+    fully committed one none (the driver reads the lineage with pyarrow).
+    Jobs submitted from other driver threads do not inherit the job group,
+    so ungrouped jobs started meanwhile count too."""
     out = str(tmp_path / "budget")
     docs = load_fixture(spark, n_docs=N_DOCS)
 
@@ -505,7 +504,7 @@ def test_commit_job_budget(spark, tmp_path):
         return _jobs(spark, group, lambda: run_resumable_extraction(
             spark, docs, out, run_id, n_splits=4))[0]
 
-    assert 1 <= len(jobs("lineage-budget-fresh", "fresh")) <= 4
+    assert 1 <= len(jobs("lineage-budget-fresh", "fresh")) <= 2
     assert jobs("lineage-budget-rerun", "rerun") == set()
     assert read_committed(spark, out).count() == N_DOCS
 
@@ -531,8 +530,10 @@ def test_committed_read_job_budget(spark, tmp_path, n_splits):
 
 
 def test_commit_plan_sorts_each_writer_task_by_split(spark, tmp_path, monkeypatch):
-    """The writer's input is one hash shuffle by split_id into one task per
-    core (not one per split), then a sort by split_id within each task."""
+    """The writer's input is the pages, one hash shuffle by split_id into
+    one task per core (not one per split), then a sort by split_id within
+    each task: the plan's only exchange, with no Python operator under the
+    writer kernel, which runs the extraction itself."""
     import re
 
     docs = load_fixture(spark, n_docs=60)
@@ -553,6 +554,8 @@ def test_commit_plan_sorts_each_writer_task_by_split(spark, tmp_path, monkeypatc
     assert re.search(r"Sort \[split_id#\d+ ASC", lines[sort]), plans[0]
     assert re.search(rf"Exchange hashpartitioning\(split_id#\d+, {cores}\)",
                      lines[sort + 1]), plans[0]
+    assert sum("Exchange" in ln for ln in lines) == 1, plans[0]
+    assert not re.search(r"MapIn|EvalPython|FlatMap", plans[0]), plans[0]
 
 
 def test_split_filters_are_one_in_expression(spark, tmp_path, monkeypatch):
@@ -736,3 +739,82 @@ def test_n_splits_mismatch_on_resume_raises_and_leaves_output(spark, tmp_path):
     with pytest.raises(ValueError, match="n_splits=4"):
         run_resumable_extraction(spark, docs, out, "second", n_splits=8)
     assert _file_state(out, "data", "_lineage") == before
+
+
+# ------------------------------------------------------------- row hash
+# The commit kernel hashes each row in Python (native XXH64, or the
+# pure-Python fallback without a compiler); verify_lineage recomputes the
+# checksum with Spark's xxhash64 in the JVM. The two must agree bit for bit.
+
+def _hash_cases(spark):
+    """(url, ocr_text) pairs: the fixture's extracted rows and edge cases."""
+    from ocr_award_extractor_spark.operators.extract_pipeline import (
+        extract_documents,
+    )
+
+    fixture = [tuple(r) for r in extract_documents(load_fixture(spark, n_docs=N_DOCS))
+               .select("url", "ocr_text").collect()]
+    assert any(text is None for _, text in fixture)      # error rows
+    edges = [(None, "text"), ("u", None), (None, None), ("u", ""), ("", ""),
+             ("http://例え.jp/获奖", "获奖学生：张三、李四 😀🎉\n一等奖"),
+             ("u" * 33, "é \U0001f600" * 9), ("big", "获" * 400_000)]
+    assert len(edges[-1][1].encode()) > 1 << 20
+    lengths = [("x" * n, "y" * n) for n in range(71)]   # 0-70 bytes: every tail
+    return fixture + edges + lengths
+
+
+def test_row_hash_equals_spark_xxhash64(spark, monkeypatch):
+    """The native XXH64 and the pure-Python fallback both give Spark's
+    row_hash() on every case; the html.parser probe does not gate the
+    native one."""
+    from ocr_award_extractor_spark.functions import rowhash, segscan
+    from ocr_award_extractor_spark.plans.lineage import row_hash
+
+    cases = _hash_cases(spark)
+    df = spark.createDataFrame(cases, "url string, ocr_text string")
+    want = [r[0] for r in df.select(row_hash()).collect()]
+    urls, texts = [u for u, _ in cases], [t for _, t in cases]
+
+    assert rowhash._NATIVE is not None and rowhash._NATIVE is segscan.library()
+    assert rowhash.row_hashes(urls, texts).tolist() == want
+    monkeypatch.setattr(rowhash, "_NATIVE", None)
+    assert rowhash.row_hashes(urls, texts).tolist() == want
+
+
+def test_commit_without_native_library_writes_same_lineage(spark, tmp_path,
+                                                           monkeypatch):
+    """The commit kernel run in-process on the same page batches, with the
+    native library on and monkeypatched off, commits the same lineage rows
+    as the Spark commit, and the JVM audit passes on the fallback's root."""
+    import os
+
+    from ocr_award_extractor_spark.functions import rowhash
+    from ocr_award_extractor_spark.operators.extract_pipeline import extract_record
+    from ocr_award_extractor_spark.plans.lineage import (
+        PAGE_COLUMNS, _extract_and_write, committed_splits, with_split_id,
+    )
+
+    docs = load_fixture(spark, n_docs=N_DOCS)
+    batches = (with_split_id(docs, 4)
+               .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
+               .select(*PAGE_COLUMNS, "split_id").toArrow()
+               .sort_by("split_id").to_batches(max_chunksize=64))
+
+    def lineage(out):
+        return committed_splits(out).drop(["run_id"]).sort_by("split_id").to_pylist()
+
+    def commit_in_process(out):
+        list(_extract_and_write(iter(batches), extract=extract_record,
+                                data_dir=os.path.join(out, "data"),
+                                lineage_dir=os.path.join(out, "_lineage"), run_id="r"))
+        return lineage(out)
+
+    spark_root = str(tmp_path / "spark")
+    run_resumable_extraction(spark, docs, spark_root, "spark", n_splits=4)
+    native = commit_in_process(str(tmp_path / "native"))
+    monkeypatch.setattr(rowhash, "_NATIVE", None)
+    fallback_root = str(tmp_path / "fallback")
+    fallback = commit_in_process(fallback_root)
+    assert sum(r["row_count"] for r in native) == N_DOCS
+    assert fallback == native == lineage(spark_root)
+    assert verify_lineage(spark, fallback_root).count() == 0
