@@ -408,7 +408,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     near-duplicate projections are merged (doc_token_profile, event_props,
     textstats_profile) and the engine-defining pipeline queries register
     first."""
-    from ocr_award_extractor_spark.operators import relational
+    from ocr_award_extractor_spark.operators import (
+        corpus, dedup, linkgraph, multimodal, relational, similarity,
+        textstats,
+    )
 
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     q["extract_pipeline_text"] = _extract_pipeline_text
@@ -421,25 +424,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["streaming_windowed_counts"] = _streaming_windowed_counts
     q["stream_dedup_first_seen"] = _stream_dedup_first_seen
     q["model_slot_extract"] = _model_slot_extract
-    try:
-        from ocr_award_extractor_spark.operators import (
-            corpus, dedup, linkgraph, multimodal, similarity, textstats,
-        )
-
-        q.update(dedup.QUERIES)
-        q.update(similarity.QUERIES)
-        q.update(textstats.QUERIES)
-        q.update(corpus.QUERIES)
-        q.update(linkgraph.QUERIES)
-        q.update(multimodal.QUERIES)
-    except ImportError:
-        pass
+    q.update(dedup.QUERIES)
+    q.update(similarity.QUERIES)
+    q.update(textstats.QUERIES)
+    q.update(corpus.QUERIES)
+    q.update(linkgraph.QUERIES)
+    q.update(multimodal.QUERIES)
     q.update(relational.QUERIES)
     return q
 
 
 def oracle_sql() -> dict[str, str]:
-    from ocr_award_extractor_spark.operators import relational
+    from ocr_award_extractor_spark.operators import (
+        corpus, dedup, linkgraph, multimodal, relational, similarity,
+        textstats,
+    )
     from ocr_award_extractor_spark.operators.webify import injection_oracle_sql
 
     o: dict[str, str] = {}
@@ -549,17 +548,10 @@ def oracle_sql() -> dict[str, str]:
                CAST(length(c) AS BIGINT) AS competition_len
         FROM base
     """
-    try:
-        from ocr_award_extractor_spark.operators import (
-            corpus, dedup, linkgraph, multimodal, similarity, textstats,
-        )
-
-        o.update(dedup.ORACLES)
-        o.update(similarity.ORACLES)
-        o.update(textstats.ORACLES)
-        o.update(corpus.ORACLES)
-        o.update(linkgraph.ORACLES)
-        o.update(multimodal.ORACLES)
-    except ImportError:
-        pass
+    o.update(dedup.ORACLES)
+    o.update(similarity.ORACLES)
+    o.update(textstats.ORACLES)
+    o.update(corpus.ORACLES)
+    o.update(linkgraph.ORACLES)
+    o.update(multimodal.ORACLES)
     return o

@@ -55,15 +55,6 @@ _WS_RUN = re.compile(r"\s+")                         # cert_ocr.py:399
 _LEAD_VERB = re.compile(r"^(?:关于|获得|授予)(.+)$")  # cert_ocr.py:402
 _WRAP_QUOTES = re.compile(r"^[\"'《](.+?)[\"'》]$")   # cert_ocr.py:405
 
-EMPTY_FIELDS: dict = {
-    "competition_name": "",
-    "award_level": "",
-    "project_name": "",
-    "winner": [],
-    "teacher": [],
-}
-
-
 def normalize_field(value: str) -> str:
     """Scalar-field cleanup; byte-identical to clean_text (cert_ocr.py:385-407)."""
     if not value:
@@ -121,15 +112,3 @@ def extract_fields(lines: list[str], full_text: str | None = None) -> dict:
         "winner": winners,
         "teacher": teachers,
     }
-
-
-def keep_line(text: str) -> bool:
-    """Blank-line filter contract: keep the ORIGINAL (unstripped) text when
-    its strip is non-empty (certificate_ocr.py:141)."""
-    return bool(text) and bool(text.strip())
-
-
-def join_kept_lines(lines: list[str]) -> tuple[list[str], str]:
-    """(kept_lines, full_text): newline-join of kept lines (cert_ocr.py:149)."""
-    kept = [ln for ln in lines if keep_line(ln)]
-    return kept, "\n".join(kept)

@@ -309,65 +309,6 @@ def canonicalize_url_expr(url) -> F.Column:
         has_scheme, canon).otherwise(u)
 
 
-def canonicalize_url_df(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Adds ``canon_url`` next to ``url_col`` — the projection callers
-    feed to url-level dedup / host caps. Not in the driver registry (50
-    seats, all taken); DuckDB parity + property tests live in
-    tests/test_corpus_ops.py, per the jaccard precedent."""
-    return df.withColumn("canon_url", canonicalize_url_expr(F.col(url_col)))
-
-
-CANONICALIZE_URL_ORACLE_SQL = rf"""
-    WITH s AS (
-        SELECT url, regexp_replace(url, '#.*$', '') AS u FROM urls
-    ), p AS (
-        SELECT url, u,
-               lower(regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.-]*):', 1))
-                   AS scheme,
-               regexp_replace(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://', '')
-                   AS after_scheme,
-               regexp_matches(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://')
-                   AS has_scheme
-        FROM s
-    ), a AS (
-        SELECT url, u, scheme, has_scheme,
-               lower(regexp_extract(after_scheme, '^([^/?]*)', 1)) AS auth0,
-               regexp_replace(after_scheme, '^[^/?]*', '') AS path_q
-        FROM p
-    ), b AS (
-        SELECT url, u, scheme, has_scheme, path_q,
-               CASE WHEN scheme = 'http' AND auth0 LIKE '%:80'
-                    THEN regexp_replace(auth0, ':80$', '')
-                    WHEN scheme = 'https' AND auth0 LIKE '%:443'
-                    THEN regexp_replace(auth0, ':443$', '')
-                    ELSE auth0 END AS authority,
-               CASE WHEN regexp_extract(path_q, '^([^?]*)', 1) = ''
-                    THEN '/' ELSE regexp_extract(path_q, '^([^?]*)', 1)
-               END AS path,
-               -- two DuckDB NULL traps vs Spark's '' semantics:
-               -- regexp_extract is NULL on no-match, and sorting/joining
-               -- a fully-filtered (empty) list is NULL — either would
-               -- poison the final concat for every query-less url
-               coalesce(array_to_string(list_sort(list_filter(
-                   string_split(coalesce(
-                       regexp_extract(path_q, '\?(.*)$', 1), ''), '&'),
-                   x -> len(x) > 0
-                        AND NOT regexp_matches(x, '{TRACKING_PARAM_RE}')
-                        AND NOT regexp_matches(lower(x), '^utm_[a-z]+$')
-               )), '&'), '') AS clean_q
-        FROM a
-    )
-    SELECT url,
-           CASE WHEN url IS NULL THEN NULL
-                WHEN has_scheme THEN
-                    scheme || '://' || authority || path ||
-                    CASE WHEN clean_q = '' THEN ''
-                         ELSE '?' || clean_q END
-                ELSE u END AS canon_url
-    FROM b
-"""
-
-
 ORACLES = {
     # deliberately the naive spellings: one global window per host /
     # one unpartitioned cumsum — correct at oracle scale, and exactly

@@ -118,20 +118,3 @@ def award_summary(extracted: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("docs"),
              F.round(F.avg("ocr_confidence"), 4).alias("avg_conf"))
     )
-
-
-def to_reference_json(extracted: DataFrame) -> DataFrame:
-    """Per-document JSON blobs shaped exactly like the reference's output
-    records (certificate_ocr.py:159-165, ensure_ascii=False analog: Spark
-    to_json emits UTF-8 unescaped) for golden-file comparison."""
-    info = F.struct(
-        F.col("competition_name"), F.col("award_level"), F.col("project_name"),
-        F.struct(F.col("winner"), F.col("teacher")).alias("people"),
-    ).alias("certificate_info")
-    return extracted.select(
-        "url",
-        F.to_json(F.struct(
-            F.col("status"), info, F.col("ocr_confidence"),
-            F.col("url").alias("image_path"), F.col("ocr_text"), F.col("message"),
-        )).alias("doc_json"),
-    )

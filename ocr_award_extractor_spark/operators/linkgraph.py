@@ -1,4 +1,4 @@
-"""Outlink extraction and the host-level link graph — the crawl-native
+"""Outlink extraction and the crawl frontier — the crawl-native
 corpus ops a webtext pipeline feeds back into its frontier and quality
 scoring. The reference has no analog (its corpus is a flat image
 directory, certificate_ocr.py:419-420); these extend the corpus-shaping
@@ -12,15 +12,9 @@ Design for 100 TB:
   tests/test_linkgraph.py) + ``regexp_extract_all`` + higher-order
   ``transform`` for hosts; no Python worker, no shuffle, filters and
   column pruning reach the scan;
-* the host graph is ONE groupBy (src_host, dst_host) shuffle over the
-  edge list — orders of magnitude smaller than the page table it came
-  from;
-* PageRank iterates shuffle-on-host joins of a (host, rank) vector
-  against the static edge list, O(log-free) linear rounds with the same
-  per-round materialize + periodic-checkpoint discipline as
-  dedup.connected_components so the lineage never grows unboundedly.
-  Dangling mass is redistributed exactly: one scalar aggregate per
-  round, collected to the driver in a job of its own.
+* the crawl frontier is one anti-join against the seen set on the
+  canonical url, a distinct that rides the join's partitioning, and an
+  optional per-host cap planned as a map-side top-K.
 """
 
 from __future__ import annotations
@@ -29,8 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # absolute links only: the synthetic link farms are root-relative
-# (href="/123") and a crawl's host graph is built from cross-host
-# absolute edges; root-relative links never leave the page's own host
+# (href="/123") and a crawl's frontier is built from absolute links;
+# root-relative links never leave the page's own host
 ABS_HREF_RE = r'href="(https?://[^"]+)"'
 _HOST_RE = r"^https?://([^/:?#]+)"
 
@@ -51,8 +45,7 @@ def host_of(url) -> F.Column:
 def page_outlinks_df(pages: DataFrame) -> DataFrame:
     """Per-page outlink profile over (url, html [, ...]) pages:
     ``n_links``, the ordered '|'-joined absolute target urls, and their
-    hosts. One projection, zero exchanges; the exploded edge-list shape
-    for graph consumers is ``outlink_edges_df``."""
+    hosts. One projection, zero exchanges."""
     links = _page_links()
     return pages.select(
         "url",
@@ -60,35 +53,6 @@ def page_outlinks_df(pages: DataFrame) -> DataFrame:
         F.array_join(links, "|").alias("out_urls"),
         F.array_join(F.transform(links, host_of), "|").alias("out_hosts"),
     )
-
-
-def outlink_edges_df(pages: DataFrame, drop_self: bool = True) -> DataFrame:
-    """(src_host, dst_host) edge per absolute link — the host-graph input.
-    ``drop_self`` removes same-host edges (a crawl frontier and PageRank
-    both want cross-host structure; intra-host navigation is noise)."""
-    edges = (
-        pages.select(host_of(F.col("url")).alias("src_host"),
-                     F.explode(_page_links()).alias("out_url"))
-        .select("src_host", host_of(F.col("out_url")).alias("dst_host"))
-    )
-    if drop_self:
-        edges = edges.where(F.col("src_host") != F.col("dst_host"))
-    return edges
-
-
-def host_graph_df(pages: DataFrame, drop_self: bool = True) -> DataFrame:
-    """Weighted host graph: one shuffle on (src_host, dst_host) with
-    map-side partial counts — the 100-TB shape (the edge key space is
-    hosts², tiny next to the page table).
-
-    Pytest-graded (plan shape + planted counts); a driver oracle row is
-    derivable on demand — over webified documents the edge set is closed
-    form (src = source||'.example', dst hosts from the OUTLINK formula,
-    count = SUM over i < doc_id % 4 of [(doc_id*7+i*13) % 20 = h]) — the
-    seat is the only thing missing, not the oracle."""
-    return (outlink_edges_df(pages, drop_self=drop_self)
-            .groupBy("src_host", "dst_host")
-            .agg(F.count(F.lit(1)).alias("n_links")))
 
 
 def page_outlinks(spark, sf_dir: str) -> DataFrame:
@@ -170,81 +134,3 @@ def crawl_frontier_df(pages: DataFrame, per_host_limit: int | None = None,
                     .where(F.col("_rn") <= per_host_limit).drop("_rn"))
     return frontier.select("canon_url", "host")
 
-
-def host_pagerank(edges: DataFrame, n_iter: int = 10, damping: float = 0.85,
-                  weight_col: str | None = None,
-                  checkpoint_every: int | None = None) -> DataFrame:
-    """PageRank over a (src_host, dst_host[, weight]) edge list →
-    (host, rank). Exact power iteration with proper dangling-mass
-    redistribution (ranks sum to 1 every round):
-
-        rank'(h) = (1-d)/N + d * (Σ_{e→h} rank(src)/outdeg(src)
-                                  + dangling_mass / N)
-
-    Each round is one shuffle (contribs groupBy host) plus one scalar
-    aggregate for the dangling mass; the rank vector is host-keyed and
-    tiny next to the page table. ``checkpoint_every`` truncates lineage
-    through ``sc.setCheckpointDir`` storage every k rounds (same contract
-    as connected_components(reliable=True) — required for long runs on a
-    real cluster, optional at notebook scale where localCheckpoint-free
-    linear lineage of ~10 joins is fine).
-
-    Float caveat (why this is pytest- not oracle-graded): double sums are
-    accumulation-order-dependent, so ranks are reproducible only to ~1e-12
-    across partitionings — the driver's value-hash gate would flap.
-    """
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    ed = edges.select(F.col("src_host").alias("src"),
-                      F.col("dst_host").alias("dst"),
-                      w.alias("w"))
-
-    hosts = (ed.select(F.col("src").alias("host"))
-             .union(ed.select(F.col("dst"))).distinct()).cache()
-    n = hosts.count()
-    if n == 0:
-        return hosts.withColumn("rank", F.lit(0.0))
-
-    # a host whose total out-weight is 0 (all its edges carry weight 0)
-    # must count as DANGLING, not divide by zero: dropping it from out_w
-    # both removes the 0-denominator contribution rows (inner join) and
-    # routes its mass through the left_anti dangling probe — the
-    # ranks-sum-to-1 invariant holds for any non-negative weight column
-    out_w = (ed.groupBy("src").agg(F.sum("w").alias("outw"))
-             .where(F.col("outw") > 0).cache())
-    ranks = hosts.select("host", F.lit(1.0 / n).alias("rank"))
-
-    prev = None
-    for i in range(n_iter):
-        # per-edge contribution, one shuffle into dst buckets
-        contribs = (
-            ed.join(ranks, ed.src == ranks.host)
-            .join(out_w, "src")
-            .select(F.col("dst").alias("host"),
-                    (F.col("rank") * F.col("w") / F.col("outw")).alias("c"))
-            .groupBy("host").agg(F.sum("c").alias("inflow"))
-        )
-        # dangling hosts (no outgoing edges) leak their mass: collect it
-        # (one scalar) and spread
-        dangling = (
-            ranks.join(out_w, ranks.host == out_w.src, "left_anti")
-            .agg(F.sum("rank")).collect()[0][0] or 0.0
-        )
-        base = (1.0 - damping) / n + damping * dangling / n
-        nxt = (
-            hosts.join(contribs, "host", "left")
-            .select("host",
-                    (F.lit(base)
-                     + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                     ).alias("rank"))
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            nxt = nxt.checkpoint()      # needs sc.setCheckpointDir (raises otherwise)
-        else:
-            nxt = nxt.cache()
-            nxt.count()                 # materialize before dropping prev
-        if prev is not None:
-            prev.unpersist()
-        prev, ranks = nxt, nxt
-    hosts.unpersist()
-    out_w.unpersist()
-    return ranks

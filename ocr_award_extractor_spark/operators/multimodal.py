@@ -6,8 +6,8 @@ needs cv2+PaddleOCR, certificate_ocr.py:3,:6), so the DECODE step is
 pluggable: the default backend raises NotImplementedError; a deterministic
 FAKE backend (a tiny self-describing byte format) makes the Spark-side
 plumbing — schema, batch shape, partitioning, error contract — fully real
-and testable. On a real cluster, swapping `register_backend("image", ...)`
-to a cv2/PIL implementation changes nothing else.
+and testable. On a real cluster, pointing `_BACKENDS["image"]` at a
+cv2/PIL implementation changes nothing else.
 
 Media payload convention (fake backend):
     b"FAKEIMG:<width>:<height>:" + pixel bytes (1 byte/px, row-major)
@@ -15,8 +15,6 @@ Media payload convention (fake backend):
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -38,13 +36,6 @@ FEATURE_SCHEMA = StructType([
     StructField("n_bytes", LongType()),
     StructField("mean_intensity", DoubleType()),
 ])
-
-_BACKENDS: dict[str, Callable[[bytes], dict]] = {}
-
-
-def register_backend(kind: str, fn: Callable[[bytes], dict]) -> None:
-    _BACKENDS[kind] = fn
-
 
 def _decode_fake_image(payload: bytes) -> dict:
     head, _, rest = payload.partition(b":")
@@ -83,11 +74,13 @@ def _real_decode_stub(payload: bytes) -> dict:
     )
 
 
-register_backend("fake_image", _decode_fake_image)
-register_backend("fake_video", _decode_fake_video)
-register_backend("image", _real_decode_stub)
-register_backend("audio", _real_decode_stub)
-register_backend("video", _real_decode_stub)
+_BACKENDS = {
+    "fake_image": _decode_fake_image,
+    "fake_video": _decode_fake_video,
+    "image": _real_decode_stub,
+    "audio": _real_decode_stub,
+    "video": _real_decode_stub,
+}
 
 
 def _feature_row(url, kind, payload) -> dict:
@@ -303,15 +296,3 @@ ORACLES = {
     "multimodal_features": _MULTIMODAL_ORACLE,
     "multimodal_thumbnails": _THUMB_ORACLE,
 }
-
-
-def make_fake_image(width: int, height: int, seed: int) -> bytes:
-    rng = np.random.RandomState(seed)
-    px = rng.randint(0, 256, size=width * height, dtype=np.int64).astype(np.uint8)
-    return b"FAKEIMG:%d:%d:" % (width, height) + px.tobytes()
-
-
-def make_fake_video(n_frames: int, frame_len: int, seed: int) -> bytes:
-    rng = np.random.RandomState(seed)
-    fx = rng.randint(0, 256, size=n_frames * frame_len, dtype=np.int64).astype(np.uint8)
-    return b"FAKEVID:%d:%d:" % (n_frames, frame_len) + fx.tobytes()

@@ -585,17 +585,6 @@ def ivf_train_centroids_df(emb: DataFrame, k: int = IVF_K,
     return as_df(cent_rows)
 
 
-def ivf_mean_cosine_df(emb: DataFrame, cent: DataFrame) -> DataFrame:
-    """One-row distortion summary for a centroid set: mean cosine of
-    every vector to its assigned centroid (higher = tighter clusters) —
-    the quality metric the trainer's tests assert improves."""
-    cos_c = _cosine(F.col("qe"), F.col("cv"))
-    scored = emb.crossJoin(F.broadcast(cent)).select(
-        "vec_id", cos_c.alias("cos_c"))
-    return (scored.groupBy("vec_id").agg(F.max("cos_c").alias("best"))
-            .agg(F.avg("best").alias("mean_cos")))
-
-
 def ivf_topk_cosine(spark: SparkSession, sf_dir: str,
                     nprobe: int = 1,
                     centroids: DataFrame | None = None) -> DataFrame:

@@ -60,10 +60,9 @@ def _punct_count(text):
 def _lang_votes(toks):
     """(hits, guessed): stopword votes per language over a token-array
     Column plus the guess with the pinned tie order en > fr > de > es —
-    THE single spelling shared by textstats_profile, lang_guess,
-    guessed_lang_expr, and fill_missing_lang_df (a partial edit to a
-    duplicated chain would silently diverge the fill from the
-    oracle-checked guess). Hits coalesce NULL to 0 so NULL text (no
+    THE single spelling shared by textstats_profile, guessed_lang_expr,
+    and fill_missing_lang_df (a partial edit to a duplicated chain would
+    silently diverge the fill from the oracle-checked guess). Hits coalesce NULL to 0 so NULL text (no
     tokens, no signal) guesses 'en' via the tie order instead of falling
     through every NULL comparison into the otherwise-branch 'es'."""
     def _hit_counter(words):
@@ -104,9 +103,7 @@ def textstats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: one scan, ONE split in a pre-projection (CollapseProject
     keeps a non-cheap alias referenced >1× as its own Project, so the plan
-    tokenizes once, not per derived column), zero shuffle, no Python UDFs.
-    ``lang_guess``/``doc_fingerprint`` below stay individually callable —
-    this merged spelling exists for the driver's query-count cap."""
+    tokenizes once, not per derived column), zero shuffle, no Python UDFs."""
     docs = load_table(spark, sf_dir, "documents")
     docs = docs.select(
         "doc_id", "lang",
@@ -146,27 +143,12 @@ def textstats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N-gram-free heuristic language ID: stopword votes per language with
-    a pinned priority order (en > fr > de > es) on ties."""
-    docs = load_table(spark, sf_dir, "documents")
-    # one split for all four language counters (see quality_score note)
-    docs = docs.select("doc_id", "lang", _tokens(F.col("text")).alias("toks"))
-    hits, guessed = _lang_votes(F.col("toks"))
-    return docs.select(
-        "doc_id", F.col("lang").alias("actual_lang"),
-        guessed.alias("guessed_lang"),
-        hits["en"].alias("hits_en"), hits["fr"].alias("hits_fr"),
-        hits["de"].alias("hits_de"), hits["es"].alias("hits_es"),
-    )
-
-
 def guessed_lang_expr(text) -> "F.Column":
     """The stopword-vote language guess as a single Column over a text
     Column — literally `_lang_votes` over the tokenized text, so the
     votes and tie order can never diverge from the oracle-checked
-    lang_guess/textstats_profile spellings. All JVM-side. The printed
-    plan inlines the tokenization into each when-condition; that is plan
+    textstats_profile spelling. All JVM-side. The printed plan
+    inlines the tokenization into each when-condition; that is plan
     cosmetics, not cost (runtime subexpression elimination — same
     finding as gopher_gate_df, re-measured here: the inline spelling
     ties a pre-projected-toks spelling within noise at 640k rows, and
@@ -189,20 +171,6 @@ def fill_missing_lang_df(docs: DataFrame) -> DataFrame:
         "lang",
         F.when(missing, guessed_lang_expr(F.col("text")))
         .otherwise(F.col("lang")))
-
-
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-sensitive polynomial rolling hash of the whitespace-normalized
-    text (mod 1e9+7, base 131) — a sequential fold, spelled with the
-    higher-order aggregate() so it still runs JVM-side."""
-    docs = load_table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))
-    codes = F.transform(F.split(norm, ""), lambda c: F.ascii(c).cast("long"))
-    fp = F.aggregate(
-        codes, F.lit(0).cast("long"),
-        lambda acc, x: (acc * FP_BASE + x) % FP_MOD,
-    )
-    return docs.select("doc_id", fp.alias("fingerprint"))
 
 
 # per-language sampling rates (percent kept) — hash-gated, reproducible
@@ -421,9 +389,9 @@ def _conj(flags: dict):
 # The model-scored filter a CCNet-style pipeline runs AFTER rule gates: a
 # linear model over token features. The graded stand-in derives each
 # token's weight from its md5 bucket (deterministic, reproducible in
-# DuckDB via the proven _bucket_sql spelling); a LEARNED model rides the
-# same plumbing as a (token, weight) table through clf_score_join_df —
-# pytest-pinned equivalent to the in-row spelling. All-integer
+# DuckDB via the proven _bucket_sql spelling); a LEARNED model's (token,
+# weight) table through an explode + broadcast join is pytest-pinned
+# equal to the in-row spelling (tests/oracle_spellings.py). All-integer
 # accounting: clf_wsum is an exact int64 sum and the keep decision is an
 # integer compare, so there is no float rounding to diverge between
 # engines (the round(sum(double)) lesson from round 2).
@@ -444,35 +412,6 @@ def clf_score_cols(toks):
                        lambda a, t: a + clf_weight_expr(t))
     keep = (F.size(toks) > 0) & (wsum >= 0)
     return wsum, keep
-
-
-def clf_score_join_df(docs: DataFrame, weights: DataFrame) -> DataFrame:
-    """The real-model path: score docs against a learned (token, weight
-    BIGINT) table — explode tokens, broadcast the weight table (model
-    vocabularies are MBs against a 100-TB corpus), one partial-agg
-    shuffle on doc_id. Unseen tokens weigh 0 (left join + coalesce).
-    Returns (doc_id, clf_wsum, clf_keep) with the SAME contract as the
-    in-row spelling; equivalence on a fully-enumerated vocabulary is
-    pytest-pinned (tests/test_trainingdata_ops.py)."""
-    toks, _ = _gopher_precompute(F.col("text"))
-    exploded = (docs.select("doc_id", toks.alias("_toks"))
-                .select("doc_id", F.size("_toks").alias("_n"),
-                        F.explode_outer("_toks").alias("token")))
-    scored = (
-        exploded.join(F.broadcast(weights), "token", "left")
-        .groupBy("doc_id")
-        .agg(F.sum(F.coalesce(F.col("weight"), F.lit(0))).alias("clf_wsum"),
-             F.max("_n").alias("_n"))
-    )
-    # NULL-text contract parity with clf_score_cols: a NULL token array
-    # gives _n NULL (size(NULL) is NULL) and must yield clf_wsum NULL —
-    # the grouped sum of the explode_outer placeholder row would
-    # otherwise report 0 where the in-row spelling reports NULL
-    wsum = F.when(F.col("_n").isNotNull(),
-                  F.col("clf_wsum").cast("long"))
-    return scored.select(
-        "doc_id", wsum.alias("clf_wsum"),
-        ((F.col("_n") > 0) & (wsum >= 0)).alias("clf_keep"))
 
 
 def gopher_quality_flags_df(docs: DataFrame) -> DataFrame:

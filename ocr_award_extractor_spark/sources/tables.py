@@ -1,8 +1,7 @@
 """Table loaders.
 
-* :func:`load_tables` — the driver-provided TPC-H-ish parquet tables
-  (region nation customer supplier part orders lineitem events documents
-  embeddings) at a given scale-factor directory.
+* :func:`load_table` — one of the driver-provided TPC-H-ish parquet tables
+  (``TABLE_NAMES``) at a given scale-factor directory.
 * :func:`ensure_fixture` / :func:`load_fixture` — the engine's canonical
   web-page input table (url, warc_ts, html, text, lang), generated
   deterministically by sources/fixture_gen.py on first use and cached as
@@ -10,10 +9,7 @@
 
 At cluster scale the fixture loader is replaced by an Iceberg table scan
 (``spark.read.table('documents')`` partitioned by days(warc_ts)); the
-reader API here is the same shape so that swap is config, not code. The
-literal analog of the reference's directory-of-binaries source
-(certificate_ocr.py:419-420) is ``spark.read.format('binaryFile')`` — see
-:func:`read_binary_dir`.
+reader API here is the same shape so that swap is config, not code.
 """
 
 from __future__ import annotations
@@ -32,15 +28,6 @@ TABLE_NAMES = (
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 FIXTURE_DIR = os.path.join(_REPO_ROOT, "fixtures")
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    out = {}
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = spark.read.parquet(path)
-    return out
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -103,19 +90,3 @@ def ensure_fixture(n_docs: int = 500, seed: int = 42, name: str | None = None) -
 
 def load_fixture(spark: SparkSession, n_docs: int = 500, seed: int = 42) -> DataFrame:
     return spark.read.parquet(ensure_fixture(n_docs, seed))
-
-
-def read_binary_dir(spark: SparkSession, path: str, glob: str = "*.html") -> DataFrame:
-    """Directory-of-binary-documents source — the literal analog of the
-    reference's os.listdir + extension filter (certificate_ocr.py:419-420).
-    Returns (url=path, html=content) ready for the extraction pipeline."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select(F.col("path").alias("url"),
-                F.col("modificationTime").alias("warc_ts"),
-                F.col("content").alias("html"))
-    )

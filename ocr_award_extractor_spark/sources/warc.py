@@ -353,7 +353,8 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """WARC files (``*.warc*``) under ``path`` → a PAGE_SCHEMA DataFrame
     (url, warc_ts, html, text, lang): one row per ``response`` record,
     error rows per the module contract. ``lang`` is left empty
-    (language-ID is a downstream operator — textstats.lang_guess);
+    (language-ID is a downstream operator — textstats.guessed_lang_expr,
+    applied by fill_missing_lang_df);
     ``text`` is empty for good rows (extraction fills it) and carries the
     error message on error rows."""
     from ocr_award_extractor_spark.operators.webify import PAGE_SCHEMA

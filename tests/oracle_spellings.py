@@ -12,6 +12,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocr_award_extractor_spark.operators import dedup, relational, similarity
+from ocr_award_extractor_spark.operators.corpus import (
+    TRACKING_PARAM_RE, canonicalize_url_expr,
+)
+from ocr_award_extractor_spark.operators.similarity import _cosine
+from ocr_award_extractor_spark.operators.textstats import _gopher_precompute
 from ocr_award_extractor_spark.sources.tables import load_table
 
 
@@ -161,3 +166,105 @@ def ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_ASSIGN_ORACLE_SQL = similarity._IVF_ASSIGN_CTE + """
     SELECT vec_id, label, CAST(cid AS BIGINT) AS centroid FROM a1
 """
+
+
+# ------------------------------------- url canonicalization, DuckDB twin
+def canonicalize_url_df(df: DataFrame, url_col: str = "url") -> DataFrame:
+    """Adds ``canon_url`` next to ``url_col`` — the projection callers
+    feed to url-level dedup / host caps. Not in the driver registry (50
+    seats, all taken); DuckDB parity + property tests live in
+    tests/test_corpus_ops.py, per the jaccard precedent."""
+    return df.withColumn("canon_url", canonicalize_url_expr(F.col(url_col)))
+
+
+CANONICALIZE_URL_ORACLE_SQL = rf"""
+    WITH s AS (
+        SELECT url, regexp_replace(url, '#.*$', '') AS u FROM urls
+    ), p AS (
+        SELECT url, u,
+               lower(regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.-]*):', 1))
+                   AS scheme,
+               regexp_replace(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://', '')
+                   AS after_scheme,
+               regexp_matches(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://')
+                   AS has_scheme
+        FROM s
+    ), a AS (
+        SELECT url, u, scheme, has_scheme,
+               lower(regexp_extract(after_scheme, '^([^/?]*)', 1)) AS auth0,
+               regexp_replace(after_scheme, '^[^/?]*', '') AS path_q
+        FROM p
+    ), b AS (
+        SELECT url, u, scheme, has_scheme, path_q,
+               CASE WHEN scheme = 'http' AND auth0 LIKE '%:80'
+                    THEN regexp_replace(auth0, ':80$', '')
+                    WHEN scheme = 'https' AND auth0 LIKE '%:443'
+                    THEN regexp_replace(auth0, ':443$', '')
+                    ELSE auth0 END AS authority,
+               CASE WHEN regexp_extract(path_q, '^([^?]*)', 1) = ''
+                    THEN '/' ELSE regexp_extract(path_q, '^([^?]*)', 1)
+               END AS path,
+               -- two DuckDB NULL traps vs Spark's '' semantics:
+               -- regexp_extract is NULL on no-match, and sorting/joining
+               -- a fully-filtered (empty) list is NULL — either would
+               -- poison the final concat for every query-less url
+               coalesce(array_to_string(list_sort(list_filter(
+                   string_split(coalesce(
+                       regexp_extract(path_q, '\?(.*)$', 1), ''), '&'),
+                   x -> len(x) > 0
+                        AND NOT regexp_matches(x, '{TRACKING_PARAM_RE}')
+                        AND NOT regexp_matches(lower(x), '^utm_[a-z]+$')
+               )), '&'), '') AS clean_q
+        FROM a
+    )
+    SELECT url,
+           CASE WHEN url IS NULL THEN NULL
+                WHEN has_scheme THEN
+                    scheme || '://' || authority || path ||
+                    CASE WHEN clean_q = '' THEN ''
+                         ELSE '?' || clean_q END
+                ELSE u END AS canon_url
+    FROM b
+"""
+
+
+# ------------------------------- hash-bucket classifier, learned weights
+def clf_score_join_df(docs: DataFrame, weights: DataFrame) -> DataFrame:
+    """The real-model path: score docs against a learned (token, weight
+    BIGINT) table — explode tokens, broadcast the weight table (model
+    vocabularies are MBs against a 100-TB corpus), one partial-agg
+    shuffle on doc_id. Unseen tokens weigh 0 (left join + coalesce).
+    Returns (doc_id, clf_wsum, clf_keep) with the SAME contract as the
+    in-row spelling; equivalence on a fully-enumerated vocabulary is
+    pytest-pinned (tests/test_trainingdata_ops.py)."""
+    toks, _ = _gopher_precompute(F.col("text"))
+    exploded = (docs.select("doc_id", toks.alias("_toks"))
+                .select("doc_id", F.size("_toks").alias("_n"),
+                        F.explode_outer("_toks").alias("token")))
+    scored = (
+        exploded.join(F.broadcast(weights), "token", "left")
+        .groupBy("doc_id")
+        .agg(F.sum(F.coalesce(F.col("weight"), F.lit(0))).alias("clf_wsum"),
+             F.max("_n").alias("_n"))
+    )
+    # NULL-text contract parity with clf_score_cols: a NULL token array
+    # gives _n NULL (size(NULL) is NULL) and must yield clf_wsum NULL —
+    # the grouped sum of the explode_outer placeholder row would
+    # otherwise report 0 where the in-row spelling reports NULL
+    wsum = F.when(F.col("_n").isNotNull(),
+                  F.col("clf_wsum").cast("long"))
+    return scored.select(
+        "doc_id", wsum.alias("clf_wsum"),
+        ((F.col("_n") > 0) & (wsum >= 0)).alias("clf_keep"))
+
+
+# ----------------------------------------- IVF trainer distortion metric
+def ivf_mean_cosine_df(emb: DataFrame, cent: DataFrame) -> DataFrame:
+    """One-row distortion summary for a centroid set: mean cosine of
+    every vector to its assigned centroid (higher = tighter clusters) —
+    the quality metric the trainer's tests assert improves."""
+    cos_c = _cosine(F.col("qe"), F.col("cv"))
+    scored = emb.crossJoin(F.broadcast(cent)).select(
+        "vec_id", cos_c.alias("cos_c"))
+    return (scored.groupBy("vec_id").agg(F.max("cos_c").alias("best"))
+            .agg(F.avg("best").alias("mean_cos")))

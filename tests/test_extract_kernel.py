@@ -15,7 +15,6 @@ from hypothesis import strategies as st
 from ocr_award_extractor_spark.functions.extract import (
     AWARD_LEVELS,
     extract_fields,
-    join_kept_lines,
     normalize_field,
 )
 from tests.reference_rules_oracle import oracle_extract
@@ -163,13 +162,6 @@ def test_clean_order_verb_then_quotes():
 def test_clean_empty():
     assert normalize_field("") == ""
     assert normalize_field("   ") == ""
-
-
-# ---------------------------------------------------------------- line filter
-def test_join_kept_lines_blank_filter():
-    kept, full = join_kept_lines(["a", "", "  ", "b c ", "\t"])
-    assert kept == ["a", "b c "]          # original text kept unstripped
-    assert full == "a\nb c "
 
 
 # ---------------------------------------------------------------- parity fuzz

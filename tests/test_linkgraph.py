@@ -1,21 +1,18 @@
 """Link-graph operators (operators/linkgraph.py): outlink extraction
-from raw html, the host graph, and PageRank.
+from raw html and the crawl frontier.
 
 page_outlinks gets its DuckDB parity from the driver's CORRECTNESS run
 (the injected links are closed-form from doc_id); pytest pins what the
 driver cannot see — that the regexp extraction really reads the html
 bytes (not the closed form), that the injected block never leaks into
 extracted main text, that malformed UTF-8 degrades to U+FFFD instead of
-an ANSI decode error, and that PageRank matches an independent dense
-power iteration."""
+an ANSI decode error, and that the frontier drops seen urls and caps
+hosts deterministically."""
 
 from __future__ import annotations
 
 import os
 import sys
-
-import numpy as np
-import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -113,7 +110,7 @@ def test_page_outlinks_plan_is_single_projection(spark):
     assert "Python" not in head and "MapInPandas" not in head
 
 
-# ------------------------------------------------------- host graph edges
+# ----------------------------------------------------------- edge fixture
 def _edge_fixture(spark):
     rows = [
         ("a.example", '<a href="https://b.example/1">x</a>'
@@ -127,66 +124,6 @@ def _edge_fixture(spark):
     return spark.createDataFrame(
         [(f"https://{h}/page", html.encode()) for h, html in rows],
         "url string, html binary")
-
-
-def test_host_graph_counts_and_self_edges(spark):
-    from ocr_award_extractor_spark.operators.linkgraph import host_graph_df
-
-    got = {(r["src_host"], r["dst_host"]): r["n_links"]
-           for r in host_graph_df(_edge_fixture(spark)).collect()}
-    assert got == {("a.example", "b.example"): 2,
-                   ("a.example", "c.example"): 1,
-                   ("b.example", "a.example"): 1}
-    with_self = {(r["src_host"], r["dst_host"]): r["n_links"]
-                 for r in host_graph_df(_edge_fixture(spark),
-                                        drop_self=False).collect()}
-    assert with_self[("b.example", "b.example")] == 1
-
-
-# --------------------------------------------------------------- pagerank
-def _dense_pagerank(edges, n_iter, damping):
-    hosts = sorted({h for e in edges for h in e})
-    idx = {h: i for i, h in enumerate(hosts)}
-    n = len(hosts)
-    out_deg = {h: 0 for h in hosts}
-    for s, _ in edges:
-        out_deg[s] += 1
-    r = np.full(n, 1.0 / n)
-    for _ in range(n_iter):
-        nxt = np.zeros(n)
-        dangling = sum(r[idx[h]] for h in hosts if out_deg[h] == 0)
-        for s, d in edges:
-            nxt[idx[d]] += r[idx[s]] / out_deg[s]
-        r = (1 - damping) / n + damping * (nxt + dangling / n)
-    return {h: r[idx[h]] for h in hosts}
-
-
-@pytest.mark.parametrize("n_iter,damping", [(1, 0.85), (8, 0.85), (5, 0.5)])
-def test_pagerank_matches_dense_reference(spark, n_iter, damping):
-    from ocr_award_extractor_spark.operators.linkgraph import host_pagerank
-
-    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"),
-             ("b", "d")]                         # e absent; d links out only
-    df = spark.createDataFrame(edges, "src_host string, dst_host string")
-    got = {r["host"]: r["rank"]
-           for r in host_pagerank(df, n_iter=n_iter, damping=damping).collect()}
-    want = _dense_pagerank(edges, n_iter, damping)
-    assert set(got) == set(want)
-    for h in want:
-        assert got[h] == pytest.approx(want[h], abs=1e-12)
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
-
-
-def test_pagerank_dangling_mass_conserved(spark):
-    """A sink host (inlinks only) must not leak mass: ranks still sum
-    to 1 and the sink outranks its peers."""
-    from ocr_award_extractor_spark.operators.linkgraph import host_pagerank
-
-    edges = [("a", "sink"), ("b", "sink"), ("c", "sink"), ("a", "b")]
-    df = spark.createDataFrame(edges, "src_host string, dst_host string")
-    got = {r["host"]: r["rank"] for r in host_pagerank(df, n_iter=12).collect()}
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
-    assert got["sink"] == max(got.values())
 
 
 # ------------------------------------------ retired similarity spellings
@@ -274,42 +211,21 @@ def test_crawl_frontier_external_seen_set(spark):
     assert got == ["https://h2.example/y"]
 
 
-def test_pagerank_zero_weight_host_is_dangling(spark):
-    """A host whose edges all carry weight 0 must count as dangling
-    (review r6s4: the unguarded divide either ANSI-errored or silently
-    leaked its mass) — ranks still sum to 1."""
-    from ocr_award_extractor_spark.operators.linkgraph import host_pagerank
-
-    rows = [("a", "b", 1.0), ("b", "c", 1.0), ("c", "a", 0.0)]
-    df = spark.createDataFrame(rows, "src_host string, dst_host string, w double")
-    got = {r["host"]: r["rank"]
-           for r in host_pagerank(df, n_iter=6, weight_col="w").collect()}
-    assert set(got) == {"a", "b", "c"}
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
-
-
 def test_host_graph_and_frontier_plan_shapes(spark):
-    """host_graph: partial agg → ONE exchange → final agg (map-side
-    combine). frontier with a cap: exactly THREE exchanges (two anti-join
-    sides + the per-host window) — the distinct piggybacks the join's
-    canon_url partitioning instead of adding a fourth — and the cap runs
-    as a map-side WindowGroupLimit before the final one."""
+    """Frontier with a cap: exactly THREE exchanges (two anti-join sides +
+    the per-host window) — the distinct piggybacks the join's canon_url
+    partitioning instead of adding a fourth — and the cap runs as a
+    map-side WindowGroupLimit before the final one."""
     import contextlib
     import io
 
-    from ocr_award_extractor_spark.operators.linkgraph import (
-        crawl_frontier_df, host_graph_df,
-    )
+    from ocr_award_extractor_spark.operators.linkgraph import crawl_frontier_df
 
     def head(df):
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain(mode="formatted")
         return buf.getvalue().split("\n\n")[0]
-
-    hg = head(host_graph_df(_edge_fixture(spark)))
-    assert hg.count("Exchange") == 1
-    assert hg.count("HashAggregate") == 2        # partial + final
 
     fr = head(crawl_frontier_df(_edge_fixture(spark), per_host_limit=2))
     assert fr.count("Exchange") == 3

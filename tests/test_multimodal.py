@@ -3,9 +3,21 @@ backend, stubbed real backend surfaces as error rows (never exceptions)."""
 
 from __future__ import annotations
 
-from ocr_award_extractor_spark.operators.multimodal import (
-    extract_media_features, make_fake_image, make_fake_video,
-)
+import numpy as np
+
+from ocr_award_extractor_spark.operators.multimodal import extract_media_features
+
+
+def make_fake_image(width: int, height: int, seed: int) -> bytes:
+    rng = np.random.RandomState(seed)
+    px = rng.randint(0, 256, size=width * height, dtype=np.int64).astype(np.uint8)
+    return b"FAKEIMG:%d:%d:" % (width, height) + px.tobytes()
+
+
+def make_fake_video(n_frames: int, frame_len: int, seed: int) -> bytes:
+    rng = np.random.RandomState(seed)
+    fx = rng.randint(0, 256, size=n_frames * frame_len, dtype=np.int64).astype(np.uint8)
+    return b"FAKEVID:%d:%d:" % (n_frames, frame_len) + fx.tobytes()
 
 
 def test_media_feature_extraction(spark):

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_award_extractor_spark.operators.extract_pipeline import (
-    award_summary, extract_documents, extract_record, to_reference_json,
+    award_summary, extract_documents, extract_record,
 )
 from ocr_award_extractor_spark.sources.fixture_gen import generate_rows
 from ocr_award_extractor_spark.sources.tables import load_fixture
@@ -89,45 +89,6 @@ def test_partition_count_invariance(spark, extracted):
                     tuple(r["winner"] or ()))
          for r in again.collect()}
     assert a == b
-
-
-def test_reference_json_shape(extracted):
-    row = (
-        to_reference_json(extracted.where(F.col("status") == "success"))
-        .orderBy("url").limit(1).collect()[0]
-    )
-    import json
-
-    doc = json.loads(row["doc_json"])
-    assert doc["status"] == "success"
-    assert set(doc["certificate_info"]) == {
-        "competition_name", "award_level", "project_name", "people",
-    }
-    assert set(doc["certificate_info"]["people"]) == {"winner", "teacher"}
-    assert doc["image_path"] == row["url"]
-
-
-def test_binary_dir_source_glob_and_extraction(spark, tmp_path):
-    """O1 literal analog: binaryFile source with pathGlobFilter keeps only
-    matching extensions (certificate_ocr.py:419-420) and the loaded bytes
-    run through the full pipeline with a lang-less schema."""
-    from ocr_award_extractor_spark.sources.tables import read_binary_dir
-
-    rows = generate_rows(6, seed=7)
-    for i, r in enumerate(rows):
-        (tmp_path / f"page{i}.html").write_bytes(r["html"])
-    (tmp_path / "skipme.txt").write_text("not html")
-
-    pages = read_binary_dir(spark, str(tmp_path)).withColumn("lang", F.lit(""))
-    assert pages.count() == 6  # .txt filtered at the source
-
-    out = extract_documents(pages)
-    got = {r["url"].rsplit("/", 1)[-1]: r for r in out.collect()}
-    assert len(got) == 6
-    assert all(r["status"] == "success" for r in got.values())
-    # bytes loaded via the source extract identically to the fixture truth
-    for i, r in enumerate(rows):
-        assert got[f"page{i}.html"]["ocr_text"] == r["text"]
 
 
 def test_image_payloads_route_to_ocr_slot(spark):

@@ -43,6 +43,27 @@ def test_every_query_is_oracle_paired_except_documented_rows_only():
     assert set(o) - set(q) == set()
 
 
+def test_registry_import_failure_raises(monkeypatch):
+    """An operator module that fails to import must fail the registry,
+    not shrink it: a silent skip drops every query and oracle of the
+    modules in the same block, and the pairing checks above still pass on
+    what is left."""
+    import pytest
+
+    import __spark_entry__ as entrymod
+    from ocr_award_extractor_spark import operators
+
+    q, o = _registry()
+    assert (len(q), len(o)) == (49, 48)
+    name = "ocr_award_extractor_spark.operators.linkgraph"
+    monkeypatch.setitem(sys.modules, name, None)
+    monkeypatch.delattr(operators, "linkgraph", raising=False)
+    with pytest.raises(ImportError):
+        entrymod.queries()
+    with pytest.raises(ImportError):
+        entrymod.oracle_sql()
+
+
 def test_pipeline_family_registers_first():
     q, _ = _registry()
     first = list(q)[:10]

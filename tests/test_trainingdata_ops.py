@@ -83,9 +83,12 @@ def test_jaccard_adjacent(spark, planted_dir):
 
 
 def test_fingerprint_matches_pure_python(spark, planted_dir):
-    from ocr_award_extractor_spark.operators.textstats import FP_BASE, FP_MOD, doc_fingerprint
+    from ocr_award_extractor_spark.operators.textstats import (
+        FP_BASE, FP_MOD, textstats_profile,
+    )
 
-    got = {r["doc_id"]: r["fingerprint"] for r in doc_fingerprint(spark, planted_dir).collect()}
+    got = {r["doc_id"]: r["fingerprint"]
+           for r in textstats_profile(spark, planted_dir).collect()}
     import re
 
     for i, t, _ in DOCS:
@@ -97,12 +100,12 @@ def test_fingerprint_matches_pure_python(spark, planted_dir):
 
 
 def test_lang_guess_on_fixture_langs(spark, planted_dir):
-    from ocr_award_extractor_spark.operators.textstats import lang_guess
+    from ocr_award_extractor_spark.operators.textstats import textstats_profile
 
-    rows = lang_guess(spark, planted_dir).collect()
+    rows = textstats_profile(spark, planted_dir).collect()
     by_id = {r["doc_id"]: r for r in rows}
     assert by_id[0]["guessed_lang"] == "en"
-    assert by_id[0]["hits_en"] > 0
+    assert by_id[0]["stop_hits"] > 0
 
 
 def test_lsh_recall_against_bruteforce(spark):
@@ -547,7 +550,8 @@ def test_jaccard_duckdb_parity_sf0001(spark):
 
 def test_fill_missing_lang(spark):
     """fill_missing_lang_df: NULL/empty lang filled by the stopword-vote
-    guess (same votes + tie order as lang_guess), labelled rows
+    guess (same votes + tie order as textstats_profile's guessed_lang),
+    labelled rows
     untouched."""
     from ocr_award_extractor_spark.operators.textstats import (
         fill_missing_lang_df,
@@ -574,8 +578,9 @@ def test_ivf_train_centroids_improves_and_is_deterministic(spark):
     embeddings table; (b) the result is bit-identical under a different
     input partitioning (exact int sums, unique argmax tie-break)."""
     from ocr_award_extractor_spark.operators.similarity import (
-        _emb_and_centroids, ivf_mean_cosine_df, ivf_train_centroids_df,
+        _emb_and_centroids, ivf_train_centroids_df,
     )
+    from tests.oracle_spellings import ivf_mean_cosine_df
 
     emb, seed = _emb_and_centroids(spark, "/root/testdata/sf0.001")
     base = ivf_mean_cosine_df(emb, seed).collect()[0]["mean_cos"]
@@ -807,6 +812,7 @@ def test_clf_join_spelling_equals_in_row(spark):
 
     from ocr_award_extractor_spark.operators import textstats as ts
     from ocr_award_extractor_spark.sources.tables import load_table
+    from tests.oracle_spellings import clf_score_join_df
 
     sf = "/root/testdata/sf0.001"
     docs = load_table(spark, sf, "documents").select("doc_id", "text")
@@ -817,12 +823,12 @@ def test_clf_join_spelling_equals_in_row(spark):
     vocab = (docs.select(F.explode(toks).alias("token")).distinct()
              .select("token", ts.clf_weight_expr(F.col("token")).alias("weight")))
     joined = {r["doc_id"]: (r["clf_wsum"], r["clf_keep"])
-              for r in ts.clf_score_join_df(docs, vocab).collect()}
+              for r in clf_score_join_df(docs, vocab).collect()}
     assert joined == in_row and len(joined) == 500
     # unseen tokens weigh 0: an empty vocabulary scores every doc 0 and
     # keeps every non-empty doc (0 >= 0)
     empty = spark.createDataFrame([], "token string, weight long")
-    zeroed = ts.clf_score_join_df(docs, empty).collect()
+    zeroed = clf_score_join_df(docs, empty).collect()
     assert all(r["clf_wsum"] == 0 for r in zeroed)
 
 
@@ -831,13 +837,14 @@ def test_clf_join_null_text_contract(spark):
     r6s4: the join path's grouped sum reported 0 where the in-row
     column is NULL)."""
     from ocr_award_extractor_spark.operators import textstats as ts
+    from tests.oracle_spellings import clf_score_join_df
 
     docs = spark.createDataFrame(
         [(1, "hello world"), (2, None), (3, "")],
         "doc_id long, text string")
     empty_vocab = spark.createDataFrame([], "token string, weight long")
     got = {r["doc_id"]: (r["clf_wsum"], r["clf_keep"])
-           for r in ts.clf_score_join_df(docs, empty_vocab).collect()}
+           for r in clf_score_join_df(docs, empty_vocab).collect()}
     assert got[1] == (0, True)          # tokens, all unseen -> 0, keep
     assert got[2] == (None, None)       # NULL text -> NULL, like in-row
     assert got[3] == (0, False)         # empty text -> no evidence
