@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)``  — flagship: driver documents → deterministic web-page
-wrap → full mapInPandas extraction pipeline → status/lang summary.
+wrap → full mapInArrow extraction pipeline → status/lang summary.
 
 ``queries()``     — one entry per implemented operator (SURVEY.md §2 plus
 the training-data-pipeline operators); each callable (spark, sf_dir) →
@@ -188,7 +188,7 @@ def _resumable_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(
         tempfile.gettempdir(), f"sparkgraft_commit_{tag}_{os.getpid()}")
     # stage the webified pages as a parquet table ONCE: the split filter
-    # sits above the webify mapInPandas, so passing the UDF subtree
+    # sits above the webify mapInArrow, so passing the UDF subtree
     # directly would re-wrap the whole corpus in every commit job
     # (production input is a real table — this mirrors that shape)
     src = os.path.join(out_dir + "_src")

@@ -6,7 +6,7 @@ as a Spark-first, Common-Crawl-scale pipeline:
 
     Iceberg/parquet scan (partition-pruned on warc_ts)
       -> salted repartition (host-skew defuse)
-      -> mapInPandas batched HTML parse + boilerplate strip + field extraction
+      -> mapInArrow batched HTML parse + boilerplate strip + field extraction
       -> structured spans + lineage rows written back (resumable)
 
 Layout:

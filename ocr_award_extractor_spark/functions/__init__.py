@@ -1,2 +1,2 @@
 """Pure-Python kernels. No Spark imports here — these run inside Arrow
-batches (mapInPandas) on executors and must stay import-cheap."""
+batches (mapInArrow) on executors and must stay import-cheap."""

@@ -1,55 +1,61 @@
-"""The engine's one Arrow in/out for per-row Python kernels.
+"""The engine's one Arrow boundary for per-row Python kernels.
 
 A per-row kernel is a module-level function of a few column values that
 returns one record (a dict keyed by the output schema's field names) or,
 for :func:`flat_map_rows`, an iterable of any number of records.
-:func:`map_rows` and :func:`flat_map_rows` run it as one ``mapInPandas``
-stage: ship the package to the workers, project the input columns, call
-the kernel on each row's values (numpy scalars, straight from
-``to_numpy()``) and assemble the output batch columnar. Which entry point
-an operator uses follows from its kernel's shape; there is no option.
-
-Batch-shaped kernels — numpy over a whole Arrow batch (MinHash, LSH,
-batched model inference) or a shard writer — keep raw ``mapInPandas``.
-
-Output frames are built per column: ``pd.DataFrame(rows)`` from a list of
-dicts does per-cell type inference, measured at ~2× of the WHOLE stage
-cost in the extract kernel at 32 cores. A batch that produces no records
-yields no frame at all: pandas would type its empty columns float64,
-which Arrow cannot cast to a timestamp or binary field.
+:func:`map_rows` and :func:`flat_map_rows` run it as one ``mapInArrow``
+stage, one output batch per input batch (:func:`map_batches`). Which entry
+point an operator uses follows from its kernel's shape; there is no
+option. The lineage commit, the WARC/WET writers and the model slot
+cross with :func:`column_values` and :func:`records_to_batch` too. A
+kernel sees a timestamp as a naive UTC ``datetime``, and a naive one it
+returns is read as UTC, whatever the session time zone. Batch-shaped
+numpy kernels (MinHash, LSH scoring) keep ``mapInPandas``.
 """
 
 from __future__ import annotations
 
 import functools
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
 from typing import TYPE_CHECKING
 
-import pandas as pd
+import pyarrow as pa
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
     from pyspark.sql.types import StructType
 
 
-def records_to_frame(rows: Sequence[dict], cols: Sequence[str]) -> pd.DataFrame:
-    """list-of-dict records → columnar pandas frame (one list per column,
-    no per-cell inference, no copy)."""
-    data = {c: [r[c] for r in rows] for c in cols}
-    return pd.DataFrame(data, columns=list(cols), copy=False)
+def column_values(batch: pa.RecordBatch, cols: Sequence[str]) -> list[list]:
+    """The Python values of ``cols`` in ``batch``, one list per column."""
+    out = []
+    for col in map(batch.column, cols):
+        if pa.types.is_timestamp(col.type):   # zoned by the session: keep UTC
+            col = col.cast(pa.timestamp(col.type.unit))
+        out.append(col.to_pylist())
+    return out
 
 
-def _run(batches: Iterator[pd.DataFrame], cols: tuple[str, ...],
-         fn: Callable, out_cols: tuple[str, ...],
-         many: bool) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = zip(*(pdf[c].to_numpy() for c in cols))
+def records_to_batch(records: Sequence[dict], schema: StructType) -> pa.RecordBatch:
+    """Records → one Arrow batch typed by ``schema``, built per column."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.RecordBatch.from_pydict(
+        {c: [r[c] for r in records] for c in schema.fieldNames()},
+        schema=to_arrow_schema(schema))
+
+
+def map_batches(batches: Iterable[pa.RecordBatch], cols: Sequence[str],
+                fn: Callable, schema: StructType,
+                many: bool = False) -> Iterator[pa.RecordBatch]:
+    """``fn`` over each row of ``cols``: one output batch per input batch."""
+    for batch in batches:
+        rows = zip(*column_values(batch, cols))
         if many:
             recs = [rec for values in rows for rec in fn(*values)]
         else:
             recs = [fn(*values) for values in rows]
-        if recs:
-            yield records_to_frame(recs, out_cols)
+        yield records_to_batch(recs, schema)
 
 
 def _map(df: DataFrame, cols: Sequence[str], fn: Callable,
@@ -59,11 +65,10 @@ def _map(df: DataFrame, cols: Sequence[str], fn: Callable,
     ensure_package_on_workers(df.sparkSession)
     # a partial of a module-level function pickles by reference, so the
     # worker imports this package (and its zipimport stat check) to run it
-    kernel = functools.partial(_run, cols=tuple(cols), fn=fn,
-                               out_cols=tuple(schema.fieldNames()),
-                               many=many)
+    kernel = functools.partial(map_batches, cols=tuple(cols), fn=fn,
+                               schema=schema, many=many)
     kernel.__name__ = fn.__name__   # the plan names the row kernel
-    return df.select(*cols).mapInPandas(kernel, schema)
+    return df.select(*cols).mapInArrow(kernel, schema)
 
 
 def map_rows(df: DataFrame, cols: Sequence[str],

@@ -28,7 +28,7 @@ characters, and a segment is kept iff it is not inside a killed container
 (script/style/nav/footer/… tags, or class/id matching a boilerplate
 pattern, or display:none) and its link density is below threshold.
 
-Scale note: this runs inside mapInPandas Arrow batches on executors, one
+Scale note: this runs inside mapInArrow batches on executors, one
 document at a time. The parser backend is one function,
 :func:`segment_html`, with two tiers that must produce the same segments:
 

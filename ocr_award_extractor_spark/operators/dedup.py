@@ -286,8 +286,9 @@ def connected_components(docs: DataFrame, edges: DataFrame,
     job of its own. A zero count means propagation changed nothing, and a
     pointer jump cannot move a propagation fixpoint (labels are constant
     on each component and equal to its minimum), so the previous labels
-    are returned as they are. Works for any orderable id type — 64-bit
-    ints and the 128-bit hex-string doc_ids alike.
+    are returned as they are; ``max_iters`` rounds without one raise
+    ``RuntimeError``. Works for any orderable id type — 64-bit ints and
+    the 128-bit hex-string doc_ids alike.
 
     Fault tolerance is a CONFIG CHOICE (r4 verdict #5): the default
     localCheckpoint materializes to EXECUTOR storage — fast, but an
@@ -364,7 +365,7 @@ def connected_components(docs: DataFrame, edges: DataFrame,
             new.join(right, F.col("comp") == F.col("jid"))
             .select("doc_id", F.col("jcomp").alias("comp"))
         )
-    return labels
+    raise RuntimeError(f"connected_components did not converge in {max_iters} rounds")
 
 
 # ---------------------------------------------------------------- simhash

@@ -2,13 +2,13 @@
 
 Spark plan (SURVEY.md §3.4):
 
-    scan documents                        (columns pruned to url/warc_ts/lang/html;
+    scan documents                        (page_columns: url/warc_ts/lang/html;
                                            warc_ts predicates push into the scan)
       → repartition(P, xxhash64(url, salt))  explicit salted repartition — input
                                            splits are host-correlated and AQE does
-                                           NOT split skewed MapInPandas tasks, so
+                                           NOT split skewed MapInArrow tasks, so
                                            this is a deliberate shuffle (§4)
-      → map_rows(extract_record)          ONE mapInPandas stage fusing the whole
+      → map_rows(extract_record)          ONE mapInArrow stage fusing the whole
                                            reference dataflow: decode → two-strategy
                                            parse → pick-best → blank filter → join
                                            → field extraction (certificate_ocr.py
@@ -16,7 +16,7 @@ Spark plan (SURVEY.md §3.4):
                                            at the DataFrame level
 
 The lineage commit (plans/lineage.py) does not use this stage: it runs
-extract_record inside its writer kernel, one Python stage per commit.
+extract_record (by map_batches) inside its writer kernel, on page_columns.
 
 Error rows carry status='error' + message with NULL payload fields — the
 reference's error-record-not-exception contract (certificate_ocr.py:100-105,
@@ -55,6 +55,15 @@ OUT_SCHEMA = StructType([
     StructField("n_lines", IntegerType()),
     StructField("n_html_bytes", LongType()),
 ])
+PAGE_COLUMNS = ("url", "warc_ts", "lang", "html")   # the extraction's input
+
+
+def page_columns(df: DataFrame, *extra: str) -> DataFrame:
+    """The extraction's input columns (plus ``extra``), ``warc_ts`` cast
+    to ``timestamp`` in the JVM: one projection for both extraction paths."""
+    return df.select("url", F.col("warc_ts").cast("timestamp").alias("warc_ts"),
+                     "lang", "html", *extra)
+
 
 def extract_record(url, warc_ts, lang, html) -> dict:
     """One document through the full reference dataflow: the row kernel
@@ -100,11 +109,10 @@ def extract_documents(
     input is already well-balanced, e.g. the small fixture). At cluster
     scale pass ~2-4× total cores so jumbo-doc stragglers stay short.
     """
-    cols = ("url", "warc_ts", "lang", "html")
-    df = df.select(*cols)   # column pruning: html never flows past this stage
+    df = page_columns(df)   # column pruning: html never flows past this stage
     if salt_partitions:
         df = df.repartition(salt_partitions, F.xxhash64("url", F.lit(SALT_SEED)))
-    return map_rows(df, cols, extract_record, OUT_SCHEMA)
+    return map_rows(df, PAGE_COLUMNS, extract_record, OUT_SCHEMA)
 
 
 def award_summary(extracted: DataFrame) -> DataFrame:

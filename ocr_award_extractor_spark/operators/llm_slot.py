@@ -32,11 +32,13 @@ import json
 import re
 from collections.abc import Callable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-from ocr_award_extractor_spark.functions.batching import map_rows, records_to_frame
+from ocr_award_extractor_spark.functions.batching import (
+    column_values, map_rows, records_to_batch,
+)
 from ocr_award_extractor_spark.functions.extract import extract_fields
 
 _FENCED = re.compile(r"```json\s*(.*?)\s*```", re.DOTALL)   # cert:239
@@ -147,15 +149,14 @@ def extract_with_model(
     from ocr_award_extractor_spark.config import ensure_package_on_workers
 
     ensure_package_on_workers(extracted.sparkSession)
-    src = extracted.select("url", "ocr_text")
-    _cols = [f.name for f in MODEL_SCHEMA.fields]
 
-    def model_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = [(t or "") for t in pdf["ocr_text"]]
+    def model_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            urls, texts = column_values(batch, ("url", "ocr_text"))
+            texts = [(t or "") for t in texts]
             replies = infer_fn([PROMPT_TEMPLATE.format(text=t) for t in texts])
             recs = [_rec(url, *parse_model_reply(reply, text))
-                    for url, text, reply in zip(pdf["url"], texts, replies)]
-            yield records_to_frame(recs, _cols)
+                    for url, text, reply in zip(urls, texts, replies)]
+            yield records_to_batch(recs, MODEL_SCHEMA)
 
-    return src.mapInPandas(model_batch, MODEL_SCHEMA)
+    return extracted.select("url", "ocr_text").mapInArrow(model_batch, MODEL_SCHEMA)

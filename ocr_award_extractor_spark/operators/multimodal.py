@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed in Arrow-batched mapInPandas stages.
+with typed metadata, processed in Arrow-batched mapInArrow stages.
 
 The container has no image/audio codecs (no cv2/PIL/ffmpeg — the reference
 needs cv2+PaddleOCR, certificate_ocr.py:3,:6), so the DECODE step is
@@ -121,7 +121,6 @@ def _media_rows(doc_id: int) -> list[dict]:
     the error contract), plus a FAKEVID for every 4th doc. Pixel byte i is
     (doc_id·a + i·b) mod m — a closed form DuckDB reproduces with a
     correlated SUM over range(), so mean_intensity is oracle-checkable."""
-    doc_id = int(doc_id)   # numpy scalar: keep the arithmetic in Python ints
     w, h = 8 + doc_id % 9, 8 + doc_id % 7
     px = ((doc_id * _IMG_A + np.arange(w * h, dtype=np.int64) * _IMG_B)
           % _IMG_MOD).astype(np.uint8)

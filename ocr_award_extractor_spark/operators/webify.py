@@ -188,7 +188,6 @@ def text_to_lines(text: str) -> list[str]:
 
 
 def wrap_row(doc_id: int, text: str, lang: str, source: str) -> dict:
-    doc_id = int(doc_id)   # numpy scalar: timedelta rejects np.int64
     rng = random.Random(f"wrap:{doc_id}")
     lines = text_to_lines(injected_text(doc_id, text))
     html = _build_html(rng, lines, lines[0] if lines else "untitled")
@@ -223,7 +222,7 @@ def webify_urls_df(docs: DataFrame) -> DataFrame:
     the stateful-dedup staging stages exactly these two columns — can
     skip building any html (guide §4: don't run an opaque Python stage
     for columns a projection can produce). Byte-equality with the
-    mapInPandas output is pinned by
+    mapInArrow output is pinned by
     tests/test_webify.py::test_webify_urls_projection_matches_wrap_row.
     Timestamp arithmetic is interval-based (not epoch round-trip), so the
     value is session-timezone-independent like wrap_row's."""
@@ -246,7 +245,6 @@ def pdf_wrap_row(doc_id: int, text: str, lang: str, source: str) -> dict:
     one — only the url suffix and strategy differ."""
     from ocr_award_extractor_spark.functions.pdftext import make_simple_pdf
 
-    doc_id = int(doc_id)   # numpy scalar: timedelta rejects np.int64
     lines = text_to_lines(injected_text(doc_id, text))
     return {
         "url": f"https://{source}.example/{lang}/doc{doc_id:08d}.pdf",

@@ -14,8 +14,8 @@ lineage (input split, row counts, checksum). Design:
   ``split_id`` into at most one task per core, sorted by ``split_id``
   within each task. Each task runs one ``mapInArrow`` kernel,
   :func:`_extract_and_write`: it runs the per-row extraction kernel
-  (``extract_record``) on one split's pages at a time, builds their Arrow
-  batch with each row's hash, and hands it to the writer
+  (``extract_record``) on one split's pages at a time by
+  ``batching.map_batches``, hashes each row, and hands the batch to the writer
   :func:`_write_splits`. The writer streams a split into its tmp file
   and, as soon as the next split begins (or its input ends), commits it
   by three file-system steps, in order:
@@ -73,7 +73,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 N_SPLITS_DEFAULT = 16
-PAGE_COLUMNS = ("url", "warc_ts", "lang", "html")   # the extraction's input
 
 _COMMIT_SCHEMA = "split_id int, row_count long, checksum long"
 _LINEAGE_ARROW_SCHEMA = pa.schema([("run_id", pa.string()), ("split_id", pa.int32()),
@@ -206,23 +205,17 @@ def _extract_splits(batches, extract):
     (:func:`~ocr_award_extractor_spark.functions.rowhash.row_hashes`,
     equal to :func:`row_hash`) per run of one split, so the writer can
     commit a split once the next one is extracted."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    from ocr_award_extractor_spark.functions.batching import column_values, map_batches
     from ocr_award_extractor_spark.functions.rowhash import row_hashes
+    from ocr_award_extractor_spark.operators.extract_pipeline import OUT_SCHEMA, PAGE_COLUMNS
 
-    schema = to_arrow_schema(_committed_schema()).append(pa.field("_h", pa.int64()))
-    names = schema.names[:-2]           # the extraction's columns
     for batch in batches:
-        if not batch.num_rows:
-            continue
         for lo, hi in _split_runs(batch.column("split_id").to_numpy()):
             pages = batch.slice(lo, hi - lo)
-            records = [extract(*row) for row in
-                       zip(*(pages.column(c).to_pylist() for c in PAGE_COLUMNS))]
-            cols = {c: [r[c] for r in records] for c in names}
-            cols["split_id"] = pages.column("split_id")
-            cols["_h"] = row_hashes(cols["url"], cols["ocr_text"])
-            yield pa.RecordBatch.from_pydict(cols, schema=schema)
+            (out,) = map_batches([pages], PAGE_COLUMNS, extract, OUT_SCHEMA)
+            hashes = row_hashes(*column_values(out, ("url", "ocr_text")))
+            yield (out.append_column("split_id", pages.column("split_id"))
+                   .append_column("_h", pa.array(hashes)))
 
 
 def _extract_and_write(batches, *, extract, **writer):
@@ -299,6 +292,7 @@ def run_resumable_extraction(
     rows_written = 0
     if pending_ids:
         from ocr_award_extractor_spark.config import ensure_package_on_workers
+        from ocr_award_extractor_spark.operators.extract_pipeline import page_columns
 
         ensure_package_on_workers(spark)
         pending = with_split_id(docs, n_splits)
@@ -309,11 +303,7 @@ def run_resumable_extraction(
         # each task its splits one after another: the kernel extracts and
         # commits one split at a time, so it holds one open file
         width = min(len(pending_ids), spark.sparkContext.defaultParallelism)
-        # warc_ts gets OUT_SCHEMA's type here, in the JVM: a timestamp_ntz
-        # input is read in the session time zone, as the pandas boundary
-        # of extract_documents reads it
-        pages = (pending.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-                 .select(*PAGE_COLUMNS, "split_id")
+        pages = (page_columns(pending, "split_id")
                  .repartition(width, "split_id").sortWithinPartitions("split_id"))
         kernel = functools.partial(
             _extract_and_write, extract=extract, data_dir=data_dir,

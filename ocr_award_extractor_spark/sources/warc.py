@@ -23,7 +23,7 @@ module reads it Spark-first with NO external WARC library:
   that scan and differ only in their glob and row generator.
 
 Output: ``write_warc`` and ``write_wet`` serialize rows back to
-gzip-member-per-record shards through one ``mapInPandas`` writer
+gzip-member-per-record shards through one ``mapInArrow`` writer
 kernel. Each task returns its ``(written, skipped)`` counts as a row;
 the driver sums the collected rows, so a call's counts are its own.
 
@@ -56,11 +56,12 @@ import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     StringType, StructField, StructType, TimestampType,
 )
 
-from ocr_award_extractor_spark.functions.batching import flat_map_rows
+from ocr_award_extractor_spark.functions.batching import column_values, flat_map_rows
 
 _log = logging.getLogger(__name__)
 
@@ -441,15 +442,14 @@ def _warc_block(html) -> bytes:
             + _HDR_END + html)
 
 
-def _shard_writer(batches, out_dir: str, suffix: str, body_col: str,
-                  wtype: bytes, content_type: bytes, block_of):
-    """Task side of :func:`_write_shards`: stream this partition's rows
-    into a tmp file, rename it to ``part-NNNNN<suffix>`` and yield one
-    ``(written, skipped)`` row. NULL timestamps arrive as pandas NaT and
-    are normalized back to None (WARC-Date omitted)."""
+def _shard_writer(batches, out_dir: str, suffix: str, wtype: bytes,
+                  content_type: bytes, block_of):
+    """Task side of :func:`_write_shards`: stream this partition's (url,
+    body, warc_ts) rows into a tmp file, rename it to ``part-NNNNN<suffix>``
+    and yield one ``(written, skipped)`` row. A NULL warc_ts omits WARC-Date."""
     import uuid
 
-    import pandas as pd
+    import pyarrow as pa
     from pyspark import TaskContext
 
     f = None
@@ -458,11 +458,8 @@ def _shard_writer(batches, out_dir: str, suffix: str, body_col: str,
     path = os.path.join(out_dir, f"part-{pid:05d}{suffix}")
     tmp = os.path.join(out_dir, f".part-{pid:05d}-{uuid.uuid4().hex[:8]}.tmp")
     try:
-        for pdf in batches:
-            for row in pdf.to_dict("records"):
-                url, ts = row["url"], row.get("warc_ts")
-                if ts is not None and pd.isna(ts):
-                    ts = None
+        for batch in batches:
+            for url, body, ts in zip(*column_values(batch, batch.schema.names)):
                 if url is None:
                     # a record without a target URI is unwritable; skip
                     # it VISIBLY (counted) rather than killing the job
@@ -471,7 +468,7 @@ def _shard_writer(batches, out_dir: str, suffix: str, body_col: str,
                     if f is None:   # lazy: empty partitions write nothing
                         f = open(tmp, "wb")
                     f.write(_warc_record(wtype, content_type, url, ts, pid,
-                                         seq, block_of(row[body_col])))
+                                         seq, block_of(body)))
                     written += 1
                 seq += 1
         if f is not None:
@@ -483,7 +480,7 @@ def _shard_writer(batches, out_dir: str, suffix: str, body_col: str,
         if os.path.exists(tmp):
             os.remove(tmp)
         raise
-    yield pd.DataFrame({"written": [written], "skipped": [skipped]})
+    yield pa.RecordBatch.from_pydict({"written": [written], "skipped": [skipped]})
 
 
 def _write_shards(df: DataFrame, out_dir: str, suffix: str, mode: str,
@@ -495,11 +492,11 @@ def _write_shards(df: DataFrame, out_dir: str, suffix: str, mode: str,
     memory, not O(partition)) committed by os.rename, so a killed job
     leaves no half-visible shard (same idiom as plans/lineage.py; tmp
     names contain no format suffix so the read globs never see them).
-    Each record is ``block_of(row[body_col])`` framed by
+    Each record is ``block_of`` of the row's ``body_col`` framed by
     :func:`_warc_record`. Pure per-partition — no shuffle, no driver data
     path; shard count = partition count.
 
-    The writer is a ``mapInPandas`` kernel, not ``foreachPartition``: the
+    The writer is a ``mapInArrow`` kernel, not ``foreachPartition``: the
     latter runs on the RDD path, pickling every row (html payloads
     included) one at a time across the Python boundary (guide §4); Arrow
     batches move the same bytes columnar. Each task returns its
@@ -510,13 +507,13 @@ def _write_shards(df: DataFrame, out_dir: str, suffix: str, mode: str,
     from ocr_award_extractor_spark.config import ensure_package_on_workers
 
     _prepare_out_dir(out_dir, suffix, mode)
-    cols = ["url", body_col] + (["warc_ts"] if "warc_ts" in df.columns else [])
+    ts = "warc_ts" if "warc_ts" in df.columns else F.lit(None).cast("timestamp")
     writer = functools.partial(
-        _shard_writer, out_dir=out_dir, suffix=suffix, body_col=body_col,
-        wtype=wtype, content_type=content_type, block_of=block_of)
+        _shard_writer, out_dir=out_dir, suffix=suffix, wtype=wtype,
+        content_type=content_type, block_of=block_of)
     ensure_package_on_workers(df.sparkSession)
-    counts = (df.select(*cols)
-              .mapInPandas(writer, "written long, skipped long").collect())
+    counts = (df.select("url", body_col, ts)
+              .mapInArrow(writer, "written long, skipped long").collect())
     skipped = sum(r["skipped"] for r in counts)
     if skipped:
         _log.warning("%s: skipped %d row(s) with a NULL url (a WARC "
@@ -544,7 +541,7 @@ def write_wet(extracted: DataFrame, out_dir: str,
     substitution). NULL-url rows are skipped, and their count is logged
     as a warning.
 
-    Scale shape: one ``mapInPandas`` writer kernel — every task
+    Scale shape: one ``mapInArrow`` writer kernel — every task
     serializes its own rows and writes its own shard to the shared
     filesystem; no shuffle, no driver data path, shard count = partition
     count (control it upstream with repartition/coalesce). Only
@@ -552,8 +549,6 @@ def write_wet(extracted: DataFrame, out_dir: str,
     the text column is UTF-8 encoded and byte-identical on read-back
     (tests/test_warc_source.py::test_wet_roundtrip_byte_identical)."""
     if "status" in extracted.columns:
-        from pyspark.sql import functions as F
-
         extracted = extracted.where(F.col("status") == "success")
     return _write_shards(extracted, out_dir, ".warc.wet.gz", mode, text_col,
                          b"conversion", b"text/plain", _wet_block)

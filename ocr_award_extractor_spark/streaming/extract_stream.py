@@ -5,7 +5,7 @@ certificate_ocr.py:409-444) — these are NEW scope showing the same
 extraction kernel running incrementally:
 
 * :func:`stream_extract` — file-source stream of web-page parquet →
-  the SAME mapInPandas extraction stage (the stage is stream-agnostic
+  the SAME mapInArrow extraction stage (the stage is stream-agnostic
   because it is stateless per row) → sink via foreachBatch. Run with
   trigger(availableNow=True) for a bounded catch-up pass; on a cluster the
   same query tails an arriving-WARC directory or Kafka topic.

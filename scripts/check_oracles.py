@@ -92,12 +92,9 @@ def main():
     # the LSH queries derive (bands, rows) from the corpus size; the static
     # oracle SQL pins the driver's sf0.01 gate scale — regenerate those
     # three for the sf under test so any-scale runs stay fully green
-    try:
-        from ocr_award_extractor_spark.operators.similarity import oracles_for_scale
+    from ocr_award_extractor_spark.operators.similarity import oracles_for_scale
 
-        oracles.update(oracles_for_scale(sf_dir))
-    except ImportError:
-        pass
+    oracles.update(oracles_for_scale(sf_dir))
 
     failed = []
     for name, fn in queries.items():

@@ -789,15 +789,15 @@ def test_commit_without_native_library_writes_same_lineage(spark, tmp_path,
     import os
 
     from ocr_award_extractor_spark.functions import rowhash
-    from ocr_award_extractor_spark.operators.extract_pipeline import extract_record
+    from ocr_award_extractor_spark.operators.extract_pipeline import (
+        extract_record, page_columns,
+    )
     from ocr_award_extractor_spark.plans.lineage import (
-        PAGE_COLUMNS, _extract_and_write, committed_splits, with_split_id,
+        _extract_and_write, committed_splits, with_split_id,
     )
 
     docs = load_fixture(spark, n_docs=N_DOCS)
-    batches = (with_split_id(docs, 4)
-               .withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-               .select(*PAGE_COLUMNS, "split_id").toArrow()
+    batches = (page_columns(with_split_id(docs, 4), "split_id").toArrow()
                .sort_by("split_id").to_batches(max_chunksize=64))
 
     def lineage(out):

@@ -199,7 +199,7 @@ def test_driver_corpus_text_invariants():
 def test_webify_urls_projection_matches_wrap_row(spark):
     """webify_urls_df (the JVM closed-form of wrap_row's url/warc_ts,
     used by the stateful-dedup staging so it never builds html) must be
-    byte/value-identical to the mapInPandas output — a drift in either
+    byte/value-identical to the mapInArrow output — a drift in either
     spelling of the url format or the timestamp arithmetic fails here."""
     from ocr_award_extractor_spark.operators.webify import (
         webify_documents, webify_urls_df,

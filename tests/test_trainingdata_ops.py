@@ -167,6 +167,23 @@ def test_connected_components_long_chain(spark, hex_ids):
     assert set(comp.values()) == {root} and len(comp) == 30
 
 
+def test_connected_components_unconverged_raises(spark):
+    """Two rounds cannot collapse the 30-doc chain of
+    test_connected_components_long_chain: the call raises and names the
+    round count instead of returning unconverged labels."""
+    from pyspark.sql import functions as F2
+
+    from ocr_award_extractor_spark.operators.dedup import connected_components
+
+    docs = spark.range(30).select(F2.col("id").alias("doc_id"))
+    chain = spark.range(29).select(F2.col("id").alias("src"),
+                                   (F2.col("id") + 1).alias("dst"))
+    edges = chain.union(chain.select(F2.col("dst").alias("src"),
+                                     F2.col("src").alias("dst")))
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(docs, edges, max_iters=2)
+
+
 @pytest.fixture(scope="module")
 def zero_norm_dir(tmp_path_factory):
     """40 embeddings: 20 all-zero (undefined cosine) + 20 identical

@@ -91,9 +91,8 @@ def test_warc_corruption_becomes_error_rows_not_silence(spark, tmp_path):
 
 def test_warc_file_without_output_rows(spark, tmp_path):
     """A file whose records all map to no row (one warcinfo record)
-    reads as zero rows of each reader's schema — the empty batch never
-    reaches Arrow, where pandas' float64 typing of empty columns cannot
-    cast to the timestamp field."""
+    reads as zero rows of each reader's schema: its empty output batch
+    is typed by the schema, timestamp field included."""
     from ocr_award_extractor_spark.operators.webify import PAGE_SCHEMA
     from ocr_award_extractor_spark.sources.warc import read_warc, read_wet
 

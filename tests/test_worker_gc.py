@@ -44,11 +44,11 @@ def report(batches):
     import os
     import sys
 
-    import pandas as pd
+    import pyarrow as pa
 
     for _ in batches:
         pass
-    yield pd.DataFrame({
+    yield pa.RecordBatch.from_pydict({
         "pid": [os.getpid()], "frozen": [gc.get_freeze_count()],
         "live": [len(gc.get_objects())],
         "engine": ["ocr_award_extractor_spark" in sys.modules]})
@@ -62,9 +62,11 @@ def extract_job():
     extract_documents(docs, salt_partitions=4).count()
 
 
+# the probe crosses the boundary the engine's row stages use, so it
+# imports no module a warmed worker lacks
 def probe():
     rows = (spark.range(0, 8, numPartitions=4)
-            .mapInPandas(report, "pid long, frozen long, live long, engine boolean")
+            .mapInArrow(report, "pid long, frozen long, live long, engine boolean")
             .collect())
     return {r.pid: [r.frozen, r.live] for r in rows if r.engine}
 
