@@ -1,4 +1,4 @@
-"""The engine's one Arrow boundary for per-row Python kernels.
+"""The engine's one Arrow boundary for Python kernels.
 
 A per-row kernel is a module-level function of a few column values that
 returns one record (a dict keyed by the output schema's field names) or,
@@ -10,7 +10,9 @@ option. The lineage commit, the WARC/WET writers and the model slot
 cross with :func:`column_values` and :func:`records_to_batch` too. A
 kernel sees a timestamp as a naive UTC ``datetime``, and a naive one it
 returns is read as UTC, whatever the session time zone. Batch-shaped
-numpy kernels (MinHash, LSH scoring) keep ``mapInPandas``.
+numpy kernels (LSH band keys, the bucket pair kernels) cross the same
+boundary through :func:`arrow_stage`, reading list columns as numpy
+views of the batch.
 """
 
 from __future__ import annotations
@@ -58,17 +60,24 @@ def map_batches(batches: Iterable[pa.RecordBatch], cols: Sequence[str],
         yield records_to_batch(recs, schema)
 
 
-def _map(df: DataFrame, cols: Sequence[str], fn: Callable,
-         schema: StructType, many: bool) -> DataFrame:
+def arrow_stage(df: DataFrame, kernel: Callable, schema: StructType,
+                name: str, **params) -> DataFrame:
+    """``kernel(batches, schema=schema, **params)`` over ``df`` as one
+    ``mapInArrow`` stage named ``name`` in the plan. ``kernel`` is a
+    module-level function: a partial of it pickles by reference, so the
+    worker imports this package (and its zipimport stat check) to run it."""
     from ocr_award_extractor_spark.config import ensure_package_on_workers
 
     ensure_package_on_workers(df.sparkSession)
-    # a partial of a module-level function pickles by reference, so the
-    # worker imports this package (and its zipimport stat check) to run it
-    kernel = functools.partial(map_batches, cols=tuple(cols), fn=fn,
-                               schema=schema, many=many)
-    kernel.__name__ = fn.__name__   # the plan names the row kernel
-    return df.select(*cols).mapInArrow(kernel, schema)
+    fn = functools.partial(kernel, schema=schema, **params)
+    fn.__name__ = name
+    return df.mapInArrow(fn, schema)
+
+
+def _map(df: DataFrame, cols: Sequence[str], fn: Callable,
+         schema: StructType, many: bool) -> DataFrame:
+    return arrow_stage(df.select(*cols), map_batches, schema, fn.__name__,
+                       cols=tuple(cols), fn=fn, many=many)
 
 
 def map_rows(df: DataFrame, cols: Sequence[str],

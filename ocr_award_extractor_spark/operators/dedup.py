@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_award_extractor_spark.operators.pairblocks import block_triangles, map_buckets
 from ocr_award_extractor_spark.sources.tables import load_table
 
 # MinHash parameters: K hash functions in B bands of R rows (K = B*R)
@@ -150,21 +151,23 @@ def _band_buckets(docs: DataFrame) -> DataFrame:
     )
 
 
-# Live pair-index elements per enumeration block in the bucket kernel
-# (re-exported so tests can monkeypatch per-module; the index math lives
-# in pairblocks.block_triangles, shared with the similarity kernels).
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    MAX_BUCKET_MEMBERS as _MAX_BUCKET_MEMBERS,
-)
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    PAIR_BLOCK_ELEMS as _PAIR_BLOCK_ELEMS,
-)
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    block_triangles as _block_triangles,
-)
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    check_bucket as _check_bucket,
-)
+def _doc_ids(values):
+    """A bucket batch's flat member doc_ids as one numpy column: int64
+    zero-copy, a 128-bit hex STRING id as Python str objects, whose sort
+    order equals Spark's string order (both by codepoint), so doc_a <
+    doc_b stays engine-consistent (r4 verdict #6)."""
+    return (values.to_numpy(zero_copy_only=False),)
+
+
+def _bucket_pairs(ids, pair_block):
+    """Every (doc_a, doc_b), doc_a < doc_b, of one bucket, block by block."""
+    import numpy as np
+
+    m = np.sort(ids)
+    for s, e, tri in block_triangles(len(m), pair_block):
+        ri, rj = np.nonzero(tri)
+        if len(ri):
+            yield m[ri + s], m[rj]   # m sorted ⇒ doc_a < doc_b
 
 
 def minhash_lsh_pairs_df(docs: DataFrame) -> DataFrame:
@@ -173,11 +176,13 @@ def minhash_lsh_pairs_df(docs: DataFrame) -> DataFrame:
     BUCKET-LOCAL spelling (mirrors similarity.lsh_neardup_pairs,
     r3 verdict #3): (doc_id, band, key) rows group into buckets with ONE
     shuffle and each bucket's pairs are enumerated inside the Arrow
-    kernel, then the tiny cross-band distinct. The classic band
-    self-equi-join (the oracle in tests/oracle_spellings.py) times within
-    noise of it at sf0.1 (BENCH.md round-4); this spelling reads the
-    shuffle once instead of re-reading two exchanges and shares the
-    skew-blocked kernel shape with the similarity side.
+    kernel (pairblocks.map_buckets, which reads each batch's doc_id
+    lists as numpy views), then the tiny cross-band distinct. The
+    classic band self-equi-join (the oracle in tests/oracle_spellings.py)
+    times within noise of it at sf0.1 (BENCH.md round-4); this spelling
+    reads the shuffle once instead of re-reading two exchanges and
+    shares the skew-blocked kernel with the similarity side. The pair
+    columns take doc_id's own type, 64-bit ints and hex strings alike.
 
     Skew / mega-bucket guard (ENFORCED, r4 verdict #1): a bucket of k
     members yields k(k-1)/2 pairs — blocked enumeration bounds kernel
@@ -186,48 +191,13 @@ def minhash_lsh_pairs_df(docs: DataFrame) -> DataFrame:
     copies before shingling); buckets past pairblocks.MAX_BUCKET_MEMBERS
     fail the job with an actionable error. Clustering needs no pairs and
     no guard: use dedup_clusters_df."""
-    cap = _MAX_BUCKET_MEMBERS        # closure copies: workers re-import
-    pair_block = _PAIR_BLOCK_ELEMS   # the module, a test-side monkeypatch
-    # must ride the serialized function
-    # id-type-generic (r4 verdict #6): a 128-bit doc_id rides as a hex
-    # STRING, whose numpy '<U' sort order equals Spark's string order
-    # (both by codepoint), so doc_a < doc_b stays engine-consistent
-    id_sql = docs.schema["doc_id"].dataType.simpleString()
-    id_is_int = id_sql in ("bigint", "int", "smallint", "tinyint")
+    from pyspark.sql.types import StructType
 
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        empty = np.empty(0, np.int64 if id_is_int else object)
-        out_a, out_b = [], []
-
-        def flush():
-            a = np.concatenate(out_a) if out_a else empty
-            b = np.concatenate(out_b) if out_b else empty
-            return pd.DataFrame({"doc_a": a, "doc_b": b})
-
-        n_buf = 0
-        for pdf in batches:
-            for members in pdf["members"]:
-                _check_bucket(len(members), cap, "MinHash-LSH")
-                m = np.sort(np.asarray(members))
-                for s, e, tri in _block_triangles(len(m), pair_block):
-                    ri, rj = np.nonzero(tri)
-                    if len(ri):
-                        out_a.append(m[ri + s])   # m sorted ⇒ doc_a < doc_b
-                        out_b.append(m[rj])
-                        n_buf += len(ri)
-                    # flush INSIDE the block loop (ADVICE r4): one skewed
-                    # bucket, or many buckets in one Arrow batch, must not
-                    # accumulate an unbounded output buffer before the check
-                    if n_buf >= (1 << 16):
-                        yield flush()
-                        out_a, out_b, n_buf = [], [], 0
-        yield flush()
-
+    id_type = docs.schema["doc_id"].dataType
+    schema = StructType().add("doc_a", id_type).add("doc_b", id_type)
     return (
-        _band_buckets(docs).mapInPandas(kernel, f"doc_a {id_sql}, doc_b {id_sql}")
+        map_buckets(_band_buckets(docs), "MinHash-LSH", _doc_ids,
+                    _bucket_pairs, schema)
         .distinct()                  # collapse multi-band duplicates
     )
 

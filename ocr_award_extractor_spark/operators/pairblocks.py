@@ -1,12 +1,18 @@
-"""Blocked upper-triangle pair enumeration — the ONE spelling of the
-index math shared by the bucket-local kernels (similarity pair scoring
-and MinHash candidate enumeration), plus their shared mega-bucket
+"""The bucket-local pair kernels' one driver (:func:`map_buckets`, used by
+similarity pair scoring and MinHash candidate enumeration), their
+blocked upper-triangle pair enumeration and their shared mega-bucket
 guard. A bucket of k members has k(k-1)/2 pairs; enumerating them whole
 would allocate O(k²) at once on a skewed bucket, so blocks bound the
 live window to ~``pair_block`` elements whatever k is (ADVICE r3;
 round-4 review unified the two copies)."""
 
 from __future__ import annotations
+
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
+    from pyspark.sql.types import StructType
 
 PAIR_BLOCK_ELEMS = 1 << 22   # ~32 MB of float64 live per block
 
@@ -78,3 +84,55 @@ def block_triangles(k: int, pair_block: int):
     for s in range(0, k, bs):
         e = min(s + bs, k)
         yield s, e, jj[None, :] > np.arange(s, e)[:, None]
+
+
+# Output rows buffered before the driver yields a batch (ADVICE r4).
+FLUSH_ROWS = 1 << 16
+
+
+def _walk_buckets(batches, schema, kind, unpack, emit, cap, pair_block):
+    """Each batch's ``members`` buckets, walked by list offsets over the
+    numpy columns ``unpack`` makes of the flat member values. The buffer
+    is checked after every block ``emit`` yields, so neither one skewed
+    bucket nor many small ones pool more than ~FLUSH_ROWS rows."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(schema)
+    buf, n_buf = [], 0
+
+    def flush():
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.concatenate(col), f.type)
+             for col, f in zip(zip(*buf), schema)], schema=schema)
+
+    for batch in batches:
+        members = batch.column("members")
+        offsets = members.offsets.to_numpy().tolist()
+        cols = unpack(members.values)
+        for s, e in zip(offsets[:-1], offsets[1:]):
+            check_bucket(e - s, cap, kind)
+            for out in emit(*(c[s:e] for c in cols), pair_block):
+                buf.append(out)
+                n_buf += len(out[0])
+                if n_buf >= FLUSH_ROWS:
+                    yield flush()
+                    buf, n_buf = [], 0
+    if buf:
+        yield flush()
+
+
+def map_buckets(buckets: DataFrame, kind: str, unpack, emit,
+                schema: StructType) -> DataFrame:
+    """The pairs of every bucket in ``buckets.members`` (a list column),
+    one ``mapInArrow`` stage typed by ``schema``: each bucket passes
+    :func:`check_bucket`, then ``emit(*bucket, pair_block)`` yields its
+    pair columns block by block, a bucket being a slice of the numpy
+    columns ``unpack`` makes of one batch's member values. The cap and
+    the block size are read when the plan is built."""
+    from ocr_award_extractor_spark.functions.batching import arrow_stage
+
+    return arrow_stage(buckets, _walk_buckets, schema, emit.__name__,
+                       kind=kind, unpack=unpack, emit=emit,
+                       cap=MAX_BUCKET_MEMBERS, pair_block=PAIR_BLOCK_ELEMS)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_award_extractor_spark.operators import pairblocks
 from ocr_award_extractor_spark.sources.tables import load_table
 
 QUANT = 10_000
@@ -225,17 +226,38 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _band_key_batches(batches, schema, W, bands, rows, carry):
+    """The band-key kernel over Arrow batches: one exact int64 matmul of
+    the batch's (m, DIM) ``qe`` view gives every sign bit, and each
+    ``carry`` column is repeated ``bands`` times by an Arrow ``take``
+    (type and NULLs kept)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(schema)
+    pack = np.int64(1) << np.arange(rows, dtype=np.int64)
+    for batch in batches:
+        m = batch.num_rows
+        E = batch.column("qe").flatten().to_numpy().reshape(m, DIM)
+        keys = (E @ W.T > 0).astype(np.int64).reshape(m, bands, rows) @ pack
+        each = pa.array(np.repeat(np.arange(m), bands))
+        cols = {c: batch.column(c).take(each) for c in carry}
+        cols["band"] = pa.array(np.tile(np.arange(bands, dtype=np.int32), m))
+        cols["key"] = pa.array(keys.ravel())
+        yield pa.RecordBatch.from_arrays([cols[f.name] for f in schema],
+                                         schema=schema)
+
+
 def lsh_band_keys(emb_q: DataFrame, bands: int = LSH_BANDS,
-                  rows: int = LSH_ROWS, with_vec: bool = False,
-                  passthrough: tuple[tuple[str, str], ...] = ()) -> DataFrame:
+                  rows: int = LSH_ROWS,
+                  passthrough: tuple[str, ...] = ()) -> DataFrame:
     """(vec_id, band, key) for any (vec_id, qe) frame: sign bit per plane,
-    R bits packed into the band's bucket key. ``with_vec=True`` appends
-    the quantized vector itself to every emitted row (still map-side —
-    the duplication cost is paid by the DOWNSTREAM shuffle, which is the
-    point of the shuffled-vectors scorer: B×n rows of ~536 B each, no
-    driver state). ``passthrough`` is (name, spark_type) input columns
-    copied onto every emitted row map-side, so a caller that needs them
-    alongside the keys does not re-scan the table and re-join on vec_id.
+    R bits packed into the band's bucket key. ``passthrough`` names input
+    columns copied onto every emitted row map-side with their own types,
+    so a caller that needs them alongside the keys (the label, or ``qe``
+    itself for the shuffled-vectors scorer) does not re-scan the table
+    and re-join on vec_id.
 
     Arrow-batched numpy kernel: the whole batch's sign bits are ONE exact
     int64 matmul (E @ Wᵀ > 0; |e|≤10⁴·|w|≤10³·64 dims keeps every product
@@ -243,50 +265,23 @@ def lsh_band_keys(emb_q: DataFrame, bands: int = LSH_BANDS,
     in C instead of B·R interpreted higher-order-function dots per row
     (measured ~3.1 s → ~0.2 s for 2000×273 planes). Scale shape: pure
     map-side — each input partition emits its own n·B (vec_id, band, key)
-    rows, NO shuffle until the band self-join; the vector arrays never
-    leave their partition. Sign-of-integer-dot is engine-independent, so
-    the DuckDB oracle reproduces the keys bit-for-bit."""
+    rows, NO shuffle until the band self-join. Sign-of-integer-dot is
+    engine-independent, so the DuckDB oracle reproduces the keys
+    bit-for-bit."""
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    from ocr_award_extractor_spark.functions.batching import arrow_stage
 
     weights = (LSH_WEIGHTS if (bands, rows) == (LSH_BANDS, LSH_ROWS)
                else _lcg_weights(bands * rows))
-    W = np.array(weights, dtype=np.int64)          # (B·R, DIM)
-    pack = (np.int64(1) << np.arange(rows, dtype=np.int64))
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.stack(pdf["qe"].to_numpy())      # (m, DIM) int64
-            bits = (E.astype(np.int64) @ W.T > 0).astype(np.int64)
-            keys = bits.reshape(len(E), bands, rows) @ pack   # (m, B)
-            out = {
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), bands),
-                "band": np.tile(np.arange(bands, dtype=np.int32), len(E)),
-                "key": keys.ravel(),
-            }
-            if with_vec:
-                # PACKED binary, not array<bigint>: the downstream kernel
-                # reassembles whole buckets with ONE np.frombuffer — an
-                # array column would round-trip 64 Python ints per member
-                # (measured ~12 µs/row of pure conversion overhead).
-                # Explicit little-endian ('<i8' both here and in the
-                # frombuffer decode): byte layout is part of the shuffle
-                # contract, not an artifact of worker endianness
-                qe_bin = [row.tobytes() for row in E.astype("<i8")]
-                out["qe_bin"] = np.repeat(
-                    np.array(qe_bin, dtype=object), bands)
-            for name, _typ in passthrough:
-                out[name] = np.repeat(pdf[name].to_numpy(), bands)
-            yield pd.DataFrame(out)
-
-    schema = "vec_id BIGINT, band INT, key BIGINT"
-    if with_vec:
-        schema += ", qe_bin BINARY"
-    for name, typ in passthrough:
-        schema += f", {name} {typ}"
-    return emb_q.mapInPandas(kernel, schema)
+    schema = StructType([emb_q.schema["vec_id"],
+                         StructField("band", IntegerType()),
+                         StructField("key", LongType()),
+                         *(emb_q.schema[c] for c in passthrough)])
+    return arrow_stage(emb_q, _band_key_batches, schema, "lsh_band_keys",
+                       W=np.array(weights, dtype=np.int64),   # (B·R, DIM)
+                       bands=bands, rows=rows, carry=("vec_id", *passthrough))
 
 
 def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,10 +295,8 @@ def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands, rows = _corpus_lsh_params(sf_dir)
     # label rides through the kernel map-side (passthrough) instead of a
     # second embeddings scan + vec_id re-join: 2 scans + BroadcastExchange
-    # + BHJ -> 1 scan, 0 joins (guide §2 — remove the shuffle outright);
-    # its kernel output type is the table's own label type
-    label_t = emb.schema["label"].dataType.simpleString()
-    keys = lsh_band_keys(emb, bands, rows, passthrough=(("label", label_t),))
+    # + BHJ -> 1 scan, 0 joins (guide §2 — remove the shuffle outright)
+    keys = lsh_band_keys(emb, bands, rows, passthrough=("label",))
     return keys.select(
         "vec_id", "label", F.col("band").cast("long").alias("band"),
         F.col("key").alias("bucket"))
@@ -324,8 +317,9 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str,
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _quant(F.col("embedding")).alias("qe")
     )
-    keys = _guard_keyed_jvm(lsh_band_keys(emb, bands, rows), ["band", "key"],
-                            _MAX_BUCKET_MEMBERS, "LSH band")
+    keys = pairblocks.guard_keyed_jvm(
+        lsh_band_keys(emb, bands, rows), ["band", "key"],
+        pairblocks.MAX_BUCKET_MEMBERS, "LSH band")
     a = keys.select(F.col("band").alias("ba"), F.col("key").alias("ka"),
                     F.col("vec_id").alias("va"))
     b = keys.select(F.col("band").alias("bb"), F.col("key").alias("kb"),
@@ -338,41 +332,29 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str,
     )
 
 
-# Live floats per pair-enumeration block inside the kernel — bounds a
-# skewed bucket's O(k²) allocation. Re-exported so tests can monkeypatch
-# per-module; the index math itself lives in pairblocks.block_triangles,
-# shared with the MinHash kernel.
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    MAX_BUCKET_MEMBERS as _MAX_BUCKET_MEMBERS,
-)
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    PAIR_BLOCK_ELEMS as _PAIR_BLOCK_ELEMS,
-)
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    block_triangles as _block_triangles,
-)
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    check_bucket as _check_bucket,
-)
-from ocr_award_extractor_spark.operators.pairblocks import (  # noqa: E402
-    guard_keyed_jvm as _guard_keyed_jvm,
-)
+def _ids_and_vectors(values):
+    """A bucket batch's flat (vec_id, qe) members as numpy views: the
+    ids (n,) and their (n, DIM) int64 quantized vectors."""
+    qe = values.field("qe")
+    return (values.field("vec_id").to_numpy(),
+            qe.flatten().to_numpy().reshape(len(qe), DIM))
 
 
-def _score_one_bucket(m, sub, pair_block):
-    """Blocked ≥threshold pair scoring for ONE bucket: ``m`` sorted int64
-    ids (k,), ``sub`` their (k, DIM) int64 quantized vectors. Returns
-    (va, vb, cos) survivor arrays. The kernel-side half of the arithmetic
+def _score_one_bucket(ids, vecs, pair_block):
+    """Blocked ≥threshold pair scoring for ONE bucket of ``ids`` (k,) and
+    their (k, DIM) int64 quantized ``vecs``: yields (va, vb, cos)
+    survivor arrays per block. The kernel-side half of the arithmetic
     parity contract (see lsh_neardup_pairs docstring); blocks bound
     live memory to ~pair_block floats for any bucket size."""
     import numpy as np
 
+    order = np.argsort(ids)
+    m, sub = ids[order], vecs[order]
     # float64 is exact here: every norm² < 2⁵³ (|q|≤~10⁴, 64 dims ⇒
     # ≤ 6.4·10⁹), and taking the PRODUCT in float matches the
     # JVM/DuckDB double-multiply spelling
     norms = np.einsum("ij,ij->i", sub, sub).astype(np.float64)
-    va, vb, cs = [], [], []
-    for s0, e, tri in _block_triangles(len(m), pair_block):
+    for s0, e, tri in pairblocks.block_triangles(len(m), pair_block):
         G = sub[s0:e] @ sub.T                     # exact int64 dots
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = (G.astype(np.float64)
@@ -382,10 +364,7 @@ def _score_one_bucket(m, sub, pair_block):
         keep = (cos >= NEARDUP_THRESHOLD) & tri
         ri, rj = np.nonzero(keep)
         if len(ri):
-            va.append(m[ri + s0])                 # m sorted ⇒ va < vb
-            vb.append(m[rj])
-            cs.append(cos[ri, rj])
-    return va, vb, cs
+            yield m[ri + s0], m[rj], cos[ri, rj]  # m sorted ⇒ va < vb
 
 
 def lsh_neardup_pairs(spark: SparkSession, sf_dir: str,
@@ -395,32 +374,33 @@ def lsh_neardup_pairs(spark: SparkSession, sf_dir: str,
     (recall ~LSH_TARGET_RECALL at the design threshold by construction;
     measured against the brute-force baseline in bench.py), scored
     bucket-locally with the vectors riding the band shuffle — the
-    10⁹-vector production shape: (vec_id, packed qe) structs collect per
-    (band, key) bucket in ONE shuffle of B×n rows at ~536 B each (vector
+    10⁹-vector production shape: (vec_id, qe) structs collect per
+    (band, key) bucket in ONE shuffle of B×n rows at ~540 B each (vector
     + key), every intra-bucket pair is enumerated AND scored inside the
-    Arrow kernel (per-bucket G = A·Aᵀ int64 matmul over
-    ~target-bucket-size members), and only ≥threshold survivors cross
-    Arrow out, deduped across bands by the tiny final distinct. There is
-    NO driver state at any corpus size and candidate pairs never
-    materialize in the plan. Per-bucket executor memory is O(m·dim),
-    which lsh_params pins at E[m] = LSH_TARGET_BUCKET.
+    Arrow kernel (pairblocks.map_buckets; per-bucket G = A·Aᵀ int64
+    matmul over ~target-bucket-size members, read as numpy views of the
+    batch), and only ≥threshold survivors cross Arrow out, deduped
+    across bands by the tiny final distinct. There is NO driver state at
+    any corpus size and candidate pairs never materialize in the plan.
+    Per-bucket executor memory is O(m·dim), which lsh_params pins at
+    E[m] = LSH_TARGET_BUCKET.
 
     Arithmetic parity with the all-JVM join reference
     (tests/oracle_spellings.py — distinct candidates, two vector-fetch
     joins, the HOF cosine; pinned row for row, cos doubles included, by
     tests/test_plan_quality.py::test_lsh_spellings_bit_equal) and the
     DuckDB oracle: the kernel scores the JVM-quantized ``qe`` values
-    (shipped as packed bytes, NOT re-quantized — numpy's half-even round
-    differs from Spark's HALF_UP on exact ties), dots/norms are exact
-    int64, the norm product is taken in float64 on all three engines
-    (each norm² < 2⁵³ is exactly representable, so the product rounds
-    once either way), and the final divide/sqrt is the identical IEEE
-    sequence — bit-equal results. A zero-norm (all-zero quantized) vector
-    has UNDEFINED cosine, and the parity contract EXCLUDES such pairs on
-    every engine: numpy's 0/0 is NaN which ``>=`` drops, Spark's
-    ``try_divide`` yields NULL (a bare ``/`` would throw DIVIDE_BY_ZERO
-    under Spark 4's default ANSI mode), and DuckDB's double 0/0 is NULL;
-    both NULLs fail the threshold (pinned by
+    (NOT re-quantized — numpy's half-even round differs from Spark's
+    HALF_UP on exact ties), dots/norms are exact int64, the norm product
+    is taken in float64 on all three engines (each norm² < 2⁵³ is
+    exactly representable, so the product rounds once either way), and
+    the final divide/sqrt is the identical IEEE sequence — bit-equal
+    results. A zero-norm (all-zero quantized) vector has UNDEFINED
+    cosine, and the parity contract EXCLUDES such pairs on every engine:
+    numpy's 0/0 is NaN which ``>=`` drops, Spark's ``try_divide`` yields
+    NULL (a bare ``/`` would throw DIVIDE_BY_ZERO under Spark 4's default
+    ANSI mode), and DuckDB's double 0/0 is NULL; both NULLs fail the
+    threshold (pinned by
     tests/test_trainingdata_ops.py::test_lsh_zero_norm_parity).
 
     Mega-bucket guard (ENFORCED, r4 verdict #1): a bucket of k members
@@ -428,7 +408,7 @@ def lsh_neardup_pairs(spark: SparkSession, sf_dir: str,
     (256× the design bucket) fail the job with an actionable "run
     dedup_exact first" error. Pinned by
     tests/test_trainingdata_ops.py::test_mega_bucket_guard*."""
-    import numpy as np
+    from pyspark.sql.types import StructType
 
     # the join reference and the oracle drop NULL ids in their joins; the
     # kernel's int64 id array cannot hold one, so drop them before it
@@ -437,57 +417,17 @@ def lsh_neardup_pairs(spark: SparkSession, sf_dir: str,
            .select("vec_id", _quant(F.col("embedding")).alias("qe")))
     if bands is None or rows is None:
         bands, rows = _corpus_lsh_params(sf_dir)
-    cap = _MAX_BUCKET_MEMBERS
-    keys = lsh_band_keys(emb, bands, rows, with_vec=True)
+    keys = lsh_band_keys(emb, bands, rows, passthrough=("qe",))
     buckets = (
         keys.groupBy("band", "key")
-        .agg(F.collect_list(F.struct("vec_id", "qe_bin")).alias("members"))
+        .agg(F.collect_list(F.struct("vec_id", "qe")).alias("members"))
         .where(F.size("members") >= 2)
         .select("members")
     )
-    pair_block = _PAIR_BLOCK_ELEMS   # captured by value: workers re-import
-    # the module, so a test-side monkeypatch must ride the closure
-
-    def kernel(batches):
-        import pandas as pd
-
-        out_a, out_b, out_c = [], [], []
-
-        def flush():
-            va = np.concatenate(out_a) if out_a else np.empty(0, np.int64)
-            vb = np.concatenate(out_b) if out_b else np.empty(0, np.int64)
-            cs = np.concatenate(out_c) if out_c else np.empty(0, np.float64)
-            return pd.DataFrame({"va": va, "vb": vb, "cos_sim": cs})
-
-        n_buf = 0
-        for pdf in batches:
-            for members in pdf["members"]:
-                _check_bucket(len(members), cap, "LSH score")
-                ids = np.fromiter((mm["vec_id"] for mm in members),
-                                  dtype=np.int64, count=len(members))
-                # one frombuffer for the whole bucket — explicit
-                # little-endian, matching lsh_band_keys' '<i8' pack (the
-                # byte layout is the shuffle contract, endianness-proof)
-                E = np.frombuffer(
-                    b"".join(mm["qe_bin"] for mm in members),
-                    dtype="<i8").astype(np.int64,
-                                        copy=False).reshape(len(ids), DIM)
-                order = np.argsort(ids)
-                va, vb, cs = _score_one_bucket(ids[order], E[order],
-                                               pair_block)
-                out_a += va
-                out_b += vb
-                out_c += cs
-                n_buf += sum(len(x) for x in va)
-                # flush per bucket (ADVICE r4): survivors must not pool
-                # across a whole Arrow batch before the threshold check
-                if n_buf >= (1 << 16):
-                    yield flush()
-                    out_a, out_b, out_c, n_buf = [], [], [], 0
-        yield flush()
-
+    schema = StructType.fromDDL("va BIGINT, vb BIGINT, cos_sim DOUBLE")
     return (
-        buckets.mapInPandas(kernel, "va BIGINT, vb BIGINT, cos_sim DOUBLE")
+        pairblocks.map_buckets(buckets, "LSH score", _ids_and_vectors,
+                               _score_one_bucket, schema)
         .distinct()                  # collapse multi-band duplicates
     )
 

@@ -41,7 +41,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 SPREAD_MIN_BYTES_PER_TASK = 8 << 20
 
 
-def spread_small_scans(df: DataFrame, target: int | None = None) -> DataFrame:
+def spread_small_scans(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` to the session's default parallelism
     when its ESTIMATED size is too small to feed every core — the
     scale-adaptive fix for a small input serializing an expensive per-row
@@ -59,8 +59,7 @@ def spread_small_scans(df: DataFrame, target: int | None = None) -> DataFrame:
     repartition is retry-deterministic (sort-before-repartition,
     SPARK-23207). Unknown/huge estimates (joins, UDF subtrees) safely
     skip the spread; so does a failed estimate, with a WARNING."""
-    sc = df.sparkSession.sparkContext
-    t = target or sc.defaultParallelism
+    t = df.sparkSession.sparkContext.defaultParallelism
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception as e:

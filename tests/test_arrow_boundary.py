@@ -1,24 +1,64 @@
-"""The one Arrow boundary for row kernels: every per-row Python stage plans
-as a ``MapInArrow``, and timestamps cross it as UTC instants whatever the
-session time zone."""
+"""The one Arrow boundary for Python kernels: every per-row and bucket
+Python stage plans as a ``MapInArrow``, no package module but the
+streaming extractor touches pandas, and timestamps cross the boundary as
+UTC instants whatever the session time zone."""
 
 from __future__ import annotations
 
+import ast
 import gzip
+import pathlib
 
 from pyspark.sql import functions as F
 
-from ocr_award_extractor_spark.sources.tables import load_fixture
+from ocr_award_extractor_spark.sources.tables import load_fixture, load_table
 from tests.test_warc_source import _http, _record
 
 MIDNIGHT_UTC = 1_709_251_200          # 2024-03-01T00:00:00Z
+SF = "/root/testdata/sf0.001"
+# applyInPandasWithState has no Arrow spelling: streaming keeps pandas
+PANDAS_MODULES = {"streaming/extract_stream.py"}
 
 
-def test_row_stages_plan_map_in_arrow_only(spark, tmp_path):
+def _pandas_uses(tree: ast.AST):
+    """Line numbers of ``import pandas``/``from pandas ...`` statements
+    and of ``.mapInPandas`` attribute uses in ``tree``."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            hit = any(a.name.split(".")[0] == "pandas" for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            hit = (node.module or "").split(".")[0] == "pandas"
+        else:
+            hit = isinstance(node, ast.Attribute) and node.attr == "mapInPandas"
+        if hit:
+            yield node.lineno
+
+
+def test_no_pandas_outside_streaming():
+    """No module of the package except the streaming extractor imports
+    pandas or calls mapInPandas. Static: the sources are parsed, not
+    imported, and no Spark session is needed."""
+    import ocr_award_extractor_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    found = {}
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        lines = list(_pandas_uses(ast.parse(path.read_text(encoding="utf-8"))))
+        if lines:
+            found[rel] = lines
+    assert set(found) <= PANDAS_MODULES, found
+
+
+def test_row_stages_plan_map_in_arrow_only(spark, tmp_path, monkeypatch):
     """extract_documents, read_warc, read_wet, webify_documents,
-    extract_media_features and both paths of extract_with_model plan a
-    MapInArrow and no MapInPandas. The plans are only built, over local
-    rows and one WARC file: no Spark job starts."""
+    extract_media_features, both paths of extract_with_model, and the LSH
+    and MinHash-LSH bucket operators plan a MapInArrow and no
+    MapInPandas. The plans are only built, over local rows, one WARC file
+    and the sf0.001 tables: no Spark job starts. The tables are read
+    first, since a parquet read infers its schema with a job."""
+    from ocr_award_extractor_spark.operators import similarity
+    from ocr_award_extractor_spark.operators.dedup import minhash_lsh_pairs_df
     from ocr_award_extractor_spark.operators.extract_pipeline import extract_documents
     from ocr_award_extractor_spark.operators.llm_slot import extract_with_model
     from ocr_award_extractor_spark.operators.multimodal import (
@@ -30,6 +70,8 @@ def test_row_stages_plan_map_in_arrow_only(spark, tmp_path):
     (tmp_path / "a.warc.wet").write_bytes(
         _record("response", "https://a.example/", "2024-03-01T00:00:00Z",
                 _http(b"<p>a page</p>")))
+    tables = {t: load_table(spark, SF, t) for t in ("documents", "embeddings")}
+    monkeypatch.setattr(similarity, "load_table", lambda _s, _d, t: tables[t])
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
     pages = spark.createDataFrame(
@@ -46,6 +88,10 @@ def test_row_stages_plan_map_in_arrow_only(spark, tmp_path):
             spark.createDataFrame([], MEDIA_SCHEMA)),
         "extract_with_model": extract_with_model(extracted),
         "extract_with_model(use_model=False)": extract_with_model(extracted, use_model=False),
+        "lsh_buckets": similarity.lsh_buckets(spark, SF),
+        "lsh_candidate_pairs": similarity.lsh_candidate_pairs(spark, SF),
+        "lsh_neardup_pairs": similarity.lsh_neardup_pairs(spark, SF),
+        "minhash_lsh_pairs_df": minhash_lsh_pairs_df(tables["documents"]),
     }
     plans = {name: df._jdf.queryExecution().executedPlan().toString()
              for name, df in frames.items()}

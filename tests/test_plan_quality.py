@@ -179,7 +179,8 @@ def test_lsh_shuffled_spelling_single_shuffle_no_driver_state(spark):
 
     plan = _plan(lsh_neardup_pairs(spark, "/root/testdata/sf0.001"))
     tree = plan.split("\n\n(1)")[0]
-    assert tree.count("MapInPandas") == 2, plan   # keys + scoring kernels
+    assert tree.count("MapInArrow") == 2, plan    # keys + scoring kernels
+    assert tree.count("MapInPandas") == 0, plan
     assert "Join" not in tree, plan
     # exactly one data exchange below the final distinct's
     assert tree.count("Exchange") == 2, plan      # bucket agg + distinct

@@ -209,14 +209,14 @@ def test_lsh_zero_norm_parity(spark, zero_norm_dir, monkeypatch):
     try_divide yields NULL, DuckDB 0/0 is NULL): the kernel, the all-JVM
     join reference and the DuckDB oracle must return exactly the C(20,2)
     identical-vector pairs at cos=1.0 and not one zero-norm pair.
-    _PAIR_BLOCK_ELEMS=1 forces the blocked enumeration (bs=16 over
+    PAIR_BLOCK_ELEMS=1 forces the blocked enumeration (bs=16 over
     20+-member buckets)."""
     import duckdb
 
-    from ocr_award_extractor_spark.operators import similarity
+    from ocr_award_extractor_spark.operators import pairblocks, similarity
     from tests.oracle_spellings import lsh_neardup_pairs_join
 
-    monkeypatch.setattr(similarity, "_PAIR_BLOCK_ELEMS", 1)
+    monkeypatch.setattr(pairblocks, "PAIR_BLOCK_ELEMS", 1)
     kernel = {(r["va"], r["vb"], r["cos_sim"])
               for r in similarity.lsh_neardup_pairs(spark, zero_norm_dir).collect()}
     joined = {(r["va"], r["vb"], r["cos_sim"])
@@ -232,8 +232,9 @@ def test_lsh_zero_norm_parity(spark, zero_norm_dir, monkeypatch):
 
 
 def test_lsh_buckets_keeps_null_label(spark, tmp_path):
-    """A NULL passthrough label rides the band-key kernel as NULL (pandas
-    NaN → Arrow null), not as a number, and the rows match DuckDB's."""
+    """A NULL passthrough label rides the band-key kernel as NULL (an
+    Arrow take keeps the null), not as a number, and the rows match
+    DuckDB's."""
     import duckdb
 
     from ocr_award_extractor_spark.operators import similarity
@@ -337,13 +338,13 @@ def test_ivf_nprobe_widens_monotonically(spark):
 def test_minhash_bucket_local_equals_join(spark, planted_dir, monkeypatch):
     """The bucket-local MinHash pair kernel must emit EXACTLY the classic
     self-join spelling's distinct pairs (tests/oracle_spellings.py) — on
-    the planted corpus and on the oracle-gate corpus; _PAIR_BLOCK_ELEMS=1
+    the planted corpus and on the oracle-gate corpus; PAIR_BLOCK_ELEMS=1
     forces blocked enumeration through buckets wider than one block."""
-    from ocr_award_extractor_spark.operators import dedup
+    from ocr_award_extractor_spark.operators import dedup, pairblocks
     from ocr_award_extractor_spark.sources.tables import load_table
     from tests.oracle_spellings import minhash_lsh_pairs_join
 
-    monkeypatch.setattr(dedup, "_PAIR_BLOCK_ELEMS", 1)
+    monkeypatch.setattr(pairblocks, "PAIR_BLOCK_ELEMS", 1)
     for sf in (planted_dir, "/root/testdata/sf0.01"):
         local = {(r["doc_a"], r["doc_b"])
                  for r in dedup.minhash_lsh_pairs(spark, sf).collect()}
@@ -407,11 +408,11 @@ GUARD_MSG = r"member guard.*run dedup_exact first.*use dedup_clusters_df"
 def test_mega_bucket_guard_minhash(spark, flood_dir, monkeypatch):
     """r4 verdict #1: an exact-dup flood must FAIL LOUD, naming the
     remedies, and run clean after the documented dedup_exact pre-pass."""
-    from ocr_award_extractor_spark.operators import dedup
+    from ocr_award_extractor_spark.operators import dedup, pairblocks
     from ocr_award_extractor_spark.sources.tables import load_table
 
     docs = load_table(spark, flood_dir, "documents")
-    monkeypatch.setattr(dedup, "_MAX_BUCKET_MEMBERS", 8)
+    monkeypatch.setattr(pairblocks, "MAX_BUCKET_MEMBERS", 8)
 
     # the kernel raise surfaces through the action
     with pytest.raises(Exception, match=GUARD_MSG):
@@ -435,7 +436,7 @@ def test_mega_bucket_guard_lsh_spellings(spark, zero_norm_dir, monkeypatch):
     vectors exceed a cap of 10 in every band — the scorer must fail loud;
     the default cap (256x design bucket) leaves results untouched. The
     all-JVM candidate self-join raises in-plan under the same cap."""
-    from ocr_award_extractor_spark.operators import similarity
+    from ocr_award_extractor_spark.operators import pairblocks, similarity
 
     # the default cap never fires on a legitimate corpus: bit-equal to
     # the unguarded expectation pinned by test_lsh_zero_norm_parity
@@ -445,7 +446,7 @@ def test_mega_bucket_guard_lsh_spellings(spark, zero_norm_dir, monkeypatch):
                   spark, zero_norm_dir).collect()}
     assert kernel == expect
 
-    monkeypatch.setattr(similarity, "_MAX_BUCKET_MEMBERS", 10)
+    monkeypatch.setattr(pairblocks, "MAX_BUCKET_MEMBERS", 10)
     with pytest.raises(Exception, match=GUARD_MSG):
         similarity.lsh_neardup_pairs(spark, zero_norm_dir).collect()
     with pytest.raises(Exception, match="member guard"):
@@ -490,10 +491,10 @@ def test_dedup_clusters_survives_flood(spark, flood_dir, monkeypatch):
     DuckDB's recursive-reachability oracle over the same table."""
     import duckdb
 
-    from ocr_award_extractor_spark.operators import dedup
+    from ocr_award_extractor_spark.operators import dedup, pairblocks
     from ocr_award_extractor_spark.sources.tables import load_table
 
-    monkeypatch.setattr(dedup, "_MAX_BUCKET_MEMBERS", 8)
+    monkeypatch.setattr(pairblocks, "MAX_BUCKET_MEMBERS", 8)
     docs = load_table(spark, flood_dir, "documents")
     got = {(r["doc_id"], r["comp"])
            for r in dedup.dedup_clusters_df(docs).collect()}

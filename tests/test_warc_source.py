@@ -398,6 +398,37 @@ def test_wet_record_ids_unique_for_duplicate_rows(spark, tmp_path):
     assert len(ids) == 2 and len(set(ids)) == 2
 
 
+def test_wet_shards_byte_reproducible(spark, tmp_path):
+    """Two writes of one frame with one partitioning, more than a second
+    apart, give byte-equal shards: every gzip member header carries MTIME
+    0 (bytes 4-8), not the write time."""
+    import time
+    import zlib
+
+    from ocr_award_extractor_spark.sources.warc import write_wet
+
+    rows = [(f"https://{i}.example/", datetime(2024, 3, 1, i), f"text {i}")
+            for i in range(3)]
+    df = spark.createDataFrame(rows, "url string, warc_ts timestamp, "
+                                     "ocr_text string").coalesce(1)
+    shards = []
+    for name in ("a", "b"):
+        if shards:
+            time.sleep(1.1)
+        out = tmp_path / name
+        assert write_wet(df, str(out)) == 3
+        (shard,) = [p for p in out.iterdir() if p.name.endswith(".warc.wet.gz")]
+        shards.append(shard.read_bytes())
+    assert shards[0] == shards[1]
+    data, members = shards[0], 0
+    while data:
+        assert data[:2] == b"\x1f\x8b" and data[4:8] == bytes(4), members
+        unz = zlib.decompressobj(wbits=31)
+        unz.decompress(data)
+        data, members = unz.unused_data, members + 1
+    assert members == 3
+
+
 # ----------------------------------------------------------- write_warc
 def _pages_df(spark, rows):
     from ocr_award_extractor_spark.operators.webify import PAGE_SCHEMA
