@@ -117,7 +117,7 @@ def run_rehearsal() -> None:
     try:
         rehearsal = run_training_data_pipeline(
             spark, spark.read.parquet(pages_path), rh_dir, "bench",
-            n_splits=64, n_batches=8)
+            n_splits=64)
     finally:
         shutil.rmtree(rh_dir, ignore_errors=True)
     print(json.dumps(rehearsal))

@@ -30,7 +30,7 @@ def build_parser() -> argparse.ArgumentParser:
                      help="use the seeded N-doc fixture (local testing)")
     p.add_argument("--output", required=True,
                    help="output dir: data/split-<k>.parquet files and _lineage/; "
-                        "an output of the older data/split_id=<k>/ layout is refused")
+                        "an output written before the md5 row hash is refused")
     p.add_argument("--run-id", default="run", help="lineage run id")
     p.add_argument("--from-ts", help="inclusive warc_ts lower bound (scan predicate)")
     p.add_argument("--to-ts", help="exclusive warc_ts upper bound (scan predicate)")

@@ -1,11 +1,7 @@
-/* The engine's native library, with two uses:
- *   - segscan: the native tier of htmltext.segment_html (below);
- *   - xxh64: the XXH64 behind rowhash.row_hashes, the lineage checksum's
- *     row hash (at the end of this file).
- *
- * segscan is html.parser's tokenizing (the CPython 3.11 patterns that
- * htmltext._html_parser_compatible checks at import) and the _Segmenter
- * state machine in one pass over the UTF-8 document.
+/* The native tier of htmltext.segment_html. segscan is html.parser's
+ * tokenizing (the CPython 3.11 patterns that htmltext._html_parser_compatible
+ * checks at import) and the _Segmenter state machine in one pass over the
+ * UTF-8 document.
  *
  * Faithful-or-bail: every construct is handled exactly as html.parser
  * feeding _Segmenter handles it, or the call returns SEG_BAIL and the
@@ -33,8 +29,7 @@
  * the Segments and unescapes chunks holding '&'.
  *
  * Plain C, no Python headers: built as a shared library and called through
- * ctypes, one segscan call per document and one xxh64 call per hashed
- * column value.
+ * ctypes, one segscan call per document.
  */
 
 #include <stdint.h>
@@ -627,87 +622,4 @@ long segscan(const char *doc, long n, int ascii, int32_t *out, long cap)
     }
     flush(&S);
     return S.n_out / 3;
-}
-
-/* ------------------------------------------------------------ row hash */
-/* XXH64 of p[0:n] under seed, as Spark's XXH64.hashUnsafeBytes computes it
- * (little-endian lanes): the term Spark's xxhash64 adds for one string
- * column, with the previous column's hash as the seed. */
-#define XXH_P1 0x9E3779B185EBCA87ULL
-#define XXH_P2 0xC2B2AE3D27D4EB4FULL
-#define XXH_P3 0x165667B19E3779F9ULL
-#define XXH_P4 0x85EBCA77C2B2AE63ULL
-#define XXH_P5 0x27D4EB2F165667C5ULL
-
-static uint64_t rotl64(uint64_t x, int r)
-{
-    return (x << r) | (x >> (64 - r));
-}
-
-static uint64_t read64(const unsigned char *p)
-{
-    uint64_t v;
-    memcpy(&v, p, 8);
-#if __BYTE_ORDER__ == __ORDER_BIG_ENDIAN__
-    v = __builtin_bswap64(v);
-#endif
-    return v;
-}
-
-static uint64_t read32(const unsigned char *p)
-{
-    uint32_t v;
-    memcpy(&v, p, 4);
-#if __BYTE_ORDER__ == __ORDER_BIG_ENDIAN__
-    v = __builtin_bswap32(v);
-#endif
-    return v;
-}
-
-static uint64_t xxh_round(uint64_t acc, uint64_t lane)
-{
-    return rotl64(acc + lane * XXH_P2, 31) * XXH_P1;
-}
-
-static uint64_t xxh_merge(uint64_t h, uint64_t v)
-{
-    return (h ^ xxh_round(0, v)) * XXH_P1 + XXH_P4;
-}
-
-uint64_t xxh64(const char *data, long n, uint64_t seed)
-{
-    const unsigned char *p = (const unsigned char *)data, *end = p + n;
-    uint64_t h;
-    if (n >= 32) {
-        uint64_t v1 = seed + XXH_P1 + XXH_P2, v2 = seed + XXH_P2, v3 = seed,
-                 v4 = seed - XXH_P1;
-        for (; p + 32 <= end; p += 32) {
-            v1 = xxh_round(v1, read64(p));
-            v2 = xxh_round(v2, read64(p + 8));
-            v3 = xxh_round(v3, read64(p + 16));
-            v4 = xxh_round(v4, read64(p + 24));
-        }
-        h = rotl64(v1, 1) + rotl64(v2, 7) + rotl64(v3, 12) + rotl64(v4, 18);
-        h = xxh_merge(h, v1);
-        h = xxh_merge(h, v2);
-        h = xxh_merge(h, v3);
-        h = xxh_merge(h, v4);
-    } else {
-        h = seed + XXH_P5;
-    }
-    h += (uint64_t)n;
-    for (; p + 8 <= end; p += 8)
-        h = rotl64(h ^ xxh_round(0, read64(p)), 27) * XXH_P1 + XXH_P4;
-    if (p + 4 <= end) {
-        h = rotl64(h ^ read32(p) * XXH_P1, 23) * XXH_P2 + XXH_P3;
-        p += 4;
-    }
-    for (; p < end; p++)
-        h = rotl64(h ^ *p * XXH_P5, 11) * XXH_P1;
-    h ^= h >> 33;
-    h *= XXH_P2;
-    h ^= h >> 29;
-    h *= XXH_P3;
-    h ^= h >> 32;
-    return h;
 }

@@ -6,13 +6,13 @@ for :func:`flat_map_rows`, an iterable of any number of records.
 :func:`map_rows` and :func:`flat_map_rows` run it as one ``mapInArrow``
 stage, one output batch per input batch (:func:`map_batches`). Which entry
 point an operator uses follows from its kernel's shape; there is no
-option. The lineage commit, the WARC/WET writers and the model slot
-cross with :func:`column_values` and :func:`records_to_batch` too. A
-kernel sees a timestamp as a naive UTC ``datetime``, and a naive one it
-returns is read as UTC, whatever the session time zone. Batch-shaped
-numpy kernels (LSH band keys, the bucket pair kernels) cross the same
-boundary through :func:`arrow_stage`, reading list columns as numpy
-views of the batch.
+option. The lineage commit and the WARC/WET writers cross with
+:func:`column_values` and :func:`records_to_batch` too. A kernel sees a
+timestamp as a naive UTC ``datetime``, and a naive one it returns is read
+as UTC, whatever the session time zone. Batch-shaped kernels (LSH band
+keys, the bucket pair kernels, the model slot's one inference call per
+batch) cross the same boundary through :func:`arrow_stage`; the numpy
+ones read list columns as numpy views of the batch.
 """
 
 from __future__ import annotations

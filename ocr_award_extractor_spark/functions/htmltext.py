@@ -243,8 +243,7 @@ def _html_parser_compatible() -> bool:
         failed = [f"probe raised {e!r}"]
     if failed:
         _log.warning("native HTML segmenter disabled, every document takes the "
-                     "stdlib parser (the native row hash stays on); failed "
-                     "probe: %s", ", ".join(failed))
+                     "stdlib parser; failed probe: %s", ", ".join(failed))
     return not failed
 
 
@@ -255,7 +254,7 @@ def _html_parser_compatible() -> bool:
 # kept segments' text chunks as code-point offsets; the Segments are built
 # here, and their chunks are unescaped as html.parser unescapes its data.
 
-_NATIVE = _segscan.library() if _html_parser_compatible() else None
+_NATIVE = _segscan.load() if _html_parser_compatible() else None
 
 
 def _native_segments(html_str: str) -> list[Segment] | None:

@@ -1,9 +1,5 @@
-"""Build and load the engine's native library, ``_segscan.c``. It has two
-uses: the first tier of
-:func:`~ocr_award_extractor_spark.functions.htmltext.segment_html` (the
-``segscan`` function), and the XXH64 behind
-:func:`~ocr_award_extractor_spark.functions.rowhash.row_hashes`, the
-lineage checksum's row hash (the ``xxh64`` function).
+"""Build and load the engine's native library, ``_segscan.c``: the first
+tier of :func:`~ocr_award_extractor_spark.functions.htmltext.segment_html`.
 
 The C source ships inside the package (``config.build_pyfiles_zip`` zips it
 with the ``.py`` files), so a Spark worker that imports the package from a
@@ -14,21 +10,18 @@ headers) once per source, architecture and flags, into the per-user cache
 directory ``~/.cache/ocr_award_extractor_spark``, and loads it with
 :mod:`ctypes`. Concurrent builds (a driver and its local workers) each
 compile to a unique tmp file and ``os.replace`` it into place.
-:func:`library` is the one load a process uses.
 
 The library is loaded only from a directory that this uid owns with mode
 0700. Anything else at that path (another owner, a symlink, a wider mode)
 is removed and the directory made anew; if it cannot be removed, the
 library stays off. So does it when there is no compiler or the build or
-load fails: :func:`load` then logs one WARNING that names both uses and the
-reason and returns None; every document then takes the stdlib parser, and
-every row hash the pure-Python XXH64.
+load fails: :func:`load` then logs one WARNING that names the reason and
+returns None, and every document takes the stdlib parser.
 """
 
 from __future__ import annotations
 
 import ctypes
-import functools
 import hashlib
 import logging
 import os
@@ -97,9 +90,8 @@ def _build(source: bytes, lib_path: str) -> None:
 
 
 def load() -> ctypes.CDLL | None:
-    """The native library, its ``segscan`` and ``xxh64`` functions typed;
-    None, with one WARNING naming the reason, when it cannot be built or
-    loaded."""
+    """The native library, its ``segscan`` function typed; None, with one
+    WARNING naming the reason, when it cannot be built or loaded."""
     try:
         source = pkgutil.get_data(__package__, _SOURCE)
         if source is None:
@@ -113,20 +105,11 @@ def load() -> ctypes.CDLL | None:
         lib.segscan.argtypes = [ctypes.c_char_p, ctypes.c_long, ctypes.c_int,
                                 ctypes.c_void_p, ctypes.c_long]
         lib.segscan.restype = ctypes.c_long
-        lib.xxh64.argtypes = [ctypes.c_char_p, ctypes.c_long, ctypes.c_uint64]
-        lib.xxh64.restype = ctypes.c_uint64
         return lib
     except subprocess.CalledProcessError as e:
         reason = f"{e.cmd[0]} failed: {e.stderr.decode(errors='replace')[-500:]}"
     except (OSError, subprocess.SubprocessError, AttributeError) as e:
         reason = f"{type(e).__name__}: {e}"
     _log.warning("native library disabled: every document takes the stdlib "
-                 "HTML parser and every row hash the pure-Python XXH64; %s", reason)
+                 "HTML parser; %s", reason)
     return None
-
-
-@functools.cache
-def library() -> ctypes.CDLL | None:
-    """The process's one :func:`load`, shared by the segmenter and the row
-    hash, so a missing compiler logs one WARNING."""
-    return load()

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ocr_award_extractor_spark.functions.batching import (
-    column_values, map_rows, records_to_batch,
+    arrow_stage, column_values, map_rows, records_to_batch,
 )
 from ocr_award_extractor_spark.functions.extract import extract_fields
 
@@ -132,6 +132,21 @@ def _rule_row(url, text) -> dict:
     return _rec(url, extract_fields((text or "").split("\n")), "rule")
 
 
+def _model_batch(batches: Iterator[pa.RecordBatch], *, schema: StructType,
+                 infer_fn: Callable[[list[str]], list[str]]
+                 ) -> Iterator[pa.RecordBatch]:
+    """``mapInArrow`` kernel of the model stage: one ``infer_fn`` call per
+    Arrow batch of (url, ocr_text), each reply parsed with the rule
+    fallback."""
+    for batch in batches:
+        urls, texts = column_values(batch, ("url", "ocr_text"))
+        texts = [(t or "") for t in texts]
+        replies = infer_fn([PROMPT_TEMPLATE.format(text=t) for t in texts])
+        recs = [_rec(url, *parse_model_reply(reply, text))
+                for url, text, reply in zip(urls, texts, replies)]
+        yield records_to_batch(recs, schema)
+
+
 def extract_with_model(
     extracted: DataFrame,
     infer_fn: Callable[[list[str]], list[str]] = fake_infer,
@@ -145,18 +160,5 @@ def extract_with_model(
     if not use_model:
         return map_rows(extracted, ("url", "ocr_text"), _rule_row,
                         MODEL_SCHEMA)
-
-    from ocr_award_extractor_spark.config import ensure_package_on_workers
-
-    ensure_package_on_workers(extracted.sparkSession)
-
-    def model_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls, texts = column_values(batch, ("url", "ocr_text"))
-            texts = [(t or "") for t in texts]
-            replies = infer_fn([PROMPT_TEMPLATE.format(text=t) for t in texts])
-            recs = [_rec(url, *parse_model_reply(reply, text))
-                    for url, text, reply in zip(urls, texts, replies)]
-            yield records_to_batch(recs, MODEL_SCHEMA)
-
-    return extracted.select("url", "ocr_text").mapInArrow(model_batch, MODEL_SCHEMA)
+    return arrow_stage(extracted.select("url", "ocr_text"), _model_batch,
+                       MODEL_SCHEMA, "model_batch", infer_fn=infer_fn)

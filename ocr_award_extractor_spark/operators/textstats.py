@@ -554,20 +554,17 @@ def _decon_grams(tk_col, n: int):
 
 def decontaminate_ngrams_df(
     docs: DataFrame,
-    n: int = DECON_N,
-    bench_grams: DataFrame | None = None,
     plant_canaries: bool = False,
-    broadcast_bench: bool | None = None,
+    broadcast_bench: bool = False,
 ) -> DataFrame:
     """Per-doc benchmark-overlap verdict for every candidate doc:
-    (doc_id, n_hits = distinct benchmark n-grams present, contaminated).
+    (doc_id, n_hits = distinct benchmark DECON_N-grams present,
+    contaminated).
 
-    ``bench_grams`` (a one-column ``g`` frame of benchmark shingles) is
-    what a real deployment passes — the eval set lives outside the
-    corpus. Without it, benchmark membership is carved out of ``docs``
-    by the deterministic md5-bucket gate (the oracle-slot configuration;
-    gated docs are then excluded from the verdicts, as eval members
-    leave a training corpus entirely). ``plant_canaries`` appends the
+    Benchmark membership is carved out of ``docs`` by the deterministic
+    md5-bucket gate, standing in for an eval set that lives outside the
+    corpus; gated docs are excluded from the verdicts, as eval members
+    leave a training corpus entirely. ``plant_canaries`` appends the
     deterministic snippet augmentation (grading device — see module
     comment) and is only set by the oracle slot.
 
@@ -576,48 +573,28 @@ def decontaminate_ngrams_df(
     shuffle and BROADCAST; the corpus side explodes per-doc distinct
     shingles map-side into the broadcast hash join, and the hit count is
     a partial-agg groupBy(doc_id) — ONE real shuffle over narrow rows.
-    The final left join back to the doc universe (docs with < n tokens
+    The final left join back to the doc universe (docs with < DECON_N tokens
     or zero hits still get a verdict row) shuffles doc_id-only
     projections. No driver-side state beyond the broadcast."""
-    external_bench = bench_grams is not None
     bucket = _md5_bucket(F.col("doc_id"))
     txt = F.col("text")
     if plant_canaries:
-        if n != DECON_N:
-            raise ValueError(
-                f"plant_canaries requires n == DECON_N ({DECON_N}): the "
-                f"snippet is {DECON_N} tokens, so a wider shingle would "
-                "mix doc-unique body tokens into every gram and no two "
-                "carriers would ever collide — the canary would silently "
-                "stop detecting anything")
         sid = bucket % DECON_SID_POOL
         txt = F.when(
             bucket % DECON_CARRIER_MOD == 0,
             F.concat(txt, F.lit(" zq0 zq1 sid"), sid, F.lit(" zq3 zq4")),
         ).otherwise(txt)
-    is_bench = (
-        F.lit(False) if external_bench
-        else (bucket % DECON_BENCH_MOD == 0)
-    )
+    is_bench = bucket % DECON_BENCH_MOD == 0
     base = docs.select("doc_id", is_bench.alias("is_bench"), txt.alias("t"))
     tk = F.filter(F.split(F.col("t"), " "), lambda x: F.length(x) > 0)
     base = base.select("doc_id", "is_bench", tk.alias("tk"))
     g = base.select("doc_id", "is_bench",
-                    F.explode(_decon_grams(F.col("tk"), n)).alias("g"))
-    if external_bench:
-        # callers naturally shingle multiple eval docs without dedup —
-        # n_hits is CONTRACTUALLY "distinct benchmark n-grams present",
-        # so dedup here (a no-op shuffle on an already-distinct frame)
-        bench_grams = bench_grams.select("g").distinct()
-    else:
-        bench_grams = g.where(F.col("is_bench")).select("g").distinct()
-    # external eval sets are small by nature (MBs) — hint the broadcast;
-    # the self-carve-out slice's shingle set grows WITH the corpus, so
-    # there the hint stays off and AQE broadcasts only when the built
-    # side measures small at runtime (broadcast_bench overrides either
-    # way — the oracle slot pins the small-bench plan shape with True)
-    if broadcast_bench is None:
-        broadcast_bench = external_bench
+                    F.explode(_decon_grams(F.col("tk"), DECON_N)).alias("g"))
+    bench_grams = g.where(F.col("is_bench")).select("g").distinct()
+    # the carve-out's shingle set grows WITH the corpus, so by default the
+    # hint stays off and AQE broadcasts only when the built side measures
+    # small at runtime; the oracle slot pins the small-bench plan shape
+    # with broadcast_bench=True
     if broadcast_bench:
         bench_grams = F.broadcast(bench_grams)
     hits = (

@@ -37,13 +37,12 @@ lineage (input split, row counts, checksum). Design:
   data+lineage append in one transaction — see BASELINE.json
   north_star). A crash before step 3 leaves the split pending, and the
   fixed file names make a task retry overwrite instead of duplicate;
-* checksum per split = bit_xor over :func:`row_hash` — order-insensitive,
-  overflow-free (ANSI mode safe), cheap to recompute for audit. The writer
-  computes each row's term in Python with
-  :func:`~ocr_award_extractor_spark.functions.rowhash.row_hashes`, which
-  equals Spark's ``xxhash64`` bit for bit (native XXH64 from the engine's
-  C library, or a pure-Python XXH64 without a compiler);
-  :func:`verify_lineage` recomputes it in the JVM.
+* checksum per split = bit_xor of each row's hash: the first 8 bytes of
+  ``md5(coalesce(url, '') || '\\0' || coalesce(ocr_text, ''))`` read as a
+  big-endian signed int64 — order-insensitive, overflow-free (ANSI mode
+  safe), cheap to recompute for audit. The writer computes it in Python
+  with stdlib ``hashlib`` (:func:`_row_hashes`), :func:`verify_lineage`
+  in the JVM with Spark's ``md5`` (:func:`row_hash`).
 
 Extraction runs on ``min(pending splits, cores)`` tasks, so ``n_splits``
 should be at least the cluster's core count. Spark's hash partitioning
@@ -56,12 +55,17 @@ the driver and executors share — as for ``write_wet`` and ``write_warc``.
 Layout under ``out_dir``: ``data/split-<k>.parquet``, one flat directory
 of the extracted rows with their ``split_id``, and
 ``_lineage/split-<k>.parquet`` (run_id, split_id, row_count, checksum).
-A root of the older layout (``data/split_id=<k>/``) is refused.
+The first run writes ``_meta.json`` (the pinned ``n_splits`` and
+``"row_hash": "md5"``). A root that holds data or lineage but whose
+``_meta.json`` is missing or names no md5 row hash is refused: it was
+written with an older row hash, or in the older ``data/split_id=<k>/``
+layout.
 """
 
 from __future__ import annotations
 
 import functools
+import hashlib
 import json
 import os
 import re
@@ -73,6 +77,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 N_SPLITS_DEFAULT = 16
+ROW_HASH = "md5"
 
 _COMMIT_SCHEMA = "split_id int, row_count long, checksum long"
 _LINEAGE_ARROW_SCHEMA = pa.schema([("run_id", pa.string()), ("split_id", pa.int32()),
@@ -94,10 +99,25 @@ def split_id_in(ids) -> Column:
 
 
 def row_hash() -> Column:
-    """One row's term of its split's checksum. The writer's checksum and
-    :func:`verify_lineage`'s audit both use it, so they cannot drift."""
-    return F.xxhash64(F.col("url"), F.lit("\0"),
-                      F.coalesce(F.col("ocr_text"), F.lit("")))
+    """One row's term of its split's checksum, as :func:`verify_lineage`'s
+    audit computes it in the JVM: the first 8 bytes of the md5 as a
+    big-endian signed int64, joined from the two 32-bit halves of its hex
+    digest. The writer's spelling is :func:`_row_hashes`, next to it."""
+    h = F.md5(F.concat(F.coalesce(F.col("url"), F.lit("")), F.lit("\0"),
+                       F.coalesce(F.col("ocr_text"), F.lit(""))))
+
+    def word(pos: int) -> Column:
+        return F.conv(F.substring(h, pos, 8), 16, 10).cast("long")
+
+    return F.shiftleft(word(1), 32).bitwiseOR(word(9))
+
+
+def _row_hashes(urls, texts) -> list[int]:
+    """:func:`row_hash` of each (url, ocr_text) pair, computed in Python."""
+    return [int.from_bytes(hashlib.md5(f"{u or ''}\0{t or ''}".encode(),
+                                       usedforsecurity=False).digest()[:8],
+                           "big", signed=True)
+            for u, t in zip(urls, texts)]
 
 
 def _committed_schema() -> StructType:
@@ -202,20 +222,18 @@ def _write_splits(batches, *, data_dir: str, lineage_dir: str, run_id: str):
 def _extract_splits(batches, extract):
     """The commit's extraction: ``extract`` on each page row, one Arrow
     batch of :func:`_committed_schema` plus the row hash ``_h``
-    (:func:`~ocr_award_extractor_spark.functions.rowhash.row_hashes`,
-    equal to :func:`row_hash`) per run of one split, so the writer can
-    commit a split once the next one is extracted."""
+    (:func:`_row_hashes`) per run of one split, so the writer can commit a
+    split once the next one is extracted."""
     from ocr_award_extractor_spark.functions.batching import column_values, map_batches
-    from ocr_award_extractor_spark.functions.rowhash import row_hashes
     from ocr_award_extractor_spark.operators.extract_pipeline import OUT_SCHEMA, PAGE_COLUMNS
 
     for batch in batches:
         for lo, hi in _split_runs(batch.column("split_id").to_numpy()):
             pages = batch.slice(lo, hi - lo)
             (out,) = map_batches([pages], PAGE_COLUMNS, extract, OUT_SCHEMA)
-            hashes = row_hashes(*column_values(out, ("url", "ocr_text")))
+            hashes = _row_hashes(*column_values(out, ("url", "ocr_text")))
             yield (out.append_column("split_id", pages.column("split_id"))
-                   .append_column("_h", pa.array(hashes)))
+                   .append_column("_h", pa.array(hashes, pa.int64())))
 
 
 def _extract_and_write(batches, *, extract, **writer):
@@ -258,31 +276,34 @@ def run_resumable_extraction(
         )
 
     data_dir = os.path.join(out_dir, "data")
-    entries = os.listdir(data_dir) if os.path.isdir(data_dir) else []
-    if any(e.startswith("split_id=") for e in entries):
-        raise ValueError(f"output {out_dir} has the old data/split_id=<k>/ "
-                         "layout: rewrite it into a new output directory")
+    lineage_dir = os.path.join(out_dir, "_lineage")
     # split ids are content-addressed MOD n_splits — changing n_splits
     # between runs on the same output would re-key splits and duplicate
-    # rows, so the first run pins it and later runs must match.
+    # rows, so the first run pins it and later runs must match. Its
+    # checksums are only comparable under the row hash it names.
     meta_path = os.path.join(out_dir, "_meta.json")
+    meta = {}
     if os.path.exists(meta_path):
         with open(meta_path, encoding="utf-8") as fh:
-            pinned = json.load(fh)["n_splits"]
-        if pinned != n_splits:
+            meta = json.load(fh)
+    if meta.get("row_hash") != ROW_HASH:
+        if os.path.isdir(data_dir) or os.path.isdir(lineage_dir):
             raise ValueError(
-                f"output {out_dir} was created with n_splits={pinned}; "
-                f"got {n_splits} — rerun with --n-splits {pinned}"
-            )
-    else:
+                f"output {out_dir} has the old row hash or data/split_id=<k>/ "
+                "layout: rewrite it into a new output directory")
         os.makedirs(out_dir, exist_ok=True)
         with open(meta_path, "w", encoding="utf-8") as fh:
-            json.dump({"n_splits": n_splits}, fh)
+            json.dump({"n_splits": n_splits, "row_hash": ROW_HASH}, fh)
+    elif meta["n_splits"] != n_splits:
+        raise ValueError(
+            f"output {out_dir} was created with n_splits={meta['n_splits']}; "
+            f"got {n_splits} — rerun with --n-splits {meta['n_splits']}"
+        )
 
+    entries = os.listdir(data_dir) if os.path.isdir(data_dir) else []
     for e in entries:
         if e.startswith("."):           # a killed attempt's tmp
             os.remove(os.path.join(data_dir, e))
-    lineage_dir = os.path.join(out_dir, "_lineage")
     already = set(committed_splits(out_dir).column("split_id").to_pylist())
     todo = sorted(set(range(n_splits)) - already)
     batches = [b for b in (todo[i::n_batches] for i in range(n_batches)) if b]

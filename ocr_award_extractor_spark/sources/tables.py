@@ -31,7 +31,15 @@ FIXTURE_DIR = os.path.join(_REPO_ROOT, "fixtures")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """The table, read with the schema of its parquet footers (a pyarrow
+    read on the driver), so building the frame starts no Spark job."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = ds.dataset(path, format="parquet").schema
+    return spark.read.schema(
+        from_arrow_schema(schema, prefer_timestamp_ntz=True)).parquet(path)
 
 
 # A scan smaller than this per core cannot usefully feed every core —
@@ -71,21 +79,20 @@ def spread_small_scans(df: DataFrame) -> DataFrame:
     return df.repartition(t)
 
 
-def ensure_fixture(n_docs: int = 500, seed: int = 42, name: str | None = None) -> str:
+def ensure_fixture(n_docs: int = 500) -> str:
     """Generate (once) and return the path of the web-page fixture parquet."""
-    from ocr_award_extractor_spark.sources.fixture_gen import write_fixture
+    from ocr_award_extractor_spark.sources.fixture_gen import SEED, write_fixture
 
     os.makedirs(FIXTURE_DIR, exist_ok=True)
     # v2: generator gained the deterministic outlink block (round 6) —
     # versioned name so stale pre-injection caches can't serve
-    fname = name or f"webpages_n{n_docs}_s{seed}_v2.parquet"
-    path = os.path.join(FIXTURE_DIR, fname)
+    path = os.path.join(FIXTURE_DIR, f"webpages_n{n_docs}_s{SEED}_v2.parquet")
     if not os.path.exists(path):
         tmp = path + ".tmp"
-        write_fixture(tmp, n_docs, seed)
+        write_fixture(tmp, n_docs)
         os.replace(tmp, path)
     return path
 
 
-def load_fixture(spark: SparkSession, n_docs: int = 500, seed: int = 42) -> DataFrame:
-    return spark.read.parquet(ensure_fixture(n_docs, seed))
+def load_fixture(spark: SparkSession, n_docs: int = 500) -> DataFrame:
+    return spark.read.parquet(ensure_fixture(n_docs))

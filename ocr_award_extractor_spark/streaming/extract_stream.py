@@ -133,12 +133,10 @@ def windowed_event_counts(
     spark: SparkSession,
     events_dir: str,
     *,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
     max_files_per_trigger: int | None = None,
 ):
-    """Watermarked tumbling-window counts per event_type (streaming
-    groupBy with state cleanup once the watermark passes)."""
+    """Watermarked 1-hour tumbling-window counts per event_type (streaming
+    groupBy with state cleanup once the 2-hour watermark passes)."""
     reader = (
         spark.readStream
         .schema("event_id long, ts timestamp, user_id long, event_type string, "
@@ -149,8 +147,8 @@ def windowed_event_counts(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     ev = reader.load(events_dir)
     return (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        ev.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"),
              # DECIMAL sum: streaming state merges in arrival order, which
              # differs from any batch engine's order — exact arithmetic

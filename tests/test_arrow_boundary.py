@@ -50,13 +50,12 @@ def test_no_pandas_outside_streaming():
     assert set(found) <= PANDAS_MODULES, found
 
 
-def test_row_stages_plan_map_in_arrow_only(spark, tmp_path, monkeypatch):
+def test_row_stages_plan_map_in_arrow_only(spark, tmp_path):
     """extract_documents, read_warc, read_wet, webify_documents,
     extract_media_features, both paths of extract_with_model, and the LSH
     and MinHash-LSH bucket operators plan a MapInArrow and no
     MapInPandas. The plans are only built, over local rows, one WARC file
-    and the sf0.001 tables: no Spark job starts. The tables are read
-    first, since a parquet read infers its schema with a job."""
+    and the sf0.001 tables: no Spark job starts."""
     from ocr_award_extractor_spark.operators import similarity
     from ocr_award_extractor_spark.operators.dedup import minhash_lsh_pairs_df
     from ocr_award_extractor_spark.operators.extract_pipeline import extract_documents
@@ -70,8 +69,6 @@ def test_row_stages_plan_map_in_arrow_only(spark, tmp_path, monkeypatch):
     (tmp_path / "a.warc.wet").write_bytes(
         _record("response", "https://a.example/", "2024-03-01T00:00:00Z",
                 _http(b"<p>a page</p>")))
-    tables = {t: load_table(spark, SF, t) for t in ("documents", "embeddings")}
-    monkeypatch.setattr(similarity, "load_table", lambda _s, _d, t: tables[t])
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
     pages = spark.createDataFrame(
@@ -91,13 +88,31 @@ def test_row_stages_plan_map_in_arrow_only(spark, tmp_path, monkeypatch):
         "lsh_buckets": similarity.lsh_buckets(spark, SF),
         "lsh_candidate_pairs": similarity.lsh_candidate_pairs(spark, SF),
         "lsh_neardup_pairs": similarity.lsh_neardup_pairs(spark, SF),
-        "minhash_lsh_pairs_df": minhash_lsh_pairs_df(tables["documents"]),
+        "minhash_lsh_pairs_df": minhash_lsh_pairs_df(load_table(spark, SF, "documents")),
     }
     plans = {name: df._jdf.queryExecution().executedPlan().toString()
              for name, df in frames.items()}
     assert set(tracker.getJobIdsForGroup(None)) == before
     for name, plan in plans.items():
         assert "MapInArrow" in plan and "MapInPandas" not in plan, (name, plan)
+
+
+def test_load_table_schema_from_footers_starts_no_job(spark):
+    """load_table's schema, built from the parquet footers, equals the one
+    Spark infers (nullability and timestamp_ntz included) for every table
+    at sf0.001 and sf0.01, and building its frames starts no Spark job."""
+    import os
+
+    from ocr_award_extractor_spark.sources.tables import TABLE_NAMES
+
+    tracker = spark.sparkContext.statusTracker()
+    for sf in (SF, os.path.join(os.path.dirname(SF), "sf0.01")):
+        before = set(tracker.getJobIdsForGroup(None))
+        frames = {t: load_table(spark, sf, t) for t in TABLE_NAMES}
+        assert set(tracker.getJobIdsForGroup(None)) == before, sf
+        for t, frame in frames.items():
+            inferred = spark.read.parquet(os.path.join(sf, f"{t}.parquet")).schema
+            assert frame.schema == inferred, (sf, t)
 
 
 def test_timestamps_ignore_the_session_time_zone(spark, tmp_path):

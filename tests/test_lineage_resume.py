@@ -293,14 +293,17 @@ def test_batch_readback_reads_only_its_own_splits(spark, tmp_path):
     sorts before every file the batch writes (split 0 is left empty): the
     batch counts exactly its own rows and leaves that file as it was, and
     the batch that later commits the split replaces it."""
+    import json
     import os
 
-    from ocr_award_extractor_spark.plans.lineage import with_split_id
+    from ocr_award_extractor_spark.plans.lineage import ROW_HASH, with_split_id
 
     out = str(tmp_path / "run")
     docs = (with_split_id(load_fixture(spark, n_docs=N_DOCS), 12)
             .where(F.col("split_id") != 0).drop("split_id"))
     os.makedirs(os.path.join(out, "data"))
+    with open(os.path.join(out, "_meta.json"), "w", encoding="utf-8") as fh:
+        json.dump({"n_splits": 12, "row_hash": ROW_HASH}, fh)  # the killed run's
     stray = os.path.join(out, "data", "split-1.parquet")
     with open(stray, "wb") as fh:
         fh.write(b"left behind by a killed run")
@@ -469,6 +472,26 @@ def test_old_layout_root_is_refused_untouched(spark, tmp_path):
         json.dump({"n_splits": 4}, fh)
     before = _file_state(out, "")
     assert any("split_id=0" in p for p, _, _ in before)
+
+    with pytest.raises(ValueError, match=f"output {out} has the old"):
+        run_resumable_extraction(spark, docs, out, "new-run", n_splits=4)
+    assert _file_state(out, "") == before
+
+
+def test_root_of_older_row_hash_is_refused_untouched(spark, tmp_path):
+    """A root whose ``_meta.json`` names no row hash holds checksums of an
+    older one (XXH64): it is refused with an error naming the root, before
+    any file under it changes."""
+    import json
+    import os
+
+    out = str(tmp_path / "xxh64")
+    docs = load_fixture(spark, n_docs=N_DOCS)
+    run_resumable_extraction(spark, docs, out, "first", n_splits=4,
+                             n_batches=2, max_batches=1)
+    with open(os.path.join(out, "_meta.json"), "w", encoding="utf-8") as fh:
+        json.dump({"n_splits": 4}, fh)
+    before = _file_state(out, "")
 
     with pytest.raises(ValueError, match=f"output {out} has the old"):
         run_resumable_extraction(spark, docs, out, "new-run", n_splits=4)
@@ -742,9 +765,9 @@ def test_n_splits_mismatch_on_resume_raises_and_leaves_output(spark, tmp_path):
 
 
 # ------------------------------------------------------------- row hash
-# The commit kernel hashes each row in Python (native XXH64, or the
-# pure-Python fallback without a compiler); verify_lineage recomputes the
-# checksum with Spark's xxhash64 in the JVM. The two must agree bit for bit.
+# The commit kernel hashes each row in Python with hashlib's md5;
+# verify_lineage recomputes the checksum with Spark's md5 in the JVM. The
+# two must agree bit for bit.
 
 def _hash_cases(spark):
     """(url, ocr_text) pairs: the fixture's extracted rows and edge cases."""
@@ -763,32 +786,26 @@ def _hash_cases(spark):
     return fixture + edges + lengths
 
 
-def test_row_hash_equals_spark_xxhash64(spark, monkeypatch):
-    """The native XXH64 and the pure-Python fallback both give Spark's
-    row_hash() on every case; the html.parser probe does not gate the
-    native one."""
-    from ocr_award_extractor_spark.functions import rowhash, segscan
-    from ocr_award_extractor_spark.plans.lineage import row_hash
+def test_row_hash_equals_spark_md5(spark):
+    """The writer's Python row hash gives Spark's row_hash() on every
+    case."""
+    from ocr_award_extractor_spark.plans.lineage import _row_hashes, row_hash
 
     cases = _hash_cases(spark)
     df = spark.createDataFrame(cases, "url string, ocr_text string")
     want = [r[0] for r in df.select(row_hash()).collect()]
-    urls, texts = [u for u, _ in cases], [t for _, t in cases]
-
-    assert rowhash._NATIVE is not None and rowhash._NATIVE is segscan.library()
-    assert rowhash.row_hashes(urls, texts).tolist() == want
-    monkeypatch.setattr(rowhash, "_NATIVE", None)
-    assert rowhash.row_hashes(urls, texts).tolist() == want
+    assert _row_hashes([u for u, _ in cases], [t for _, t in cases]) == want
 
 
 def test_commit_without_native_library_writes_same_lineage(spark, tmp_path,
                                                            monkeypatch):
     """The commit kernel run in-process on the same page batches, with the
-    native library on and monkeypatched off, commits the same lineage rows
-    as the Spark commit, and the JVM audit passes on the fallback's root."""
+    native segmenter on and monkeypatched off, commits the same lineage rows
+    as the Spark commit, and the JVM audit passes on the stdlib parser's
+    root."""
     import os
 
-    from ocr_award_extractor_spark.functions import rowhash
+    from ocr_award_extractor_spark.functions import htmltext
     from ocr_award_extractor_spark.operators.extract_pipeline import (
         extract_record, page_columns,
     )
@@ -812,7 +829,7 @@ def test_commit_without_native_library_writes_same_lineage(spark, tmp_path,
     spark_root = str(tmp_path / "spark")
     run_resumable_extraction(spark, docs, spark_root, "spark", n_splits=4)
     native = commit_in_process(str(tmp_path / "native"))
-    monkeypatch.setattr(rowhash, "_NATIVE", None)
+    monkeypatch.setattr(htmltext, "_NATIVE", None)
     fallback_root = str(tmp_path / "fallback")
     fallback = commit_in_process(fallback_root)
     assert sum(r["row_count"] for r in native) == N_DOCS
