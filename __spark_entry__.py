@@ -14,6 +14,10 @@ rows-only check).
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,21 +30,52 @@ def _sf_tag(sf_dir: str) -> str:
     """Staging-cache tag for sf_dir: basename for readability PLUS an
     md5 of the absolute path — two different sf_dirs sharing a basename
     in one process must never reuse each other's staged data (ADVICE r3)."""
-    import hashlib
-    import os
-
     ab = os.path.abspath(sf_dir)
     return (os.path.basename(ab.rstrip("/"))
             + "_" + hashlib.md5(ab.encode()).hexdigest()[:8])
 
 
-def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ocr_award_extractor_spark.operators.extract_pipeline import extract_documents
+def _stage_once(path: str, write: Callable[[str], object]) -> str:
+    """Stage ``path`` once per process: ``write(tmp)`` fills a fresh
+    ``path + ".tmp"`` (a stale one from a failed attempt is removed
+    first), which is then renamed into place. A failed or interrupted
+    write therefore never leaves a partial ``path`` that a retry would
+    trust as the complete input."""
+    if not os.path.exists(path):
+        tmp = path + ".tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        write(tmp)
+        os.rename(tmp, path)
+    return path
+
+
+def _tmp_dir(sf_dir: str, name: str) -> str:
+    """Per-process+sf scratch path under the system temp dir."""
+    return os.path.join(tempfile.gettempdir(),
+                        f"sparkgraft_{name}_{_sf_tag(sf_dir)}_{os.getpid()}")
+
+
+def _text_md5(df: DataFrame) -> DataFrame:
+    """The extract_pipeline_text oracle's projection: md5(ocr_text) pins
+    the extracted text byte for byte, per url."""
+    return df.select(
+        "url", "status", F.md5("ocr_text").alias("text_md5"),
+        F.col("n_lines").cast("long").alias("n_lines"),
+    )
+
+
+def _webified(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The driver documents wrapped as deterministic web pages."""
     from ocr_award_extractor_spark.operators.webify import webify_documents
     from ocr_award_extractor_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    return extract_documents(webify_documents(docs))
+    return webify_documents(load_table(spark, sf_dir, "documents"))
+
+
+def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ocr_award_extractor_spark.operators.extract_pipeline import extract_documents
+
+    return extract_documents(_webified(spark, sf_dir))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -60,10 +95,7 @@ def _extract_pipeline_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic 12-word line chunking with a regex, so md5(ocr_text) is a
     true byte-identity check of html-wrap → parse → boilerplate strip →
     line join, per url."""
-    return _flagship(spark, sf_dir).select(
-        "url", "status", F.md5("ocr_text").alias("text_md5"),
-        F.col("n_lines").cast("long").alias("n_lines"),
-    )
+    return _text_md5(_flagship(spark, sf_dir))
 
 
 def _extract_pipeline_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,38 +140,21 @@ def _warc_extract_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     atomic rename (a partial shard dir must never become the visible
     input); 8 shards so read_warc's per-file parallelism is exercised,
     not a single-file degenerate."""
-    import os
-    import tempfile
-
     from ocr_award_extractor_spark.operators.extract_pipeline import extract_documents
-    from ocr_award_extractor_spark.operators.webify import webify_documents
-    from ocr_award_extractor_spark.sources.tables import load_table
     from ocr_award_extractor_spark.sources.warc import read_warc, write_warc
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"sparkgraft_warc_{_sf_tag(sf_dir)}_{os.getpid()}")
-    if not os.path.exists(out):
-        tmp = out + ".tmp"
-        # shard count = webify's own partitioning (spread to session
-        # parallelism, round 7): read_warc's per-file parallelism then
-        # matches the session width instead of a fixed 8
-        write_warc(
-            webify_documents(load_table(spark, sf_dir, "documents")),
-            tmp, mode="overwrite")
-        os.rename(tmp, out)
+    # shard count = webify's own partitioning (spread to session
+    # parallelism, round 7): read_warc's per-file parallelism then
+    # matches the session width instead of a fixed 8
+    out = _stage_once(_tmp_dir(sf_dir, "warc"), lambda tmp: write_warc(
+        _webified(spark, sf_dir), tmp, mode="overwrite"))
     pages = read_warc(spark, out)
     # salt (round 7): binaryFile packs whole small shards into a couple
     # of splits, so the unsalted extraction ran ~2 tasks; the salted
     # repartition is the flagship's own production plan (measured 1.84 s
     # → 1.17 s for the read+extract leg at sf0.1)
-    return extract_documents(
-        pages,
-        salt_partitions=spark.sparkContext.defaultParallelism,
-    ).select(
-        "url", "status", F.md5("ocr_text").alias("text_md5"),
-        F.col("n_lines").cast("long").alias("n_lines"),
-    )
+    return _text_md5(extract_documents(
+        pages, salt_partitions=spark.sparkContext.defaultParallelism))
 
 
 def _extract_field_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,6 +181,15 @@ def _extract_field_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _staged_pages(spark: SparkSession, sf_dir: str) -> str:
+    """The webified corpus as a parquet table, the input of the commit
+    and streaming-extract legs (production input is a real table: the
+    commit's split filter sits above the webify mapInArrow, so the UDF
+    subtree would re-wrap the whole corpus in every commit job)."""
+    return _stage_once(_tmp_dir(sf_dir, "pages"), lambda tmp: _webified(
+        spark, sf_dir).write.mode("overwrite").parquet(tmp))
+
+
 def _resumable_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O22 write path, driver-graded: run the resumable commit (one Spark
     job writes every pending split's file and its lineage row) into a
@@ -175,48 +199,16 @@ def _resumable_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated). split_id itself is pmod(xxhash64(url)) — not DuckDB-
     reproducible, so it is excluded from the compare; the crash/resume leg
     (SIGKILL mid-run) stays pinned by tests/test_lineage_resume.py."""
-    import os
-    import tempfile
-
-    from ocr_award_extractor_spark.operators.webify import webify_documents
     from ocr_award_extractor_spark.plans.lineage import (
         read_committed, run_resumable_extraction,
     )
-    from ocr_award_extractor_spark.sources.tables import load_table
 
-    tag = _sf_tag(sf_dir)
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"sparkgraft_commit_{tag}_{os.getpid()}")
-    # stage the webified pages as a parquet table ONCE: the split filter
-    # sits above the webify mapInArrow, so passing the UDF subtree
-    # directly would re-wrap the whole corpus in every commit job
-    # (production input is a real table — this mirrors that shape)
-    src = os.path.join(out_dir + "_src")
-    if not os.path.exists(src):
-        # tmp + atomic rename (round-4 review): an interrupted staging
-        # write must not leave a PARTIAL src that a retry would commit
-        # (with valid lineage checksums!) as the complete corpus
-        webify_documents(load_table(spark, sf_dir, "documents")) \
-            .write.mode("overwrite").parquet(src + ".tmp")
-        os.rename(src + ".tmp", src)
-    pages = spark.read.parquet(src)
+    out_dir = _tmp_dir(sf_dir, "commit")
+    pages = spark.read.parquet(_staged_pages(spark, sf_dir))
     # idempotent per process+sf: a second construction resumes over a
     # fully-committed dir and writes nothing
-    run_resumable_extraction(spark, pages, out_dir, run_id=f"gate-{tag}")
-    out = read_committed(spark, out_dir)
-    return out.select(
-        "url", "status", F.md5("ocr_text").alias("text_md5"),
-        F.col("n_lines").cast("long").alias("n_lines"),
-    )
-
-
-def _stream_tmp(sf_dir: str, leg: str) -> str:
-    import os
-    import tempfile
-
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"sparkgraft_stream_{leg}_{_sf_tag(sf_dir)}_{os.getpid()}")
+    run_resumable_extraction(spark, pages, out_dir, run_id=f"gate-{_sf_tag(sf_dir)}")
+    return _text_md5(read_committed(spark, out_dir))
 
 
 def _streaming_extract_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,103 +219,43 @@ def _streaming_extract_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     extract_pipeline_text oracle (streaming must lose/duplicate/alter
     nothing vs the batch plan). Checkpointed: a re-construction in the
     same process replays nothing."""
-    import os
-
-    from ocr_award_extractor_spark.operators.webify import webify_documents
-    from ocr_award_extractor_spark.sources.tables import load_table
-    from ocr_award_extractor_spark.streaming.extract_stream import stream_extract
-
-    base = _stream_tmp(sf_dir, "extract")
-    src, ck, out = (os.path.join(base, d) for d in ("in", "ck", "out"))
-    if not os.path.exists(src):
-        # tmp + atomic rename: a partial staged corpus must never become
-        # the stream's visible input (round-4 review)
-        webify_documents(load_table(spark, sf_dir, "documents")) \
-            .write.mode("overwrite").parquet(src + ".tmp")
-        os.rename(src + ".tmp", src)
-    q = stream_extract(spark, src, ck, out)
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("streaming extract did not catch up in 600s")
-    return spark.read.parquet(out).select(
-        "url", "status", F.md5("ocr_text").alias("text_md5"),
-        F.col("n_lines").cast("long").alias("n_lines"),
+    from ocr_award_extractor_spark.streaming.extract_stream import (
+        await_available_now, stream_extract,
     )
+
+    base = _tmp_dir(sf_dir, "stream_extract")
+    ck, out = os.path.join(base, "ck"), os.path.join(base, "out")
+    q = stream_extract(spark, _staged_pages(spark, sf_dir), ck, out)
+    await_available_now(q, "streaming extract")
+    return _text_md5(spark.read.parquet(out))
 
 
 def _streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window streaming aggregation, driver-graded:
     bounded availableNow run in complete mode equals the batch GROUP BY
     date_trunc('hour') exactly (decimal sums make the values independent
-    of state-merge order). Sinks through the complete-mode snapshot
-    parquet sink (no driver-side memory sink), atomically published to a
-    result path on success so a SECOND invocation in the same process
-    (checkpoint caught up ⇒ a re-started query would execute zero
-    batches) returns the already-computed result."""
-    import os
-    import shutil
-
+    of state-merge order). Runs on the package's runner, whose snapshot
+    sits at a checkpoint-derived path, so a SECOND invocation in the same
+    process (checkpoint caught up ⇒ zero batches) reads the snapshot the
+    first one wrote."""
     from ocr_award_extractor_spark.streaming.extract_stream import (
-        make_complete_snapshot_sink, state_session, windowed_event_counts,
+        run_windowed_counts_available_now, state_session,
     )
 
-    base = _stream_tmp(sf_dir, "events")
-    src = os.path.join(base, "in")
-    result = os.path.join(base, "result")
-    if os.path.exists(result):
-        return spark.read.parquet(result)
-    if not os.path.exists(src):
-        os.makedirs(src, exist_ok=True)
-        shutil.copy(os.path.join(sf_dir, "events.parquet"),
-                    os.path.join(src, "events.parquet"))
-    # production sink (pre-empting the r3 dedup-leg finding for this leg
-    # too): complete-mode output IS the whole result table per batch, so
-    # the foreachBatch snapshot sink overwrites one parquet dir — no
-    # driver-side memory sink anywhere in the driver contract now. ANY
-    # failure between start and the atomic publish clears the checkpoint
-    # (ADVICE r3, widened per round-4 review): a same-process retry over
-    # an advanced checkpoint would otherwise run zero batches and publish
-    # nothing (or, with the old memory sink, an EMPTY table).
-    out = os.path.join(base, "out")
-    try:
-        # same state-partition scoping as the dedup leg (round 7): the
-        # windowed agg's state store pays a per-partition commit per
-        # batch, so the query starts from a session with a narrower width
-        cores = spark.sparkContext.defaultParallelism
-        q = (
-            windowed_event_counts(state_session(spark, max(8, cores // 4)), src)
-            .writeStream
-            .foreachBatch(make_complete_snapshot_sink(out))
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "windowed-counts stream did not finish in 600s")
-        # atomic publish of the finished snapshot as the permanent result:
-        # the sink now publishes via a SYMLINK over alternating slot dirs
-        # (ADVICE r4 atomicity), so resolve to the real slot and rename
-        # THAT into place
-        os.rename(os.path.realpath(out), result)
-    except BaseException:
-        shutil.rmtree(os.path.join(base, "ck"), ignore_errors=True)
-        if os.path.islink(out):
-            os.remove(out)
-        else:
-            shutil.rmtree(out, ignore_errors=True)
-        for slot in (out + ".v0", out + ".v1"):
-            shutil.rmtree(slot, ignore_errors=True)
-        raise
-    # drop the sink's publishing artifacts (the symlink now dangles — its
-    # target was renamed away — and at most one stale slot remains)
-    if os.path.islink(out):
-        os.remove(out)
-    for slot in (out + ".v0", out + ".v1"):
-        shutil.rmtree(slot, ignore_errors=True)
-    return spark.read.parquet(result)
+    base = _tmp_dir(sf_dir, "stream_events")
+
+    def copy_events(tmp: str) -> None:
+        os.makedirs(tmp)
+        shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp)
+
+    src = _stage_once(os.path.join(base, "in"), copy_events)
+    # same state-partition scoping as the dedup leg (round 7): the
+    # windowed agg's state store pays a per-partition commit per batch,
+    # so the query starts from a session with a narrower width
+    cores = spark.sparkContext.defaultParallelism
+    return run_windowed_counts_available_now(
+        state_session(spark, max(8, cores // 4)), src,
+        os.path.join(base, "ck"))
 
 
 def _stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -335,19 +267,16 @@ def _stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the cross-batch first-seen state must swallow every duplicate url.
     Oracle: exactly one row per url carrying the ORIGINAL crawl timestamp
     (both deterministic functions of doc_id, webify.wrap_row)."""
-    import os
-
     from ocr_award_extractor_spark.operators.webify import webify_urls_df
     from ocr_award_extractor_spark.sources.tables import load_table
     from ocr_award_extractor_spark.streaming.extract_stream import (
-        stream_dedup_first_seen,
+        await_available_now, stream_dedup_first_seen,
     )
 
-    base = _stream_tmp(sf_dir, "dedup")
-    src, ck = os.path.join(base, "in"), os.path.join(base, "ck")
-    out = os.path.join(base, "out")
-    if not os.path.exists(src):
-        tmp = src + ".tmp"
+    base = _tmp_dir(sf_dir, "stream_dedup")
+    ck, out = os.path.join(base, "ck"), os.path.join(base, "out")
+
+    def stage_crawls(tmp: str) -> None:
         c1, c2 = os.path.join(tmp, "crawl1"), os.path.join(tmp, "crawl2")
         # stage ONLY the columns the dedup operator reads (url, warc_ts):
         # the file source's PAGE_SCHEMA null-fills the absent columns
@@ -368,7 +297,8 @@ def _stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
         for d, t in ((c1, 1_000_000_000), (c2, 1_000_000_600)):
             for f in os.listdir(d):
                 os.utime(os.path.join(d, f), (t, t))
-        os.rename(tmp, src)
+
+    src = _stage_once(os.path.join(base, "in"), stage_crawls)
     # production sink (r3 verdict #2): batch_id-keyed parquet via the same
     # make_batch_sink as the extract leg — no driver-side memory sink. A
     # timeout-then-retry is naturally safe now: completed batches are
@@ -383,17 +313,13 @@ def _stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = stream_dedup_first_seen(spark, src + "/*", ck, out,
                                 max_files_per_trigger=1,
                                 state_shuffle_partitions=max(8, cores // 4))
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("stateful dedup stream did not finish in 600s")
+    await_available_now(q, "stateful dedup stream")
     return spark.read.parquet(out).select("url", "first_ts")
 
 
 def _model_slot_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only: the pluggable batch-inference slot (O20/O21/O19) over the
     flagship pipeline output with the deterministic fake model."""
-    from pyspark.sql import functions as F
-
     from ocr_award_extractor_spark.operators.llm_slot import extract_with_model
 
     out = extract_with_model(_flagship(spark, sf_dir))

@@ -50,9 +50,14 @@ def _ensure_worker_pythonpath() -> None:
 
 
 import threading as _threading  # noqa: E402
+import weakref as _weakref  # noqa: E402
 
-_shipped_sessions: set[int] = set()
-# one ship per session even under concurrent driver threads (two jobs
+# contexts the package has been shipped to: every session on one context
+# (newSession() clones included) shares its workers, and a weak set
+# forgets a context once it is gone instead of keeping an id that a new
+# object could reuse
+_shipped_contexts: _weakref.WeakSet = _weakref.WeakSet()
+# one ship per context even under concurrent driver threads (two jobs
 # submitted from threads sharing a session both reach
 # ensure_package_on_workers)
 _ship_lock = _threading.Lock()
@@ -75,7 +80,7 @@ def find_spark_submit() -> str | None:
 
 def build_pyfiles_zip(zip_path: str | None = None) -> str:
     """Zip the package's .py files, and the C source its native library
-    (the HTML segmenter and the row hash) is built from
+    (the HTML segmenter) is built from
     (``functions/_segscan.c``), into the artifact
     a cluster user ships with ``spark-submit --py-files engine.zip``
     (SURVEY §7 deploy line). Shared by ``ensure_package_on_workers``
@@ -111,21 +116,21 @@ def ensure_package_on_workers(spark) -> None:
     session — including sessions we didn't build (the external driver
     contract). Zips the package once and ships it via addPyFile, the
     runtime equivalent of ``spark-submit --py-files``. Idempotent per
-    session."""
-    key = id(spark)
-    if key in _shipped_sessions:
+    SparkContext, so a session's ``newSession()`` clones ship nothing."""
+    sc = spark.sparkContext
+    if sc in _shipped_contexts:
         return
     with _ship_lock:
-        if key in _shipped_sessions:
+        if sc in _shipped_contexts:
             return
         if not os.path.isdir(os.path.join(_PKG_PARENT, "ocr_award_extractor_spark")):
             # already running FROM a --py-files zip (spark-submit shipped
             # the package to driver and workers alike) — nothing to do,
             # and the zip member path is not a writable directory anyway
-            _shipped_sessions.add(key)
+            _shipped_contexts.add(sc)
             return
-        spark.sparkContext.addPyFile(build_pyfiles_zip())
-        _shipped_sessions.add(key)
+        sc.addPyFile(build_pyfiles_zip())
+        _shipped_contexts.add(sc)
 
 
 def get_spark(app_name: str = "ocr-award-extractor-spark",

@@ -16,8 +16,8 @@ task. The spellings here are the distributed-classic rewrites:
   row in a host's global top ``cap`` has at most ``cap-1`` rows ahead
   of it globally, hence at most ``cap-1`` ahead within its own salt,
   so the survivor set is exact — then a second rank over the at most
-  ``salt_parts * cap`` survivors per host). The biggest single-task
-  partition is O(rows_of_biggest_host / salt_parts), not
+  ``HOST_SALT * cap`` survivors per host). The biggest single-task
+  partition is O(rows_of_biggest_host / HOST_SALT), not
   O(rows_of_biggest_host).
 * ``pack_token_shards_df`` — distributed exclusive prefix-sum: the
   deterministic global order (md5 bucket, doc_id) is RANGE-partitioned
@@ -80,7 +80,6 @@ def synth_host() -> F.Column:
 def host_cap_sample_df(
     docs: DataFrame,
     cap: int = HOST_CAP,
-    salt_parts: int = HOST_SALT,
     host: F.Column | None = None,
     verdict: bool = True,
 ) -> DataFrame:
@@ -107,8 +106,8 @@ def host_cap_sample_df(
     re-scan dominates should stage or persist the slim projection first
     — the ordering work itself is never more than two window passes over
     the oversize slice."""
-    if cap < 1 or salt_parts < 1:
-        raise ValueError("cap and salt_parts must be >= 1")
+    if cap < 1:
+        raise ValueError("cap must be >= 1")
     h = host if host is not None else synth_host()
     # NULL host (unparsable url) coalesces to one pseudo-host rather than
     # riding a NULL join key: the count join below is null-UNSAFE, so a
@@ -123,7 +122,7 @@ def host_cap_sample_df(
 
     small = base.where(F.col("n_host") <= cap)
     big = base.where(F.col("n_host") > cap).withColumn(
-        "salt", F.col("bucket") % salt_parts
+        "salt", F.col("bucket") % HOST_SALT
     )
     w1 = Window.partitionBy("host", "salt").orderBy("bucket", "doc_id")
     big = big.withColumn("rn1", F.row_number().over(w1))

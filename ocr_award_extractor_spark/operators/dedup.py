@@ -243,7 +243,6 @@ def dedup_clusters_df(docs: DataFrame) -> DataFrame:
 
 
 def connected_components(docs: DataFrame, edges: DataFrame,
-                         max_iters: int = CC_MAX_ITERS,
                          reliable: bool = False) -> DataFrame:
     """Min-label propagation + pointer jumping over (src, dst) edges;
     docs(doc_id) supplies the vertex set (singletons included, NULL ids
@@ -256,7 +255,7 @@ def connected_components(docs: DataFrame, edges: DataFrame,
     job of its own. A zero count means propagation changed nothing, and a
     pointer jump cannot move a propagation fixpoint (labels are constant
     on each component and equal to its minimum), so the previous labels
-    are returned as they are; ``max_iters`` rounds without one raise
+    are returned as they are; ``CC_MAX_ITERS`` rounds without one raise
     ``RuntimeError``. Works for any orderable id type — 64-bit ints and
     the 128-bit hex-string doc_ids alike.
 
@@ -302,7 +301,7 @@ def connected_components(docs: DataFrame, edges: DataFrame,
     # keeps the vertex set the same when the first round is the fixpoint
     labels = docs.where(F.col("doc_id").isNotNull()).select(
         "doc_id", F.col("doc_id").alias("comp"))
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_ITERS):
         nbr = edges.join(labels, edges["src"] == labels["doc_id"]).select(
             F.col("dst").alias("doc_id"), "comp"
         )
@@ -323,7 +322,7 @@ def connected_components(docs: DataFrame, edges: DataFrame,
         # pointer jumping: comp ← comp[comp] (comp values are doc_ids, so
         # the self-join always hits). Halves the remaining diameter every
         # round — convergence in O(log diameter) rounds, so the iteration
-        # cap covers chains of length 2^max_iters, not max_iters.
+        # cap covers chains of length 2^CC_MAX_ITERS, not CC_MAX_ITERS.
         # (right side column-renamed, not alias()ed: fresh attribute ids —
         # localCheckpoint of an alias self-join trips an analyzer
         # NoSuchElementException on shared ids in Spark 4.1)
@@ -335,7 +334,8 @@ def connected_components(docs: DataFrame, edges: DataFrame,
             new.join(right, F.col("comp") == F.col("jid"))
             .select("doc_id", F.col("jcomp").alias("comp"))
         )
-    raise RuntimeError(f"connected_components did not converge in {max_iters} rounds")
+    raise RuntimeError(
+        f"connected_components did not converge in {CC_MAX_ITERS} rounds")
 
 
 # ---------------------------------------------------------------- simhash

@@ -82,17 +82,17 @@ def _lcg_weights(n_planes: int, dim: int = DIM, seed: int = LSH_SEED) -> list[li
     return out
 
 
-def lsh_params(n: int, target_bucket: int = LSH_TARGET_BUCKET,
-               design_p: float = LSH_DESIGN_P,
-               target_recall: float = LSH_TARGET_RECALL) -> tuple[int, int]:
+def lsh_params(n: int, design_p: float = LSH_DESIGN_P) -> tuple[int, int]:
     """(bands, rows) for a corpus of n vectors: rows R = log₂(n/m) keeps
-    per-band buckets at m vectors (candidates ~ B·n·m, sublinear in n²);
-    bands B = ⌈ln(1-ρ)/ln(1-pᴿ)⌉ holds recall ρ at the design threshold."""
+    per-band buckets at m = LSH_TARGET_BUCKET vectors (candidates ~ B·n·m,
+    sublinear in n²); bands B = ⌈ln(1-ρ)/ln(1-pᴿ)⌉ holds recall
+    ρ = LSH_TARGET_RECALL at the design plane-agreement p = ``design_p``."""
     import math
 
-    rows = max(4, math.ceil(math.log2(max(2.0, n / target_bucket))))
+    rows = max(4, math.ceil(math.log2(max(2.0, n / LSH_TARGET_BUCKET))))
     band_miss = 1.0 - design_p ** rows
-    bands = max(2, math.ceil(math.log(1.0 - target_recall) / math.log(band_miss)))
+    bands = max(2, math.ceil(
+        math.log(1.0 - LSH_TARGET_RECALL) / math.log(band_miss)))
     return bands, rows
 
 
@@ -145,10 +145,10 @@ def _cosine(a, b):
         _norm2(a).cast("double") * _norm2(b).cast("double")))
 
 
-def _with_query(spark: SparkSession, sf_dir: str, query_vec_id: int = 0):
+def _with_query(spark: SparkSession, sf_dir: str):
     emb = load_table(spark, sf_dir, "embeddings")
     q = (
-        emb.where(F.col("vec_id") == query_vec_id)
+        emb.where(F.col("vec_id") == 0)
         .select(_quant(F.col("embedding")).alias("qv"))
     )
     scored = (

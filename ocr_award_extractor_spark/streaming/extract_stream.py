@@ -27,6 +27,19 @@ from ocr_award_extractor_spark.operators.extract_pipeline import (
 )
 
 
+AVAILABLE_NOW_TIMEOUT_S = 600
+
+
+def await_available_now(query, what: str) -> None:
+    """Wait for an availableNow ``query`` to finish its catch-up. On a
+    timeout the query is stopped before the raise, so a still-running
+    sink never rewrites output the caller goes on to read."""
+    if not query.awaitTermination(AVAILABLE_NOW_TIMEOUT_S):
+        query.stop()
+        raise TimeoutError(
+            f"{what} did not finish in {AVAILABLE_NOW_TIMEOUT_S}s")
+
+
 def state_session(spark: SparkSession, partitions: int) -> SparkSession:
     """A new session on ``spark``'s context with ``spark``'s runtime
     settings and ``spark.sql.shuffle.partitions`` = ``partitions``. A
@@ -98,13 +111,9 @@ def stream_extract(
     output_dir: str,
     *,
     max_files_per_trigger: int | None = None,
-    sink_transform=None,
 ):
     """Incremental extraction over a growing directory of web-page parquet.
-    Returns the started StreamingQuery (caller awaits termination).
-    ``sink_transform`` (tests only) wraps the default idempotent sink,
-    e.g. to inject a crash between the data write and the checkpoint
-    commit."""
+    Returns the started StreamingQuery (caller awaits termination)."""
     from ocr_award_extractor_spark.operators.webify import PAGE_SCHEMA
 
     reader = (
@@ -116,13 +125,9 @@ def stream_extract(
     pages = reader.load(input_dir)
     extracted = extract_documents(pages)
 
-    sink = make_batch_sink(output_dir)
-    if sink_transform is not None:
-        sink = sink_transform(sink)
-
     return (
         extracted.writeStream
-        .foreachBatch(sink)
+        .foreachBatch(make_batch_sink(output_dir))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -210,7 +215,6 @@ def stream_dedup_first_seen(
     output_dir: str,
     *,
     max_files_per_trigger: int | None = None,
-    sink_transform=None,
     state_ttl: str | None = None,
     watermark: str | None = None,
     state_shuffle_partitions: int | None = None,
@@ -291,12 +295,9 @@ def stream_dedup_first_seen(
         "update",
         timeout,
     )
-    sink = make_batch_sink(output_dir)
-    if sink_transform is not None:
-        sink = sink_transform(sink)
     return (
         deduped.writeStream
-        .foreachBatch(sink)
+        .foreachBatch(make_batch_sink(output_dir))
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -306,44 +307,36 @@ def stream_dedup_first_seen(
 
 def run_windowed_counts_available_now(
     spark: SparkSession, events_dir: str, checkpoint_dir: str,
-    output_dir: str | None = None,
     *,
     max_files_per_trigger: int | None = None,
-    sink_transform=None,
 ) -> DataFrame:
     """Bounded run of the windowed aggregation through the complete-mode
-    snapshot sink; returns the result table (test/demo helper).
-    ``output_dir`` defaults to ``<checkpoint_dir>_out`` so a reinvocation
-    over a CAUGHT-UP checkpoint (zero batches ⇒ the sink never fires)
-    still reads the previously-written snapshot instead of an empty
-    fresh directory. ``sink_transform`` (tests only) wraps the sink,
-    e.g. to inject a crash between the snapshot write and the checkpoint
-    commit."""
+    snapshot sink; returns the result table, read on ``spark``. The
+    snapshot lives at ``<checkpoint_dir>_out``: in complete mode the
+    checkpoint commits a batch only after the sink has written its
+    snapshot, so an advanced checkpoint always has one there, and a
+    reinvocation over a CAUGHT-UP checkpoint (zero batches ⇒ the sink
+    never fires) reads the previously-written snapshot instead of an
+    empty fresh directory."""
     # complete mode: in a bounded (availableNow) run, append mode would
     # withhold the final windows still inside the watermark; complete
     # emits the whole result table, making batch-equality checks exact.
-    out = output_dir or checkpoint_dir.rstrip("/") + "_out"
-    sink = make_complete_snapshot_sink(out)
-    if sink_transform is not None:
-        sink = sink_transform(sink)
+    out = checkpoint_dir.rstrip("/") + "_out"
     q = (
         windowed_event_counts(spark, events_dir,
                               max_files_per_trigger=max_files_per_trigger)
-        .writeStream.foreachBatch(sink)
+        .writeStream.foreachBatch(make_complete_snapshot_sink(out))
         .outputMode("complete")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(300):
-        # stop BEFORE reading: the still-running sink overwrites the
-        # snapshot dir mid-read otherwise
-        q.stop()
-        raise TimeoutError("windowed-counts catch-up did not finish in 300s")
+    await_available_now(q, "windowed-counts catch-up")
     return spark.read.parquet(out)
 
 
 __all__ = ["stream_extract", "windowed_event_counts", "state_session",
+           "await_available_now", "AVAILABLE_NOW_TIMEOUT_S",
            "make_complete_snapshot_sink",
            "run_windowed_counts_available_now", "stream_dedup_first_seen",
            "OUT_SCHEMA"]

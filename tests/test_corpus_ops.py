@@ -52,11 +52,11 @@ def test_host_cap_semantics(spark):
         assert kept == min(n_host, corpus.HOST_CAP), host
 
 
-def test_host_cap_two_level_rank_equals_naive_window(spark):
+def test_host_cap_two_level_rank_equals_naive_window(spark, monkeypatch):
     """The salted two-level rank must reproduce the naive single-window
     spelling exactly (same total order ⇒ same kept set), and be
-    invariant under input partitioning and salt_parts — including
-    salt_parts=1 (degenerate: the two windows collapse into one)."""
+    invariant under input partitioning and HOST_SALT — including
+    HOST_SALT=1 (degenerate: the two windows collapse into one)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -78,8 +78,9 @@ def test_host_cap_two_level_rank_equals_naive_window(spark):
     got = _rows(corpus.host_cap_sample_df(docs))
     assert got == naive
     assert _rows(corpus.host_cap_sample_df(docs.repartition(7))) == naive
-    assert _rows(corpus.host_cap_sample_df(docs, salt_parts=1)) == naive
-    assert _rows(corpus.host_cap_sample_df(docs, salt_parts=3)) == naive
+    for salt in (1, 3):
+        monkeypatch.setattr(corpus, "HOST_SALT", salt)
+        assert _rows(corpus.host_cap_sample_df(docs)) == naive
 
 
 def test_host_cap_production_path_matches_verdict_kept_set(spark):
@@ -125,8 +126,6 @@ def test_host_cap_validates(spark):
     docs = load_table(spark, SF, "documents")
     with pytest.raises(ValueError, match="cap"):
         corpus.host_cap_sample_df(docs, cap=0)
-    with pytest.raises(ValueError, match="salt_parts"):
-        corpus.host_cap_sample_df(docs, salt_parts=0)
 
 
 # ------------------------------------------------------- pack_token_shards

@@ -3,7 +3,9 @@ engine.zip job.py`` in a subprocess whose cwd and PYTHONPATH cannot see
 the repo — the zip is the only way the package can import, on the
 driver and inside executor Python workers alike. (The reference runs as
 a bare script, certificate_ocr.py:446-469; the cluster analog of "run
-the driver" is spark-submit, SURVEY §7.)"""
+the driver" is spark-submit, SURVEY §7.) Sessions the package did not
+build get the same zip at runtime through ``addPyFile``, once per
+SparkContext."""
 
 from __future__ import annotations
 
@@ -107,3 +109,16 @@ def test_spark_submit_workers_load_the_native_scanner(tmp_path):
     for file, native in report["workers"]:
         assert native is True and ".zip" in file, report
     assert os.listdir(tmp_path / "home" / ".cache" / "ocr_award_extractor_spark")
+
+
+def test_package_ships_once_per_context(spark):
+    """Every session on one SparkContext shares its workers: shipping the
+    package to a ``newSession()`` clone (what ``state_session`` makes)
+    adds no second py-file include to the context."""
+    from ocr_award_extractor_spark.config import ensure_package_on_workers
+
+    ensure_package_on_workers(spark)
+    includes = list(spark.sparkContext._python_includes)
+    ensure_package_on_workers(spark.newSession())
+    ensure_package_on_workers(spark)
+    assert spark.sparkContext._python_includes == includes

@@ -9,6 +9,28 @@ import shutil
 from pyspark.sql import functions as F
 
 from ocr_award_extractor_spark.sources.tables import ensure_fixture
+from ocr_award_extractor_spark.streaming import extract_stream
+
+
+def _crash_after_first_write(monkeypatch, factory: str) -> None:
+    """Replace the sink factory ``extract_stream.<factory>`` for the next
+    query start: its batch 0 writes its data fully, then raises once,
+    before the checkpoint commit. The sink is looked up when the query
+    starts, and foreachBatch runs it in the driver."""
+    real_factory = getattr(extract_stream, factory)
+    state = {"crashed": False}
+
+    def poisoned(output_dir):
+        real_sink = real_factory(output_dir)
+
+        def sink(df, batch_id):
+            real_sink(df, batch_id)        # data fully written...
+            if batch_id == 0 and not state["crashed"]:
+                state["crashed"] = True    # ...then die before the commit
+                raise RuntimeError("injected crash between write and commit")
+        return sink
+
+    monkeypatch.setattr(extract_stream, factory, poisoned)
 
 
 def test_stream_extract_equals_batch(spark, tmp_path):
@@ -96,7 +118,7 @@ def test_stateful_dedup_across_microbatches(spark, tmp_path):
     assert got["https://x.example/c"] == t0 + timedelta(hours=2)
 
 
-def test_stream_sink_exactly_once_after_crash(spark, tmp_path):
+def test_stream_sink_exactly_once_after_crash(spark, tmp_path, monkeypatch):
     """Crash injected BETWEEN the per-batch data write and the checkpoint
     commit (the exact at-least-once window ADVICE r2 flagged): on restart
     the streaming engine replays the batch under the same batch_id, and
@@ -121,18 +143,10 @@ def test_stream_sink_exactly_once_after_crash(spark, tmp_path):
     b2.coalesce(1).write.parquet(str(src / "b2"))
 
     ck, out = str(tmp_path / "ck"), str(tmp_path / "out")
-    state = {"crashed": False}
-
-    def poison(real_sink):
-        def sink(df, batch_id):
-            real_sink(df, batch_id)        # data fully written...
-            if batch_id == 0 and not state["crashed"]:
-                state["crashed"] = True    # ...then die before the commit
-                raise RuntimeError("injected crash between write and commit")
-        return sink
-
-    q = stream_extract(spark, str(src) + "/*", ck, out,
-                       max_files_per_trigger=1, sink_transform=poison)
+    with monkeypatch.context() as m:
+        _crash_after_first_write(m, "make_batch_sink")
+        q = stream_extract(spark, str(src) + "/*", ck, out,
+                           max_files_per_trigger=1)
     with pytest.raises(StreamingQueryException):
         q.awaitTermination(300)
     # the crash really was post-write: batch 0's data is on disk, uncommitted
@@ -289,7 +303,7 @@ def test_state_width_is_set_on_a_clone_not_the_callers_session(
         "event_id": [1], "user_id": [7], "event_type": ["click"],
         "ts": pa.array([datetime(2024, 3, 1, 9)], pa.timestamp("us", "UTC")),
         "value": [1.5], "props": ["{}"]}), str(sf / "events.parquet"))
-    base = entrymod._stream_tmp(str(sf), "events")
+    base = entrymod._tmp_dir(str(sf), "stream_events")
     monkeypatch.setattr(RuntimeConfig, "set", spy)
     try:
         assert entrymod._streaming_windowed_counts(spark, str(sf)).count() == 1
@@ -298,6 +312,47 @@ def test_state_width_is_set_on_a_clone_not_the_callers_session(
     finally:
         shutil.rmtree(base, ignore_errors=True)
     assert caller_writes == [] and spark.conf.get(key) == width
+
+
+def test_failed_staging_does_not_poison_the_windowed_leg(
+        spark, tmp_path, monkeypatch):
+    """A staging step that fails leaves nothing a later call trusts: the
+    first call's events copy raises, and the second call in the same
+    process stages the copy again and returns the oracle's rows (an empty
+    staged input would run zero batches and have no snapshot to read)."""
+    import duckdb
+    import pytest
+
+    import __spark_entry__ as entrymod
+    from scripts.check_oracles import compare
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy("/root/testdata/sf0.001/events.parquet",
+                str(sf / "events.parquet"))
+    real_copy, failed = shutil.copy, []
+
+    def copy_failing_once(src, dst, *args, **kwargs):
+        if str(src).endswith("events.parquet") and not failed:
+            failed.append(src)
+            raise OSError("injected failure of the events copy")
+        return real_copy(src, dst, *args, **kwargs)
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW events AS SELECT * FROM read_parquet("
+                f"'{sf / 'events.parquet'}')")
+    want = con.sql(entrymod.oracle_sql()["streaming_windowed_counts"])
+    base = entrymod._tmp_dir(str(sf), "stream_events")
+    monkeypatch.setattr(shutil, "copy", copy_failing_once)
+    try:
+        with pytest.raises(OSError, match="injected"):
+            entrymod._streaming_windowed_counts(spark, str(sf))
+        assert failed
+        got = entrymod._streaming_windowed_counts(spark, str(sf))
+        assert compare("streaming_windowed_counts", got, want.fetchall(),
+                       list(want.columns), list(want.types)) == []
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def test_stream_checkpoint_incremental_resume(spark, tmp_path):
@@ -331,7 +386,8 @@ def test_stream_checkpoint_incremental_resume(spark, tmp_path):
     assert q2.lastProgress["numInputRows"] == 120 - n_first  # delta only
 
 
-def test_stateful_dedup_sink_exactly_once_after_crash(spark, tmp_path):
+def test_stateful_dedup_sink_exactly_once_after_crash(spark, tmp_path,
+                                                      monkeypatch):
     """The dedup leg's batch_id-keyed sink under the same post-write /
     pre-commit crash as the extract case — plus the STATEFUL wrinkle: the
     replayed batch must re-run against the PRE-batch state-store version
@@ -362,18 +418,10 @@ def test_stateful_dedup_sink_exactly_once_after_crash(spark, tmp_path):
         .coalesce(1).write.parquet(str(src / "b2"))
 
     ck, out = str(tmp_path / "ck"), str(tmp_path / "out")
-    state = {"crashed": False}
-
-    def poison(real_sink):
-        def sink(df, batch_id):
-            real_sink(df, batch_id)        # data fully written...
-            if batch_id == 0 and not state["crashed"]:
-                state["crashed"] = True    # ...then die before the commit
-                raise RuntimeError("injected crash between write and commit")
-        return sink
-
-    q = stream_dedup_first_seen(spark, str(src) + "/*", ck, out,
-                                max_files_per_trigger=1, sink_transform=poison)
+    with monkeypatch.context() as m:
+        _crash_after_first_write(m, "make_batch_sink")
+        q = stream_dedup_first_seen(spark, str(src) + "/*", ck, out,
+                                    max_files_per_trigger=1)
     with pytest.raises(StreamingQueryException):
         q.awaitTermination(300)
     assert os.path.isdir(os.path.join(out, "batch=0"))   # post-write crash
@@ -389,7 +437,8 @@ def test_stateful_dedup_sink_exactly_once_after_crash(spark, tmp_path):
     assert got["https://x.example/b"] == t0 + timedelta(hours=1)  # first seen
 
 
-def test_windowed_snapshot_sink_exactly_once_after_crash(spark, tmp_path):
+def test_windowed_snapshot_sink_exactly_once_after_crash(spark, tmp_path,
+                                                         monkeypatch):
     """The complete-mode snapshot sink under the post-write/pre-commit
     crash: the replayed batch re-emits the complete table as of that
     batch and OVERWRITES its own partial snapshot; after catch-up the
@@ -410,25 +459,17 @@ def test_windowed_snapshot_sink_exactly_once_after_crash(spark, tmp_path):
     events.subtract(events.limit(half)).coalesce(1) \
         .write.parquet(str(src / "e2"))
 
-    ck, out = str(tmp_path / "ck"), str(tmp_path / "out")
-    state = {"crashed": False}
-
-    def poison(real_sink):
-        def sink(df, batch_id):
-            real_sink(df, batch_id)
-            if batch_id == 0 and not state["crashed"]:
-                state["crashed"] = True
-                raise RuntimeError("injected crash between write and commit")
-        return sink
-
-    with pytest.raises(StreamingQueryException):
+    ck = str(tmp_path / "ck")
+    out = ck + "_out"   # the runner's snapshot path
+    with monkeypatch.context() as m, \
+            pytest.raises(StreamingQueryException):
+        _crash_after_first_write(m, "make_complete_snapshot_sink")
         run_windowed_counts_available_now(
-            spark, str(src) + "/*", ck, out,
-            max_files_per_trigger=1, sink_transform=poison)
+            spark, str(src) + "/*", ck, max_files_per_trigger=1)
     assert os.path.isdir(out)   # the crash really was post-write
 
     got = run_windowed_counts_available_now(
-        spark, str(src) + "/*", ck, out, max_files_per_trigger=1)
+        spark, str(src) + "/*", ck, max_files_per_trigger=1)
     want = (
         spark.read.parquet(str(src) + "/*")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -445,8 +486,8 @@ def test_windowed_snapshot_sink_exactly_once_after_crash(spark, tmp_path):
 def test_windowed_snapshot_survives_caught_up_reinvocation(spark, tmp_path):
     """Reinvoking the helper over a CAUGHT-UP checkpoint (zero batches,
     sink never fires) must return the previously-written snapshot — the
-    checkpoint-derived default output path is what makes the old
-    memory-sink reinvocation bug structurally impossible."""
+    checkpoint-derived output path is what makes the old memory-sink
+    reinvocation bug structurally impossible."""
     from ocr_award_extractor_spark.streaming.extract_stream import (
         run_windowed_counts_available_now,
     )

@@ -142,7 +142,7 @@ def test_dedup_clusters_transitive(spark, planted_dir):
 
 
 @pytest.mark.parametrize("hex_ids", [False, True], ids=["int", "hex16"])
-def test_connected_components_long_chain(spark, hex_ids):
+def test_connected_components_long_chain(spark, hex_ids, monkeypatch):
     """Pointer jumping: a 30-doc CHAIN (diameter 29 > plain-propagation
     budget) must still collapse to one component within the iteration cap
     — O(log diameter) rounds, the property that matters at crawl scale.
@@ -150,7 +150,10 @@ def test_connected_components_long_chain(spark, hex_ids):
     pipeline's id type), whose string order equals the int order."""
     from pyspark.sql import functions as F2
 
+    from ocr_award_extractor_spark.operators import dedup
     from ocr_award_extractor_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 8)
 
     def vid(c):
         return F2.lpad(F2.hex(c), 16, "0") if hex_ids else c
@@ -162,18 +165,21 @@ def test_connected_components_long_chain(spark, hex_ids):
     edges = chain.union(chain.select(F2.col("dst").alias("src"),
                                      F2.col("src").alias("dst")))
     comp = {r["doc_id"]: r["comp"]
-            for r in connected_components(docs, edges, max_iters=8).collect()}
+            for r in connected_components(docs, edges).collect()}
     root = "0" * 16 if hex_ids else 0
     assert set(comp.values()) == {root} and len(comp) == 30
 
 
-def test_connected_components_unconverged_raises(spark):
+def test_connected_components_unconverged_raises(spark, monkeypatch):
     """Two rounds cannot collapse the 30-doc chain of
     test_connected_components_long_chain: the call raises and names the
     round count instead of returning unconverged labels."""
     from pyspark.sql import functions as F2
 
+    from ocr_award_extractor_spark.operators import dedup
     from ocr_award_extractor_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 2)
 
     docs = spark.range(30).select(F2.col("id").alias("doc_id"))
     chain = spark.range(29).select(F2.col("id").alias("src"),
@@ -181,7 +187,7 @@ def test_connected_components_unconverged_raises(spark):
     edges = chain.union(chain.select(F2.col("dst").alias("src"),
                                      F2.col("src").alias("dst")))
     with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
-        connected_components(docs, edges, max_iters=2)
+        connected_components(docs, edges)
 
 
 @pytest.fixture(scope="module")
